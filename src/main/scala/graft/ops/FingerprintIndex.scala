@@ -12,64 +12,34 @@ import org.apache.spark.sql.functions._
   *
   * Layout (the bucket-pruned probe discipline of
   * [[LshIndex]]/[[ImageIndex]]/[[Retrieval]]): rows land partitioned by
-  * `fp_bucket = pmod(xxhash64(fp), B)`, and a probe batch collects its
-  * own fp-bucket vocabulary locally (≤ B longs) and pushes a STATIC
-  * partition filter — probe cost ∝ the batch's bucket vocabulary,
-  * never the corpus. `B` is frozen in a meta store at build time
-  * (mixing two moduli in one store silently defeats the prune — the
-  * [[LshIndex.readMeta]] argument).
+  * `fp_bucket = pmod(xxhash64(fp), 64)`, and a probe batch collects
+  * its own fp-bucket vocabulary locally (≤ 64 longs) and pushes a
+  * STATIC partition filter — probe cost ∝ the batch's bucket
+  * vocabulary, never the corpus.
   *
-  * Lifecycle parity with the other doc-keyed families: base build →
-  * replay-guarded delta append (bootstrap-safe) → tombstone →
-  * touched-partition compaction. No derived second store, so appends
-  * are single-store and need no [[AppendCommit]] marker.
+  * Lifecycle parity with the other doc-keyed families ([[IdStore]]):
+  * base build → replay-guarded delta append (bootstrap-safe) →
+  * tombstone → touched-partition compaction. No derived second store,
+  * so appends are single-store and need no [[AppendCommit]] marker.
   */
 object FingerprintIndex {
 
-  /** Partition count of the fingerprint store. */
-  val DefaultFpBuckets = 64
-
-  private def hadoopFs(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-
-  private def fsPath(p: String) = new org.apache.hadoop.fs.Path(p)
-
-  private def recoverStores(spark: SparkSession, indexDir: String): Unit = {
-    val fs = hadoopFs(spark, indexDir)
-    SafeSwap.recover(fs, fsPath(s"$indexDir/fingerprints"))
-  }
-
-  /** Frozen-modulus memo (the [[LshIndex.readMeta]] twin): one footer
-    * read + head() job per probe otherwise, keyed by the meta store's
-    * content tag so a rebuild re-reads. */
-  private val metaCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Integer]()
-  private[ops] def releaseMeta(spark: SparkSession): Unit =
-    metaCache.keySet.removeIf(_._1 eq spark)
-
-  private def readMeta(spark: SparkSession, indexDir: String): Int =
-    metaCache.computeIfAbsent(
-      (spark, StageCache.inputTag(spark, s"$indexDir/meta")),
-      _ => spark.read.parquet(s"$indexDir/meta").head().getAs[Int]("fp_buckets"))
+  /** The artifact's lifecycle: one keyed store, partitioned by
+    * fingerprint (the probe key) rather than by id. */
+  private[graft] val store =
+    new IdStore("doc_id", IdStore.Layout("fp_bucket", 64, "fp"), "fingerprints")
 
   private def fpRows(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
       TextAnalysis.fingerprint(col("text")).as("fp"))
 
-  private def writeFps(rows: DataFrame, fpBuckets: Int, indexDir: String,
-      mode: String): Unit =
-    rows.withColumn("fp_bucket", pmod(xxhash64(col("fp")), lit(fpBuckets.toLong)))
-      .repartition(col("fp_bucket")) // one file per bucket dir, not one per task
-      .write.mode(mode).partitionBy("fp_bucket").parquet(s"$indexDir/fingerprints")
-
-  /** Base build from a (doc_id, text) relation. */
-  def saveFingerprintIndexOf(docs: DataFrame, outDir: String,
-      fpBuckets: Int = DefaultFpBuckets): Unit = {
-    require(fpBuckets > 0, "bucket count must be positive")
+  /** Base build from a (doc_id, text) relation. The meta store records
+    * the modulus and marks the build complete. */
+  def saveFingerprintIndexOf(docs: DataFrame, outDir: String): Unit = {
     val spark = docs.sparkSession
-    writeFps(fpRows(docs), fpBuckets, outDir, "overwrite")
+    store.layout.write(fpRows(docs), s"$outDir/fingerprints", "overwrite")
     import spark.implicits._
-    Seq(fpBuckets).toDF("fp_buckets")
+    Seq(store.layout.modulus).toDF("fp_buckets")
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/meta")
   }
 
@@ -79,58 +49,21 @@ object FingerprintIndex {
     * tombstone set is being deliberately RE-INGESTED — its dead rows
     * expunge and its tombstone withdraws BEFORE the replay guard runs,
     * so the fresh row appends and neither generation double-serves
-    * (the [[LshIndex.appendLshDelta]] resurrection contract; without
-    * it, the guard would silently absorb the re-ingest and the next
-    * compaction would erase the doc for good). Appended rows land as
-    * dynamic partition appends touching only the delta's fp buckets. */
-  def appendFingerprintDelta(deltaDocs: DataFrame, indexDir: String,
-      fpBuckets: Int = DefaultFpBuckets): Unit = {
+    * (without it, the guard would silently absorb the re-ingest and the
+    * next compaction would erase the doc for good). The guard scans only
+    * the delta's fp buckets: `fp` is a pure function of the text, so a
+    * replayed doc's row sits in exactly the bucket its delta row hashes
+    * to. Appended rows land as dynamic partition appends touching only
+    * the delta's fp buckets. */
+  def appendFingerprintDelta(deltaDocs: DataFrame, indexDir: String): Unit = {
     val spark = deltaDocs.sparkSession
-    val fs = hadoopFs(spark, indexDir)
-    recoverStores(spark, indexDir)
-    if (!fs.exists(fsPath(s"$indexDir/meta"))) {
-      saveFingerprintIndexOf(deltaDocs, indexDir, fpBuckets)
+    store.recover(spark, indexDir)
+    if (!IdStore.fsOf(spark, indexDir).exists(new org.apache.hadoop.fs.Path(s"$indexDir/meta"))) {
+      saveFingerprintIndexOf(deltaDocs, indexDir)
       return
     }
-    tombstonesOf(spark, indexDir).foreach { dead =>
-      val overlap = dead.join(deltaDocs.select("doc_id"), Seq("doc_id")).cache()
-      if (overlap.count() > 0) {
-        expunge(spark, indexDir, overlap)
-        val tsTmp = s"$indexDir/tombstones_withdraw_tmp"
-        dead.join(overlap, Seq("doc_id"), "left_anti")
-          .write.mode("overwrite").parquet(tsTmp)
-        SafeSwap.swapDir(fs, fsPath(s"$indexDir/tombstones"), fsPath(tsTmp))
-      }
-      overlap.unpersist(blocking = false)
-    }
-    val frozen = readMeta(spark, indexDir)
-    val deltaFps = fpRows(deltaDocs)
-    val fresh = deltaFps.join(guardHeldIds(spark, indexDir, deltaFps, frozen),
-      Seq("doc_id"), "left_anti")
-    writeFps(fresh, frozen, indexDir, "append")
-  }
-
-  /** The replay guard's DELTA-PROPORTIONAL store scan: the held doc_ids
-    * the incoming delta could possibly collide with. `fp` is a pure
-    * function of the text, so a REPLAYED doc's row sits in exactly the
-    * fp_bucket its delta row hashes to — the delta's bucket vocabulary
-    * (collected locally, ≤ fpBuckets longs) pushes a static partition
-    * filter into the guard scan, the same prune [[probeFingerprints]]
-    * runs two lines later. Guard cost is ∝ the delta's bucket
-    * vocabulary, never the corpus — without the prune, every nightly
-    * append paid a corpus-wide narrow-column scan just to discover the
-    * delta was (mostly) fresh. Sound under the guard's own replay
-    * semantics (same doc_id ⇒ same bytes): a doc_id re-ingested with
-    * DIFFERENT text is a new document version, which this store's
-    * contract routes through tombstone + re-append, not the guard. */
-  private[graft] def guardHeldIds(spark: SparkSession, indexDir: String,
-      deltaFps: DataFrame, fpBuckets: Int): DataFrame = {
-    val deltaBuckets = deltaFps
-      .select(pmod(xxhash64(col("fp")), lit(fpBuckets.toLong)).as("b"))
-      .distinct().collect().map(_.getLong(0)).toSeq // local: ≤ fpBuckets values
-    spark.read.parquet(s"$indexDir/fingerprints")
-      .where(col("fp_bucket").isin(deltaBuckets: _*))
-      .select("doc_id")
+    val fresh = store.admit(spark, indexDir, fpRows(deltaDocs))(store.expungeKeyed(indexDir, _))
+    store.layout.write(fresh, s"$indexDir/fingerprints", "append")
   }
 
   /** Which held docs does each probe doc exactly duplicate (normalized
@@ -145,20 +78,12 @@ object FingerprintIndex {
     * either way, so the hint is all risk and no win. */
   def probeFingerprints(probeDocs: DataFrame, indexDir: String): DataFrame = {
     val spark = probeDocs.sparkSession
-    recoverStores(spark, indexDir)
-    val fpBuckets = readMeta(spark, indexDir)
+    store.recover(spark, indexDir)
     val probes = fpRows(probeDocs).select(col("doc_id").as("probe_id"), col("fp"))
-    val probeBuckets = probes
-      .select(pmod(xxhash64(col("fp")), lit(fpBuckets.toLong)).as("b"))
-      .distinct().collect().map(_.getLong(0)).toSeq // local: ≤ fpBuckets values
     val pruned = StoreReads.parquet(spark, s"$indexDir/fingerprints")
-      .where(col("fp_bucket").isin(probeBuckets: _*))
+      .where(col(store.layout.column).isin(store.layout.bucketsOf(probes): _*))
       .select(col("doc_id"), col("fp"))
-    val held = tombstonesOf(spark, indexDir) match {
-      case Some(dead) => pruned.join(dead, Seq("doc_id"), "left_anti")
-      case None => pruned
-    }
-    probes.join(held, Seq("fp"))
+    probes.join(store.live(pruned, store.tombstones(spark, indexDir)), Seq("fp"))
       .where(col("doc_id") =!= col("probe_id"))
       .select(col("probe_id"), col("doc_id"))
       .distinct()
@@ -167,54 +92,10 @@ object FingerprintIndex {
 
   /** Retire docs — tombstones, not rewrites; idempotent. */
   def tombstoneDocs(deletedIds: DataFrame, indexDir: String): Unit =
-    deletedIds.select(col("doc_id").cast("long").as("doc_id"))
-      .write.mode("append").parquet(s"$indexDir/tombstones")
+    store.tombstone(deletedIds, indexDir)
 
-  private def tombstonesOf(spark: SparkSession, indexDir: String): Option[DataFrame] = {
-    val p = fsPath(s"$indexDir/tombstones")
-    if (hadoopFs(spark, indexDir).exists(p))
-      Some(StoreReads.parquet(spark, s"$indexDir/tombstones").select("doc_id").distinct())
-    else None
-  }
-
-  /** Drop a dead set's rows from the store: only the fp_bucket
-    * partitions holding a dead doc's row rewrite (named by joining the
-    * dead set against the store — cost ∝ |dead| + touched partitions);
-    * crash-safe via [[SafeSwap]]. Shared by [[compactFingerprintIndex]]
-    * (whole tombstone set) and the resurrection path in
-    * [[appendFingerprintDelta]] (the re-ingested overlap only). */
-  private def expunge(spark: SparkSession, indexDir: String,
-      dead: DataFrame): Unit = {
-    val fs = hadoopFs(spark, indexDir)
-    val store = spark.read.parquet(s"$indexDir/fingerprints")
-    val touched = store.join(dead, Seq("doc_id"))
-      .select(col("fp_bucket").cast("long")).distinct()
-      .collect().map(_.getLong(0)) // bounded: ≤ fpBuckets values
-    if (touched.nonEmpty) {
-      val tmp = s"$indexDir/fingerprints_compact_tmp"
-      store.where(col("fp_bucket").isin(touched.toIndexedSeq.map(Long.box): _*))
-        .join(dead, Seq("doc_id"), "left_anti")
-        .repartition(col("fp_bucket")) // one file per rewritten dir
-        .write.mode("overwrite").partitionBy("fp_bucket").parquet(tmp)
-      SafeSwap.swapPartitions(fs, fsPath(s"$indexDir/fingerprints"), fsPath(tmp),
-        touched.toIndexedSeq.map(b => s"fp_bucket=$b"))
-    }
-  }
-
-  /** Expunge the tombstones ([[expunge]] over the whole set), tombstones
-    * deleted LAST (the commit point). */
-  def compactFingerprintIndex(spark: SparkSession, indexDir: String): Unit = {
-    val fs = hadoopFs(spark, indexDir)
-    recoverStores(spark, indexDir)
-    if (!fs.exists(fsPath(s"$indexDir/fingerprints"))) {
-      // tombstones against a store that was never built: nothing holds
-      // the ids, so the retire is already in effect
-      fs.delete(fsPath(s"$indexDir/tombstones"), true)
-      return
-    }
-    tombstonesOf(spark, indexDir).foreach { dead =>
-      expunge(spark, indexDir, dead)
-      fs.delete(fsPath(s"$indexDir/tombstones"), true)
-    }
-  }
+  /** Expunge the tombstones (only the fp buckets holding a dead doc's
+    * row rewrite), tombstones deleted LAST (the commit point). */
+  def compactFingerprintIndex(spark: SparkSession, indexDir: String): Unit =
+    store.compact(spark, indexDir)(store.expungeKeyed(indexDir, _))
 }

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *     (the postings artifact's `dl` twin).
   *   - `$dir/bands`  — (doc_id, family, hi, lo, band, band_key),
   *     partitioned by `band_bucket = pmod(xxhash64(family, band,
-  *     band_key), B)`: the probe-side store. An ingest gate ("does this
+  *     band_key), 16)`: the probe-side store. An ingest gate ("does this
   *     arriving image share a band with anything we hold") computes its
   *     delta's buckets from a LOCAL relation and pushes a static
   *     `band_bucket IN (...)` partition filter — probe cost ∝ |delta|'s
@@ -45,59 +45,32 @@ import org.apache.spark.sql.functions._
   */
 object ImageIndex {
 
-  /** Band-bucket count of the probe store. 16-way: the sf0.1 artifact's
-    * band relation is ~8 rows/doc — buckets stay file-sized; at 100 TB
-    * raise it as the term-bucket analog (a constructor knob, not a
-    * format change). */
-  val DefaultBandBuckets = 16
+  /** Partition layout of the band probe store. 16-way: the sf0.1
+    * artifact's band relation is ~8 rows/doc, so buckets stay
+    * file-sized. */
+  private val BandLayout = IdStore.Layout("band_bucket", 16, "family", "band", "band_key")
 
-  /** Partition count of the per-doc hashes store (`id_bucket =
-    * pmod(xxhash64(doc_id), B)`): the delta append's replay guard and
-    * the expunge's rewrite prune to the id buckets their id-set hashes
-    * to — guard/delete cost ∝ the delta, never the corpus. A
-    * pre-layout artifact (no `id_bucket` partition column) is detected
-    * from the store's schema and served/guarded in the legacy
-    * full-store forms; the next base rebuild re-lays it out. */
-  val DefaultIdBuckets = 64
+  /** The artifact's lifecycle: bands derived, the per-doc hashes store
+    * keyed (`id_bucket` — the replay guard's and the expunge's prune). */
+  private val store = new IdStore("doc_id", IdStore.byId("doc_id"), "bands", "hashes")
 
   private val persistedIndex = new TempArtifacts("graft-image-index")
   private[ops] def persistedIndexDirFor(spark: SparkSession, dir: String): Option[String] =
     persistedIndex.peek(spark, dir)
   def releaseStages(spark: SparkSession): Int = persistedIndex.release(spark)
 
-  private def hadoopFs(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-
   /** The band relation of a per-doc hash relation: four 16-bit bands per
     * family (family 0 = aHash, 1 = dHash), hashes riding the band rows
-    * (the q95 discipline — hamming verifies inside the join stage), plus
-    * the bucket column the probe store partitions by. Keying goes
-    * through [[Multimodal.perceptualBands]] so the artifact, the live
-    * q121 path, and the streaming ingest gate can never band
+    * (the q95 discipline — hamming verifies inside the join stage).
+    * Keying goes through [[Multimodal.perceptualBands]] so the artifact,
+    * the live q121 path, and the streaming ingest gate can never band
     * differently. */
-  private[ops] def bandsOfHashes(hashes: DataFrame, bandBuckets: Int): DataFrame = {
+  private def bandsOfHashes(hashes: DataFrame): DataFrame = {
     def fam(f: Int, hi: String, lo: String) =
       Multimodal.perceptualBands(
         hashes.select(col("doc_id"), col(hi).as("hi"), col(lo).as("lo")))
         .withColumn("family", lit(f))
     fam(0, "a_hi", "a_lo").unionAll(fam(1, "d_hi", "d_lo"))
-      .withColumn("band_bucket",
-        pmod(xxhash64(col("family"), col("band"), col("band_key")), lit(bandBuckets.toLong)))
-  }
-
-  /** The replay guard's DELTA-PROPORTIONAL store scan (the
-    * [[LshIndex.guardHeldIds]] twin for the image family): the delta's
-    * id-bucket vocabulary (collected locally, ≤ idBuckets longs) pushes
-    * a static partition filter into the guard scan — guard cost ∝ the
-    * delta, never the corpus. */
-  private[graft] def guardHeldIds(spark: SparkSession, indexDir: String,
-      delta: DataFrame, idBuckets: Int): DataFrame = {
-    val deltaBuckets = delta
-      .select(pmod(xxhash64(col("doc_id")), lit(idBuckets.toLong)).as("b"))
-      .distinct().collect().map(_.getLong(0)).toSeq // local: <= idBuckets values
-    spark.read.parquet(s"$indexDir/hashes")
-      .where(col("id_bucket").isin(deltaBuckets: _*))
-      .select("doc_id")
   }
 
   /** Persist the index from an arbitrary per-doc hash relation
@@ -105,26 +78,16 @@ object ImageIndex {
     * happened upstream, exactly once. The band store derives from the
     * just-written hashes parquet (a second scan of the TINY artifact,
     * never a second decode). */
-  def saveImageHashIndexOf(hashes: DataFrame, outDir: String,
-      bandBuckets: Int = DefaultBandBuckets,
-      idBuckets: Int = DefaultIdBuckets): Unit = {
-    require(bandBuckets > 0 && idBuckets > 0, "bucket counts must be positive")
-    hashes.withColumn("id_bucket",
-        pmod(xxhash64(col("doc_id")), lit(idBuckets.toLong)))
-      .repartition(col("id_bucket")) // one file per bucket dir, not one per task
-      .write.mode("overwrite").partitionBy("id_bucket").parquet(s"$outDir/hashes")
-    val spark = hashes.sparkSession
-    bandsOfHashes(spark.read.parquet(s"$outDir/hashes"), bandBuckets)
-      .repartition(col("band_bucket")) // one file per bucket dir, not one per task
-      .write.mode("overwrite").partitionBy("band_bucket").parquet(s"$outDir/bands")
+  def saveImageHashIndexOf(hashes: DataFrame, outDir: String): Unit = {
+    store.layout.write(hashes, s"$outDir/hashes", "overwrite")
+    BandLayout.write(bandsOfHashes(hashes.sparkSession.read.parquet(s"$outDir/hashes")),
+      s"$outDir/bands", "overwrite")
   }
 
   /** Full-corpus build over the `documents` table: ONE decode pass
     * (both hash families per doc), then the artifact writes. */
-  def saveImageHashIndex(spark: SparkSession, dir: String, outDir: String,
-      bandBuckets: Int = DefaultBandBuckets): Unit =
-    saveImageHashIndexOf(
-      Multimodal.imageHashesOf(Tables.documents(spark, dir)), outDir, bandBuckets)
+  def saveImageHashIndex(spark: SparkSession, dir: String, outDir: String): Unit =
+    saveImageHashIndexOf(Multimodal.imageHashesOf(Tables.documents(spark, dir)), outDir)
 
   /** Merge a delta batch of documents into a persisted artifact — the
     * daily-ingest shape, with the postings delta's exact economics:
@@ -132,57 +95,25 @@ object ImageIndex {
     * land as dynamic-partition appends touching only the delta's
     * buckets; nothing on disk is rewritten (except resurrection, below).
     * Replay-safe: doc_ids already in the hashes store are anti-joined
-    * out up front (one column-pruned scan + a join ∝ |delta|), so a
-    * retried ingest is a no-op. Bootstrap: a first delta into an empty
-    * dir indexes everything.
+    * out up front (a scan of the delta's id buckets + a join ∝ |delta|),
+    * so a retried ingest is a no-op. Bootstrap: a first delta into an
+    * empty dir indexes everything.
     *
     * Resurrection (the deleted-then-re-appended interaction): a delta
     * doc_id present in the tombstone set is being deliberately
     * re-ingested — the caller wants it LIVE again. Its dead rows are
-    * expunged (targeted compaction, cost ∝ the overlap's touched
-    * partitions) and its tombstones withdrawn BEFORE the replay guard
-    * runs, so the fresh rows then append as new and neither generation
-    * double-serves. Crash-safe in every window: expunge-then-withdraw
-    * ordering means a crash leaves either (rows gone, tombstone still
-    * present → doc still dead, re-run re-detects the overlap) or
-    * (tombstone withdrawn, rows not yet appended → guard sees the doc
-    * absent and appends) — both converge on re-run. */
-  def appendImageHashDelta(deltaDocs: DataFrame, indexDir: String,
-      bandBuckets: Int = DefaultBandBuckets): Unit = {
-    require(bandBuckets > 0, "bucket count must be positive")
+    * expunged and its tombstones withdrawn BEFORE the replay guard runs
+    * ([[IdStore.withdraw]]), so the fresh rows then append as new and
+    * neither generation double-serves. */
+  def appendImageHashDelta(deltaDocs: DataFrame, indexDir: String): Unit = {
     val spark = deltaDocs.sparkSession
-    val fs = hadoopFs(spark, indexDir)
-    SafeSwap.recover(fs, new org.apache.hadoop.fs.Path(s"$indexDir/hashes"))
-    SafeSwap.recover(fs, new org.apache.hadoop.fs.Path(s"$indexDir/bands"))
-    AppendCommit.recover(fs, indexDir)
+    store.recover(spark, indexDir)
     // decode ONCE, up front: both the resurrection check and the append
     // plan from this one materialized relation
     val deltaHashes = Multimodal.imageHashesOf(deltaDocs).cache()
     deltaHashes.count()
-    tombstonesOf(spark, indexDir).foreach { dead =>
-      val overlap = dead.join(deltaHashes.select("doc_id"), Seq("doc_id")).cache()
-      if (overlap.count() > 0) {
-        expunge(spark, indexDir, overlap, bandBuckets)
-        val tsTmp = s"$indexDir/tombstones_withdraw_tmp"
-        dead.join(overlap, Seq("doc_id"), "left_anti")
-          .write.mode("overwrite").parquet(tsTmp)
-        SafeSwap.swapDir(fs,
-          new org.apache.hadoop.fs.Path(s"$indexDir/tombstones"),
-          new org.apache.hadoop.fs.Path(tsTmp))
-      }
-      overlap.unpersist(blocking = false)
-    }
-    val hashesPath = new org.apache.hadoop.fs.Path(s"$indexDir/hashes")
-    val bucketed = fs.exists(hashesPath) &&
-      spark.read.parquet(s"$indexDir/hashes").columns.contains("id_bucket")
-    val fresh = (
-      if (!fs.exists(hashesPath)) deltaHashes
-      else if (bucketed) deltaHashes.join(
-        guardHeldIds(spark, indexDir, deltaHashes, DefaultIdBuckets),
-        Seq("doc_id"), "left_anti")
-      else deltaHashes.join( // pre-layout artifact: full-store guard
-        spark.read.parquet(s"$indexDir/hashes").select("doc_id"),
-        Seq("doc_id"), "left_anti")).cache()
+    val fresh = store.admit(spark, indexDir, deltaHashes)(
+      expunge(spark, indexDir, _)).cache()
     fresh.count()
     // WRITE ORDER MATTERS (the appendPostingsDelta/appendPqDelta
     // contract): the derived store (bands) appends FIRST, the replay
@@ -196,18 +127,10 @@ object ImageIndex {
     // marker makes any crash between the two writes roll BOTH stores
     // back to their recorded listings at the next recover — the re-run
     // re-admits the whole delta and no duplicate band row ever exists.
-    AppendCommit.begin(fs, indexDir, Seq("bands", "hashes"))
-    bandsOfHashes(fresh, bandBuckets)
-      .repartition(col("band_bucket")) // one appended file per touched dir
-      .write.mode("append").partitionBy("band_bucket").parquet(s"$indexDir/bands")
-    if (bucketed || !fs.exists(hashesPath))
-      fresh.withColumn("id_bucket",
-          pmod(xxhash64(col("doc_id")), lit(DefaultIdBuckets.toLong)))
-        .repartition(col("id_bucket"))
-        .write.mode("append").partitionBy("id_bucket").parquet(s"$indexDir/hashes")
-    else
-      fresh.write.mode("append").parquet(s"$indexDir/hashes")
-    AppendCommit.commit(fs, indexDir)
+    store.atomically(spark, indexDir) {
+      BandLayout.write(bandsOfHashes(fresh), s"$indexDir/bands", "append")
+      store.layout.write(fresh, s"$indexDir/hashes", "append")
+    }
     fresh.unpersist(blocking = false)
     deltaHashes.unpersist(blocking = false)
   }
@@ -216,85 +139,24 @@ object ImageIndex {
     * ∝ |deletes|); serving anti-joins them out, [[compactImageHashIndex]]
     * expunges them. Idempotent (anti-join semantics). */
   def tombstoneImages(deletedIds: DataFrame, indexDir: String): Unit =
-    deletedIds.select(col("doc_id").cast("long").as("doc_id"))
-      .write.mode("append").parquet(s"$indexDir/tombstones")
+    store.tombstone(deletedIds, indexDir)
 
-  private def tombstonesOf(spark: SparkSession, indexDir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/tombstones")
-    if (hadoopFs(spark, indexDir).exists(p))
-      Some(StoreReads.parquet(spark, s"$indexDir/tombstones").select("doc_id").distinct())
-    else None
-  }
-
-  /** Drop a dead set's rows from both stores: the per-doc hashes store
-    * rewrites wholesale (it is the artifact's smallest relation — the
-    * dl precedent), the band store rewrites ONLY the buckets holding a
-    * dead doc's rows (≤ bandBuckets dirs; untouched buckets' files
+  /** Drop a dead set's rows from both stores: the band store rewrites
+    * ONLY the buckets holding a dead doc's rows, the hashes store only
+    * the id buckets the dead ids hash to (untouched buckets' files
     * survive byte-identical). All swaps crash-safe via [[SafeSwap]]. */
-  private def expunge(spark: SparkSession, indexDir: String,
-      dead: DataFrame, bandBuckets: Int): Unit = {
-    val fs = hadoopFs(spark, indexDir)
-    val bandsRoot = new org.apache.hadoop.fs.Path(s"$indexDir/bands")
-    val hashesRoot = new org.apache.hadoop.fs.Path(s"$indexDir/hashes")
-    val bands = spark.read.parquet(s"$indexDir/bands")
-    val touched = bands.join(dead, Seq("doc_id"))
-      // partition discovery types band_bucket as INT on read-back
-      .select(col("band_bucket").cast("long")).distinct()
-      .collect().map(_.getLong(0)) // bounded: ≤ bandBuckets values
-    if (touched.nonEmpty) {
-      val tmp = s"$indexDir/bands_compact_tmp"
-      bands.where(col("band_bucket").isin(touched.toIndexedSeq.map(Long.box): _*))
-        .join(dead, Seq("doc_id"), "left_anti")
-        .repartition(col("band_bucket")) // one file per rewritten dir
-        .write.mode("overwrite").partitionBy("band_bucket").parquet(tmp)
-      // a bucket whose every row was dead has no rewritten dir — the
-      // swap moves it aside and replaces it with nothing
-      SafeSwap.swapPartitions(fs, bandsRoot,
-        new org.apache.hadoop.fs.Path(tmp),
-        touched.toIndexedSeq.map(b => s"band_bucket=$b"))
-    }
-    if (spark.read.parquet(s"$indexDir/hashes").columns.contains("id_bucket")) {
-      // the dead ids themselves name the touched id_bucket dirs — no
-      // store scan; rewrite cost is the touched partitions only
-      val touchedIds = dead
-        .select(pmod(xxhash64(col("doc_id")), lit(DefaultIdBuckets.toLong)).as("b"))
-        .distinct().collect().map(_.getLong(0)) // bounded: <= idBuckets values
-      if (touchedIds.nonEmpty) {
-        val hTmp = s"$indexDir/hashes_compact_tmp"
-        spark.read.parquet(s"$indexDir/hashes")
-          .where(col("id_bucket").isin(touchedIds.toIndexedSeq.map(Long.box): _*))
-          .join(dead, Seq("doc_id"), "left_anti")
-          .repartition(col("id_bucket"))
-          .write.mode("overwrite").partitionBy("id_bucket").parquet(hTmp)
-        SafeSwap.swapPartitions(fs, hashesRoot,
-          new org.apache.hadoop.fs.Path(hTmp),
-          touchedIds.toIndexedSeq.map(b => s"id_bucket=$b"))
-      }
-    } else { // pre-layout artifact: wholesale rewrite
-      val hTmp = s"$indexDir/hashes_compact_tmp"
-      spark.read.parquet(s"$indexDir/hashes")
-        .join(dead, Seq("doc_id"), "left_anti")
-        .write.mode("overwrite").parquet(hTmp)
-      SafeSwap.swapDir(fs, hashesRoot, new org.apache.hadoop.fs.Path(hTmp))
-    }
+  private def expunge(spark: SparkSession, indexDir: String, dead: DataFrame): Unit = {
+    IdStore.expunge(s"$indexDir/bands", BandLayout.column, "doc_id", dead)
+    store.expungeKeyed(indexDir, dead)
   }
 
   /** Expunge the tombstones — [[Retrieval.compactPostings]]'s contract
-    * for the image artifact: rewrite only touched band buckets + the
-    * small per-doc store, delete the tombstone set LAST (the commit
-    * point), [[SafeSwap]] throughout, answer-invisible by construction
-    * (the q159 gate serves a compacted lifecycle under the surviving-
-    * corpus oracle). */
-  def compactImageHashIndex(spark: SparkSession, indexDir: String): Unit = {
-    val fs = hadoopFs(spark, indexDir)
-    SafeSwap.recover(fs, new org.apache.hadoop.fs.Path(s"$indexDir/hashes"))
-    SafeSwap.recover(fs, new org.apache.hadoop.fs.Path(s"$indexDir/bands"))
-    AppendCommit.recover(fs, indexDir)
-    tombstonesOf(spark, indexDir).foreach { dead =>
-      expunge(spark, indexDir, dead, DefaultBandBuckets)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/tombstones"), true)
-    }
-  }
+    * for the image artifact: rewrite only touched band and id buckets,
+    * delete the tombstone set LAST (the commit point), [[SafeSwap]]
+    * throughout, answer-invisible by construction (the q159 gate serves
+    * a compacted lifecycle under the surviving-corpus oracle). */
+  def compactImageHashIndex(spark: SparkSession, indexDir: String): Unit =
+    store.compact(spark, indexDir)(expunge(spark, indexDir, _))
 
   /** Serve the perceptual near-dup pair relation from the artifact —
     * q121's (or, with `gradient = true`, q125's) exact output with NO
@@ -306,15 +168,9 @@ object ImageIndex {
   def imageDupsFromIndex(spark: SparkSession, indexDir: String,
       gradient: Boolean = false, maxHamming: Int = 3,
       maxBandPopulation: Int = 1000): DataFrame = {
-    val fs = hadoopFs(spark, indexDir)
-    SafeSwap.recover(fs, new org.apache.hadoop.fs.Path(s"$indexDir/hashes"))
-    SafeSwap.recover(fs, new org.apache.hadoop.fs.Path(s"$indexDir/bands"))
-    AppendCommit.recover(fs, indexDir)
-    val all = StoreReads.parquet(spark, s"$indexDir/hashes")
-    val live = tombstonesOf(spark, indexDir) match {
-      case Some(dead) => all.join(dead, Seq("doc_id"), "left_anti")
-      case None => all
-    }
+    store.recover(spark, indexDir)
+    val live = store.live(StoreReads.parquet(spark, s"$indexDir/hashes"),
+      store.tombstones(spark, indexDir))
     val (hi, lo) = if (gradient) ("d_hi", "d_lo") else ("a_hi", "a_lo")
     Multimodal.perceptualDupsOfHashes(
       live.select(col("doc_id"), col(hi).as("hi"), col(lo).as("lo")),
@@ -325,32 +181,25 @@ object ImageIndex {
   /** Ingest-gate probe: which held images does each arriving image
     * share a band with (hamming-verified)? The arriving batch is
     * decoded once, its band keys computed, and the buckets they hash to
-    * collected from a LOCAL relation (≤ bandBuckets values, no corpus
-    * work) and pushed as a static partition filter — the artifact scan
-    * reads only the probed band directories, so probe cost is bounded
-    * by the delta's band vocabulary no matter how large the corpus
-    * grows. Output: (probe_id, doc_id, hamming ≤ maxHamming). */
+    * collected from a LOCAL relation (≤ 16 values, no corpus work) and
+    * pushed as a static partition filter — the artifact scan reads only
+    * the probed band directories, so probe cost is bounded by the
+    * delta's band vocabulary no matter how large the corpus grows.
+    * Output: (probe_id, doc_id, hamming ≤ maxHamming). */
   def probeImages(probeDocs: DataFrame, indexDir: String,
-      gradient: Boolean = false, maxHamming: Int = 3,
-      bandBuckets: Int = DefaultBandBuckets): DataFrame = {
+      gradient: Boolean = false, maxHamming: Int = 3): DataFrame = {
     val spark = probeDocs.sparkSession
-    val fs = hadoopFs(spark, indexDir)
-    SafeSwap.recover(fs, new org.apache.hadoop.fs.Path(s"$indexDir/bands"))
-    AppendCommit.recover(fs, indexDir)
+    store.recover(spark, indexDir)
     val family = if (gradient) 1 else 0
-    val probeBands = bandsOfHashes(Multimodal.imageHashesOf(probeDocs), bandBuckets)
+    val probeBands = bandsOfHashes(Multimodal.imageHashesOf(probeDocs))
       .where(col("family") === family)
       .select(col("doc_id").as("probe_id"), col("hi").as("p_hi"), col("lo").as("p_lo"),
-        col("band"), col("band_key"), col("band_bucket"))
+        col("family"), col("band"), col("band_key"))
       .cache()
-    val buckets = probeBands.select("band_bucket").distinct()
-      .collect().map(_.getLong(0)).toSeq // local relation: ≤ bandBuckets values
     val corpusBands = StoreReads.parquet(spark, s"$indexDir/bands")
-      .where(col("band_bucket").isin(buckets: _*) && col("family") === family)
-    val held = tombstonesOf(spark, indexDir) match {
-      case Some(dead) => corpusBands.join(dead, Seq("doc_id"), "left_anti")
-      case None => corpusBands
-    }
+      .where(col(BandLayout.column).isin(BandLayout.bucketsOf(probeBands): _*) &&
+        col("family") === family)
+    val held = store.live(corpusBands, store.tombstones(spark, indexDir))
     probeBands.join(held, Seq("band", "band_key"))
       .select(col("probe_id"), col("doc_id"),
         (bit_count(col("p_hi").bitwiseXOR(col("hi"))) +

@@ -25,17 +25,17 @@ import graft.functions.VectorFunctions.dotProduct
   *
   * Layout (the postings/image-index twins):
   *   - `$dir/vectors` — (vec_id, u), partitioned by `id_bucket =
-  *     pmod(xxhash64(vec_id), B)`: the exact-rescore store, AND the
+  *     pmod(xxhash64(vec_id), 64)`: the exact-rescore store, AND the
   *     replay guard's scan target — the guard and the expunge prune to
   *     the id buckets their id-set hashes to, so append/delete cost is
   *     ∝ the delta, never the corpus.
   *   - `$dir/buckets` — (vec_id, tbl, bucket), partitioned by
-  *     `bucket_bucket = pmod(xxhash64(tbl, bucket), B)`: the probe-side
+  *     `bucket_bucket = pmod(xxhash64(tbl, bucket), 64)`: the probe-side
   *     store. A small probe batch collects its bucket ids locally and
   *     pushes a static partition filter — probe cost ∝ the batch's
   *     bucket vocabulary, never the corpus.
   *   - `$dir/meta` — (bits, n_tables, bucket_buckets, id_buckets): the
-  *     frozen geometry, config AND layout moduli.
+  *     frozen geometry and the two (fixed) layout moduli.
   *   - `$dir/tombstones` — (vec_id): anti-joined at serve, expunged by
   *     [[compactLshIndex]].
   *
@@ -46,18 +46,31 @@ import graft.functions.VectorFunctions.dotProduct
   */
 object LshIndex {
 
-  /** Partition count of the probe store. The (tbl, bucket) key space is
+  /** Partition layout of the probe store. The (tbl, bucket) key space is
     * nTables × 2^bits — hashing it into a bounded dir count keeps the
     * artifact listable while a probe batch still prunes to ≤ its own
     * bucket vocabulary. */
-  val DefaultBucketBuckets = 64
+  private val BucketLayout = IdStore.Layout("bucket_bucket", 64, "tbl", "bucket")
 
-  /** Partition count of the vectors store (`id_bucket =
-    * pmod(xxhash64(vec_id), B)`): the delta append's replay guard and
-    * the expunge's touched-partition rewrite both prune to the id
-    * buckets their id-set hashes to — guard/delete cost ∝ the delta,
-    * never the corpus. */
-  val DefaultIdBuckets = 64
+  /** The artifact's lifecycle: buckets derived, the vectors store keyed
+    * (`id_bucket` — the replay guard's and the expunge's prune).
+    * Entry-point recovery first completes a crashed geometry rebuild
+    * ([[maintainGeometry]]) from its durable snapshot — a committed
+    * rebuild supersedes every store (it overwrites all of them); with
+    * no marker, a leftover snapshot is a crash BEFORE the commit point
+    * and the old artifact is intact, so the snapshot drops — and drops a
+    * [[writeBuckets]] staging dir a crash between its two jobs left
+    * behind (pure derivation — the re-run rewrites it). */
+  private[graft] val store =
+    new IdStore("vec_id", IdStore.byId("vec_id"), "buckets", "vectors") {
+      override def recover(spark: SparkSession, indexDir: String): Boolean = {
+        val fs = IdStore.fsOf(spark, indexDir)
+        if (fs.exists(regeomMarker(indexDir))) rebuildFromSnapshot(spark, indexDir)
+        else fs.delete(fsPath(regeomSnapshot(indexDir)), true)
+        fs.delete(fsPath(s"$indexDir/sig_staging_tmp"), true)
+        super.recover(spark, indexDir)
+      }
+    }
 
   private val persistedIndex = new TempArtifacts("graft-lsh-index")
   private[ops] def persistedIndexDirFor(spark: SparkSession, dir: String): Option[String] =
@@ -79,33 +92,11 @@ object LshIndex {
     * across dirs, so no file prune applies). The tag listing itself is
     * metadata-only (~sub-ms on the artifact's ~130 files). */
   private val metaCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (Int, Int, Int, Int)]()
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (Int, Int)]()
   private val qvCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int), Seq[(Long, Seq[Double])]]()
 
-  private def hadoopFs(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-
   private def fsPath(p: String) = new org.apache.hadoop.fs.Path(p)
-
-  /** Entry-point recovery: restore any partitions a crashed swap left
-    * aside, drop a [[writeBuckets]] staging dir a crash between its
-    * two jobs left behind (pure derivation — the re-run rewrites it),
-    * and complete a crashed geometry rebuild ([[maintainGeometry]])
-    * from its durable snapshot. */
-  private def recoverStores(spark: SparkSession, indexDir: String): Unit = {
-    val fs = hadoopFs(spark, indexDir)
-    // the regeom recovery runs FIRST: a committed-but-unfinished rebuild
-    // supersedes every store (it overwrites all of them from the
-    // snapshot); with no marker, a leftover snapshot is a crash BEFORE
-    // the commit point — the old artifact is intact, drop the snapshot
-    if (fs.exists(regeomMarker(indexDir))) rebuildFromSnapshot(spark, indexDir)
-    else fs.delete(fsPath(regeomSnapshot(indexDir)), true)
-    SafeSwap.recover(fs, fsPath(s"$indexDir/vectors"))
-    SafeSwap.recover(fs, fsPath(s"$indexDir/buckets"))
-    AppendCommit.recover(fs, indexDir)
-    fs.delete(fsPath(s"$indexDir/sig_staging_tmp"), true)
-  }
 
   private def regeomMarker(indexDir: String) = fsPath(s"$indexDir/_regeom_pending")
   private def regeomSnapshot(indexDir: String) = s"$indexDir/regeom_snapshot"
@@ -115,11 +106,11 @@ object LshIndex {
     * adaptive geometry, drop the (already-applied) tombstones, then
     * clear the marker + snapshot. Idempotent from ANY crash point —
     * every write is an overwrite of a derived store and the snapshot is
-    * the single source of truth — so [[recoverStores]] can re-run it
+    * the single source of truth — so [[store]]'s recovery can re-run it
     * wholesale; until the marker clears, no reader ever sees a mixed
     * old/new-geometry artifact (every entry point recovers first). */
   private def rebuildFromSnapshot(spark: SparkSession, indexDir: String): Unit = {
-    val fs = hadoopFs(spark, indexDir)
+    val fs = IdStore.fsOf(spark, indexDir)
     saveLshIndexOf(spark.read.parquet(regeomSnapshot(indexDir)), indexDir)
     fs.delete(fsPath(s"$indexDir/tombstones"), true)
     fs.delete(regeomMarker(indexDir), false)
@@ -147,19 +138,18 @@ object LshIndex {
     * reads), the marker commits the intent, and the rebuild runs from
     * the snapshot with overwrite-mode writes only — a crash at any
     * point re-runs [[rebuildFromSnapshot]] at the next entry
-    * ([[recoverStores]]), so no reader ever serves a mixed-geometry
+    * ([[store]]'s recovery), so no reader ever serves a mixed-geometry
     * artifact. Cost: one artifact-proportional rebuild, on the
     * maintenance cadence, only when geometry actually drifted.
     * Returns the new (bits, nTables) if a rebuild ran. */
   def maintainGeometry(spark: SparkSession, indexDir: String): Option[(Int, Int)] = {
-    val fs = hadoopFs(spark, indexDir)
-    recoverStores(spark, indexDir)
-    val (bits, nTables, _, _) = readMeta(spark, indexDir)
+    store.recover(spark, indexDir)
+    val (bits, nTables) = readMeta(spark, indexDir)
     val live = liveVectors(spark, indexDir)
     val target = Similarity.adaptiveLshConfig(live.count())
     if (target == ((bits, nTables))) return None
     live.write.mode("overwrite").parquet(regeomSnapshot(indexDir))
-    fs.create(regeomMarker(indexDir), true).close() // the commit point
+    IdStore.fsOf(spark, indexDir).create(regeomMarker(indexDir), true).close() // the commit point
     rebuildFromSnapshot(spark, indexDir)
     Some(target)
   }
@@ -185,45 +175,44 @@ object LshIndex {
     * (staging written, buckets not, or buckets appended, vectors not):
     * re-runs converge — see [[appendLshDelta]]. */
   private def writeBuckets(vecs: DataFrame, bits: Int, nTables: Int,
-      bucketBuckets: Int, indexDir: String, mode: String): Unit = {
+      indexDir: String, mode: String): Unit = {
     val spark = vecs.sparkSession
     val staging = s"$indexDir/sig_staging_tmp"
     Similarity.lshSignaturesOf(vecs, bits, nTables)
       .select(col("vec_id"), col("buckets"))
       .write.mode("overwrite").parquet(staging)
-    spark.read.parquet(staging)
-      .select(col("vec_id"), posexplode(col("buckets")).as(Seq("tbl", "bucket")))
-      .withColumn("bucket_bucket",
-        pmod(xxhash64(col("tbl"), col("bucket")), lit(bucketBuckets.toLong)))
-      .repartition(col("bucket_bucket")) // one file per bucket dir, not one per task
-      .write.mode(mode).partitionBy("bucket_bucket").parquet(s"$indexDir/buckets")
-    hadoopFs(spark, indexDir).delete(fsPath(staging), true)
+    BucketLayout.write(spark.read.parquet(staging)
+        .select(col("vec_id"), posexplode(col("buckets")).as(Seq("tbl", "bucket"))),
+      s"$indexDir/buckets", mode)
+    IdStore.fsOf(spark, indexDir).delete(fsPath(staging), true)
   }
 
-  /** (bits, nTables, bucketBuckets, idBuckets) — ALL FOUR are frozen
-    * geometry: mixing bucket keys from two (bits, nTables) in one store
-    * zeroes recall across the split, and mixing two partition-dir
-    * counts (either store's) makes the corresponding partition prune
-    * silently miss rows landed under the other modulus. */
-  private def readMeta(spark: SparkSession, indexDir: String): (Int, Int, Int, Int) =
+  /** The frozen geometry (bits, nTables): mixing bucket keys from two
+    * geometries in one store zeroes recall across the split. */
+  private def readMeta(spark: SparkSession, indexDir: String): (Int, Int) =
     metaCache.computeIfAbsent(
       (spark, StageCache.inputTag(spark, s"$indexDir/meta")),
       _ => readMetaUncached(spark, indexDir))
 
-  private def readMetaUncached(spark: SparkSession, indexDir: String): (Int, Int, Int, Int) = {
+  private def readMetaUncached(spark: SparkSession, indexDir: String): (Int, Int) = {
     val r = spark.read.parquet(s"$indexDir/meta").head()
-    // FAIL FAST, never guess: the serve/expunge/guard partition prunes
-    // are only sound under the exact modulus the writes used. Guessing
-    // a default for an artifact whose meta predates the field would let
-    // a non-default-built store serve silently-empty candidates (probes
-    // hashed mod 64 miss dirs laid out mod 16) — an error is the safe
-    // answer; migrate the artifact.
+    // FAIL FAST, never guess: a meta without the layout fields predates
+    // the partitioned stores, and the serve/expunge/guard partition
+    // prunes over an unpartitioned store would serve silently-empty
+    // candidates — an error is the safe answer; migrate the artifact.
     require(r.schema.fieldNames.contains("bucket_buckets") &&
         r.schema.fieldNames.contains("id_buckets"),
       s"$indexDir/meta predates the partition-prune layout; " +
         "run LshIndex.migrateLshIndex once to upgrade it in place")
-    (r.getAs[Int]("bits"), r.getAs[Int]("n_tables"),
-      r.getAs[Int]("bucket_buckets"), r.getAs[Int]("id_buckets"))
+    (r.getAs[Int]("bits"), r.getAs[Int]("n_tables"))
+  }
+
+  /** The frozen geometry plus the layout moduli — the meta store. */
+  private def writeMeta(spark: SparkSession, bits: Int, nTables: Int, path: String): Unit = {
+    import spark.implicits._
+    Seq((bits, nTables, BucketLayout.modulus, store.layout.modulus))
+      .toDF("bits", "n_tables", "bucket_buckets", "id_buckets")
+      .coalesce(1).write.mode("overwrite").parquet(path)
   }
 
   /** One-shot in-place upgrade of a pre-partition-prune artifact (meta
@@ -234,17 +223,15 @@ object LshIndex {
     * probe hashed mod 64 silently misses rows laid out mod 16), but
     * REBUILDING is not: bucket keys are pure functions of the vector
     * under the frozen (bits, nTables), so rewriting the bucket store
-    * from the vectors store under [[DefaultBucketBuckets]] reproduces
-    * exactly what a current-layout build would have written — one pass
-    * over the artifact's own vectors, never the upstream corpus. The
-    * meta store is swapped LAST (crash-safe commit point: until the new
-    * meta lands, readers still fail fast rather than mix layouts).
-    * Idempotent: a current-layout artifact is a no-op. */
-  def migrateLshIndex(spark: SparkSession, indexDir: String,
-      bucketBuckets: Int = DefaultBucketBuckets,
-      idBuckets: Int = DefaultIdBuckets): Boolean = {
-    val fs = hadoopFs(spark, indexDir)
-    recoverStores(spark, indexDir)
+    * from the vectors store reproduces exactly what a current-layout
+    * build would have written — one pass over the artifact's own
+    * vectors, never the upstream corpus. The meta store is swapped LAST
+    * (crash-safe commit point: until the new meta lands, readers still
+    * fail fast rather than mix layouts). Idempotent: a current-layout
+    * artifact is a no-op. */
+  def migrateLshIndex(spark: SparkSession, indexDir: String): Boolean = {
+    val fs = IdStore.fsOf(spark, indexDir)
+    store.recover(spark, indexDir)
     val meta = spark.read.parquet(s"$indexDir/meta").head()
     if (meta.schema.fieldNames.contains("bucket_buckets") &&
         meta.schema.fieldNames.contains("id_buckets")) return false
@@ -255,18 +242,12 @@ object LshIndex {
     // artifact stays unreadable-LOUDLY during the window, never
     // silently mixed-layout
     val vTmp = s"$indexDir/vectors_migrate_tmp"
-    spark.read.parquet(s"$indexDir/vectors").select(col("vec_id"), col("u"))
-      .withColumn("id_bucket", pmod(xxhash64(col("vec_id")), lit(idBuckets.toLong)))
-      .repartition(col("id_bucket"))
-      .write.mode("overwrite").partitionBy("id_bucket").parquet(vTmp)
+    store.layout.write(spark.read.parquet(s"$indexDir/vectors").select(col("vec_id"), col("u")),
+      vTmp, "overwrite")
     SafeSwap.swapDir(fs, fsPath(s"$indexDir/vectors"), fsPath(vTmp))
-    writeBuckets(vectorsStore(spark, indexDir), bits, nTables,
-      bucketBuckets, indexDir, "overwrite")
-    import spark.implicits._
+    writeBuckets(vectorsStore(spark, indexDir), bits, nTables, indexDir, "overwrite")
     val mTmp = s"$indexDir/meta_migrate_tmp"
-    Seq((bits, nTables, bucketBuckets, idBuckets))
-      .toDF("bits", "n_tables", "bucket_buckets", "id_buckets")
-      .coalesce(1).write.mode("overwrite").parquet(mTmp)
+    writeMeta(spark, bits, nTables, mTmp)
     SafeSwap.swapDir(fs, fsPath(s"$indexDir/meta"), fsPath(mTmp))
     true
   }
@@ -282,35 +263,23 @@ object LshIndex {
     * the bucket-population-vs-scale story of the live path, frozen into
     * the artifact's meta for every later delta. */
   def saveLshIndexOf(vecs: DataFrame, outDir: String,
-      bits: Int = 0, nTables: Int = 0,
-      bucketBuckets: Int = DefaultBucketBuckets,
-      idBuckets: Int = DefaultIdBuckets): Unit = {
-    require(bucketBuckets > 0 && idBuckets > 0, "bucket counts must be positive")
+      bits: Int = 0, nTables: Int = 0): Unit = {
     val spark = vecs.sparkSession
     val (bitsEff, nTablesEff) =
       if (bits > 0 && nTables > 0) (bits, nTables)
       else Similarity.adaptiveLshConfig(vecs.count())
     require(bitsEff <= 30, "bucket keys fold into one positive Int")
-    vecs.select(col("vec_id"), col("u"))
-      .withColumn("id_bucket", pmod(xxhash64(col("vec_id")), lit(idBuckets.toLong)))
-      .repartition(col("id_bucket")) // one file per bucket dir, not one per task
-      .write.mode("overwrite").partitionBy("id_bucket").parquet(s"$outDir/vectors")
+    store.layout.write(vecs.select(col("vec_id"), col("u")), s"$outDir/vectors", "overwrite")
     // bucket store derives from the just-written vectors parquet — a
     // second scan of the artifact, not of the upstream corpus
-    writeBuckets(vectorsStore(spark, outDir), bitsEff, nTablesEff,
-      bucketBuckets, outDir, "overwrite")
-    import spark.implicits._
-    Seq((bitsEff, nTablesEff, bucketBuckets, idBuckets))
-      .toDF("bits", "n_tables", "bucket_buckets", "id_buckets")
-      .coalesce(1).write.mode("overwrite").parquet(s"$outDir/meta")
+    writeBuckets(vectorsStore(spark, outDir), bitsEff, nTablesEff, outDir, "overwrite")
+    writeMeta(spark, bitsEff, nTablesEff, s"$outDir/meta")
   }
 
   /** Full-corpus build over the `embeddings` table. */
   def saveLshIndex(spark: SparkSession, dir: String, outDir: String,
-      bits: Int = 0, nTables: Int = 0,
-      bucketBuckets: Int = DefaultBucketBuckets): Unit =
-    saveLshIndexOf(Similarity.unitEmbeddings(spark, dir), outDir,
-      bits, nTables, bucketBuckets)
+      bits: Int = 0, nTables: Int = 0): Unit =
+    saveLshIndexOf(Similarity.unitEmbeddings(spark, dir), outDir, bits, nTables)
 
   /** Merge a delta batch of unit vectors into a persisted artifact —
     * replay-safe (vec_ids already in the vectors store anti-join out;
@@ -319,16 +288,13 @@ object LshIndex {
     * resurrection-safe (a delta vec_id present in the tombstone set is
     * expunged and its tombstone withdrawn BEFORE the replay guard runs,
     * so the fresh row appends and neither generation double-serves —
-    * the crash-ordering argument of [[ImageIndex.appendImageHashDelta]]
-    * verbatim). Appended bucket rows land as dynamic-partition appends
-    * touching only the delta's buckets. */
+    * [[IdStore.withdraw]]). Appended bucket rows land as
+    * dynamic-partition appends touching only the delta's buckets. */
   def appendLshDelta(deltaVecs: DataFrame, indexDir: String,
-      bucketBuckets: Int = DefaultBucketBuckets,
       expectedCorpusVectors: Long = 0L): Unit = {
     val spark = deltaVecs.sparkSession
-    val fs = hadoopFs(spark, indexDir)
-    recoverStores(spark, indexDir)
-    if (!fs.exists(fsPath(s"$indexDir/meta"))) {
+    store.recover(spark, indexDir)
+    if (!IdStore.fsOf(spark, indexDir).exists(fsPath(s"$indexDir/meta"))) {
       // bootstrap: the first delta IS the base build. The geometry it
       // freezes should fit the corpus the artifact will GROW INTO, not
       // the first day's batch — a caller that knows the expected corpus
@@ -337,26 +303,13 @@ object LshIndex {
       // (bits, nTables) forever, degrading selectivity as days accrue).
       val (b, t) = if (expectedCorpusVectors > 0L)
         Similarity.adaptiveLshConfig(expectedCorpusVectors) else (0, 0)
-      saveLshIndexOf(deltaVecs, indexDir, bits = b, nTables = t,
-        bucketBuckets = bucketBuckets)
+      saveLshIndexOf(deltaVecs, indexDir, bits = b, nTables = t)
       return
     }
-    val (bits, nTables, frozenBuckets, idBuckets) = readMeta(spark, indexDir)
+    val (bits, nTables) = readMeta(spark, indexDir)
     val delta = deltaVecs.select(col("vec_id"), col("u")).cache()
     delta.count()
-    tombstonesOf(spark, indexDir).foreach { dead =>
-      val overlap = dead.join(delta.select("vec_id"), Seq("vec_id")).cache()
-      if (overlap.count() > 0) {
-        expunge(spark, indexDir, overlap)
-        val tsTmp = s"$indexDir/tombstones_withdraw_tmp"
-        dead.join(overlap, Seq("vec_id"), "left_anti")
-          .write.mode("overwrite").parquet(tsTmp)
-        SafeSwap.swapDir(fs, fsPath(s"$indexDir/tombstones"), fsPath(tsTmp))
-      }
-      overlap.unpersist(blocking = false)
-    }
-    val fresh = delta.join(guardHeldIds(spark, indexDir, delta, idBuckets),
-        Seq("vec_id"), "left_anti").cache()
+    val fresh = store.admit(spark, indexDir, delta)(expunge(spark, indexDir, _)).cache()
     fresh.count()
     // WRITE ORDER MATTERS (the appendPostingsDelta/appendPqDelta
     // contract): the derived store (buckets) appends FIRST, the replay
@@ -369,49 +322,18 @@ object LshIndex {
     // anywhere between begin and commit rolls the stores back to their
     // recorded listings at the next recover, so the re-run re-admits
     // the whole delta and no duplicate row ever exists in either store.
-    AppendCommit.begin(fs, indexDir, Seq("buckets", "vectors"))
-    writeBuckets(fresh, bits, nTables, frozenBuckets, indexDir, "append")
-    fresh.withColumn("id_bucket",
-        pmod(xxhash64(col("vec_id")), lit(idBuckets.toLong)))
-      .repartition(col("id_bucket"))
-      .write.mode("append").partitionBy("id_bucket").parquet(s"$indexDir/vectors")
-    AppendCommit.commit(fs, indexDir)
+    store.atomically(spark, indexDir) {
+      writeBuckets(fresh, bits, nTables, indexDir, "append")
+      store.layout.write(fresh, s"$indexDir/vectors", "append")
+    }
     fresh.unpersist(blocking = false)
     delta.unpersist(blocking = false)
-  }
-
-  /** The replay guard's DELTA-PROPORTIONAL store scan: the held vec_ids
-    * the incoming delta could collide with. The vectors store is laid
-    * out by `id_bucket = pmod(xxhash64(vec_id), idBuckets)`, so a
-    * replayed vec_id's row sits in exactly the bucket its delta row
-    * hashes to — the delta's id-bucket vocabulary (collected locally,
-    * ≤ idBuckets longs) pushes a static partition filter into the guard
-    * scan. Guard cost ∝ the delta's bucket vocabulary, never the
-    * corpus: without the prune, every nightly append paid a corpus-wide
-    * narrow-column scan + shuffle just to re-discover its own delta was
-    * fresh. */
-  private[graft] def guardHeldIds(spark: SparkSession, indexDir: String,
-      delta: DataFrame, idBuckets: Int): DataFrame = {
-    val deltaBuckets = delta
-      .select(pmod(xxhash64(col("vec_id")), lit(idBuckets.toLong)).as("b"))
-      .distinct().collect().map(_.getLong(0)).toSeq // local: ≤ idBuckets values
-    spark.read.parquet(s"$indexDir/vectors")
-      .where(col("id_bucket").isin(deltaBuckets: _*))
-      .select("vec_id")
   }
 
   /** Retire vectors — tombstones, not rewrites (cost ∝ |deletes|);
     * idempotent. */
   def tombstoneVectors(deletedIds: DataFrame, indexDir: String): Unit =
-    deletedIds.select(col("vec_id").cast("long").as("vec_id"))
-      .write.mode("append").parquet(s"$indexDir/tombstones")
-
-  private def tombstonesOf(spark: SparkSession, indexDir: String): Option[DataFrame] = {
-    val p = fsPath(s"$indexDir/tombstones")
-    if (hadoopFs(spark, indexDir).exists(p))
-      Some(StoreReads.parquet(spark, s"$indexDir/tombstones").select("vec_id").distinct())
-    else None
-  }
+    store.tombstone(deletedIds, indexDir)
 
   /** Drop a dead set's rows from both stores, touched partitions only.
     * Which partitions those are is DERIVED, not discovered: both
@@ -419,57 +341,24 @@ object LshIndex {
     * set's own signatures (recomputed from the vectors store under the
     * frozen geometry — bit-identical to what the write landed) name the
     * touched `bucket_bucket` dirs, and the dead ids themselves hash to
-    * the touched `id_bucket` dirs (no scan at all). Expunge cost is
-    * ∝ |dead| + the touched partitions — the wholesale vectors rewrite
-    * this replaced was the one corpus-proportional term left in the
-    * delete path. */
+    * the touched `id_bucket` dirs (no scan at all). The signatures are
+    * collected BEFORE the vectors rewrite drops the dead rows they are
+    * recomputed from. */
   private def expunge(spark: SparkSession, indexDir: String, dead: DataFrame): Unit = {
-    val fs = hadoopFs(spark, indexDir)
-    val (bits, nTables, bucketBuckets, idBuckets) = readMeta(spark, indexDir)
-    val buckets = spark.read.parquet(s"$indexDir/buckets")
-    val deadVecs = vectorsStore(spark, indexDir)
-      .join(dead, Seq("vec_id"), "left_semi")
-    val touched = Similarity.lshSignaturesOf(deadVecs, bits, nTables)
-      .select(posexplode(col("buckets")).as(Seq("tbl", "bucket")))
-      .select(pmod(xxhash64(col("tbl"), col("bucket")), lit(bucketBuckets.toLong))
-        .as("bb"))
-      .distinct().collect().map(_.getLong(0)) // bounded: ≤ bucketBuckets values
-    if (touched.nonEmpty) {
-      val tmp = s"$indexDir/buckets_compact_tmp"
-      buckets.where(col("bucket_bucket").isin(touched.toIndexedSeq.map(Long.box): _*))
-        .join(dead, Seq("vec_id"), "left_anti")
-        .repartition(col("bucket_bucket")) // one file per rewritten dir
-        .write.mode("overwrite").partitionBy("bucket_bucket").parquet(tmp)
-      SafeSwap.swapPartitions(fs, fsPath(s"$indexDir/buckets"), fsPath(tmp),
-        touched.toIndexedSeq.map(b => s"bucket_bucket=$b"))
-    }
-    val touchedIds = dead
-      .select(pmod(xxhash64(col("vec_id")), lit(idBuckets.toLong)).as("b"))
-      .distinct().collect().map(_.getLong(0)) // bounded: ≤ idBuckets values
-    if (touchedIds.nonEmpty) {
-      val vTmp = s"$indexDir/vectors_compact_tmp"
-      spark.read.parquet(s"$indexDir/vectors")
-        .where(col("id_bucket").isin(touchedIds.toIndexedSeq.map(Long.box): _*))
-        .join(dead, Seq("vec_id"), "left_anti")
-        .repartition(col("id_bucket"))
-        .write.mode("overwrite").partitionBy("id_bucket").parquet(vTmp)
-      SafeSwap.swapPartitions(fs, fsPath(s"$indexDir/vectors"), fsPath(vTmp),
-        touchedIds.toIndexedSeq.map(b => s"id_bucket=$b"))
-    }
+    val (bits, nTables) = readMeta(spark, indexDir)
+    val deadVecs = vectorsStore(spark, indexDir).join(dead, Seq("vec_id"), "left_semi")
+    val touched = BucketLayout.bucketsOf(Similarity.lshSignaturesOf(deadVecs, bits, nTables)
+      .select(posexplode(col("buckets")).as(Seq("tbl", "bucket"))))
+    IdStore.expunge(s"$indexDir/buckets", BucketLayout.column, "vec_id", dead, Some(touched))
+    store.expungeKeyed(indexDir, dead)
   }
 
-  /** Expunge the tombstones — rewrite only touched bucket partitions +
-    * the narrow vectors store, delete the tombstone set LAST (the
-    * commit point). Answer-invisible by construction; for THIS family
-    * compaction ≡ fresh rebuild EXACTLY (no frozen trained state). */
-  def compactLshIndex(spark: SparkSession, indexDir: String): Unit = {
-    val fs = hadoopFs(spark, indexDir)
-    recoverStores(spark, indexDir)
-    tombstonesOf(spark, indexDir).foreach { dead =>
-      expunge(spark, indexDir, dead)
-      fs.delete(fsPath(s"$indexDir/tombstones"), true)
-    }
-  }
+  /** Expunge the tombstones — rewrite only touched bucket and id
+    * partitions, delete the tombstone set LAST (the commit point).
+    * Answer-invisible by construction; for THIS family compaction ≡
+    * fresh rebuild EXACTLY (no frozen trained state). */
+  def compactLshIndex(spark: SparkSession, indexDir: String): Unit =
+    store.compact(spark, indexDir)(expunge(spark, indexDir, _))
 
   /** Serve multi-probe top-k from the artifact — [[Similarity.lshTopK]]'s
     * exact plan semantics with every corpus-scale relation read from
@@ -477,7 +366,7 @@ object LshIndex {
     * frozen meta geometry (bit-identical keys by construction), the
     * probe set broadcasts (bounded: nQueries × nTables × |mask ladder|),
     * and its `bucket_bucket` values — collected from that same bounded
-    * relation, ≤ bucketBuckets longs — push a STATIC partition filter
+    * relation, ≤ 64 longs — push a STATIC partition filter
     * into the bucket-store scan, so probe cost is ∝ the batch's bucket
     * vocabulary, never the corpus (the [[Retrieval.rankedFromIndex]] /
     * [[ImageIndex.probeImages]] twins' discipline). Candidates dedup and
@@ -487,13 +376,10 @@ object LshIndex {
     * probed rows. */
   def lshTopKFromIndex(spark: SparkSession, indexDir: String,
       nQueries: Int = 200, k: Int = 3, maxFlips: Int = 2): DataFrame = {
-    recoverStores(spark, indexDir)
-    val (bits, nTables, bucketBuckets, _) = readMeta(spark, indexDir)
-    val dead = tombstonesOf(spark, indexDir)
-    def live(df: DataFrame): DataFrame = dead match {
-      case Some(d) => df.join(d, Seq("vec_id"), "left_anti")
-      case None => df
-    }
+    store.recover(spark, indexDir)
+    val (bits, nTables) = readMeta(spark, indexDir)
+    val dead = store.tombstones(spark, indexDir)
+    def live(df: DataFrame): DataFrame = store.live(df, dead)
     val vectors = live(vectorsStore(spark, indexDir))
     // The query batch is bounded (nQueries rows of 64 doubles), but its
     // plan scans the FULL id-bucketed vectors store — the vec_id filter
@@ -521,12 +407,8 @@ object LshIndex {
       .select(col("vec_id").as("q_id"), posexplode(col("buckets")).as(Seq("tbl", "bucket0")))
       .select(col("q_id"), col("tbl"), col("bucket0"), explode(masks).as("mask"))
       .select(col("q_id"), col("tbl"), col("bucket0").bitwiseXOR(col("mask")).as("bucket"))
-    val probeBuckets = probes
-      .select(pmod(xxhash64(col("tbl"), col("bucket")), lit(bucketBuckets.toLong))
-        .as("bb"))
-      .distinct().collect().map(_.getLong(0)).toSeq // local: ≤ bucketBuckets values
     val corpus = live(StoreReads.parquet(spark, s"$indexDir/buckets")
-        .where(col("bucket_bucket").isin(probeBuckets: _*)))
+        .where(col(BucketLayout.column).isin(BucketLayout.bucketsOf(probes): _*)))
       .select(col("vec_id"), col("tbl"), col("bucket"))
     val cand = broadcast(probes).join(corpus, Seq("tbl", "bucket"))
       .where(col("vec_id") =!= col("q_id"))
@@ -548,7 +430,7 @@ object LshIndex {
     * collision probability is already high): the arriving batch's
     * signatures are computed ONCE under the frozen meta geometry, the
     * buckets they hash to collected from a LOCAL bounded relation
-    * (≤ bucketBuckets values) and pushed as a static partition filter —
+    * (≤ 64 values) and pushed as a static partition filter —
     * the bucket-store scan reads only the probed directories, so probe
     * cost is bounded by the delta's bucket vocabulary no matter how
     * large the corpus grows. Candidates rescore with the exact cosine
@@ -558,8 +440,8 @@ object LshIndex {
   def probeVectors(probeVecs: DataFrame, indexDir: String,
       threshold: Double = 0.4): DataFrame = {
     val spark = probeVecs.sparkSession
-    recoverStores(spark, indexDir)
-    val (bits, nTables, bucketBuckets, _) = readMeta(spark, indexDir)
+    store.recover(spark, indexDir)
+    val (bits, nTables) = readMeta(spark, indexDir)
     // UNCACHED on purpose: the probe relation is read twice (the local
     // bucket-id collect below + the candidate join), but each read is
     // one narrow codegen'd projection over the delta. A cache here
@@ -571,17 +453,10 @@ object LshIndex {
         probeVecs.select(col("vec_id"), col("u")), bits, nTables)
       .select(col("vec_id").as("probe_id"), col("u").as("pu"),
         posexplode(col("buckets")).as(Seq("tbl", "bucket")))
-    val probeBuckets = probes
-      .select(pmod(xxhash64(col("tbl"), col("bucket")), lit(bucketBuckets.toLong))
-        .as("bb"))
-      .distinct().collect().map(_.getLong(0)).toSeq // local: ≤ bucketBuckets values
     val pruned = StoreReads.parquet(spark, s"$indexDir/buckets")
-      .where(col("bucket_bucket").isin(probeBuckets: _*))
+      .where(col(BucketLayout.column).isin(BucketLayout.bucketsOf(probes): _*))
       .select(col("vec_id"), col("tbl"), col("bucket"))
-    val held = tombstonesOf(spark, indexDir) match {
-      case Some(dead) => pruned.join(dead, Seq("vec_id"), "left_anti")
-      case None => pruned
-    }
+    val held = store.live(pruned, store.tombstones(spark, indexDir))
     val cand = probes.join(held, Seq("tbl", "bucket"))
       .where(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("pu"), col("vec_id"))
@@ -600,12 +475,8 @@ object LshIndex {
     * parquet, or dead vectors re-enter its answers between a tombstone
     * and the next compaction. */
   def liveVectors(spark: SparkSession, indexDir: String): DataFrame = {
-    recoverStores(spark, indexDir)
-    val raw = vectorsStore(spark, indexDir)
-    tombstonesOf(spark, indexDir) match {
-      case Some(dead) => raw.join(dead, Seq("vec_id"), "left_anti")
-      case None => raw
-    }
+    store.recover(spark, indexDir)
+    store.live(vectorsStore(spark, indexDir), store.tombstones(spark, indexDir))
   }
 
   /** q164: q38's multi-probe top-k served ENTIRELY from the persisted

@@ -115,10 +115,7 @@ object Pipeline {
   }
 
   /** Release this session's memoized fingerprint artifacts. */
-  def releaseStages(spark: SparkSession): Int = {
-    FingerprintIndex.releaseMeta(spark)
-    persistedFp.release(spark)
-  }
+  def releaseStages(spark: SparkSession): Int = persistedFp.release(spark)
 
   /** One run's accounting — what the nightly job logs. */
   final case class DailyReport(

@@ -154,68 +154,33 @@ object Retrieval {
     * session stage) are carried in the dl relation only — the postings
     * artifact stays null-free so bucket pruning never needs a null
     * bucket. */
-  def savePostingsIndex(spark: SparkSession, dir: String, outDir: String,
-      termBuckets: Int = 64): Unit = {
-    require(termBuckets > 0, "bucket count must be positive")
-    postingsStage(spark, dir)
-      .where(col("term").isNotNull)
-      .withColumn("term_bucket", pmod(xxhash64(col("term")), lit(termBuckets.toLong)))
-      .repartition(col("term_bucket")) // one file per bucket dir, not one per task
-      .write.mode("overwrite").partitionBy("term_bucket")
-      .parquet(s"$outDir/postings")
-    writeDl(dlStage(spark, dir), s"$outDir/dl", "overwrite")
+  def savePostingsIndex(spark: SparkSession, dir: String, outDir: String): Unit = {
+    TermLayout.write(postingsStage(spark, dir).where(col("term").isNotNull),
+      s"$outDir/postings", "overwrite")
+    store.layout.write(dlStage(spark, dir), s"$outDir/dl", "overwrite")
   }
 
-  /** Partition count of the per-doc dl store (`id_bucket =
-    * pmod(xxhash64(doc_id), B)`): the delta append's replay guard and
-    * the expunge's rewrite prune to the id buckets their id-set hashes
-    * to — guard/delete cost ∝ the delta, never the corpus. A pre-layout
-    * artifact (no `id_bucket` partition column) is detected from the
-    * store's schema and guarded/expunged in the legacy full-store
-    * forms; the next base rebuild re-lays it out. */
-  val DefaultIdBuckets = 64
+  /** Partition layout of the postings store: a query batch's terms name
+    * the partitions it reads. */
+  private val TermLayout = IdStore.Layout("term_bucket", 64, "term")
 
-  private def writeDl(dl: DataFrame, path: String, mode: String): Unit =
-    dl.withColumn("id_bucket",
-        pmod(xxhash64(col("doc_id")), lit(DefaultIdBuckets.toLong)))
-      .repartition(col("id_bucket")) // one file per bucket dir, not one per task
-      .write.mode(mode).partitionBy("id_bucket").parquet(path)
+  /** The artifact's lifecycle: postings derived, the per-doc dl store
+    * keyed (`id_bucket` — the replay guard's scan target). */
+  private val store = new IdStore("doc_id", IdStore.byId("doc_id"), "postings", "dl")
 
   /** The dl store in its public (doc_id, dl) shape — readers go through
-    * this so the physical `id_bucket` partition column (absent on
-    * pre-layout artifacts — drop is a no-op then) never leaks into
+    * this so the physical `id_bucket` partition column never leaks into
     * served relations or corpus stats. */
   private def dlStore(spark: SparkSession, indexDir: String): DataFrame =
     StoreReads.parquet(spark, s"$indexDir/dl").drop("id_bucket")
 
-  /** The replay guard's DELTA-PROPORTIONAL dl scan (the
-    * [[LshIndex.guardHeldIds]] twin for the postings family): the
-    * delta's id-bucket vocabulary (collected locally, ≤ idBuckets
-    * longs) pushes a static partition filter into the guard scan —
-    * guard cost ∝ the delta, never the corpus. */
-  private[graft] def guardHeldIds(spark: SparkSession, indexDir: String,
-      delta: DataFrame, idBuckets: Int): DataFrame = {
-    val deltaBuckets = delta
-      .select(pmod(xxhash64(col("doc_id")), lit(idBuckets.toLong)).as("b"))
-      .distinct().collect().map(_.getLong(0)).toSeq // local: <= idBuckets values
-    spark.read.parquet(s"$indexDir/dl")
-      .where(col("id_bucket").isin(deltaBuckets: _*))
-      .select("doc_id")
-  }
-
   /** Persist an index from an arbitrary (doc_id, text) base relation —
     * the starting point of the incremental lifecycle (the full-corpus
     * [[savePostingsIndex]] specialization serves q127). */
-  def savePostingsIndexOf(docs: DataFrame, outDir: String,
-      termBuckets: Int = 64): Unit = {
-    require(termBuckets > 0, "bucket count must be positive")
+  def savePostingsIndexOf(docs: DataFrame, outDir: String): Unit = {
     val p = postingsOf(docs)
-    p.where(col("term").isNotNull)
-      .withColumn("term_bucket", pmod(xxhash64(col("term")), lit(termBuckets.toLong)))
-      .repartition(col("term_bucket")) // one file per bucket dir, not one per task
-      .write.mode("overwrite").partitionBy("term_bucket")
-      .parquet(s"$outDir/postings")
-    writeDl(p.select(col("doc_id"), col("dl")).dropDuplicates("doc_id"),
+    TermLayout.write(p.where(col("term").isNotNull), s"$outDir/postings", "overwrite")
+    store.layout.write(p.select(col("doc_id"), col("dl")).dropDuplicates("doc_id"),
       s"$outDir/dl", "overwrite")
   }
 
@@ -243,65 +208,20 @@ object Retrieval {
     * cold) has no dl relation to guard against — every delta doc is
     * fresh then, mirroring [[Sketches.appendDailyDelta]]'s first-append
     * path. */
-  def appendPostingsDelta(deltaDocs: DataFrame, indexDir: String,
-      termBuckets: Int = 64): Unit = {
-    require(termBuckets > 0, "bucket count must be positive")
+  def appendPostingsDelta(deltaDocs: DataFrame, indexDir: String): Unit = {
     val spark = deltaDocs.sparkSession
-    val dlPath = new org.apache.hadoop.fs.Path(s"$indexDir/dl")
-    val fs = dlPath.getFileSystem(spark.sessionState.newHadoopConf())
-    SafeSwap.recover(fs, new org.apache.hadoop.fs.Path(s"$indexDir/postings"))
-    SafeSwap.recover(fs, dlPath)
-    AppendCommit.recover(fs, indexDir)
-    // RESURRECTION (the deleted-then-re-appended interaction): a delta
-    // doc_id sitting in the tombstone set is being deliberately
-    // re-ingested — expunge its dead rows (targeted compaction, cost ∝
-    // the overlap's touched buckets) and withdraw its tombstones BEFORE
-    // the replay guard runs, so the fresh rows append as new and
-    // neither generation double-serves. Crash-converging in both
-    // windows: rows-gone-but-still-tombstoned re-detects the overlap on
-    // re-run; tombstone-withdrawn-but-rows-absent falls through to the
-    // guard, which sees the doc absent and appends it.
-    tombstonesOf(spark, indexDir).foreach { dead =>
-      val overlap = dead.join(deltaDocs.select("doc_id"), Seq("doc_id")).cache()
-      if (overlap.count() > 0) {
-        expungePostings(spark, indexDir, overlap)
-        val tsTmp = s"$indexDir/tombstones_withdraw_tmp"
-        dead.join(overlap, Seq("doc_id"), "left_anti")
-          .write.mode("overwrite").parquet(tsTmp)
-        SafeSwap.swapDir(fs,
-          new org.apache.hadoop.fs.Path(s"$indexDir/tombstones"),
-          new org.apache.hadoop.fs.Path(tsTmp))
-      }
-      overlap.unpersist(blocking = false)
-    }
+    store.recover(spark, indexDir)
     // materialized BEFORE the appends: the second write's source must
-    // not re-read the dl file it is itself appending to
-    val bucketed = fs.exists(dlPath) &&
-      spark.read.parquet(s"$indexDir/dl").columns.contains("id_bucket")
-    val fresh = (
-      if (!fs.exists(dlPath)) deltaDocs
-      else if (bucketed) deltaDocs.join(
-        guardHeldIds(spark, indexDir, deltaDocs, DefaultIdBuckets),
-        Seq("doc_id"), "left_anti")
-      else deltaDocs.join( // pre-layout artifact: full-store guard
-        spark.read.parquet(s"$indexDir/dl").select("doc_id"),
-        Seq("doc_id"), "left_anti")).cache()
+    // not re-read the dl store it is itself appending to
+    val fresh = store.admit(spark, indexDir, deltaDocs)(
+      expungePostings(spark, indexDir, _)).cache()
     fresh.count()
-    // commit marker: a crash between the two writes rolls both stores
-    // back to their recorded listings at the next recover, so the
-    // re-run re-admits the whole delta (derived-first order still
-    // matters for the cached-plan recache trap on a SUCCESSFUL append)
-    AppendCommit.begin(fs, indexDir, Seq("postings", "dl"))
-    val p = postingsOf(fresh)
-    p.where(col("term").isNotNull)
-      .withColumn("term_bucket", pmod(xxhash64(col("term")), lit(termBuckets.toLong)))
-      .repartition(col("term_bucket")) // one appended file per touched dir
-      .write.mode("append").partitionBy("term_bucket")
-      .parquet(s"$indexDir/postings")
-    val freshDl = p.select(col("doc_id"), col("dl")).dropDuplicates("doc_id")
-    if (bucketed || !fs.exists(dlPath)) writeDl(freshDl, s"$indexDir/dl", "append")
-    else freshDl.write.mode("append").parquet(s"$indexDir/dl")
-    AppendCommit.commit(fs, indexDir)
+    store.atomically(spark, indexDir) {
+      val p = postingsOf(fresh)
+      TermLayout.write(p.where(col("term").isNotNull), s"$indexDir/postings", "append")
+      store.layout.write(p.select(col("doc_id"), col("dl")).dropDuplicates("doc_id"),
+        s"$indexDir/dl", "append")
+    }
     fresh.unpersist(blocking = false)
   }
 
@@ -321,27 +241,15 @@ object Retrieval {
     * crosses a threshold (rewrite only the touched term buckets); the
     * serve-time anti-join is the correct shape between compactions. */
   def tombstoneDocs(deletedIds: DataFrame, indexDir: String): Unit =
-    deletedIds.select(col("doc_id").cast("long").as("doc_id"))
-      .write.mode("append").parquet(s"$indexDir/tombstones")
-
-  /** The artifact's tombstone relation, empty if none were ever
-    * written. */
-  private def tombstonesOf(spark: SparkSession, indexDir: String): Option[DataFrame] = {
-    // Hadoop FS, not java.nio: the artifact may live on HDFS/S3
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/tombstones")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p))
-      Some(StoreReads.parquet(spark, s"$indexDir/tombstones").select("doc_id").distinct())
-    else None
-  }
+    store.tombstone(deletedIds, indexDir)
 
   /** Expunge the tombstones: rewrite ONLY the term buckets that hold a
-    * deleted doc's postings (survivors re-written, dead rows dropped),
-    * rewrite the (per-doc, small) dl relation, delete the tombstone
-    * set. The production cadence: serve-time anti-joins between
-    * compactions, compaction when the tombstone fraction crosses a
-    * threshold — and compaction cost ∝ touched buckets, never the
-    * artifact (a delete set concentrated in few terms rewrites few
+    * deleted doc's postings (survivors re-written, dead rows dropped)
+    * and the dl buckets the deleted ids hash to, then delete the
+    * tombstone set. The production cadence: serve-time anti-joins
+    * between compactions, compaction when the tombstone fraction
+    * crosses a threshold — and compaction cost ∝ touched buckets, never
+    * the artifact (a delete set concentrated in few terms rewrites few
     * directories; the untouched buckets' files survive byte-identical,
     * which the spec pins by mtime). Answer-invisible by construction:
     * the compacted artifact serves exactly what the anti-join served
@@ -353,71 +261,18 @@ object Retrieval {
     * head of this pass and of every serve, and re-running the
     * compaction converges (SafeSwapSpec pins each crash window).
     * Single-writer ownership is unchanged. */
-  def compactPostings(spark: SparkSession, indexDir: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(indexDir).getFileSystem(conf)
-    SafeSwap.recover(fs, new org.apache.hadoop.fs.Path(s"$indexDir/postings"))
-    SafeSwap.recover(fs, new org.apache.hadoop.fs.Path(s"$indexDir/dl"))
-    AppendCommit.recover(fs, indexDir)
-    tombstonesOf(spark, indexDir).foreach { dead =>
-      expungePostings(spark, indexDir, dead)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/tombstones"), true)
-    }
-  }
+  def compactPostings(spark: SparkSession, indexDir: String): Unit =
+    store.compact(spark, indexDir)(expungePostings(spark, indexDir, _))
 
   /** Drop a dead set's rows from the artifact: only the term buckets
-    * holding a dead doc's postings rewrite (bounded collect; untouched
-    * buckets' files survive byte-identical), the small per-doc dl
-    * relation rewrites wholesale. Shared by [[compactPostings]] (whole
-    * tombstone set) and the resurrection path in
-    * [[appendPostingsDelta]] (just the re-appended overlap). */
+    * holding a dead doc's postings and the dl buckets its ids hash to
+    * rewrite. Shared by [[compactPostings]] (whole tombstone set) and
+    * the resurrection path in [[appendPostingsDelta]] (just the
+    * re-appended overlap). */
   private def expungePostings(spark: SparkSession, indexDir: String,
       dead: DataFrame): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(indexDir).getFileSystem(conf)
-    val postingsRoot = new org.apache.hadoop.fs.Path(s"$indexDir/postings")
-    val dlRoot = new org.apache.hadoop.fs.Path(s"$indexDir/dl")
-    val postings = spark.read.parquet(s"$indexDir/postings")
-    val touched = postings.join(dead, Seq("doc_id"))
-      // partition discovery types term_bucket as INT on read-back
-      .select(col("term_bucket").cast("long")).distinct()
-      .collect().map(_.getLong(0)) // bounded: ≤ termBuckets values
-    if (touched.nonEmpty) {
-      val tmp = s"$indexDir/postings_compact_tmp"
-      postings.where(col("term_bucket").isin(touched.toIndexedSeq.map(Long.box): _*))
-        .join(dead, Seq("doc_id"), "left_anti")
-        .repartition(col("term_bucket")) // one file per rewritten dir
-        .write.mode("overwrite").partitionBy("term_bucket").parquet(tmp)
-      // a bucket whose every posting was dead has no rewritten dir —
-      // the swap moves it aside and replaces it with nothing
-      SafeSwap.swapPartitions(fs, postingsRoot,
-        new org.apache.hadoop.fs.Path(tmp),
-        touched.toIndexedSeq.map(b => s"term_bucket=$b"))
-    }
-    if (spark.read.parquet(s"$indexDir/dl").columns.contains("id_bucket")) {
-      // the dead ids themselves name the touched id_bucket dirs — no
-      // store scan; rewrite cost is the touched partitions only
-      val touchedIds = dead
-        .select(pmod(xxhash64(col("doc_id")), lit(DefaultIdBuckets.toLong)).as("b"))
-        .distinct().collect().map(_.getLong(0)) // bounded: <= idBuckets values
-      if (touchedIds.nonEmpty) {
-        val dlTmp = s"$indexDir/dl_compact_tmp"
-        spark.read.parquet(s"$indexDir/dl")
-          .where(col("id_bucket").isin(touchedIds.toIndexedSeq.map(Long.box): _*))
-          .join(dead, Seq("doc_id"), "left_anti")
-          .repartition(col("id_bucket"))
-          .write.mode("overwrite").partitionBy("id_bucket").parquet(dlTmp)
-        SafeSwap.swapPartitions(fs, dlRoot,
-          new org.apache.hadoop.fs.Path(dlTmp),
-          touchedIds.toIndexedSeq.map(b => s"id_bucket=$b"))
-      }
-    } else { // pre-layout artifact: wholesale rewrite
-      val dlTmp = s"$indexDir/dl_compact_tmp"
-      spark.read.parquet(s"$indexDir/dl")
-        .join(dead, Seq("doc_id"), "left_anti")
-        .write.mode("overwrite").parquet(dlTmp)
-      SafeSwap.swapDir(fs, dlRoot, new org.apache.hadoop.fs.Path(dlTmp))
-    }
+    IdStore.expunge(s"$indexDir/postings", TermLayout.column, "doc_id", dead)
+    store.expungeKeyed(indexDir, dead)
   }
 
   /** q144: the q142 lifecycle COMPACTED — same base + delta + deletes,
@@ -526,15 +381,13 @@ object Retrieval {
     * scan reads only the probed directories. */
   def bm25TopKFromIndex(spark: SparkSession, indexDir: String,
       queries: Seq[(Int, String)] = DefaultQueries,
-      topK: Int = 5, salts: Int = 32,
-      termBuckets: Int = 64): DataFrame = {
+      topK: Int = 5, salts: Int = 32): DataFrame = {
     import spark.implicits._
     val queryTerms = queries.toDF("query_id", "qtext")
       .select(col("query_id").cast("long").as("query_id"),
         explode(TextAnalysis.tokens(col("qtext"))).as("term"))
       .distinct()
-    rankedFromIndex(spark, indexDir, queryTerms, topK, salts,
-      excludeSelf = false, termBuckets = termBuckets)
+    rankedFromIndex(spark, indexDir, queryTerms, topK, salts, excludeSelf = false)
   }
 
   /** BM25 ranking from a persisted artifact for an arbitrary
@@ -545,37 +398,24 @@ object Retrieval {
     * argument throws if analyzed). */
   private[ops] def rankedFromIndex(spark: SparkSession, indexDir: String,
       queryTerms: DataFrame, topK: Int, salts: Int,
-      excludeSelf: Boolean, termBuckets: Int = 64): DataFrame = {
-    // a crashed compaction may have left partitions aside — restore
-    // them before scanning (two fs.exists when no crash happened)
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    SafeSwap.recover(fs, new org.apache.hadoop.fs.Path(s"$indexDir/postings"))
-    SafeSwap.recover(fs, new org.apache.hadoop.fs.Path(s"$indexDir/dl"))
-    AppendCommit.recover(fs, indexDir)
-    val buckets = queryTerms
-      .select(pmod(xxhash64(col("term")), lit(termBuckets.toLong)).as("b"))
-      .distinct().collect().map(_.getLong(0)).toSeq // local relation: no corpus scan
+      excludeSelf: Boolean): DataFrame = {
+    // a crashed compaction or append may have left state behind —
+    // recover before scanning (a few fs.exists when no crash happened)
+    store.recover(spark, indexDir)
+    val buckets = TermLayout.bucketsOf(queryTerms) // local relation: no corpus scan
     val postingsLive = StoreReads.parquet(spark, s"$indexDir/postings")
-      .where(col("term_bucket").isin(buckets: _*))
+      .where(col(TermLayout.column).isin(buckets: _*))
       // dl rides on every posting row (the store writes it) — reading it
       // here lets the ranker skip the per-doc dl join entirely
       .select(col("doc_id"), col("term"), col("tf"), col("dl"))
-    val dlLive = dlStore(spark, indexDir)
     // tombstoned docs drop out at serve time: postings AFTER the bucket
     // prune (the anti-join touches only probed rows), dl BEFORE corpus
-    // stats (n_docs/avgdl/df shrink exactly as a rebuild's would). No
-    // forced broadcast — a delete set can grow unboundedly between
-    // compactions; AQE picks the build side
-    val (postings, dl) = tombstonesOf(spark, indexDir) match {
-      case Some(dead) =>
-        (postingsLive.join(dead, Seq("doc_id"), "left_anti"),
-          dlLive.join(dead, Seq("doc_id"), "left_anti"))
-      case None => (postingsLive, dlLive)
-    }
+    // stats (n_docs/avgdl/df shrink exactly as a rebuild's would)
+    val dead = store.tombstones(spark, indexDir)
     bm25Rank(
       sys.error("the persisted-index path must not touch the corpus"),
-      Some((postings, dl)), queryTerms, topK, salts, excludeSelf = excludeSelf)
+      Some((store.live(postingsLive, dead), store.live(dlStore(spark, indexDir), dead))),
+      queryTerms, topK, salts, excludeSelf = excludeSelf)
   }
 
   /** The session's persisted postings artifact for `dir`, built on

@@ -478,17 +478,12 @@ object Similarity {
     * exactly as a rebuild on the survivors under the frozen codebook. */
   def ivfTopKFromIndex(spark: SparkSession, indexDir: String,
       nProbe: Int = 8, nQueries: Int = 100, k: Int = 3): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    SafeSwap.recover(fs, new org.apache.hadoop.fs.Path(s"$indexDir/assignments"))
-    val raw = StoreReads.parquet(spark, s"$indexDir/assignments")
+    recoverAssignments(spark, indexDir)
+    val assigned = dropDead(StoreReads.parquet(spark, s"$indexDir/assignments")
       // the partition-discovery column comes back int-typed; restore
       // the live stage's long so both paths run the identical plan
-      .select(col("vec_id"), col("cent_id").cast("long").as("cent_id"), col("u"))
-    val assigned = vecTombstonesOf(spark, indexDir) match {
-      case Some(dead) => raw.join(dead, Seq("vec_id"), "left_anti")
-      case None => raw
-    }
+      .select(col("vec_id"), col("cent_id").cast("long").as("cent_id"), col("u")),
+      IdStore.tombstones(spark, indexDir, "vec_id"))
     ivfProbe(StoreReads.parquet(spark, s"$indexDir/centroids"), assigned,
       nProbe, nQueries, k)
   }
@@ -520,24 +515,11 @@ object Similarity {
     * row-identical to assigning the merged corpus — the q136 contract. */
   def appendIvfDelta(deltaVecs: DataFrame, indexDir: String): Unit = {
     val spark = deltaVecs.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    SafeSwap.recover(fs, new org.apache.hadoop.fs.Path(s"$indexDir/assignments"))
-    vecTombstonesOf(spark, indexDir).foreach { dead =>
-      val overlap = dead.join(deltaVecs.select("vec_id"), Seq("vec_id")).cache()
-      if (overlap.count() > 0) {
-        expungeTwoLevel(spark, indexDir, overlap) // flat shares the cell layout
-        val tsTmp = s"$indexDir/tombstones_withdraw_tmp"
-        dead.join(overlap, Seq("vec_id"), "left_anti")
-          .write.mode("overwrite").parquet(tsTmp)
-        SafeSwap.swapDir(fs,
-          new org.apache.hadoop.fs.Path(s"$indexDir/tombstones"),
-          new org.apache.hadoop.fs.Path(tsTmp))
-      }
-      overlap.unpersist(blocking = false)
-    }
-    val invPath = new org.apache.hadoop.fs.Path(s"$indexDir/assignments")
-    val fresh = (if (fs.exists(invPath))
+    recoverAssignments(spark, indexDir)
+    // flat shares the two-level cell layout, so its expunge too
+    IdStore.withdraw(spark, indexDir, "vec_id", deltaVecs)(expungeTwoLevel(spark, indexDir, _))
+    val fresh = (if (IdStore.fsOf(spark, indexDir)
+        .exists(new org.apache.hadoop.fs.Path(s"$indexDir/assignments")))
       deltaVecs.join(
         spark.read.parquet(s"$indexDir/assignments").select("vec_id"),
         Seq("vec_id"), "left_anti")
@@ -918,27 +900,11 @@ object Similarity {
     * the codebook quality buys. */
   def appendTwoLevelDelta(deltaVecs: DataFrame, indexDir: String): Unit = {
     val spark = deltaVecs.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    SafeSwap.recover(fs, new org.apache.hadoop.fs.Path(s"$indexDir/assignments"))
-    // RESURRECTION: a delta vec_id in the tombstone set is being
-    // deliberately re-ingested — expunge its dead rows and withdraw its
-    // tombstones before the replay guard runs (the appendPostingsDelta
-    // contract; re-assignment under the frozen codebooks reproduces the
-    // original rows, so the composition stays ≡ rebuild-on-survivors)
-    vecTombstonesOf(spark, indexDir).foreach { dead =>
-      val overlap = dead.join(deltaVecs.select("vec_id"), Seq("vec_id")).cache()
-      if (overlap.count() > 0) {
-        expungeTwoLevel(spark, indexDir, overlap)
-        val tsTmp = s"$indexDir/tombstones_withdraw_tmp"
-        dead.join(overlap, Seq("vec_id"), "left_anti")
-          .write.mode("overwrite").parquet(tsTmp)
-        SafeSwap.swapDir(fs,
-          new org.apache.hadoop.fs.Path(s"$indexDir/tombstones"),
-          new org.apache.hadoop.fs.Path(tsTmp))
-      }
-      overlap.unpersist(blocking = false)
-    }
+    recoverAssignments(spark, indexDir)
+    // RESURRECTION ([[IdStore.withdraw]]): re-assignment under the
+    // frozen codebooks reproduces the original rows, so the composition
+    // stays ≡ rebuild-on-survivors
+    IdStore.withdraw(spark, indexDir, "vec_id", deltaVecs)(expungeTwoLevel(spark, indexDir, _))
     // replay guard (the appendPostingsDelta/appendPqDelta contract):
     // already-indexed vec_ids anti-join out against the inverted file's
     // vec_id column. RECORDED TRADE (r15): unlike the per-id refine
@@ -954,10 +920,8 @@ object Similarity {
     // the write's source must not re-list the files it is appending.
     // A first append (no inverted file yet — codebooks shipped alone)
     // has nothing to guard against
-    val invPath = new org.apache.hadoop.fs.Path(s"$indexDir/assignments")
-    val hasInv = invPath.getFileSystem(spark.sessionState.newHadoopConf())
-      .exists(invPath)
-    val fresh = (if (hasInv)
+    val fresh = (if (IdStore.fsOf(spark, indexDir)
+        .exists(new org.apache.hadoop.fs.Path(s"$indexDir/assignments")))
       deltaVecs.join(
         spark.read.parquet(s"$indexDir/assignments").select("vec_id"),
         Seq("vec_id"), "left_anti")
@@ -1188,12 +1152,8 @@ object Similarity {
     codes.repartition(col("cent_id")) // one file per cell dir, not one per task
       .write.mode("overwrite").partitionBy("cent_id").parquet(s"$outDir/codes")
     writePqMeta(spark, outDir, nCoarse, nSub, m, k,
-      codes.count(), meanExplainedMicros(codes), DefaultPqIdBuckets)
-    assigned.select(col("vec_id"), col("u"))
-      .withColumn("id_bucket",
-        pmod(xxhash64(col("vec_id")), lit(DefaultPqIdBuckets.toLong)))
-      .repartition(col("id_bucket")) // one file per bucket dir, not one per task
-      .write.mode("overwrite").partitionBy("id_bucket").parquet(s"$outDir/vectors")
+      codes.count(), meanExplainedMicros(codes))
+    pqStore.layout.write(assigned.select(col("vec_id"), col("u")), s"$outDir/vectors", "overwrite")
   }
 
   /** The artifact's frozen-training provenance: the structural config,
@@ -1205,56 +1165,43 @@ object Similarity {
     * present ⇒ build complete) also implies meta is present. */
   private def writePqMeta(spark: SparkSession, outDir: String,
       nCoarse: Int, nSub: Int, m: Int, k: Int,
-      nTrained: Long, explainedMicros: Double,
-      idBuckets: Int): Unit = {
+      nTrained: Long, explainedMicros: Double): Unit = {
     import spark.implicits._
-    Seq((nCoarse, nSub, m, k, nTrained, explainedMicros, idBuckets))
+    Seq((nCoarse, nSub, m, k, nTrained, explainedMicros, pqStore.layout.modulus))
       .toDF("n_coarse", "n_sub", "m", "k", "n_trained", "explained_micros",
         "id_buckets")
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/meta")
   }
 
-  /** Partition count of the refine (vectors) store — the delta append's
-    * replay guard and the expunge's rewrite prune to the id buckets
-    * their id-set hashes to. 0 in meta = legacy unpartitioned layout
-    * (pre-upgrade artifact whose provenance was backfilled): guard and
-    * expunge fall back to the full-store forms, and the next codebook
-    * retrain rebuild upgrades the layout for free. */
-  val DefaultPqIdBuckets = 64
-
-  /** The artifact's refine-store layout modulus (0 = legacy
-    * unpartitioned). */
-  private def pqIdBuckets(spark: SparkSession, indexDir: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/meta")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) 0
-    else {
-      val r = spark.read.parquet(s"$indexDir/meta").head()
-      if (r.schema.fieldNames.contains("id_buckets")) r.getAs[Int]("id_buckets")
-      else 0
+  /** The compressed artifact's lifecycle: codes derived, the refine
+    * (vectors) store keyed (`id_bucket` — the replay guard's and the
+    * expunge's prune). Entry-point recovery, shared by every PQ entry
+    * (append / compact / serve / maintain), completes a crashed codebook
+    * retrain from its durable snapshot FIRST (a committed rebuild
+    * supersedes every store — it overwrites all of them; with no
+    * marker, a leftover snapshot is a crash BEFORE the commit point and
+    * the old artifact is intact, so the snapshot drops), then restores
+    * crashed-swap leftovers and rolls back any uncommitted append —
+    * releasing this artifact's resident relations when it did (their
+    * listings may include the deleted files: the AppendCrashWindowsSpec
+    * staleness class). */
+  private[graft] val pqStore =
+    new IdStore("vec_id", IdStore.byId("vec_id"), "codes", "vectors") {
+      override def recover(spark: SparkSession, indexDir: String): Boolean = {
+        val fs = IdStore.fsOf(spark, indexDir)
+        if (fs.exists(pqRetrainMarker(indexDir))) rebuildPqFromSnapshot(spark, indexDir)
+        else fs.delete(new org.apache.hadoop.fs.Path(pqRetrainSnapshot(indexDir)), true)
+        val rolledBack = super.recover(spark, indexDir)
+        if (rolledBack) pqLoadedRelCache.release(k => k._1 == spark && k._2 == indexDir)
+        rolledBack
+      }
     }
-  }
 
   /** The refine store in its public (vec_id, u) shape — readers go
     * through this so the physical `id_bucket` partition column never
     * leaks into served relations. */
   private def pqVectorsStore(spark: SparkSession, indexDir: String): DataFrame =
     spark.read.parquet(s"$indexDir/vectors").select(col("vec_id"), col("u"))
-
-  /** The replay guard's DELTA-PROPORTIONAL refine-store scan (the
-    * [[LshIndex.guardHeldIds]] twin): the delta's id-bucket vocabulary
-    * (collected locally, ≤ idBuckets longs) pushes a static partition
-    * filter into the guard scan — guard cost ∝ the delta, never the
-    * corpus. */
-  private[graft] def pqGuardHeldIds(spark: SparkSession, indexDir: String,
-      delta: DataFrame, idBuckets: Int): DataFrame = {
-    val deltaBuckets = delta
-      .select(pmod(xxhash64(col("vec_id")), lit(idBuckets.toLong)).as("b"))
-      .distinct().collect().map(_.getLong(0)).toSeq // local: <= idBuckets values
-    spark.read.parquet(s"$indexDir/vectors")
-      .where(col("id_bucket").isin(deltaBuckets: _*))
-      .select("vec_id")
-  }
 
   /** Mean EXPLAINED energy of a codes relation in micros: the per-row
     * proj² — the share of each unit vector's energy the frozen
@@ -1339,12 +1286,8 @@ object Similarity {
       .repartition(col("cent_id")) // one file per cell dir, not one per task
       .write.mode("overwrite").partitionBy("cent_id").parquet(s"$outDir/codes")
     writePqMeta(spark, outDir, nCoarse, nSub, m, k,
-      resid.count(), meanExplainedMicros(resid), DefaultPqIdBuckets)
-    assigned.select(col("vec_id"), col("u"))
-      .withColumn("id_bucket",
-        pmod(xxhash64(col("vec_id")), lit(DefaultPqIdBuckets.toLong)))
-      .repartition(col("id_bucket")) // one file per bucket dir, not one per task
-      .write.mode("overwrite").partitionBy("id_bucket").parquet(s"$outDir/vectors")
+      resid.count(), meanExplainedMicros(resid))
+    pqStore.layout.write(assigned.select(col("vec_id"), col("u")), s"$outDir/vectors", "overwrite")
     Seq(cents, a1, subCents, assigned, resid).foreach(_.unpersist(blocking = false))
   }
 
@@ -1367,35 +1310,11 @@ object Similarity {
     * (the [[appendDailyDelta]] bootstrap contract). */
   def appendPqDelta(deltaVecs: DataFrame, indexDir: String): Unit = {
     val spark = deltaVecs.sparkSession
-    val vecPath = new org.apache.hadoop.fs.Path(s"$indexDir/vectors")
-    val vfs = vecPath.getFileSystem(spark.sessionState.newHadoopConf())
-    recoverPq(spark, indexDir)
-    // RESURRECTION: a delta vec_id in the tombstone set is being
-    // deliberately re-ingested — expunge its dead code/refine rows and
-    // withdraw its tombstones before the replay guard runs (re-encoding
-    // under the frozen books reproduces the original rows)
-    vecTombstonesOf(spark, indexDir).foreach { dead =>
-      val overlap = dead.join(deltaVecs.select("vec_id"), Seq("vec_id")).cache()
-      if (overlap.count() > 0) {
-        expungePq(spark, indexDir, overlap)
-        val tsTmp = s"$indexDir/tombstones_withdraw_tmp"
-        dead.join(overlap, Seq("vec_id"), "left_anti")
-          .write.mode("overwrite").parquet(tsTmp)
-        SafeSwap.swapDir(vfs,
-          new org.apache.hadoop.fs.Path(s"$indexDir/tombstones"),
-          new org.apache.hadoop.fs.Path(tsTmp))
-      }
-      overlap.unpersist(blocking = false)
-    }
-    val idB = pqIdBuckets(spark, indexDir)
-    val fresh = (
-      if (!vfs.exists(vecPath)) deltaVecs
-      else if (idB > 0) deltaVecs.join(
-        pqGuardHeldIds(spark, indexDir, deltaVecs, idB),
-        Seq("vec_id"), "left_anti")
-      else deltaVecs.join( // legacy unpartitioned layout: full-store guard
-        spark.read.parquet(s"$indexDir/vectors").select("vec_id"),
-        Seq("vec_id"), "left_anti")).cache()
+    pqStore.recover(spark, indexDir)
+    // RESURRECTION ([[IdStore.withdraw]]): re-encoding under the frozen
+    // books reproduces the original rows
+    val fresh = pqStore.admit(spark, indexDir, deltaVecs)(expungePq(spark, indexDir, _))
+      .cache()
     fresh.count()
     val cents = spark.read.parquet(s"$indexDir/coarse")
     val subCents = spark.read.parquet(s"$indexDir/subcents")
@@ -1405,21 +1324,15 @@ object Similarity {
     // back to their recorded listings at the next recover (the
     // derived-first order still matters for the recache trap on a
     // SUCCESSFUL append)
-    AppendCommit.begin(vfs, indexDir, Seq("codes", "vectors"))
-    residualsOf(assigned, subCents)
-      .select(col("vec_id"), col("cent_id"), col("sub_id"), col("proj"),
-        graft.functions.CodebookFunctions.pqEncode(col("r"), book).as("codes"))
-      .repartition(col("cent_id")) // one appended file per touched dir
-      .write.mode("append").partitionBy("cent_id").parquet(s"$indexDir/codes")
-    val freshVecs = assigned.select(col("vec_id"), col("u"))
-    if (idB > 0)
-      freshVecs.withColumn("id_bucket",
-          pmod(xxhash64(col("vec_id")), lit(idB.toLong)))
-        .repartition(col("id_bucket"))
-        .write.mode("append").partitionBy("id_bucket").parquet(s"$indexDir/vectors")
-    else
-      freshVecs.write.mode("append").parquet(s"$indexDir/vectors")
-    AppendCommit.commit(vfs, indexDir)
+    pqStore.atomically(spark, indexDir) {
+      residualsOf(assigned, subCents)
+        .select(col("vec_id"), col("cent_id"), col("sub_id"), col("proj"),
+          graft.functions.CodebookFunctions.pqEncode(col("r"), book).as("codes"))
+        .repartition(col("cent_id")) // one appended file per touched dir
+        .write.mode("append").partitionBy("cent_id").parquet(s"$indexDir/codes")
+      pqStore.layout.write(assigned.select(col("vec_id"), col("u")),
+        s"$indexDir/vectors", "append")
+    }
     fresh.unpersist(blocking = false)
     // a warm serve caches the artifact relations as of load time — an
     // append extends the files underneath, so drop this artifact's
@@ -1459,10 +1372,10 @@ object Similarity {
     // aside before loading. If the recovery actually replaced files,
     // RESIDENT relations for this artifact hold listings that may
     // include them (an in-process crash leaves the warm cache alive —
-    // only a JVM death clears it for free): recoverPq drops them so the
+    // only a JVM death clears it for free): the recovery drops them so the
     // load below re-lists, or the serve dies on FILE_NOT_EXIST / reads
     // junk (AppendCrashWindowsSpec pins the window).
-    recoverPq(spark, indexDir)
+    pqStore.recover(spark, indexDir)
     val book = pqLoadedBookCache.computeIfAbsent((spark, indexDir),
       _ => readPqBook(spark, indexDir))
     def rel(part: String)(load: => DataFrame): DataFrame =
@@ -1528,7 +1441,7 @@ object Similarity {
     val (book, coarse, subCents, codes, vectors) = loadedPqIndex(spark, indexDir)
     pqServe(book, coarse, subCents, codes, vectors,
       nProbe1, nProbe2, nQueries, topK, rerank,
-      dead = vecTombstonesOf(spark, indexDir))
+      dead = pqStore.tombstones(spark, indexDir))
   }
 
   /** The COLD serve path: every relation read straight off the artifact,
@@ -1546,7 +1459,7 @@ object Similarity {
           col("sub_id"), col("proj"), col("codes")),
       pqVectorsStore(spark, indexDir),
       nProbe1, nProbe2, nQueries, topK, rerank,
-      dead = vecTombstonesOf(spark, indexDir))
+      dead = pqStore.tombstones(spark, indexDir))
 
   private val persistedPq = new TempArtifacts("graft-pq-index")
 
@@ -1610,50 +1523,20 @@ object Similarity {
   /** Expunge vector tombstones from a [[savePqIndex]] artifact: the
     * codes inverted file rewrites ONLY the touched cent_id cells (the
     * [[compactTwoLevelIndex]] economics — the hot, scanned-per-query
-    * relation compacts partially), the vec_id-keyed refine store is
-    * rewritten wholesale (it is the COLD point-lookup store with no
-    * cell structure; the compaction cadence amortizes it), and the
-    * tombstone set is deleted. The warm loaded-relation cache for this
+    * relation compacts partially), the refine store rewrites only the
+    * id buckets the dead ids hash to, and the tombstone set is
+    * deleted. The warm loaded-relation cache for this
     * artifact is dropped: a resident pre-compaction codes relation
     * plus a now-deleted tombstone file would silently re-serve the
     * dead rows — the one staleness hazard the serve-time-anti-join
     * design has, closed here (PqSpec pins compact-under-warm-cache).
     * Answer-invisible by construction (q147 under q145's oracle). */
-  def compactPqIndex(spark: SparkSession, indexDir: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(indexDir).getFileSystem(conf)
-    recoverPq(spark, indexDir)
-    vecTombstonesOf(spark, indexDir).foreach { dead =>
-      expungePq(spark, indexDir, dead)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/tombstones"), true)
-    }
-  }
+  def compactPqIndex(spark: SparkSession, indexDir: String): Unit =
+    pqStore.compact(spark, indexDir)(expungePq(spark, indexDir, _))
 
   private def pqRetrainMarker(indexDir: String) =
     new org.apache.hadoop.fs.Path(s"$indexDir/_retrain_pending")
   private def pqRetrainSnapshot(indexDir: String) = s"$indexDir/retrain_snapshot"
-
-  /** Entry-point recovery for the compressed artifact, shared by every
-    * PQ entry (append / compact / serve / maintain): complete a crashed
-    * codebook retrain from its durable snapshot FIRST (a committed
-    * rebuild supersedes every store — it overwrites all of them; with
-    * no marker, a leftover snapshot is a crash BEFORE the commit point
-    * and the old artifact is intact, so the snapshot drops), then
-    * restore crashed-swap leftovers and roll back any uncommitted
-    * append. Holders of resident relations are released whenever files
-    * may have been replaced (the AppendCrashWindowsSpec staleness
-    * class). */
-  private def recoverPq(spark: SparkSession, indexDir: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(pqRetrainMarker(indexDir))) rebuildPqFromSnapshot(spark, indexDir)
-    else fs.delete(new org.apache.hadoop.fs.Path(pqRetrainSnapshot(indexDir)), true)
-    SafeSwap.recover(fs, new org.apache.hadoop.fs.Path(s"$indexDir/codes"))
-    SafeSwap.recover(fs, new org.apache.hadoop.fs.Path(s"$indexDir/vectors"))
-    if (AppendCommit.recover(fs, indexDir))
-      pqLoadedRelCache.release(k => k._1 == spark && k._2 == indexDir)
-    ()
-  }
 
   /** The committed half of a codebook retrain: re-run the full trained
     * base build over the durable live-vector snapshot under the
@@ -1664,8 +1547,8 @@ object Similarity {
     * artifact's resident book + relations (every store, including the
     * trained book itself, just changed). Idempotent from ANY crash
     * point: every write is an overwrite of a derived store and the
-    * snapshot is the single source of truth, so [[recoverPq]] re-runs
-    * it wholesale and no reader ever sees a mixed-codebook artifact. */
+    * snapshot is the single source of truth, so [[pqStore]]'s recovery
+    * re-runs it wholesale and no reader ever sees a mixed-codebook artifact. */
   private def rebuildPqFromSnapshot(spark: SparkSession, indexDir: String): Unit = {
     val fs = new org.apache.hadoop.fs.Path(indexDir)
       .getFileSystem(spark.sessionState.newHadoopConf())
@@ -1720,24 +1603,23 @@ object Similarity {
     * Returns (trainedOn, liveNow) if a rebuild ran. */
   def maintainPqCodebooks(spark: SparkSession, indexDir: String,
       growthFactor: Double = 2.0, explainedDecay: Double = 1.5): Option[(Long, Long)] = {
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    recoverPq(spark, indexDir)
-    val dead = vecTombstonesOf(spark, indexDir)
+    val fs = IdStore.fsOf(spark, indexDir)
+    pqStore.recover(spark, indexDir)
+    val dead = pqStore.tombstones(spark, indexDir)
     val liveCodes = dropDead(
       spark.read.parquet(s"$indexDir/codes").select("vec_id", "proj"), dead)
     val liveCount = liveCodes.count()
     val measured = meanExplainedMicros(liveCodes)
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/meta"))) {
+      // the backfill records the shared id modulus, so it must hold:
+      // a refine store in any other layout fails fast here rather than
+      // let the next append land beside it
+      pqStore.requireLaidOut(spark, indexDir)
       val book = readPqBook(spark, indexDir)
       val nCoarse = spark.read.parquet(s"$indexDir/coarse").count().toInt
       val nSub = (spark.read.parquet(s"$indexDir/subcents").count() /
         math.max(nCoarse, 1)).toInt
-      // id_buckets = 0: the pre-upgrade refine store is unpartitioned;
-      // guard/expunge stay in their legacy full-store forms until the
-      // next retrain rebuild re-lays it out
-      writePqMeta(spark, indexDir, nCoarse, nSub, book.m, book.k,
-        liveCount, measured, idBuckets = 0)
+      writePqMeta(spark, indexDir, nCoarse, nSub, book.m, book.k, liveCount, measured)
       return None
     }
     val meta = spark.read.parquet(s"$indexDir/meta").head()
@@ -1786,59 +1668,15 @@ object Similarity {
   }
 
   /** Drop a dead set's rows from the compressed artifact: only the
-    * cent_id cells holding a dead vector's codes rewrite, the refine
-    * store rewrites wholesale (the dl precedent), and this artifact's
+    * cent_id cells holding a dead vector's codes and the refine-store id
+    * buckets the dead ids hash to rewrite, and this artifact's
     * resident warm relations are invalidated. Shared by
     * [[compactPqIndex]] (whole tombstone set) and the resurrection
     * path in [[appendPqDelta]] (the re-appended overlap only). */
   private def expungePq(spark: SparkSession, indexDir: String,
       dead: DataFrame): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(indexDir).getFileSystem(conf)
-    val codesRoot = new org.apache.hadoop.fs.Path(s"$indexDir/codes")
-    val vecRoot = new org.apache.hadoop.fs.Path(s"$indexDir/vectors")
-    val codes = spark.read.parquet(s"$indexDir/codes")
-    val touched = codes.join(dead, Seq("vec_id"))
-      .select(col("cent_id").cast("long")).distinct()
-      .collect().map(_.getLong(0))
-    if (touched.nonEmpty) {
-      val tmp = s"$indexDir/codes_compact_tmp"
-      codes.where(col("cent_id").isin(touched.toIndexedSeq.map(Long.box): _*))
-        .join(dead, Seq("vec_id"), "left_anti")
-        .repartition(col("cent_id")) // one file per rewritten dir
-        .write.mode("overwrite").partitionBy("cent_id").parquet(tmp)
-      // crash-safe: live cells move aside before rewrites move in
-      // (SafeSwap — the caller's tombstone delete/withdraw is the
-      // commit point)
-      SafeSwap.swapPartitions(fs, codesRoot,
-        new org.apache.hadoop.fs.Path(tmp),
-        touched.toIndexedSeq.map(c => s"cent_id=$c"))
-    }
-    val idB = pqIdBuckets(spark, indexDir)
-    if (idB > 0) {
-      // the dead ids themselves name the touched id_bucket dirs — no
-      // store scan; rewrite cost is the touched partitions only
-      val touchedIds = dead
-        .select(pmod(xxhash64(col("vec_id")), lit(idB.toLong)).as("b"))
-        .distinct().collect().map(_.getLong(0)) // bounded: <= idBuckets values
-      if (touchedIds.nonEmpty) {
-        val vTmp = s"$indexDir/vectors_compact_tmp"
-        spark.read.parquet(s"$indexDir/vectors")
-          .where(col("id_bucket").isin(touchedIds.toIndexedSeq.map(Long.box): _*))
-          .join(dead, Seq("vec_id"), "left_anti")
-          .repartition(col("id_bucket"))
-          .write.mode("overwrite").partitionBy("id_bucket").parquet(vTmp)
-        SafeSwap.swapPartitions(fs, vecRoot,
-          new org.apache.hadoop.fs.Path(vTmp),
-          touchedIds.toIndexedSeq.map(b => s"id_bucket=$b"))
-      }
-    } else { // legacy unpartitioned layout: wholesale rewrite
-      val vTmp = s"$indexDir/vectors_compact_tmp"
-      spark.read.parquet(s"$indexDir/vectors")
-        .join(dead, Seq("vec_id"), "left_anti")
-        .write.mode("overwrite").parquet(vTmp)
-      SafeSwap.swapDir(fs, vecRoot, new org.apache.hadoop.fs.Path(vTmp))
-    }
+    IdStore.expunge(s"$indexDir/codes", "cent_id", "vec_id", dead)
+    pqStore.expungeKeyed(indexDir, dead)
     // drop the resident pre-expunge relations for THIS artifact
     pqLoadedRelCache.release(k => k._1 == spark && k._2 == indexDir)
     ()
@@ -1930,18 +1768,7 @@ object Similarity {
     * merge here; the q143/q145 gates pin serve ≡ filtered-rebuild).
     * Idempotent: anti-join semantics make replayed deletes harmless. */
   def tombstoneVectors(deletedIds: DataFrame, indexDir: String): Unit =
-    deletedIds.select(col("vec_id").cast("long").as("vec_id"))
-      .write.mode("append").parquet(s"$indexDir/tombstones")
-
-  /** The artifact's vector tombstone relation, if any were written. */
-  private def vecTombstonesOf(spark: SparkSession,
-      indexDir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/tombstones")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p))
-      Some(StoreReads.parquet(spark, s"$indexDir/tombstones").select("vec_id").distinct())
-    else None
-  }
+    IdStore.tombstone(deletedIds, indexDir, "vec_id")
 
   /** Drop tombstoned vectors from a served relation keyed by vec_id.
     * No forced broadcast — a delete set grows unboundedly between
@@ -1958,10 +1785,7 @@ object Similarity {
   def twoLevelTopKFromIndex(spark: SparkSession, indexDir: String,
       nProbe1: Int = 4, nProbe2: Int = 2,
       nQueries: Int = 100, k: Int = 3): DataFrame = {
-    // restore any cells a crashed compaction left aside before scanning
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    SafeSwap.recover(fs, new org.apache.hadoop.fs.Path(s"$indexDir/assignments"))
+    recoverAssignments(spark, indexDir)
     twoLevelProbe(
       StoreReads.parquet(spark, s"$indexDir/coarse"),
       StoreReads.parquet(spark, s"$indexDir/subcents"),
@@ -1969,7 +1793,7 @@ object Similarity {
         // partition-discovery typing: restore the live stage's long
         .select(col("vec_id"), col("cent_id").cast("long").as("cent_id"),
           col("sub_id"), col("u")),
-        vecTombstonesOf(spark, indexDir)),
+        IdStore.tombstones(spark, indexDir, "vec_id")),
       nProbe1, nProbe2, nQueries, k)
   }
 
@@ -1984,14 +1808,15 @@ object Similarity {
     * q143's oracle); same single-writer ownership and crash story as
     * the postings compaction. */
   def compactTwoLevelIndex(spark: SparkSession, indexDir: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(indexDir).getFileSystem(conf)
-    SafeSwap.recover(fs, new org.apache.hadoop.fs.Path(s"$indexDir/assignments"))
-    vecTombstonesOf(spark, indexDir).foreach { dead =>
-      expungeTwoLevel(spark, indexDir, dead)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/tombstones"), true)
-    }
+    recoverAssignments(spark, indexDir)
+    IdStore.purge(spark, indexDir, "vec_id")(expungeTwoLevel(spark, indexDir, _))
   }
+
+  /** Restore any cells a crashed compaction left aside (the IVF inverted
+    * files are single-store: no append marker). */
+  private def recoverAssignments(spark: SparkSession, indexDir: String): Unit =
+    SafeSwap.recover(IdStore.fsOf(spark, indexDir),
+      new org.apache.hadoop.fs.Path(s"$indexDir/assignments"))
 
   /** Drop a dead set's rows from the two-level inverted file: only the
     * cent_id cells holding a dead vector rewrite. Shared by
@@ -1999,28 +1824,8 @@ object Similarity {
     * resurrection path in [[appendTwoLevelDelta]] (the re-appended
     * overlap only). */
   private def expungeTwoLevel(spark: SparkSession, indexDir: String,
-      dead: DataFrame): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(indexDir).getFileSystem(conf)
-    val assignRoot = new org.apache.hadoop.fs.Path(s"$indexDir/assignments")
-    val assigned = spark.read.parquet(s"$indexDir/assignments")
-    val touched = assigned.join(dead, Seq("vec_id"))
-      // partition discovery types cent_id as INT on read-back
-      .select(col("cent_id").cast("long")).distinct()
-      .collect().map(_.getLong(0)) // bounded: ≤ nCoarse values
-    if (touched.nonEmpty) {
-      val tmp = s"$indexDir/assignments_compact_tmp"
-      assigned.where(col("cent_id").isin(touched.toIndexedSeq.map(Long.box): _*))
-        .join(dead, Seq("vec_id"), "left_anti")
-        .repartition(col("cent_id")) // one file per rewritten dir
-        .write.mode("overwrite").partitionBy("cent_id").parquet(tmp)
-      // a cell whose every vector was dead has no rewritten dir — the
-      // crash-safe swap moves it aside and replaces it with nothing
-      SafeSwap.swapPartitions(fs, assignRoot,
-        new org.apache.hadoop.fs.Path(tmp),
-        touched.toIndexedSeq.map(c => s"cent_id=$c"))
-    }
-  }
+      dead: DataFrame): Unit =
+    IdStore.expunge(s"$indexDir/assignments", "cent_id", "vec_id", dead)
 
   /** q146: q143's lifecycle COMPACTED — same full-corpus build and
     * delete set, tombstones expunged by [[compactTwoLevelIndex]] before

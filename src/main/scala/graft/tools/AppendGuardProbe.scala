@@ -47,8 +47,8 @@ object AppendGuardProbe {
         .cache()
       val dn = delta.count()
       t(s"LSH pruned guard      (delta=$dn)") {
-        delta.join(LshIndex.guardHeldIds(spark, lsh, delta,
-          LshIndex.DefaultIdBuckets), Seq("vec_id"), "left_anti").count()
+        delta.join(LshIndex.store.heldIds(spark, lsh, delta),
+          Seq("vec_id"), "left_anti").count()
       }
       t(s"LSH full-store guard  (delta=$dn)") {
         delta.join(spark.read.parquet(s"$lsh/vectors").select("vec_id"),
@@ -74,8 +74,8 @@ object AppendGuardProbe {
         graft.ops.TextAnalysis.fingerprint(col("text")).as("fp")).cache()
       val dn = deltaFps.count()
       t(s"FP pruned guard       (delta=$dn)") {
-        deltaFps.join(FingerprintIndex.guardHeldIds(spark, fp, deltaFps,
-          FingerprintIndex.DefaultFpBuckets), Seq("doc_id"), "left_anti").count()
+        deltaFps.join(FingerprintIndex.store.heldIds(spark, fp, deltaFps),
+          Seq("doc_id"), "left_anti").count()
       }
       t(s"FP full-store guard   (delta=$dn)") {
         deltaFps.join(spark.read.parquet(s"$fp/fingerprints").select("doc_id"),

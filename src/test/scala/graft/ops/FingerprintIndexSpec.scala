@@ -146,8 +146,7 @@ class FingerprintIndexSpec extends AnyFunSuite {
       val deltaFps = docs.where(col("doc_id") === 0L)
         .select(col("doc_id"), TextAnalysis.fingerprint(col("text")).as("fp"))
       val guarded = deltaFps.join(
-        FingerprintIndex.guardHeldIds(spark, out, deltaFps,
-          FingerprintIndex.DefaultFpBuckets),
+        FingerprintIndex.store.heldIds(spark, out, deltaFps),
         Seq("doc_id"), "left_semi")
       assert(guarded.count() == 1, "the guard scan missed a replayed doc_id")
       def scansOf(p: org.apache.spark.sql.execution.SparkPlan): Seq[FileSourceScanExec] = {

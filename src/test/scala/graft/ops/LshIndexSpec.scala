@@ -257,7 +257,7 @@ class LshIndexSpec extends AnyFunSuite {
       // delta is EMPTY, and AQE's EmptyRelation would hide the scan)
       val delta = Similarity.unitEmbeddings(spark, dir).where(col("vec_id") === 0L)
       val guarded = delta.join(
-        LshIndex.guardHeldIds(spark, out, delta, LshIndex.DefaultIdBuckets),
+        LshIndex.store.heldIds(spark, out, delta),
         Seq("vec_id"), "left_semi")
       assert(guarded.count() == 1, "the guard scan missed a held vec_id")
       def scansOf(p: org.apache.spark.sql.execution.SparkPlan): Seq[FileSourceScanExec] = {

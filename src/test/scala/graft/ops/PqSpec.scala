@@ -215,7 +215,7 @@ class PqSpec extends AnyFunSuite {
       Similarity.savePqIndexOf(Similarity.unitEmbeddings(spark, dir), tmp)
       val delta = Similarity.unitEmbeddings(spark, dir).where(col("vec_id") === 0L)
       val guarded = delta.join(
-        Similarity.pqGuardHeldIds(spark, tmp, delta, Similarity.DefaultPqIdBuckets),
+        Similarity.pqStore.heldIds(spark, tmp, delta),
         Seq("vec_id"), "left_semi")
       assert(guarded.count() == 1, "the guard scan missed a held vec_id")
       def scansOf(p: org.apache.spark.sql.execution.SparkPlan): Seq[FileSourceScanExec] = {
@@ -338,13 +338,16 @@ class PqSpec extends AnyFunSuite {
   test("a pre-meta artifact backfills provenance and establishes a baseline") {
     import org.apache.spark.sql.functions._
     val tmp = java.nio.file.Files.createTempDirectory("graft-pq-premeta").toString
+    val twin = java.nio.file.Files.createTempDirectory("graft-pq-premeta-twin").toString
     def rmrf(f: java.io.File): Unit = {
       if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmrf)); f.delete()
     }
+    def cold(d: String) = Similarity.pqTopKFromIndexCold(spark, d)
+      .collect().map(_.toString).toSeq
     try {
       Similarity.savePqIndexOf(Similarity.unitEmbeddings(spark, dir), tmp)
-      val served = Similarity.pqTopKFromIndexCold(spark, tmp)
-        .collect().map(_.toString).toSeq
+      Similarity.savePqIndexOf(Similarity.unitEmbeddings(spark, dir), twin)
+      val served = cold(tmp)
       // simulate the pre-upgrade layout: no provenance store
       rmrf(new java.io.File(s"$tmp/meta"))
       assert(Similarity.maintainPqCodebooks(spark, tmp).isEmpty,
@@ -355,9 +358,22 @@ class PqSpec extends AnyFunSuite {
         s"backfilled structural config diverged: $meta")
       assert(Similarity.maintainPqCodebooks(spark, tmp).isEmpty,
         "an undrifted artifact rebuilt against its backfilled baseline")
-      assert(Similarity.pqTopKFromIndexCold(spark, tmp)
-          .collect().map(_.toString).toSeq == served,
-        "backfill changed a served answer")
-    } finally rmrf(new java.io.File(tmp))
+      assert(cold(tmp) == served, "backfill changed a served answer")
+      // the backfilled artifact keeps its layout through the next append
+      // (new ids re-using held vectors): it must serve exactly what the
+      // never-devolved twin serves, with every refine row still under an
+      // id_bucket dir
+      val delta = Similarity.unitEmbeddings(spark, dir)
+        .where(pmod(col("vec_id"), lit(3)) === 0)
+        .select((col("vec_id") + lit(1000000L)).as("vec_id"), col("u"))
+      Similarity.appendPqDelta(delta, tmp)
+      Similarity.appendPqDelta(delta, twin)
+      assert(cold(tmp) == cold(twin),
+        "an append after the backfill diverged from the untouched artifact")
+      val rootParts = new java.io.File(s"$tmp/vectors").listFiles()
+        .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+      assert(rootParts.isEmpty,
+        s"the append landed unpartitioned refine files: ${rootParts.map(_.getName).mkString(", ")}")
+    } finally { rmrf(new java.io.File(tmp)); rmrf(new java.io.File(twin)) }
   }
 }
