@@ -19,23 +19,6 @@ object GraftSession {
     *    longs; [[graft.ops.Tables.normalizeEventTs]] then dispatches on
     *    the surfaced LongType. No-op for non-nano files.
     *  - a reliable checkpoint dir (see [[ensureCheckpointDir]]). */
-  /** Read an env-overridable conf value, failing with the VARIABLE NAME
-    * when the override does not parse: these values feed `spark.conf.set`
-    * at session-configure time, so an unvalidated typo ('ture', a
-    * non-numeric threshold) would otherwise throw from deep inside the
-    * first query of every entry point (ADVICE r15). */
-  private def envConf(name: String, default: String, valid: String => Boolean): String =
-    sys.env.get(name) match {
-      case None => default
-      case Some(v) =>
-        require(valid(v), s"$$$name='$v' does not parse (expected ${
-          if (valid eq boolLike) "true/false" else "an integer"})")
-        v
-    }
-  private val boolLike: String => Boolean =
-    v => v.equalsIgnoreCase("true") || v.equalsIgnoreCase("false")
-  private val intLike: String => Boolean = v => v.nonEmpty && v.forall(_.isDigit)
-
   def configure(spark: SparkSession): Unit = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // Let AQE re-plan the materialization of CACHED plans (default off
@@ -50,20 +33,16 @@ object GraftSession {
     // (r15 opt round, paired A/B on the 20 heaviest sf0.1 queries):
     // best-sum 39.4 → 35.0 s, every artifact-serve query down
     // 0.25–0.69 s, answers hash-identical (oracle parity re-run).
-    spark.conf.set("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-      envConf("SPARK_GRAFT_CACHED_AQE", "true", boolLike))
+    spark.conf.set("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
     // Partitioned artifact stores (the 64-dir term/id/bucket layouts)
     // sit just above the default 32-path threshold, so EVERY serve-time
     // read launched a distributed file-listing JOB before any work.
     // Listing ≤ 1024 dirs on the driver is microseconds on a local FS
     // and still sane on cluster object stores; past that the
-    // distributed listing takes over as before. Env-tunable for
-    // deployments whose stores legitimately carry thousands of
-    // partition dirs.
-    spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold",
-      envConf("SPARK_GRAFT_LISTING_THRESHOLD", "1024", intLike))
-    // AQE partition-coalescing policy, env-switchable. false makes AQE
-    // coalesce post-shuffle partitions purely by BYTE SIZE (Spark's own
+    // distributed listing takes over as before.
+    spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
+    // AQE partition-coalescing policy. false makes AQE coalesce
+    // post-shuffle partitions purely by BYTE SIZE (Spark's own
     // doc recommends it for production clusters); true (the Spark
     // default, kept here) stops coalescing at the default parallelism.
     // MEASURED both ways this round (r16, 24-query subset A/B at sf0.1
@@ -75,10 +54,9 @@ object GraftSession {
     // The r15 anti-scaling family (8 cores beating 32 by 3–11×) traced
     // to bypass-merge shuffle file creation growing ∝ maps × reducers =
     // cpus² — fixed in build.sbt, not here. A cluster deployment whose
-    // shuffles are corpus-sized should set the env to false and let the
-    // 64 MB advisory size rule.
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-      envConf("SPARK_GRAFT_PARALLELISM_FIRST", "true", boolLike))
+    // shuffles are corpus-sized should set it to false on its session
+    // and let the 64 MB advisory size rule.
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
     ensureCheckpointDir(spark)
   }
 

@@ -19,15 +19,15 @@ import org.apache.spark.sql.functions._
   *
   * Lifecycle parity with the other doc-keyed families ([[IdStore]]):
   * base build → replay-guarded delta append (bootstrap-safe) →
-  * tombstone → touched-partition compaction. No derived second store,
-  * so appends are single-store and need no [[AppendCommit]] marker.
+  * tombstone → touched-partition compaction, each mutation one
+  * published version.
   */
 object FingerprintIndex {
 
   /** The artifact's lifecycle: one keyed store, partitioned by
     * fingerprint (the probe key) rather than by id. */
   private[graft] val store =
-    new IdStore("doc_id", IdStore.Layout("fp_bucket", 64, "fp"), "fingerprints")
+    new IdStore("doc_id", IdStore.Layout("fp_bucket", 64, "fp"), "meta", "fingerprints")
 
   private def fpRows(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
@@ -35,12 +35,13 @@ object FingerprintIndex {
 
   /** Base build from a (doc_id, text) relation. The meta store records
     * the modulus and marks the build complete. */
-  def saveFingerprintIndexOf(docs: DataFrame, outDir: String): Unit = {
-    val spark = docs.sparkSession
-    store.layout.write(fpRows(docs), s"$outDir/fingerprints", "overwrite")
-    import spark.implicits._
-    Seq(store.layout.modulus).toDF("fp_buckets")
-      .coalesce(1).write.mode("overwrite").parquet(s"$outDir/meta")
+  def saveFingerprintIndexOf(docs: DataFrame, outDir: String): Unit =
+    IdStore.rebuild(docs.sparkSession, outDir)(build(_, docs))
+
+  private def build(w: IdStore.Writer, docs: DataFrame): Unit = {
+    import w.spark.implicits._
+    w.add("fingerprints")(store.layout.write(fpRows(docs), _))
+    w.add("meta")(Seq(store.layout.modulus).toDF("fp_buckets").coalesce(1).write.parquet(_))
   }
 
   /** Replay-guarded delta append: doc_ids the store already holds
@@ -55,16 +56,12 @@ object FingerprintIndex {
     * replayed doc's row sits in exactly the bucket its delta row hashes
     * to. Appended rows land as dynamic partition appends touching only
     * the delta's fp buckets. */
-  def appendFingerprintDelta(deltaDocs: DataFrame, indexDir: String): Unit = {
-    val spark = deltaDocs.sparkSession
-    store.recover(spark, indexDir)
-    if (!IdStore.fsOf(spark, indexDir).exists(new org.apache.hadoop.fs.Path(s"$indexDir/meta"))) {
-      saveFingerprintIndexOf(deltaDocs, indexDir)
-      return
+  def appendFingerprintDelta(deltaDocs: DataFrame, indexDir: String): Unit =
+    store.write(deltaDocs.sparkSession, indexDir) { w =>
+      if (!w.has("meta")) build(w, deltaDocs)
+      else w.add("fingerprints")(store.layout.write(
+        store.admit(w, fpRows(deltaDocs))(store.expungeKeyed(w, _)), _))
     }
-    val fresh = store.admit(spark, indexDir, fpRows(deltaDocs))(store.expungeKeyed(indexDir, _))
-    store.layout.write(fresh, s"$indexDir/fingerprints", "append")
-  }
 
   /** Which held docs does each probe doc exactly duplicate (normalized
     * fingerprint equality)? Output: (probe_id, doc_id) — `doc_id` the
@@ -78,12 +75,12 @@ object FingerprintIndex {
     * either way, so the hint is all risk and no win. */
   def probeFingerprints(probeDocs: DataFrame, indexDir: String): DataFrame = {
     val spark = probeDocs.sparkSession
-    store.recover(spark, indexDir)
+    val v = IdStore.latest(spark, indexDir)
     val probes = fpRows(probeDocs).select(col("doc_id").as("probe_id"), col("fp"))
-    val pruned = StoreReads.parquet(spark, s"$indexDir/fingerprints")
+    val pruned = v.read(spark, "fingerprints")
       .where(col(store.layout.column).isin(store.layout.bucketsOf(probes): _*))
       .select(col("doc_id"), col("fp"))
-    probes.join(store.live(pruned, store.tombstones(spark, indexDir)), Seq("fp"))
+    probes.join(store.live(pruned, v.tombstones(spark, "doc_id")), Seq("fp"))
       .where(col("doc_id") =!= col("probe_id"))
       .select(col("probe_id"), col("doc_id"))
       .distinct()
@@ -95,7 +92,7 @@ object FingerprintIndex {
     store.tombstone(deletedIds, indexDir)
 
   /** Expunge the tombstones (only the fp buckets holding a dead doc's
-    * row rewrite), tombstones deleted LAST (the commit point). */
+    * row rewrite) and drop them, in one version. */
   def compactFingerprintIndex(spark: SparkSession, indexDir: String): Unit =
-    store.compact(spark, indexDir)(store.expungeKeyed(indexDir, _))
+    store.compact(spark, indexDir)(store.expungeKeyed)
 }

@@ -110,9 +110,9 @@ object Hybrid {
       nQueries: Long, poolK: Int): DataFrame =
     stagedPool(spark,
         s"artdense:${StageCache.inputTag(spark, dir)}:$nQueries:$poolK") {
-      // liveVectors, not the raw parquet: crash-recovered and tombstone-
-      // filtered, so an artifact with pending deletes or a crashed swap
-      // still serves the q163 contract (ADVICE r12)
+      // liveVectors, not the raw parquet: the latest version, tombstone-
+      // filtered, so an artifact with pending deletes or a crashed
+      // writer's files still serves the q163 contract (ADVICE r12)
       val vectors = LshIndex.liveVectors(spark, LshIndex.persistedDir(spark, dir))
       // bounded query batch: collect the nQueries rows once instead of
       // scanning the full id-bucketed vectors store to extract them (the

@@ -32,8 +32,8 @@ import org.apache.spark.sql.functions._
   * deleted doc RESURRECTS it (the delete-then-re-append interaction:
   * the overlap's dead rows are expunged and its tombstones withdrawn
   * before the fresh rows land, so neither generation double-serves) →
-  * compaction ≡ rebuild of the surviving corpus. All swaps go through
-  * [[SafeSwap]].
+  * compaction ≡ rebuild of the surviving corpus. Every mutation
+  * publishes one version of the artifact ([[IdStore]]).
   *
   * Pair-serve note: the full-corpus dedup ([[imageDupsFromIndex]])
   * re-derives band rows from the per-doc `hashes` store inside codegen
@@ -52,11 +52,9 @@ object ImageIndex {
 
   /** The artifact's lifecycle: bands derived, the per-doc hashes store
     * keyed (`id_bucket` — the replay guard's and the expunge's prune). */
-  private val store = new IdStore("doc_id", IdStore.byId("doc_id"), "bands", "hashes")
+  private[graft] val store = new IdStore("doc_id", IdStore.byId("doc_id"), "bands", "hashes")
 
   private val persistedIndex = new TempArtifacts("graft-image-index")
-  private[ops] def persistedIndexDirFor(spark: SparkSession, dir: String): Option[String] =
-    persistedIndex.peek(spark, dir)
   def releaseStages(spark: SparkSession): Int = persistedIndex.release(spark)
 
   /** The band relation of a per-doc hash relation: four 16-bit bands per
@@ -78,11 +76,11 @@ object ImageIndex {
     * happened upstream, exactly once. The band store derives from the
     * just-written hashes parquet (a second scan of the TINY artifact,
     * never a second decode). */
-  def saveImageHashIndexOf(hashes: DataFrame, outDir: String): Unit = {
-    store.layout.write(hashes, s"$outDir/hashes", "overwrite")
-    BandLayout.write(bandsOfHashes(hashes.sparkSession.read.parquet(s"$outDir/hashes")),
-      s"$outDir/bands", "overwrite")
-  }
+  def saveImageHashIndexOf(hashes: DataFrame, outDir: String): Unit =
+    IdStore.rebuild(hashes.sparkSession, outDir) { w =>
+      w.add("hashes")(store.layout.write(hashes, _))
+      w.add("bands")(BandLayout.write(bandsOfHashes(w.read("hashes")), _))
+    }
 
   /** Full-corpus build over the `documents` table: ONE decode pass
     * (both hash families per doc), then the artifact writes. */
@@ -106,32 +104,20 @@ object ImageIndex {
     * ([[IdStore.withdraw]]), so the fresh rows then append as new and
     * neither generation double-serves. */
   def appendImageHashDelta(deltaDocs: DataFrame, indexDir: String): Unit = {
-    val spark = deltaDocs.sparkSession
-    store.recover(spark, indexDir)
     // decode ONCE, up front: both the resurrection check and the append
     // plan from this one materialized relation
     val deltaHashes = Multimodal.imageHashesOf(deltaDocs).cache()
     deltaHashes.count()
-    val fresh = store.admit(spark, indexDir, deltaHashes)(
-      expunge(spark, indexDir, _)).cache()
-    fresh.count()
-    // WRITE ORDER MATTERS (the appendPostingsDelta/appendPqDelta
-    // contract): the derived store (bands) appends FIRST, the replay
-    // guard's store (hashes) LAST. Appending hashes first invalidates
-    // every cached plan reading the hashes path — `fresh` itself — and
-    // Spark's recache re-runs the anti-join against the post-append
-    // listing, evaluating `fresh` to EMPTY for the band write: the
-    // delta's band rows silently never landed (caught by the LSH twin's
-    // lifecycle spec; the pair serve reads only the hashes store, so
-    // q156/q159 couldn't see it — the PROBE path could). The commit
-    // marker makes any crash between the two writes roll BOTH stores
-    // back to their recorded listings at the next recover — the re-run
-    // re-admits the whole delta and no duplicate band row ever exists.
-    store.atomically(spark, indexDir) {
-      BandLayout.write(bandsOfHashes(fresh), s"$indexDir/bands", "append")
-      store.layout.write(fresh, s"$indexDir/hashes", "append")
+    store.write(deltaDocs.sparkSession, indexDir) { w =>
+      val fresh = store.admit(w, deltaHashes)(expunge(w, _)).cache()
+      fresh.count()
+      // both stores' files publish as one version: a crash between the
+      // writes leaves the previous version serving, and the re-run
+      // re-admits the whole delta
+      w.add("bands")(BandLayout.write(bandsOfHashes(fresh), _))
+      w.add("hashes")(store.layout.write(fresh, _))
+      fresh.unpersist(blocking = false)
     }
-    fresh.unpersist(blocking = false)
     deltaHashes.unpersist(blocking = false)
   }
 
@@ -143,20 +129,20 @@ object ImageIndex {
 
   /** Drop a dead set's rows from both stores: the band store rewrites
     * ONLY the buckets holding a dead doc's rows, the hashes store only
-    * the id buckets the dead ids hash to (untouched buckets' files
-    * survive byte-identical). All swaps crash-safe via [[SafeSwap]]. */
-  private def expunge(spark: SparkSession, indexDir: String, dead: DataFrame): Unit = {
-    IdStore.expunge(s"$indexDir/bands", BandLayout.column, "doc_id", dead)
-    store.expungeKeyed(indexDir, dead)
+    * the id buckets the dead ids hash to (untouched buckets keep their
+    * files). */
+  private def expunge(w: IdStore.Writer, dead: DataFrame): Unit = {
+    IdStore.expunge(w, "bands", BandLayout.column, "doc_id", dead)
+    store.expungeKeyed(w, dead)
   }
 
   /** Expunge the tombstones — [[Retrieval.compactPostings]]'s contract
-    * for the image artifact: rewrite only touched band and id buckets,
-    * delete the tombstone set LAST (the commit point), [[SafeSwap]]
-    * throughout, answer-invisible by construction (the q159 gate serves
-    * a compacted lifecycle under the surviving-corpus oracle). */
+    * for the image artifact: rewrite only touched band and id buckets
+    * and drop the tombstone set in one version, answer-invisible by
+    * construction (the q159 gate serves a compacted lifecycle under the
+    * surviving-corpus oracle). */
   def compactImageHashIndex(spark: SparkSession, indexDir: String): Unit =
-    store.compact(spark, indexDir)(expunge(spark, indexDir, _))
+    store.compact(spark, indexDir)(expunge)
 
   /** Serve the perceptual near-dup pair relation from the artifact —
     * q121's (or, with `gradient = true`, q125's) exact output with NO
@@ -168,9 +154,8 @@ object ImageIndex {
   def imageDupsFromIndex(spark: SparkSession, indexDir: String,
       gradient: Boolean = false, maxHamming: Int = 3,
       maxBandPopulation: Int = 1000): DataFrame = {
-    store.recover(spark, indexDir)
-    val live = store.live(StoreReads.parquet(spark, s"$indexDir/hashes"),
-      store.tombstones(spark, indexDir))
+    val v = IdStore.latest(spark, indexDir)
+    val live = store.live(v.read(spark, "hashes"), v.tombstones(spark, "doc_id"))
     val (hi, lo) = if (gradient) ("d_hi", "d_lo") else ("a_hi", "a_lo")
     Multimodal.perceptualDupsOfHashes(
       live.select(col("doc_id"), col(hi).as("hi"), col(lo).as("lo")),
@@ -189,17 +174,17 @@ object ImageIndex {
   def probeImages(probeDocs: DataFrame, indexDir: String,
       gradient: Boolean = false, maxHamming: Int = 3): DataFrame = {
     val spark = probeDocs.sparkSession
-    store.recover(spark, indexDir)
+    val v = IdStore.latest(spark, indexDir)
     val family = if (gradient) 1 else 0
     val probeBands = bandsOfHashes(Multimodal.imageHashesOf(probeDocs))
       .where(col("family") === family)
       .select(col("doc_id").as("probe_id"), col("hi").as("p_hi"), col("lo").as("p_lo"),
         col("family"), col("band"), col("band_key"))
       .cache()
-    val corpusBands = StoreReads.parquet(spark, s"$indexDir/bands")
+    val corpusBands = v.read(spark, "bands")
       .where(col(BandLayout.column).isin(BandLayout.bucketsOf(probeBands): _*) &&
         col("family") === family)
-    val held = store.live(corpusBands, store.tombstones(spark, indexDir))
+    val held = store.live(corpusBands, v.tombstones(spark, "doc_id"))
     probeBands.join(held, Seq("band", "band_key"))
       .select(col("probe_id"), col("doc_id"),
         (bit_count(col("p_hi").bitwiseXOR(col("hi"))) +

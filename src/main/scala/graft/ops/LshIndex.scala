@@ -42,7 +42,8 @@ import graft.functions.VectorFunctions.dotProduct
   * Full lifecycle contract, uniform with the other five families: base
   * build → delta append (replay guard + bootstrap) → tombstone →
   * re-append RESURRECTS a deleted vector → compaction ≡ rebuild of the
-  * survivors. All swaps crash-safe via [[SafeSwap]].
+  * survivors. Every mutation publishes one version of the artifact
+  * ([[IdStore]]).
   */
 object LshIndex {
 
@@ -52,70 +53,33 @@ object LshIndex {
     * bucket vocabulary. */
   private val BucketLayout = IdStore.Layout("bucket_bucket", 64, "tbl", "bucket")
 
-  /** The artifact's lifecycle: buckets derived, the vectors store keyed
-    * (`id_bucket` — the replay guard's and the expunge's prune).
-    * Entry-point recovery first completes a crashed geometry rebuild
-    * ([[maintainGeometry]]) from its durable snapshot — a committed
-    * rebuild supersedes every store (it overwrites all of them); with
-    * no marker, a leftover snapshot is a crash BEFORE the commit point
-    * and the old artifact is intact, so the snapshot drops — and drops a
-    * [[writeBuckets]] staging dir a crash between its two jobs left
-    * behind (pure derivation — the re-run rewrites it). */
+  /** The artifact's lifecycle: buckets derived, meta beside them, the
+    * vectors store keyed (`id_bucket` — the replay guard's and the
+    * expunge's prune). */
   private[graft] val store =
-    new IdStore("vec_id", IdStore.byId("vec_id"), "buckets", "vectors") {
-      override def recover(spark: SparkSession, indexDir: String): Boolean = {
-        val fs = IdStore.fsOf(spark, indexDir)
-        if (fs.exists(regeomMarker(indexDir))) rebuildFromSnapshot(spark, indexDir)
-        else fs.delete(fsPath(regeomSnapshot(indexDir)), true)
-        fs.delete(fsPath(s"$indexDir/sig_staging_tmp"), true)
-        super.recover(spark, indexDir)
-      }
-    }
+    new IdStore("vec_id", IdStore.byId("vec_id"), "meta", "buckets", "vectors")
 
   private val persistedIndex = new TempArtifacts("graft-lsh-index")
-  private[ops] def persistedIndexDirFor(spark: SparkSession, dir: String): Option[String] =
-    persistedIndex.peek(spark, dir)
   def releaseStages(spark: SparkSession): Int = {
     metaCache.keySet.removeIf(_._1 eq spark)
     qvCache.keySet.removeIf(_._1 eq spark)
     persistedIndex.release(spark)
   }
 
-  /** Serve-path memos, keyed by the ARTIFACT's content tag
-    * ([[StageCache.inputTag]] over the whole index dir), so any
-    * lifecycle mutation — append, tombstone, compaction, migration,
-    * regeometry rebuild — mints a fresh key and the next serve re-reads.
-    * Two per-serve fixed costs that cannot change between mutations:
-    * the meta row (a parquet footer + head() job per serve) and the
-    * query-vector batch (a full id-bucketed vectors-store scan, 32
-    * tasks, to collect nQueries bounded rows — vec_id is hash-spread
-    * across dirs, so no file prune applies). The tag listing itself is
-    * metadata-only (~sub-ms on the artifact's ~130 files). */
+  /** Serve-path memos, keyed by the artifact's VERSION ([[IdStore]]):
+    * any lifecycle mutation — append, tombstone, compaction, migration,
+    * regeometry rebuild — publishes a fresh version id and the next
+    * serve re-reads. Two per-serve fixed costs that cannot change
+    * between mutations: the meta row (a parquet footer + head() job per
+    * serve) and the query-vector batch (a full id-bucketed vectors-store
+    * scan, 32 tasks, to collect nQueries bounded rows — vec_id is
+    * hash-spread across dirs, so no file prune applies). */
   private val metaCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (Int, Int)]()
   private val qvCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int), Seq[(Long, Seq[Double])]]()
 
-  private def fsPath(p: String) = new org.apache.hadoop.fs.Path(p)
-
-  private def regeomMarker(indexDir: String) = fsPath(s"$indexDir/_regeom_pending")
-  private def regeomSnapshot(indexDir: String) = s"$indexDir/regeom_snapshot"
-
-  /** The committed half of a geometry rebuild: overwrite every store
-    * from the durable live-vector snapshot under freshly-derived
-    * adaptive geometry, drop the (already-applied) tombstones, then
-    * clear the marker + snapshot. Idempotent from ANY crash point —
-    * every write is an overwrite of a derived store and the snapshot is
-    * the single source of truth — so [[store]]'s recovery can re-run it
-    * wholesale; until the marker clears, no reader ever sees a mixed
-    * old/new-geometry artifact (every entry point recovers first). */
-  private def rebuildFromSnapshot(spark: SparkSession, indexDir: String): Unit = {
-    val fs = IdStore.fsOf(spark, indexDir)
-    saveLshIndexOf(spark.read.parquet(regeomSnapshot(indexDir)), indexDir)
-    fs.delete(fsPath(s"$indexDir/tombstones"), true)
-    fs.delete(regeomMarker(indexDir), false)
-    fs.delete(fsPath(regeomSnapshot(indexDir)), true)
-  }
+  private def versionKey(v: IdStore.Version) = s"${v.dir}@${v.id}"
 
   /** Geometry-drift maintenance — the lifecycle step the frozen
     * (bits, nTables) otherwise lacks: bootstrap sizes geometry for the
@@ -133,26 +97,26 @@ object LshIndex {
     * property (compaction ≡ rebuild EXACTLY — no trained state), so
     * the rebuild is answer-preserving by construction.
     *
-    * Crash-safe via a commit marker: the live set is SNAPSHOTTED to a
-    * staging store first (the rebuild overwrites the very stores it
-    * reads), the marker commits the intent, and the rebuild runs from
-    * the snapshot with overwrite-mode writes only — a crash at any
-    * point re-runs [[rebuildFromSnapshot]] at the next entry
-    * ([[store]]'s recovery), so no reader ever serves a mixed-geometry
-    * artifact. Cost: one artifact-proportional rebuild, on the
-    * maintenance cadence, only when geometry actually drifted.
-    * Returns the new (bits, nTables) if a rebuild ran. */
-  def maintainGeometry(spark: SparkSession, indexDir: String): Option[(Int, Int)] = {
-    store.recover(spark, indexDir)
-    val (bits, nTables) = readMeta(spark, indexDir)
-    val live = liveVectors(spark, indexDir)
-    val target = Similarity.adaptiveLshConfig(live.count())
-    if (target == ((bits, nTables))) return None
-    live.write.mode("overwrite").parquet(regeomSnapshot(indexDir))
-    IdStore.fsOf(spark, indexDir).create(regeomMarker(indexDir), true).close() // the commit point
-    rebuildFromSnapshot(spark, indexDir)
-    Some(target)
-  }
+    * The rebuild reads the live set from the current version's files
+    * and publishes every store anew in one version (tombstones already
+    * applied, so dropped): a crash at any point leaves the old version
+    * serving — no reader ever sees a mixed-geometry artifact — and
+    * re-running the maintenance converges. Cost: one
+    * artifact-proportional rebuild, on the maintenance cadence, only
+    * when geometry actually drifted. Returns the new (bits, nTables) if
+    * a rebuild ran. */
+  def maintainGeometry(spark: SparkSession, indexDir: String): Option[(Int, Int)] =
+    store.write(spark, indexDir) { w =>
+      val (bits, nTables) = metaOf(w.read("meta"))
+      val live = store.live(vectorsOf(w.read("vectors")), w.tombstones("vec_id"))
+      val target = Similarity.adaptiveLshConfig(live.count())
+      if (target == ((bits, nTables))) None
+      else {
+        w.clear()
+        build(w, live, target._1, target._2)
+        Some(target)
+      }
+    }
 
   /** Write the bucket store rows of a unit-vector relation under a
     * fixed geometry: one row per (vec_id, table), partitioned by
@@ -171,48 +135,44 @@ object LshIndex {
     * 98–197 s vs ~4 s for the 200 k × (14, 8) artifact build. Neither
     * an exchange barrier (optimizer re-floats the projection) nor a
     * dataset cache (an artifact build shouldn't pin executor memory)
-    * is a reliable fix; a materialized column is. Crash window
-    * (staging written, buckets not, or buckets appended, vectors not):
-    * re-runs converge — see [[appendLshDelta]]. */
-  private def writeBuckets(vecs: DataFrame, bits: Int, nTables: Int,
-      indexDir: String, mode: String): Unit = {
-    val spark = vecs.sparkSession
-    val staging = s"$indexDir/sig_staging_tmp"
+    * is a reliable fix; a materialized column is (in the writer's
+    * scratch space, gone with it at publish). */
+  private def addBuckets(w: IdStore.Writer, vecs: DataFrame, bits: Int, nTables: Int): Unit = {
+    val staging = w.scratch()
     Similarity.lshSignaturesOf(vecs, bits, nTables)
       .select(col("vec_id"), col("buckets"))
-      .write.mode("overwrite").parquet(staging)
-    BucketLayout.write(spark.read.parquet(staging)
-        .select(col("vec_id"), posexplode(col("buckets")).as(Seq("tbl", "bucket"))),
-      s"$indexDir/buckets", mode)
-    IdStore.fsOf(spark, indexDir).delete(fsPath(staging), true)
+      .write.parquet(staging)
+    w.add("buckets")(BucketLayout.write(w.spark.read.parquet(staging)
+      .select(col("vec_id"), posexplode(col("buckets")).as(Seq("tbl", "bucket"))), _))
   }
 
-  /** The frozen geometry (bits, nTables): mixing bucket keys from two
-    * geometries in one store zeroes recall across the split. */
-  private def readMeta(spark: SparkSession, indexDir: String): (Int, Int) =
-    metaCache.computeIfAbsent(
-      (spark, StageCache.inputTag(spark, s"$indexDir/meta")),
-      _ => readMetaUncached(spark, indexDir))
+  /** The frozen geometry (bits, nTables) of a published version:
+    * mixing bucket keys from two geometries in one store zeroes recall
+    * across the split. */
+  private def readMeta(spark: SparkSession, v: IdStore.Version): (Int, Int) =
+    metaCache.computeIfAbsent((spark, versionKey(v)), _ => metaOf(v.read(spark, "meta")))
 
-  private def readMetaUncached(spark: SparkSession, indexDir: String): (Int, Int) = {
-    val r = spark.read.parquet(s"$indexDir/meta").head()
+  private def metaOf(meta: DataFrame): (Int, Int) = {
+    val r = meta.head()
     // FAIL FAST, never guess: a meta without the layout fields predates
     // the partitioned stores, and the serve/expunge/guard partition
     // prunes over an unpartitioned store would serve silently-empty
     // candidates — an error is the safe answer; migrate the artifact.
-    require(r.schema.fieldNames.contains("bucket_buckets") &&
-        r.schema.fieldNames.contains("id_buckets"),
-      s"$indexDir/meta predates the partition-prune layout; " +
+    require(hasLayout(r.schema.fieldNames),
+      "the LSH meta predates the partition-prune layout; " +
         "run LshIndex.migrateLshIndex once to upgrade it in place")
     (r.getAs[Int]("bits"), r.getAs[Int]("n_tables"))
   }
+
+  private def hasLayout(fields: Array[String]): Boolean =
+    fields.contains("bucket_buckets") && fields.contains("id_buckets")
 
   /** The frozen geometry plus the layout moduli — the meta store. */
   private def writeMeta(spark: SparkSession, bits: Int, nTables: Int, path: String): Unit = {
     import spark.implicits._
     Seq((bits, nTables, BucketLayout.modulus, store.layout.modulus))
       .toDF("bits", "n_tables", "bucket_buckets", "id_buckets")
-      .coalesce(1).write.mode("overwrite").parquet(path)
+      .coalesce(1).write.parquet(path)
   }
 
   /** One-shot in-place upgrade of a pre-partition-prune artifact (meta
@@ -225,55 +185,51 @@ object LshIndex {
     * under the frozen (bits, nTables), so rewriting the bucket store
     * from the vectors store reproduces exactly what a current-layout
     * build would have written — one pass over the artifact's own
-    * vectors, never the upstream corpus. The meta store is swapped LAST
-    * (crash-safe commit point: until the new meta lands, readers still
-    * fail fast rather than mix layouts). Idempotent: a current-layout
-    * artifact is a no-op. */
+    * vectors, never the upstream corpus. It reads the stores' listing
+    * (what a pre-upgrade deployment holds has no version log) and
+    * publishes the rebuilt stores as one version, so a crash
+    * mid-migration leaves the artifact as it was. Tombstoned vectors
+    * are applied by the rebuild. Idempotent: a current-layout artifact
+    * is a no-op. */
   def migrateLshIndex(spark: SparkSession, indexDir: String): Boolean = {
-    val fs = IdStore.fsOf(spark, indexDir)
-    store.recover(spark, indexDir)
     val meta = spark.read.parquet(s"$indexDir/meta").head()
-    if (meta.schema.fieldNames.contains("bucket_buckets") &&
-        meta.schema.fieldNames.contains("id_buckets")) return false
-    val (bits, nTables) = (meta.getAs[Int]("bits"), meta.getAs[Int]("n_tables"))
-    // re-layout the vectors store first (tmp + swap — the rewrite reads
-    // the store it replaces), then rebuild the bucket store from it; a
-    // crash mid-migration leaves a meta that still fails fast, so the
-    // artifact stays unreadable-LOUDLY during the window, never
-    // silently mixed-layout
-    val vTmp = s"$indexDir/vectors_migrate_tmp"
-    store.layout.write(spark.read.parquet(s"$indexDir/vectors").select(col("vec_id"), col("u")),
-      vTmp, "overwrite")
-    SafeSwap.swapDir(fs, fsPath(s"$indexDir/vectors"), fsPath(vTmp))
-    writeBuckets(vectorsStore(spark, indexDir), bits, nTables, indexDir, "overwrite")
-    val mTmp = s"$indexDir/meta_migrate_tmp"
-    writeMeta(spark, bits, nTables, mTmp)
-    SafeSwap.swapDir(fs, fsPath(s"$indexDir/meta"), fsPath(mTmp))
+    if (hasLayout(meta.schema.fieldNames)) return false
+    val dead = new org.apache.hadoop.fs.Path(indexDir, "tombstones")
+    val vectors = store.live(
+      spark.read.parquet(s"$indexDir/vectors").select(col("vec_id"), col("u")),
+      if (IdStore.fsOf(spark, indexDir).exists(dead))
+        Some(spark.read.parquet(dead.toString).select("vec_id").distinct())
+      else None)
+    IdStore.rebuild(spark, indexDir)(
+      build(_, vectors, meta.getAs[Int]("bits"), meta.getAs[Int]("n_tables")))
     true
   }
 
   /** The vectors store in its public (vec_id, u) shape — every reader
     * goes through this so the physical `id_bucket` partition column
     * never leaks into served relations. */
-  private def vectorsStore(spark: SparkSession, indexDir: String): DataFrame =
-    StoreReads.parquet(spark, s"$indexDir/vectors").select(col("vec_id"), col("u"))
+  private def vectorsOf(stored: DataFrame): DataFrame = stored.select(col("vec_id"), col("u"))
 
   /** Persist the index from an arbitrary unit-vector relation. Geometry
     * defaults to the adaptive derivation over THIS relation's count —
     * the bucket-population-vs-scale story of the live path, frozen into
     * the artifact's meta for every later delta. */
   def saveLshIndexOf(vecs: DataFrame, outDir: String,
-      bits: Int = 0, nTables: Int = 0): Unit = {
-    val spark = vecs.sparkSession
+      bits: Int = 0, nTables: Int = 0): Unit =
+    IdStore.rebuild(vecs.sparkSession, outDir)(build(_, vecs, bits, nTables))
+
+  /** Add every store of a build over `vecs` (geometry as in
+    * [[saveLshIndexOf]]). */
+  private def build(w: IdStore.Writer, vecs: DataFrame, bits: Int, nTables: Int): Unit = {
     val (bitsEff, nTablesEff) =
       if (bits > 0 && nTables > 0) (bits, nTables)
       else Similarity.adaptiveLshConfig(vecs.count())
     require(bitsEff <= 30, "bucket keys fold into one positive Int")
-    store.layout.write(vecs.select(col("vec_id"), col("u")), s"$outDir/vectors", "overwrite")
+    w.add("vectors")(store.layout.write(vectorsOf(vecs), _))
     // bucket store derives from the just-written vectors parquet — a
     // second scan of the artifact, not of the upstream corpus
-    writeBuckets(vectorsStore(spark, outDir), bitsEff, nTablesEff, outDir, "overwrite")
-    writeMeta(spark, bitsEff, nTablesEff, s"$outDir/meta")
+    addBuckets(w, vectorsOf(w.read("vectors")), bitsEff, nTablesEff)
+    w.add("meta")(writeMeta(w.spark, bitsEff, nTablesEff, _))
   }
 
   /** Full-corpus build over the `embeddings` table. */
@@ -291,44 +247,33 @@ object LshIndex {
     * [[IdStore.withdraw]]). Appended bucket rows land as
     * dynamic-partition appends touching only the delta's buckets. */
   def appendLshDelta(deltaVecs: DataFrame, indexDir: String,
-      expectedCorpusVectors: Long = 0L): Unit = {
-    val spark = deltaVecs.sparkSession
-    store.recover(spark, indexDir)
-    if (!IdStore.fsOf(spark, indexDir).exists(fsPath(s"$indexDir/meta"))) {
-      // bootstrap: the first delta IS the base build. The geometry it
-      // freezes should fit the corpus the artifact will GROW INTO, not
-      // the first day's batch — a caller that knows the expected corpus
-      // size passes it and the adaptive derivation runs over that
-      // (ADVICE r12: a small first delta otherwise pins small-batch
-      // (bits, nTables) forever, degrading selectivity as days accrue).
-      val (b, t) = if (expectedCorpusVectors > 0L)
-        Similarity.adaptiveLshConfig(expectedCorpusVectors) else (0, 0)
-      saveLshIndexOf(deltaVecs, indexDir, bits = b, nTables = t)
-      return
+      expectedCorpusVectors: Long = 0L): Unit =
+    store.write(deltaVecs.sparkSession, indexDir) { w =>
+      if (!w.has("meta")) {
+        // bootstrap: the first delta IS the base build. The geometry it
+        // freezes should fit the corpus the artifact will GROW INTO, not
+        // the first day's batch — a caller that knows the expected corpus
+        // size passes it and the adaptive derivation runs over that
+        // (ADVICE r12: a small first delta otherwise pins small-batch
+        // (bits, nTables) forever, degrading selectivity as days accrue).
+        val (b, t) = if (expectedCorpusVectors > 0L)
+          Similarity.adaptiveLshConfig(expectedCorpusVectors) else (0, 0)
+        build(w, deltaVecs, b, t)
+      } else {
+        val (bits, nTables) = metaOf(w.read("meta"))
+        val delta = vectorsOf(deltaVecs).cache()
+        delta.count()
+        val fresh = store.admit(w, delta)(expunge(w, _)).cache()
+        fresh.count()
+        // both stores' files publish as one version: a crash anywhere
+        // leaves the previous version serving, and the re-run re-admits
+        // the whole delta with no duplicate row in either store
+        addBuckets(w, fresh, bits, nTables)
+        w.add("vectors")(store.layout.write(fresh, _))
+        fresh.unpersist(blocking = false)
+        delta.unpersist(blocking = false)
+      }
     }
-    val (bits, nTables) = readMeta(spark, indexDir)
-    val delta = deltaVecs.select(col("vec_id"), col("u")).cache()
-    delta.count()
-    val fresh = store.admit(spark, indexDir, delta)(expunge(spark, indexDir, _)).cache()
-    fresh.count()
-    // WRITE ORDER MATTERS (the appendPostingsDelta/appendPqDelta
-    // contract): the derived store (buckets) appends FIRST, the replay
-    // guard's store (vectors) LAST. Appending vectors first invalidates
-    // every cached plan that reads the vectors path — including `fresh`
-    // itself — and Spark's recache re-runs the anti-join against the
-    // post-append listing, evaluating `fresh` to EMPTY for the second
-    // write (measured: the delta's bucket rows silently never landed).
-    // The commit marker makes the append atomic-by-observation: a crash
-    // anywhere between begin and commit rolls the stores back to their
-    // recorded listings at the next recover, so the re-run re-admits
-    // the whole delta and no duplicate row ever exists in either store.
-    store.atomically(spark, indexDir) {
-      writeBuckets(fresh, bits, nTables, indexDir, "append")
-      store.layout.write(fresh, s"$indexDir/vectors", "append")
-    }
-    fresh.unpersist(blocking = false)
-    delta.unpersist(blocking = false)
-  }
 
   /** Retire vectors — tombstones, not rewrites (cost ∝ |deletes|);
     * idempotent. */
@@ -344,21 +289,21 @@ object LshIndex {
     * the touched `id_bucket` dirs (no scan at all). The signatures are
     * collected BEFORE the vectors rewrite drops the dead rows they are
     * recomputed from. */
-  private def expunge(spark: SparkSession, indexDir: String, dead: DataFrame): Unit = {
-    val (bits, nTables) = readMeta(spark, indexDir)
-    val deadVecs = vectorsStore(spark, indexDir).join(dead, Seq("vec_id"), "left_semi")
+  private def expunge(w: IdStore.Writer, dead: DataFrame): Unit = {
+    val (bits, nTables) = metaOf(w.read("meta"))
+    val deadVecs = vectorsOf(w.read("vectors")).join(dead, Seq("vec_id"), "left_semi")
     val touched = BucketLayout.bucketsOf(Similarity.lshSignaturesOf(deadVecs, bits, nTables)
       .select(posexplode(col("buckets")).as(Seq("tbl", "bucket"))))
-    IdStore.expunge(s"$indexDir/buckets", BucketLayout.column, "vec_id", dead, Some(touched))
-    store.expungeKeyed(indexDir, dead)
+    IdStore.expunge(w, "buckets", BucketLayout.column, "vec_id", dead, Some(touched))
+    store.expungeKeyed(w, dead)
   }
 
   /** Expunge the tombstones — rewrite only touched bucket and id
-    * partitions, delete the tombstone set LAST (the commit point).
+    * partitions and drop the tombstone set, in one version.
     * Answer-invisible by construction; for THIS family compaction ≡
     * fresh rebuild EXACTLY (no frozen trained state). */
   def compactLshIndex(spark: SparkSession, indexDir: String): Unit =
-    store.compact(spark, indexDir)(expunge(spark, indexDir, _))
+    store.compact(spark, indexDir)(expunge)
 
   /** Serve multi-probe top-k from the artifact — [[Similarity.lshTopK]]'s
     * exact plan semantics with every corpus-scale relation read from
@@ -376,26 +321,26 @@ object LshIndex {
     * probed rows. */
   def lshTopKFromIndex(spark: SparkSession, indexDir: String,
       nQueries: Int = 200, k: Int = 3, maxFlips: Int = 2): DataFrame = {
-    store.recover(spark, indexDir)
-    val (bits, nTables) = readMeta(spark, indexDir)
-    val dead = store.tombstones(spark, indexDir)
+    val v = IdStore.latest(spark, indexDir)
+    val (bits, nTables) = readMeta(spark, v)
+    val dead = v.tombstones(spark, "vec_id")
     def live(df: DataFrame): DataFrame = store.live(df, dead)
-    val vectors = live(vectorsStore(spark, indexDir))
+    val vectors = live(vectorsOf(v.read(spark, "vectors")))
     // The query batch is bounded (nQueries rows of 64 doubles), but its
     // plan scans the FULL id-bucketed vectors store — the vec_id filter
     // can't prune files because ids are hash-spread across dirs. The
     // uncached relation was evaluated THREE times per serve (probe
     // bucket-id collect, probe-side broadcast, rescore-side broadcast):
     // three full store scans to read 200 rows. Collect it ONCE into a
-    // local relation — memoized per (session, artifact content tag):
-    // repeat serves of an unmutated artifact skip the scan entirely,
-    // and any lifecycle mutation (including tombstones, which anti-join
-    // the batch) mints a fresh tag. Scale-safe: nQueries is the
+    // local relation — memoized per (session, artifact version): repeat
+    // serves of an unmutated artifact skip the scan entirely, and any
+    // lifecycle mutation (including tombstones, which anti-join the
+    // batch) publishes a fresh version. Scale-safe: nQueries is the
     // caller's bounded batch, the same rows the two broadcasts already
     // shipped to every task.
     import spark.implicits._
     val qvRows = qvCache.computeIfAbsent(
-      (spark, StageCache.inputTag(spark, indexDir), nQueries),
+      (spark, versionKey(v), nQueries),
       _ => vectors.where(col("vec_id") < nQueries)
         .select(col("vec_id"), col("u"))
         .as[(Long, Seq[Double])].collect().toSeq)
@@ -407,7 +352,7 @@ object LshIndex {
       .select(col("vec_id").as("q_id"), posexplode(col("buckets")).as(Seq("tbl", "bucket0")))
       .select(col("q_id"), col("tbl"), col("bucket0"), explode(masks).as("mask"))
       .select(col("q_id"), col("tbl"), col("bucket0").bitwiseXOR(col("mask")).as("bucket"))
-    val corpus = live(StoreReads.parquet(spark, s"$indexDir/buckets")
+    val corpus = live(v.read(spark, "buckets")
         .where(col(BucketLayout.column).isin(BucketLayout.bucketsOf(probes): _*)))
       .select(col("vec_id"), col("tbl"), col("bucket"))
     val cand = broadcast(probes).join(corpus, Seq("tbl", "bucket"))
@@ -440,8 +385,8 @@ object LshIndex {
   def probeVectors(probeVecs: DataFrame, indexDir: String,
       threshold: Double = 0.4): DataFrame = {
     val spark = probeVecs.sparkSession
-    store.recover(spark, indexDir)
-    val (bits, nTables) = readMeta(spark, indexDir)
+    val v = IdStore.latest(spark, indexDir)
+    val (bits, nTables) = readMeta(spark, v)
     // UNCACHED on purpose: the probe relation is read twice (the local
     // bucket-id collect below + the candidate join), but each read is
     // one narrow codegen'd projection over the delta. A cache here
@@ -453,15 +398,15 @@ object LshIndex {
         probeVecs.select(col("vec_id"), col("u")), bits, nTables)
       .select(col("vec_id").as("probe_id"), col("u").as("pu"),
         posexplode(col("buckets")).as(Seq("tbl", "bucket")))
-    val pruned = StoreReads.parquet(spark, s"$indexDir/buckets")
+    val pruned = v.read(spark, "buckets")
       .where(col(BucketLayout.column).isin(BucketLayout.bucketsOf(probes): _*))
       .select(col("vec_id"), col("tbl"), col("bucket"))
-    val held = store.live(pruned, store.tombstones(spark, indexDir))
+    val held = store.live(pruned, v.tombstones(spark, "vec_id"))
     val cand = probes.join(held, Seq("tbl", "bucket"))
       .where(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("pu"), col("vec_id"))
       .dropDuplicates("probe_id", "vec_id")
-    cand.join(vectorsStore(spark, indexDir)
+    cand.join(vectorsOf(v.read(spark, "vectors"))
         .select(col("vec_id"), col("u").as("nu")), Seq("vec_id"))
       .select(col("probe_id"), col("vec_id"),
         round(dotProduct(col("pu"), col("nu")), 4).as("cos_sim"))
@@ -469,14 +414,14 @@ object LshIndex {
       .orderBy("probe_id", "vec_id")
   }
 
-  /** The artifact's exact-rescore store, SERVABLE: crash-recovered and
-    * with pending tombstones anti-joined out — what any external reader
-    * (the hybrid fusion's dense pool) must consume instead of the raw
-    * parquet, or dead vectors re-enter its answers between a tombstone
-    * and the next compaction. */
+  /** The artifact's exact-rescore store, SERVABLE: the latest version's
+    * rows with pending tombstones anti-joined out — what any external
+    * reader (the hybrid fusion's dense pool) must consume instead of the
+    * raw parquet, or dead vectors and unpublished rows re-enter its
+    * answers. */
   def liveVectors(spark: SparkSession, indexDir: String): DataFrame = {
-    store.recover(spark, indexDir)
-    store.live(vectorsStore(spark, indexDir), store.tombstones(spark, indexDir))
+    val v = IdStore.latest(spark, indexDir)
+    store.live(vectorsOf(v.read(spark, "vectors")), v.tombstones(spark, "vec_id"))
   }
 
   /** q164: q38's multi-probe top-k served ENTIRELY from the persisted

@@ -198,9 +198,7 @@ object Pipeline {
     val docs = Tables.documents(spark, corpusDir).select(col("doc_id"), col("text"),
       (pmod(col("doc_id") * lit(2654435761L), lit(100)) < batchPct).as("incoming"))
     val incoming = docs.where(col("incoming")).select("doc_id", "text")
-    val fs0 = new org.apache.hadoop.fs.Path(workDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs0.exists(new org.apache.hadoop.fs.Path(s"$workDir/fp/meta")))
+    if (!FingerprintIndex.store.exists(spark, s"$workDir/fp"))
       FingerprintIndex.saveFingerprintIndexOf(
         docs.where(!col("incoming")).select("doc_id", "text"), s"$workDir/fp")
     val kept = curatedDeltaFromIndex(incoming, s"$workDir/fp").cache()
@@ -218,10 +216,8 @@ object Pipeline {
     // a small day-1 delta would otherwise pin small-batch (bits,
     // nTables) forever (ADVICE r12). The count job runs only when the
     // artifact doesn't exist yet.
-    val fs = new org.apache.hadoop.fs.Path(workDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
     val expectedVectors =
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$workDir/lsh/meta"))) 0L
+      if (LshIndex.store.exists(spark, s"$workDir/lsh")) 0L
       else Similarity.unitEmbeddings(spark, corpusDir).count()
     val keptVecs = Similarity.unitEmbeddings(spark, corpusDir)
       .join(kept.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")
@@ -234,21 +230,7 @@ object Pipeline {
     // via the replay-guarded delta merge. This is the codebook-drift
     // wrinkle LSH doesn't have, proven composed by the pipeline rather
     // than only in the q162 gate.
-    //
-    // The bootstrap guard keys on `vectors` — the LAST store
-    // savePqIndexOf writes (coarse, subcents, pqbook, codes, vectors),
-    // hence a true commit point, the same derived-first/guard-last
-    // discipline every append follows. Guarding on an earlier store
-    // (pqbook) opens a crash window: codes committed, vectors absent →
-    // the retried day takes the append path, whose replay guard IS the
-    // vectors store (missing ⇒ whole delta "fresh") and re-appends
-    // every day-1 code row, which then double-serves in the ADC
-    // shortlist. On the vectors guard a mid-build crash simply
-    // re-runs the overwrite-mode base build, which converges.
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$workDir/pq/vectors")))
-      Similarity.appendPqDelta(keptVecs, s"$workDir/pq")
-    else
-      Similarity.savePqIndexOf(keptVecs, s"$workDir/pq")
+    Similarity.appendPqDelta(keptVecs, s"$workDir/pq")
     val repaired = Sketches.appendDailyDeltaVerified(
       Tables.events(spark, corpusDir), s"$workDir/rollup")
     // 4. EXPORT: deterministic shards + manifest over the curated
@@ -279,8 +261,8 @@ object Pipeline {
     * periodic compaction. One deterministic retired set (the repo's
     * delete-rule idiom) is tombstoned across every doc-keyed artifact,
     * each artifact compacts (tombstones expunged, only touched
-    * partitions rewritten, crash-safe swaps — the [[SafeSwap]] recovery
-    * paths exercised end-to-end in composition), the rollup's day
+    * partitions rewritten, each compaction one published version), the
+    * rollup's day
     * integrity is verified/repaired, and each artifact is SERVED
     * afterward so the report proves post-maintenance health.
     *

@@ -154,11 +154,12 @@ object Retrieval {
     * session stage) are carried in the dl relation only — the postings
     * artifact stays null-free so bucket pruning never needs a null
     * bucket. */
-  def savePostingsIndex(spark: SparkSession, dir: String, outDir: String): Unit = {
-    TermLayout.write(postingsStage(spark, dir).where(col("term").isNotNull),
-      s"$outDir/postings", "overwrite")
-    store.layout.write(dlStage(spark, dir), s"$outDir/dl", "overwrite")
-  }
+  def savePostingsIndex(spark: SparkSession, dir: String, outDir: String): Unit =
+    IdStore.rebuild(spark, outDir) { w =>
+      w.add("postings")(
+        TermLayout.write(postingsStage(spark, dir).where(col("term").isNotNull), _))
+      w.add("dl")(store.layout.write(dlStage(spark, dir), _))
+    }
 
   /** Partition layout of the postings store: a query batch's terms name
     * the partitions it reads. */
@@ -168,20 +169,18 @@ object Retrieval {
     * keyed (`id_bucket` — the replay guard's scan target). */
   private val store = new IdStore("doc_id", IdStore.byId("doc_id"), "postings", "dl")
 
-  /** The dl store in its public (doc_id, dl) shape — readers go through
-    * this so the physical `id_bucket` partition column never leaks into
-    * served relations or corpus stats. */
-  private def dlStore(spark: SparkSession, indexDir: String): DataFrame =
-    StoreReads.parquet(spark, s"$indexDir/dl").drop("id_bucket")
-
   /** Persist an index from an arbitrary (doc_id, text) base relation —
     * the starting point of the incremental lifecycle (the full-corpus
     * [[savePostingsIndex]] specialization serves q127). */
-  def savePostingsIndexOf(docs: DataFrame, outDir: String): Unit = {
+  def savePostingsIndexOf(docs: DataFrame, outDir: String): Unit =
+    IdStore.rebuild(docs.sparkSession, outDir)(addPostings(_, docs))
+
+  /** Add both stores' rows of a (doc_id, text) relation. */
+  private def addPostings(w: IdStore.Writer, docs: DataFrame): Unit = {
     val p = postingsOf(docs)
-    TermLayout.write(p.where(col("term").isNotNull), s"$outDir/postings", "overwrite")
-    store.layout.write(p.select(col("doc_id"), col("dl")).dropDuplicates("doc_id"),
-      s"$outDir/dl", "overwrite")
+    w.add("postings")(TermLayout.write(p.where(col("term").isNotNull), _))
+    w.add("dl")(store.layout.write(
+      p.select(col("doc_id"), col("dl")).dropDuplicates("doc_id"), _))
   }
 
   /** Merge a delta batch of NEW documents into a persisted
@@ -207,23 +206,15 @@ object Retrieval {
     * a first delta into an empty artifact (streaming ingest starts
     * cold) has no dl relation to guard against — every delta doc is
     * fresh then, mirroring [[Sketches.appendDailyDelta]]'s first-append
-    * path. */
-  def appendPostingsDelta(deltaDocs: DataFrame, indexDir: String): Unit = {
-    val spark = deltaDocs.sparkSession
-    store.recover(spark, indexDir)
-    // materialized BEFORE the appends: the second write's source must
-    // not re-read the dl store it is itself appending to
-    val fresh = store.admit(spark, indexDir, deltaDocs)(
-      expungePostings(spark, indexDir, _)).cache()
-    fresh.count()
-    store.atomically(spark, indexDir) {
-      val p = postingsOf(fresh)
-      TermLayout.write(p.where(col("term").isNotNull), s"$indexDir/postings", "append")
-      store.layout.write(p.select(col("doc_id"), col("dl")).dropDuplicates("doc_id"),
-        s"$indexDir/dl", "append")
+    * path. Both stores' files publish as one version ([[IdStore]]). */
+  def appendPostingsDelta(deltaDocs: DataFrame, indexDir: String): Unit =
+    store.write(deltaDocs.sparkSession, indexDir) { w =>
+      // materialized once: both stores' writes derive from it
+      val fresh = store.admit(w, deltaDocs)(expungePostings(w, _)).cache()
+      fresh.count()
+      addPostings(w, fresh)
+      fresh.unpersist(blocking = false)
     }
-    fresh.unpersist(blocking = false)
-  }
 
   /** Retire documents from a persisted postings artifact — the delete
     * half of the index lifecycle (takedowns, re-crawled URLs, licence
@@ -253,26 +244,21 @@ object Retrieval {
     * directories; the untouched buckets' files survive byte-identical,
     * which the spec pins by mtime). Answer-invisible by construction:
     * the compacted artifact serves exactly what the anti-join served
-    * (the q144 gate runs it under q142's oracle). Swaps go through
-    * [[SafeSwap]] — live dirs move ASIDE before their rewrites move in,
-    * asides are dropped only after all swaps, and the tombstone set is
-    * deleted LAST (the commit point) — so a crash anywhere leaves a
-    * recoverable pre-compaction state: [[SafeSwap.recover]] runs at the
-    * head of this pass and of every serve, and re-running the
-    * compaction converges (SafeSwapSpec pins each crash window).
-    * Single-writer ownership is unchanged. */
+    * (the q144 gate runs it under q142's oracle). The rewritten buckets
+    * and the dropped tombstone set publish as one version, so a crash
+    * anywhere leaves the pre-compaction version serving and a re-run
+    * converges (AppendCrashWindowsSpec pins the windows). */
   def compactPostings(spark: SparkSession, indexDir: String): Unit =
-    store.compact(spark, indexDir)(expungePostings(spark, indexDir, _))
+    store.compact(spark, indexDir)(expungePostings)
 
   /** Drop a dead set's rows from the artifact: only the term buckets
     * holding a dead doc's postings and the dl buckets its ids hash to
     * rewrite. Shared by [[compactPostings]] (whole tombstone set) and
     * the resurrection path in [[appendPostingsDelta]] (just the
     * re-appended overlap). */
-  private def expungePostings(spark: SparkSession, indexDir: String,
-      dead: DataFrame): Unit = {
-    IdStore.expunge(s"$indexDir/postings", TermLayout.column, "doc_id", dead)
-    store.expungeKeyed(indexDir, dead)
+  private def expungePostings(w: IdStore.Writer, dead: DataFrame): Unit = {
+    IdStore.expunge(w, "postings", TermLayout.column, "doc_id", dead)
+    store.expungeKeyed(w, dead)
   }
 
   /** q144: the q142 lifecycle COMPACTED — same base + delta + deletes,
@@ -399,11 +385,11 @@ object Retrieval {
   private[ops] def rankedFromIndex(spark: SparkSession, indexDir: String,
       queryTerms: DataFrame, topK: Int, salts: Int,
       excludeSelf: Boolean): DataFrame = {
-    // a crashed compaction or append may have left state behind —
-    // recover before scanning (a few fs.exists when no crash happened)
-    store.recover(spark, indexDir)
+    // exactly the latest published version's files: a writer's
+    // unpublished files are invisible, and nothing here writes
+    val v = IdStore.latest(spark, indexDir)
     val buckets = TermLayout.bucketsOf(queryTerms) // local relation: no corpus scan
-    val postingsLive = StoreReads.parquet(spark, s"$indexDir/postings")
+    val postingsLive = v.read(spark, "postings")
       .where(col(TermLayout.column).isin(buckets: _*))
       // dl rides on every posting row (the store writes it) — reading it
       // here lets the ranker skip the per-doc dl join entirely
@@ -411,10 +397,13 @@ object Retrieval {
     // tombstoned docs drop out at serve time: postings AFTER the bucket
     // prune (the anti-join touches only probed rows), dl BEFORE corpus
     // stats (n_docs/avgdl/df shrink exactly as a rebuild's would)
-    val dead = store.tombstones(spark, indexDir)
+    val dead = v.tombstones(spark, "doc_id")
+    // the dl store in its public (doc_id, dl) shape: the physical
+    // `id_bucket` partition column never leaks into corpus stats
+    val dl = v.read(spark, "dl").drop("id_bucket")
     bm25Rank(
       sys.error("the persisted-index path must not touch the corpus"),
-      Some((store.live(postingsLive, dead), store.live(dlStore(spark, indexDir), dead))),
+      Some((store.live(postingsLive, dead), store.live(dl, dead))),
       queryTerms, topK, salts, excludeSelf = excludeSelf)
   }
 

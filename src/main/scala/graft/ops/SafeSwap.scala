@@ -2,38 +2,30 @@ package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Crash-safe directory swaps for the persisted-index compactions
-  * (postings term buckets, ANN cent_id cells, the wholesale dl/vectors
-  * stores). The former shape — `delete(live)` then `rename(next, live)`
-  * — had a window where the only copy of a partition's surviving rows
-  * was already deleted and not yet replaced: a crash there lost them
-  * permanently, contradicting the "bucket either old or new, never
-  * half-written" contract the compactions document.
+/** Crash-safe directory swaps for the training-shard export
+  * ([[Export.writeTrainingShardsIncremental]]) — the one store here that
+  * outside readers LIST (a shard dir is whatever files it holds), so it
+  * cannot publish through a version log the way the index artifacts do
+  * ([[IdStore]]). The naive shape — `delete(live)` then
+  * `rename(next, live)` — has a window where the only copy of a
+  * partition's rows is already deleted and not yet replaced.
   *
   * The safe shape never deletes a live copy before its replacement is
   * in place: the live dir is RENAMED ASIDE (`<live>.old`), the rewrite
   * renamed in, and the aside copies deleted only after every swap in
-  * the pass completed. Each window now leaves recoverable state:
+  * the pass completed. Each window leaves recoverable state:
   *
   *   - crash after `live → aside`, before `next → live`: the partition
   *     is missing from live but intact under aside (and the rewrite
-  *     under tmp) — [[recover]] renames it back; the tombstone set
-  *     (always deleted LAST, after all swaps) still exists, so
-  *     re-running the compaction redoes the pass.
+  *     under tmp) — [[recover]] renames it back, and re-running the
+  *     pass redoes the swap.
   *   - crash after `next → live`, before the aside cleanup: live holds
   *     the new copy, aside the old — [[recover]] keeps live (never
   *     overwrites an existing target) and deletes the aside.
-  *   - crash after the tombstone delete: the pass committed; there is
-  *     no aside left to recover.
   *
-  * [[recover]] runs at the START of every compaction (so a re-run
-  * converges from any crash state) and at the serve-from-index entry
-  * points (so a restarted reader never scans a live root whose
-  * partition is sitting aside). Single-writer ownership is unchanged —
-  * these are per-directory renames, not a transaction log; the owner
-  * that crashed mid-compaction re-runs it, and readers recover enough
-  * to serve the PRE-compaction state (tombstones still present, so the
-  * serve-time anti-join keeps answers exact).
+  * [[recover]] runs at the START of every pass, so a re-run converges
+  * from any crash state. Single-writer: these are per-directory
+  * renames, not a transaction log.
   */
 private[graft] object SafeSwap {
 
@@ -75,8 +67,8 @@ private[graft] object SafeSwap {
     fs.delete(tmp, true)
   }
 
-  /** Replace `live` wholesale with `next` (the dl/vectors/hashes
-    * stores): live moves aside, next moves in, aside is dropped last. */
+  /** Replace `live` wholesale with `next` (Export's `_manifest`): live
+    * moves aside, next moves in, aside is dropped last. */
   def swapDir(fs: FileSystem, live: Path, next: Path): Unit = {
     val aside = asideOf(live)
     // a stale aside here means a prior crash AFTER its swap committed

@@ -466,11 +466,16 @@ object Similarity {
       nCentroids: Int = 0, rounds: Int = 1): Unit = {
     val (cents, assigned) =
       ivfStage(spark, dir, ivfConfigEff(spark, dir, nCentroids), rounds)
-    cents.write.mode("overwrite").parquet(s"$outDir/centroids")
-    assigned.repartition(col("cent_id")) // one file per cell dir, not one per task
-      .write.mode("overwrite").partitionBy("cent_id")
-      .parquet(s"$outDir/assignments")
+    IdStore.rebuild(spark, outDir) { w =>
+      w.add("centroids")(cents.write.parquet(_))
+      w.add("assignments")(writeCells(assigned, _))
+    }
   }
+
+  /** An inverted file's rows, partitioned by cell: one file per cell
+    * dir, not one per task. */
+  private def writeCells(rows: DataFrame, path: String): Unit =
+    rows.repartition(col("cent_id")).write.partitionBy("cent_id").parquet(path)
 
   /** Answer ANN queries from a persisted [[saveIvfIndex]] artifact.
     * Tombstoned vectors drop out of BOTH sides (the inverted file feeds
@@ -478,14 +483,13 @@ object Similarity {
     * exactly as a rebuild on the survivors under the frozen codebook. */
   def ivfTopKFromIndex(spark: SparkSession, indexDir: String,
       nProbe: Int = 8, nQueries: Int = 100, k: Int = 3): DataFrame = {
-    recoverAssignments(spark, indexDir)
-    val assigned = dropDead(StoreReads.parquet(spark, s"$indexDir/assignments")
+    val v = IdStore.latest(spark, indexDir)
+    val assigned = dropDead(v.read(spark, "assignments")
       // the partition-discovery column comes back int-typed; restore
       // the live stage's long so both paths run the identical plan
       .select(col("vec_id"), col("cent_id").cast("long").as("cent_id"), col("u")),
-      IdStore.tombstones(spark, indexDir, "vec_id"))
-    ivfProbe(StoreReads.parquet(spark, s"$indexDir/centroids"), assigned,
-      nProbe, nQueries, k)
+      v.tombstones(spark, "vec_id"))
+    ivfProbe(v.read(spark, "centroids"), assigned, nProbe, nQueries, k)
   }
 
   /** Persist the flat index from an arbitrary unit-vector relation —
@@ -496,11 +500,10 @@ object Similarity {
       nCentroids: Int = 16, rounds: Int = 1): Unit = {
     val cents = ivfCentroidsOf(vecs, nCentroids, rounds).cache()
     cents.count()
-    cents.write.mode("overwrite").parquet(s"$outDir/centroids")
-    assignNearest(vecs, cents)
-      .repartition(col("cent_id")) // one file per cell dir, not one per task
-      .write.mode("overwrite").partitionBy("cent_id")
-      .parquet(s"$outDir/assignments")
+    IdStore.rebuild(vecs.sparkSession, outDir) { w =>
+      w.add("centroids")(cents.write.parquet(_))
+      w.add("assignments")(writeCells(assignNearest(vecs, cents), _))
+    }
     cents.unpersist(blocking = false)
   }
 
@@ -513,23 +516,29 @@ object Similarity {
     * dynamic-partition appends touching only the delta's cells. Because
     * assignment is per-row under frozen centroids, base ∪ delta is
     * row-identical to assigning the merged corpus — the q136 contract. */
-  def appendIvfDelta(deltaVecs: DataFrame, indexDir: String): Unit = {
-    val spark = deltaVecs.sparkSession
-    recoverAssignments(spark, indexDir)
-    // flat shares the two-level cell layout, so its expunge too
-    IdStore.withdraw(spark, indexDir, "vec_id", deltaVecs)(expungeTwoLevel(spark, indexDir, _))
-    val fresh = (if (IdStore.fsOf(spark, indexDir)
-        .exists(new org.apache.hadoop.fs.Path(s"$indexDir/assignments")))
-      deltaVecs.join(
-        spark.read.parquet(s"$indexDir/assignments").select("vec_id"),
-        Seq("vec_id"), "left_anti")
-    else deltaVecs).cache()
-    fresh.count() // materialize before the self-path append
-    assignNearest(fresh, spark.read.parquet(s"$indexDir/centroids"))
-      .repartition(col("cent_id")) // one appended file per touched dir
-      .write.mode("append").partitionBy("cent_id")
-      .parquet(s"$indexDir/assignments")
-    fresh.unpersist(blocking = false)
+  def appendIvfDelta(deltaVecs: DataFrame, indexDir: String): Unit =
+    pqStore.write(deltaVecs.sparkSession, indexDir) { w =>
+      // flat shares the two-level cell layout, so its expunge too
+      w.add("assignments")(writeCells(
+        assignNearest(freshCells(w, deltaVecs), w.read("centroids")), _))
+    }
+
+  /** The IVF append admission inside writer `w` (flat and two-level
+    * share the cell layout): withdraw re-ingested ids' tombstones
+    * ([[IdStore.withdraw]] — re-assignment under the frozen codebooks
+    * reproduces the original rows, so the composition stays ≡
+    * rebuild-on-survivors), then the replay guard against the inverted
+    * file's vec_id column. A first append (no inverted file yet —
+    * codebooks shipped alone) has nothing to guard against. RECORDED
+    * TRADE (r15): unlike the per-id refine stores (dl/hashes/LSH/PQ
+    * vectors, laid out under id_bucket for delta-proportional guards),
+    * this family's guard key lives in its ONE store, whose partitioning
+    * must stay cent_id (the serving prune), so the guard stays a
+    * column-pruned linear scan of the inverted file. */
+  private def freshCells(w: IdStore.Writer, deltaVecs: DataFrame): DataFrame = {
+    IdStore.withdraw(w, "vec_id", deltaVecs)(expungeTwoLevel(w, _))
+    w.readOpt("assignments").fold(deltaVecs)(a =>
+      deltaVecs.join(a.select("vec_id"), Seq("vec_id"), "left_anti"))
   }
 
   /** Expunge vector tombstones from a flat-IVF artifact — the flat
@@ -847,11 +856,11 @@ object Similarity {
   def saveTwoLevelIndex(spark: SparkSession, dir: String, outDir: String,
       nCoarse: Int = 8, nSub: Int = 4): Unit = {
     val (coarseCents, subCents, assigned) = twoLevelIvfStage(spark, dir, nCoarse, nSub)
-    coarseCents.write.mode("overwrite").parquet(s"$outDir/coarse")
-    subCents.write.mode("overwrite").parquet(s"$outDir/subcents")
-    assigned.repartition(col("cent_id")) // one file per cell dir, not one per task
-      .write.mode("overwrite").partitionBy("cent_id")
-      .parquet(s"$outDir/assignments")
+    IdStore.rebuild(spark, outDir) { w =>
+      w.add("coarse")(coarseCents.write.parquet(_))
+      w.add("subcents")(subCents.write.parquet(_))
+      w.add("assignments")(writeCells(assigned, _))
+    }
   }
 
   /** Persist a two-level index TRAINED AND BUILT from an arbitrary
@@ -869,12 +878,11 @@ object Similarity {
     a1.count()
     val subCents = buildSubCents(a1, nSub).cache()
     subCents.count()
-    cents.write.mode("overwrite").parquet(s"$outDir/coarse")
-    subCents.write.mode("overwrite").parquet(s"$outDir/subcents")
-    buildAssigned2(a1, subCents)
-      .repartition(col("cent_id")) // one file per cell dir, not one per task
-      .write.mode("overwrite").partitionBy("cent_id")
-      .parquet(s"$outDir/assignments")
+    IdStore.rebuild(vecs.sparkSession, outDir) { w =>
+      w.add("coarse")(cents.write.parquet(_))
+      w.add("subcents")(subCents.write.parquet(_))
+      w.add("assignments")(writeCells(buildAssigned2(a1, subCents), _))
+    }
     cents.unpersist(blocking = false)
     a1.unpersist(blocking = false)
     subCents.unpersist(blocking = false)
@@ -898,44 +906,12 @@ object Similarity {
     * (as in every production IVF service): the codebook is frozen
     * between periodic retrains, and the q130 recall gate measures what
     * the codebook quality buys. */
-  def appendTwoLevelDelta(deltaVecs: DataFrame, indexDir: String): Unit = {
-    val spark = deltaVecs.sparkSession
-    recoverAssignments(spark, indexDir)
-    // RESURRECTION ([[IdStore.withdraw]]): re-assignment under the
-    // frozen codebooks reproduces the original rows, so the composition
-    // stays ≡ rebuild-on-survivors
-    IdStore.withdraw(spark, indexDir, "vec_id", deltaVecs)(expungeTwoLevel(spark, indexDir, _))
-    // replay guard (the appendPostingsDelta/appendPqDelta contract):
-    // already-indexed vec_ids anti-join out against the inverted file's
-    // vec_id column. RECORDED TRADE (r15): unlike the per-id refine
-    // stores (dl/hashes/LSH/PQ vectors, which re-laid out under
-    // id_bucket for delta-proportional guards), this family's guard key
-    // lives in its ONE store, whose partitioning must stay cent_id (the
-    // serving prune). The guard therefore stays a column-pruned linear
-    // scan of the inverted file; making it delta-proportional would
-    // mean a membership sidecar — a second store + commit marker for a
-    // family that deliberately has one store.
-    // pruned vec_id column, so a re-merged batch is a no-op instead of
-    // double-writing assignment rows. Materialized before the append —
-    // the write's source must not re-list the files it is appending.
-    // A first append (no inverted file yet — codebooks shipped alone)
-    // has nothing to guard against
-    val fresh = (if (IdStore.fsOf(spark, indexDir)
-        .exists(new org.apache.hadoop.fs.Path(s"$indexDir/assignments")))
-      deltaVecs.join(
-        spark.read.parquet(s"$indexDir/assignments").select("vec_id"),
-        Seq("vec_id"), "left_anti")
-    else deltaVecs).cache()
-    fresh.count()
-    val cents = spark.read.parquet(s"$indexDir/coarse")
-    val subCents = spark.read.parquet(s"$indexDir/subcents")
-    val a1 = assignNearest(fresh, cents)
-    buildAssigned2(a1, subCents)
-      .repartition(col("cent_id")) // one appended file per touched dir
-      .write.mode("append").partitionBy("cent_id")
-      .parquet(s"$indexDir/assignments")
-    fresh.unpersist(blocking = false)
-  }
+  def appendTwoLevelDelta(deltaVecs: DataFrame, indexDir: String): Unit =
+    pqStore.write(deltaVecs.sparkSession, indexDir) { w =>
+      val fresh = freshCells(w, deltaVecs)
+      w.add("assignments")(writeCells(
+        buildAssigned2(assignNearest(fresh, w.read("coarse")), w.read("subcents")), _))
+    }
 
   /** q136: two-level ANN served from an INCREMENTALLY BUILT index —
     * the corpus is split by q96's deterministic delta rule
@@ -1145,63 +1121,45 @@ object Similarity {
       nCoarse: Int = 8, nSub: Int = 4, m: Int = 8, k: Int = 64): Unit = {
     val (coarseCents, subCents, assigned) = twoLevelIvfStage(spark, dir, nCoarse, nSub)
     val book = trainPqBook(spark, dir, nCoarse, nSub, m, k)
-    coarseCents.write.mode("overwrite").parquet(s"$outDir/coarse")
-    subCents.write.mode("overwrite").parquet(s"$outDir/subcents")
-    writePqBook(spark, book, outDir)
     val codes = pqCodesStage(spark, dir, nCoarse, nSub, m, k)
-    codes.repartition(col("cent_id")) // one file per cell dir, not one per task
-      .write.mode("overwrite").partitionBy("cent_id").parquet(s"$outDir/codes")
-    writePqMeta(spark, outDir, nCoarse, nSub, m, k,
-      codes.count(), meanExplainedMicros(codes))
-    pqStore.layout.write(assigned.select(col("vec_id"), col("u")), s"$outDir/vectors", "overwrite")
+    IdStore.rebuild(spark, outDir) { w =>
+      w.add("coarse")(coarseCents.write.parquet(_))
+      w.add("subcents")(subCents.write.parquet(_))
+      w.add("pqbook")(writePqBook(spark, book, _))
+      w.add("codes")(writeCells(codes, _))
+      w.add("meta")(writePqMeta(spark, _, nCoarse, nSub, m, k,
+        codes.count(), meanExplainedMicros(codes)))
+      w.add("vectors")(pqStore.layout.write(assigned.select(col("vec_id"), col("u")), _))
+    }
   }
 
   /** The artifact's frozen-training provenance: the structural config,
     * how many vectors the books were TRAINED on, and the mean explained
     * energy (micro-scaled mean of proj² over the indexed rows — the
-    * geometry-fit measure the drift probe re-measures) at train time.
-    * Written BEFORE the refine store on purpose: `vectors` stays the
-    * last-written store, so the pipeline's bootstrap guard (vectors
-    * present ⇒ build complete) also implies meta is present. */
-  private def writePqMeta(spark: SparkSession, outDir: String,
+    * geometry-fit measure the drift probe re-measures) at train time. */
+  private def writePqMeta(spark: SparkSession, path: String,
       nCoarse: Int, nSub: Int, m: Int, k: Int,
       nTrained: Long, explainedMicros: Double): Unit = {
     import spark.implicits._
     Seq((nCoarse, nSub, m, k, nTrained, explainedMicros, pqStore.layout.modulus))
       .toDF("n_coarse", "n_sub", "m", "k", "n_trained", "explained_micros",
         "id_buckets")
-      .coalesce(1).write.mode("overwrite").parquet(s"$outDir/meta")
+      .coalesce(1).write.parquet(path)
   }
 
-  /** The compressed artifact's lifecycle: codes derived, the refine
-    * (vectors) store keyed (`id_bucket` — the replay guard's and the
-    * expunge's prune). Entry-point recovery, shared by every PQ entry
-    * (append / compact / serve / maintain), completes a crashed codebook
-    * retrain from its durable snapshot FIRST (a committed rebuild
-    * supersedes every store — it overwrites all of them; with no
-    * marker, a leftover snapshot is a crash BEFORE the commit point and
-    * the old artifact is intact, so the snapshot drops), then restores
-    * crashed-swap leftovers and rolls back any uncommitted append —
-    * releasing this artifact's resident relations when it did (their
-    * listings may include the deleted files: the AppendCrashWindowsSpec
-    * staleness class). */
-  private[graft] val pqStore =
-    new IdStore("vec_id", IdStore.byId("vec_id"), "codes", "vectors") {
-      override def recover(spark: SparkSession, indexDir: String): Boolean = {
-        val fs = IdStore.fsOf(spark, indexDir)
-        if (fs.exists(pqRetrainMarker(indexDir))) rebuildPqFromSnapshot(spark, indexDir)
-        else fs.delete(new org.apache.hadoop.fs.Path(pqRetrainSnapshot(indexDir)), true)
-        val rolledBack = super.recover(spark, indexDir)
-        if (rolledBack) pqLoadedRelCache.release(k => k._1 == spark && k._2 == indexDir)
-        rolledBack
-      }
-    }
+  /** The lifecycle of every vector artifact here: the compressed one's
+    * codes derived, books and meta beside them, the refine (vectors)
+    * store keyed (`id_bucket` — the replay guard's and the expunge's
+    * prune). The flat and two-level IVF artifacts open their writers
+    * through it too: their stores are listed for the upgrade, and the
+    * refine-store layout check passes where there is none. */
+  private[graft] val pqStore = new IdStore("vec_id", IdStore.byId("vec_id"),
+    "centroids", "coarse", "subcents", "assignments", "pqbook", "meta", "codes", "vectors")
 
   /** The refine store in its public (vec_id, u) shape — readers go
     * through this so the physical `id_bucket` partition column never
     * leaks into served relations. */
-  private def pqVectorsStore(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(s"$indexDir/vectors").select(col("vec_id"), col("u"))
+  private def pqVectorsOf(stored: DataFrame): DataFrame = stored.select(col("vec_id"), col("u"))
 
   /** Mean EXPLAINED energy of a codes relation in micros: the per-row
     * proj² — the share of each unit vector's energy the frozen
@@ -1228,20 +1186,19 @@ object Similarity {
   /** The PQ book as its (j, code, cv) artifact relation — one row per
     * (subspace, code), bounded at m·k rows. */
   private def writePqBook(spark: SparkSession, book: graft.functions.PqBook,
-      outDir: String): Unit = {
+      path: String): Unit = {
     import spark.implicits._
     (0 until book.m).flatMap(j => (0 until book.k).map { c =>
       (j.toLong, c.toLong,
         (0 until book.dsub).map(d => book.flat((j * book.k + c) * book.dsub + d)).toSeq)
     }).toDF("j", "code", "cv")
-      .write.mode("overwrite").parquet(s"$outDir/pqbook")
+      .write.parquet(path)
   }
 
   /** Rehydrate the bounded PQ book object from its artifact relation —
     * the JVM-side codebook every serving expression references. */
-  private def readPqBook(spark: SparkSession,
-      indexDir: String): graft.functions.PqBook = {
-    val bookRows = spark.read.parquet(s"$indexDir/pqbook")
+  private def readPqBook(pqbook: DataFrame): graft.functions.PqBook = {
+    val bookRows = pqbook
       .collect().map(r => ((r.getLong(0).toInt, r.getLong(1).toInt), r.getSeq[Double](2)))
       .toMap
     val m = bookRows.keys.map(_._1).max + 1
@@ -1264,7 +1221,12 @@ object Similarity {
     * under the FROZEN books via [[appendPqDelta]]. One-shot (runs once
     * inside an artifact memo) — local caches, no session stages. */
   def savePqIndexOf(vecs: DataFrame, outDir: String,
-      nCoarse: Int = 8, nSub: Int = 4, m: Int = 8, k: Int = 64): Unit = {
+      nCoarse: Int = 8, nSub: Int = 4, m: Int = 8, k: Int = 64): Unit =
+    IdStore.rebuild(vecs.sparkSession, outDir)(buildPq(_, vecs, nCoarse, nSub, m, k))
+
+  /** Train every book on `vecs` and add every store of the artifact. */
+  private def buildPq(w: IdStore.Writer, vecs: DataFrame,
+      nCoarse: Int, nSub: Int, m: Int, k: Int): Unit = {
     val spark = vecs.sparkSession
     val cents = ivfCentroidsOf(vecs, nCoarse).cache()
     cents.count()
@@ -1277,17 +1239,15 @@ object Similarity {
     val resid = residualsOf(assigned, subCents).cache()
     resid.count()
     val book = trainPqBookOf(resid, m, k)
-    cents.write.mode("overwrite").parquet(s"$outDir/coarse")
-    subCents.write.mode("overwrite").parquet(s"$outDir/subcents")
-    writePqBook(spark, book, outDir)
-    resid
+    w.add("coarse")(cents.write.parquet(_))
+    w.add("subcents")(subCents.write.parquet(_))
+    w.add("pqbook")(writePqBook(spark, book, _))
+    w.add("codes")(writeCells(resid
       .select(col("vec_id"), col("cent_id"), col("sub_id"), col("proj"),
-        graft.functions.CodebookFunctions.pqEncode(col("r"), book).as("codes"))
-      .repartition(col("cent_id")) // one file per cell dir, not one per task
-      .write.mode("overwrite").partitionBy("cent_id").parquet(s"$outDir/codes")
-    writePqMeta(spark, outDir, nCoarse, nSub, m, k,
-      resid.count(), meanExplainedMicros(resid))
-    pqStore.layout.write(assigned.select(col("vec_id"), col("u")), s"$outDir/vectors", "overwrite")
+        graft.functions.CodebookFunctions.pqEncode(col("r"), book).as("codes")), _))
+    w.add("meta")(writePqMeta(spark, _, nCoarse, nSub, m, k,
+      resid.count(), meanExplainedMicros(resid)))
+    w.add("vectors")(pqStore.layout.write(assigned.select(col("vec_id"), col("u")), _))
     Seq(cents, a1, subCents, assigned, resid).foreach(_.unpersist(blocking = false))
   }
 
@@ -1304,46 +1264,40 @@ object Similarity {
     * store's vec_id column up front (one pruned-column scan), so
     * re-merging the same batch — the retry a production ingest
     * eventually does — is a no-op instead of silently double-writing
-    * codes. The codebooks ARE a hard precondition (there is nothing to
-    * encode against without them), but the refine store is not: a
-    * first delta into a codebooks-only artifact indexes everything
-    * (the [[appendDailyDelta]] bootstrap contract). */
-  def appendPqDelta(deltaVecs: DataFrame, indexDir: String): Unit = {
-    val spark = deltaVecs.sparkSession
-    pqStore.recover(spark, indexDir)
+    * codes. Bootstrap-safe: a first delta into an artifact without
+    * books IS the base build — [[savePqIndexOf]]'s training, at its
+    * defaults, on the delta's rows. A codebooks-only artifact has no
+    * refine store: its first delta indexes everything (the
+    * [[appendDailyDelta]] bootstrap contract). */
+  def appendPqDelta(deltaVecs: DataFrame, indexDir: String): Unit =
+    pqStore.write(deltaVecs.sparkSession, indexDir) { w =>
+      if (!w.has("pqbook")) buildPq(w, deltaVecs, nCoarse = 8, nSub = 4, m = 8, k = 64)
+      else appendPq(w, deltaVecs)
+    }
+
+  private def appendPq(w: IdStore.Writer, deltaVecs: DataFrame): Unit = {
     // RESURRECTION ([[IdStore.withdraw]]): re-encoding under the frozen
     // books reproduces the original rows
-    val fresh = pqStore.admit(spark, indexDir, deltaVecs)(expungePq(spark, indexDir, _))
-      .cache()
+    val fresh = pqStore.admit(w, deltaVecs)(expungePq(w, _)).cache()
     fresh.count()
-    val cents = spark.read.parquet(s"$indexDir/coarse")
-    val subCents = spark.read.parquet(s"$indexDir/subcents")
-    val book = readPqBook(spark, indexDir)
-    val assigned = buildAssigned2(assignNearest(fresh, cents), subCents)
-    // commit marker: a crash between the two writes rolls both stores
-    // back to their recorded listings at the next recover (the
-    // derived-first order still matters for the recache trap on a
-    // SUCCESSFUL append)
-    pqStore.atomically(spark, indexDir) {
-      residualsOf(assigned, subCents)
-        .select(col("vec_id"), col("cent_id"), col("sub_id"), col("proj"),
-          graft.functions.CodebookFunctions.pqEncode(col("r"), book).as("codes"))
-        .repartition(col("cent_id")) // one appended file per touched dir
-        .write.mode("append").partitionBy("cent_id").parquet(s"$indexDir/codes")
-      pqStore.layout.write(assigned.select(col("vec_id"), col("u")),
-        s"$indexDir/vectors", "append")
-    }
+    val subCents = w.read("subcents")
+    val book = readPqBook(w.read("pqbook"))
+    val assigned = buildAssigned2(assignNearest(fresh, w.read("coarse")), subCents)
+    // both stores' files publish as one version: a crash between the
+    // writes leaves the previous version serving
+    w.add("codes")(writeCells(residualsOf(assigned, subCents)
+      .select(col("vec_id"), col("cent_id"), col("sub_id"), col("proj"),
+        graft.functions.CodebookFunctions.pqEncode(col("r"), book).as("codes")), _))
+    w.add("vectors")(pqStore.layout.write(assigned.select(col("vec_id"), col("u")), _))
     fresh.unpersist(blocking = false)
-    // a warm serve caches the artifact relations as of load time — an
-    // append extends the files underneath, so drop this artifact's
-    // resident relations (the compaction invalidation contract)
-    pqLoadedRelCache.release(k => k._1 == spark && k._2 == indexDir)
-    ()
   }
 
   /** The loaded-artifact caches behind warm PQ serving: the bounded book
     * object and the four relations, each keyed by (session, indexDir,
-    * part). A restarted service loads the artifact ONCE and serves many
+    * version id, part) — any write, in this process or another,
+    * publishes a new version and the next serve loads it; the
+    * superseded version's relations are dropped then. A restarted
+    * service loads the artifact ONCE and serves many
     * batches — the round-10 shape re-read the whole artifact (book
     * collect, codes scan, two passes over the refine store) on EVERY
     * invocation, conflating cold start with steady state: 20.6 s per
@@ -1357,41 +1311,44 @@ object Similarity {
     * storage lets the refine store spill while staying off the
     * every-query re-read path. */
   private val pqLoadedBookCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), graft.functions.PqBook]()
-  private val pqLoadedRelCache = new StageCache[(SparkSession, String, String)]
+    (SparkSession, String, String), graft.functions.PqBook]()
+  private val pqLoadedRelCache = new StageCache[(SparkSession, String, String, String)]
 
   /** Visible for specs: how many artifact relations were actually
     * loaded (vs served warm) — the load-once contract. */
   private[ops] def pqLoadedRelBuilds = pqLoadedRelCache.builds
 
-  /** (book, coarse, subcents, codes, vectors) for a [[savePqIndex]]-
-    * layout artifact, loaded once per (session, indexDir). */
-  private def loadedPqIndex(spark: SparkSession, indexDir: String)
+  /** (book, coarse, subcents, codes, vectors) of a published version of
+    * a [[savePqIndex]]-layout artifact, loaded once per (session,
+    * indexDir, version). */
+  private def loadedPqIndex(spark: SparkSession, v: IdStore.Version)
       : (graft.functions.PqBook, DataFrame, DataFrame, DataFrame, DataFrame) = {
-    // restore anything a crashed compaction, append, or retrain left
-    // aside before loading. If the recovery actually replaced files,
-    // RESIDENT relations for this artifact hold listings that may
-    // include them (an in-process crash leaves the warm cache alive —
-    // only a JVM death clears it for free): the recovery drops them so the
-    // load below re-lists, or the serve dies on FILE_NOT_EXIST / reads
-    // junk (AppendCrashWindowsSpec pins the window).
-    pqStore.recover(spark, indexDir)
-    val book = pqLoadedBookCache.computeIfAbsent((spark, indexDir),
-      _ => readPqBook(spark, indexDir))
+    val key = (spark, v.dir, v.id)
+    if (!pqLoadedBookCache.containsKey(key)) {
+      // first load of this version: the artifact's older versions are
+      // superseded for good, so their resident relations go
+      pqLoadedBookCache.keySet.removeIf(k => k._1 == spark && k._2 == v.dir)
+      pqLoadedRelCache.release(k => k._1 == spark && k._2 == v.dir && k._3 != v.id)
+    }
+    val book = pqLoadedBookCache.computeIfAbsent(key, _ => readPqBook(v.read(spark, "pqbook")))
     def rel(part: String)(load: => DataFrame): DataFrame =
-      pqLoadedRelCache.getOrBuild((spark, indexDir, part)) {
+      pqLoadedRelCache.getOrBuild((spark, v.dir, v.id, part)) {
         val built = load.cache()
         built.count()
         built
       }
-    val coarse = rel("coarse")(spark.read.parquet(s"$indexDir/coarse"))
-    val subCents = rel("subcents")(spark.read.parquet(s"$indexDir/subcents"))
-    val codes = rel("codes")(spark.read.parquet(s"$indexDir/codes")
-      .select(col("vec_id"), col("cent_id").cast("long").as("cent_id"),
-        col("sub_id"), col("proj"), col("codes")))
-    val vectors = rel("vectors")(pqVectorsStore(spark, indexDir))
+    val coarse = rel("coarse")(v.read(spark, "coarse"))
+    val subCents = rel("subcents")(v.read(spark, "subcents"))
+    val codes = rel("codes")(codesOf(v.read(spark, "codes")))
+    val vectors = rel("vectors")(pqVectorsOf(v.read(spark, "vectors")))
     (book, coarse, subCents, codes, vectors)
   }
+
+  /** The codes store with its partition column back to the live
+    * stage's long. */
+  private def codesOf(stored: DataFrame): DataFrame =
+    stored.select(col("vec_id"), col("cent_id").cast("long").as("cent_id"),
+      col("sub_id"), col("proj"), col("codes"))
 
   /** The IVFADC+rerank serve plan over loaded artifact relations —
     * shared by the warm ([[pqTopKFromIndex]]) and cold
@@ -1438,10 +1395,11 @@ object Similarity {
   def pqTopKFromIndex(spark: SparkSession, indexDir: String,
       nProbe1: Int = 4, nProbe2: Int = 2,
       nQueries: Int = 100, topK: Int = 3, rerank: Int = 16): DataFrame = {
-    val (book, coarse, subCents, codes, vectors) = loadedPqIndex(spark, indexDir)
+    val v = IdStore.latest(spark, indexDir)
+    val (book, coarse, subCents, codes, vectors) = loadedPqIndex(spark, v)
     pqServe(book, coarse, subCents, codes, vectors,
       nProbe1, nProbe2, nQueries, topK, rerank,
-      dead = pqStore.tombstones(spark, indexDir))
+      dead = v.tombstones(spark, "vec_id"))
   }
 
   /** The COLD serve path: every relation read straight off the artifact,
@@ -1450,36 +1408,18 @@ object Similarity {
     * PqSpec. */
   private[graft] def pqTopKFromIndexCold(spark: SparkSession, indexDir: String,
       nProbe1: Int = 4, nProbe2: Int = 2,
-      nQueries: Int = 100, topK: Int = 3, rerank: Int = 16): DataFrame =
-    pqServe(readPqBook(spark, indexDir),
-      spark.read.parquet(s"$indexDir/coarse"),
-      spark.read.parquet(s"$indexDir/subcents"),
-      spark.read.parquet(s"$indexDir/codes")
-        .select(col("vec_id"), col("cent_id").cast("long").as("cent_id"),
-          col("sub_id"), col("proj"), col("codes")),
-      pqVectorsStore(spark, indexDir),
+      nQueries: Int = 100, topK: Int = 3, rerank: Int = 16): DataFrame = {
+    val v = IdStore.latest(spark, indexDir)
+    pqServe(readPqBook(v.read(spark, "pqbook")),
+      v.read(spark, "coarse"),
+      v.read(spark, "subcents"),
+      codesOf(v.read(spark, "codes")),
+      pqVectorsOf(v.read(spark, "vectors")),
       nProbe1, nProbe2, nQueries, topK, rerank,
-      dead = pqStore.tombstones(spark, indexDir))
+      dead = v.tombstones(spark, "vec_id"))
+  }
 
   private val persistedPq = new TempArtifacts("graft-pq-index")
-
-  /** Visible for the layout probe: the memoized artifact dirs of the
-    * q139 and q162 gates, if built this session. */
-  private[graft] def persistedPqDirFor(spark: SparkSession, dir: String): Option[String] =
-    persistedPq.peek(spark, s"$dir#8:4:8:64")
-  private[graft] def persistedPqComposedDirFor(spark: SparkSession, dir: String): Option[String] =
-    persistedPq.peek(spark, s"$dir#composed:8:4:8:64:30:10:50")
-  private[graft] def persistedPqIncrementalDirFor(spark: SparkSession, dir: String): Option[String] =
-    persistedPq.peek(spark, s"$dir#incr:8:4:8:64:30")
-
-  /** Probe-only alias of [[probedLists]] for the layout probe. */
-  private[graft] def probedListsForProbe(coarseCents: DataFrame, subCents: DataFrame,
-      q: DataFrame, nProbe1: Int, nProbe2: Int): DataFrame =
-    probedLists(coarseCents, subCents, q, nProbe1, nProbe2)
-
-  /** Probe-only alias of [[readPqBook]] for the layout probe. */
-  private[graft] def readPqBookForProbe(spark: SparkSession, indexDir: String)
-      : graft.functions.PqBook = readPqBook(spark, indexDir)
 
   /** q139: [[pqAdcTopK]] served entirely from the persisted compressed
     * artifact — the q127/q131 serving-shapes contract applied to the PQ
@@ -1524,45 +1464,14 @@ object Similarity {
     * codes inverted file rewrites ONLY the touched cent_id cells (the
     * [[compactTwoLevelIndex]] economics — the hot, scanned-per-query
     * relation compacts partially), the refine store rewrites only the
-    * id buckets the dead ids hash to, and the tombstone set is
-    * deleted. The warm loaded-relation cache for this
-    * artifact is dropped: a resident pre-compaction codes relation
-    * plus a now-deleted tombstone file would silently re-serve the
-    * dead rows — the one staleness hazard the serve-time-anti-join
-    * design has, closed here (PqSpec pins compact-under-warm-cache).
-    * Answer-invisible by construction (q147 under q145's oracle). */
+    * id buckets the dead ids hash to, and the tombstone set drops, in
+    * one version — which the warm loaded relations are keyed by, so a
+    * resident pre-compaction codes relation never meets the
+    * post-compaction (tombstone-free) version (PqSpec pins
+    * compact-under-warm-cache). Answer-invisible by construction (q147
+    * under q145's oracle). */
   def compactPqIndex(spark: SparkSession, indexDir: String): Unit =
-    pqStore.compact(spark, indexDir)(expungePq(spark, indexDir, _))
-
-  private def pqRetrainMarker(indexDir: String) =
-    new org.apache.hadoop.fs.Path(s"$indexDir/_retrain_pending")
-  private def pqRetrainSnapshot(indexDir: String) = s"$indexDir/retrain_snapshot"
-
-  /** The committed half of a codebook retrain: re-run the full trained
-    * base build over the durable live-vector snapshot under the
-    * artifact's FROZEN structural config (read from meta — present for
-    * every artifact a retrain can reach, because [[maintainPqCodebooks]]
-    * backfills meta before it ever rebuilds), drop the already-applied
-    * tombstones, clear marker + snapshot, and invalidate this
-    * artifact's resident book + relations (every store, including the
-    * trained book itself, just changed). Idempotent from ANY crash
-    * point: every write is an overwrite of a derived store and the
-    * snapshot is the single source of truth, so [[pqStore]]'s recovery
-    * re-runs it wholesale and no reader ever sees a mixed-codebook artifact. */
-  private def rebuildPqFromSnapshot(spark: SparkSession, indexDir: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val meta = spark.read.parquet(s"$indexDir/meta").head()
-    savePqIndexOf(spark.read.parquet(pqRetrainSnapshot(indexDir)), indexDir,
-      meta.getAs[Int]("n_coarse"), meta.getAs[Int]("n_sub"),
-      meta.getAs[Int]("m"), meta.getAs[Int]("k"))
-    fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/tombstones"), true)
-    fs.delete(pqRetrainMarker(indexDir), false)
-    fs.delete(new org.apache.hadoop.fs.Path(pqRetrainSnapshot(indexDir)), true)
-    pqLoadedBookCache.remove((spark, indexDir))
-    pqLoadedRelCache.release(k => k._1 == spark && k._2 == indexDir)
-    ()
-  }
+    pqStore.compact(spark, indexDir)(expungePq)
 
   /** Codebook-drift maintenance for the TRAINED family — the lifecycle
     * step frozen codebooks otherwise lack, and the PQ analog of
@@ -1583,10 +1492,11 @@ object Similarity {
     *     sub-centroids, the geometry explains less of their energy, and
     *     PQ is left compressing more with the same 8 codes).
     *
-    * Either trips a RETRAIN-AND-RE-ENCODE rebuild: the live set is
-    * snapshotted (the rebuild overwrites the very stores it reads), the
-    * marker commits the intent, and the full trained base build re-runs
-    * from the snapshot — deterministic, so the result is EXACTLY the
+    * Either trips a RETRAIN-AND-RE-ENCODE rebuild: the full trained base
+    * build re-runs over the live set read from the current version's
+    * files and publishes every store anew in one version (a crash
+    * leaves the old version serving; re-running the maintenance
+    * converges) — deterministic, so the result is EXACTLY the
     * artifact a fresh [[savePqIndexOf]] over the live corpus would
     * build (the q173 gate pins the serve under q138's full-corpus
     * oracle). The structural config (nCoarse/nSub/m/k) stays frozen
@@ -1602,38 +1512,34 @@ object Similarity {
     *
     * Returns (trainedOn, liveNow) if a rebuild ran. */
   def maintainPqCodebooks(spark: SparkSession, indexDir: String,
-      growthFactor: Double = 2.0, explainedDecay: Double = 1.5): Option[(Long, Long)] = {
-    val fs = IdStore.fsOf(spark, indexDir)
-    pqStore.recover(spark, indexDir)
-    val dead = pqStore.tombstones(spark, indexDir)
-    val liveCodes = dropDead(
-      spark.read.parquet(s"$indexDir/codes").select("vec_id", "proj"), dead)
-    val liveCount = liveCodes.count()
-    val measured = meanExplainedMicros(liveCodes)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/meta"))) {
-      // the backfill records the shared id modulus, so it must hold:
-      // a refine store in any other layout fails fast here rather than
-      // let the next append land beside it
-      pqStore.requireLaidOut(spark, indexDir)
-      val book = readPqBook(spark, indexDir)
-      val nCoarse = spark.read.parquet(s"$indexDir/coarse").count().toInt
-      val nSub = (spark.read.parquet(s"$indexDir/subcents").count() /
-        math.max(nCoarse, 1)).toInt
-      writePqMeta(spark, indexDir, nCoarse, nSub, book.m, book.k, liveCount, measured)
-      return None
+      growthFactor: Double = 2.0, explainedDecay: Double = 1.5): Option[(Long, Long)] =
+    pqStore.write(spark, indexDir) { w =>
+      val dead = w.tombstones("vec_id")
+      val liveCodes = dropDead(w.read("codes").select("vec_id", "proj"), dead)
+      val liveCount = liveCodes.count()
+      val measured = meanExplainedMicros(liveCodes)
+      if (!w.has("meta")) {
+        val book = readPqBook(w.read("pqbook"))
+        val nCoarse = w.read("coarse").count().toInt
+        val nSub = (w.read("subcents").count() / math.max(nCoarse, 1)).toInt
+        w.add("meta")(writePqMeta(spark, _, nCoarse, nSub, book.m, book.k, liveCount, measured))
+        None
+      } else {
+        val meta = w.read("meta").head()
+        val nTrained = meta.getAs[Long]("n_trained")
+        val frozen = meta.getAs[Double]("explained_micros")
+        val drifted = liveCount >= growthFactor * nTrained ||
+          (frozen > 0.0 && measured * explainedDecay <= frozen)
+        if (!drifted) None
+        else {
+          val live = dropDead(pqVectorsOf(w.read("vectors")), dead)
+          w.clear()
+          buildPq(w, live, meta.getAs[Int]("n_coarse"), meta.getAs[Int]("n_sub"),
+            meta.getAs[Int]("m"), meta.getAs[Int]("k"))
+          Some((nTrained, liveCount))
+        }
+      }
     }
-    val meta = spark.read.parquet(s"$indexDir/meta").head()
-    val nTrained = meta.getAs[Long]("n_trained")
-    val frozen = meta.getAs[Double]("explained_micros")
-    val drifted = liveCount >= growthFactor * nTrained ||
-      (frozen > 0.0 && measured * explainedDecay <= frozen)
-    if (!drifted) return None
-    dropDead(pqVectorsStore(spark, indexDir), dead)
-      .write.mode("overwrite").parquet(pqRetrainSnapshot(indexDir))
-    fs.create(pqRetrainMarker(indexDir), true).close() // the commit point
-    rebuildPqFromSnapshot(spark, indexDir)
-    Some((nTrained, liveCount))
-  }
 
   /** q173: the codebook-drift maintenance path under q138's oracle —
     * the trained-family analog of [[graft.ops.LshIndex
@@ -1669,17 +1575,12 @@ object Similarity {
 
   /** Drop a dead set's rows from the compressed artifact: only the
     * cent_id cells holding a dead vector's codes and the refine-store id
-    * buckets the dead ids hash to rewrite, and this artifact's
-    * resident warm relations are invalidated. Shared by
+    * buckets the dead ids hash to rewrite. Shared by
     * [[compactPqIndex]] (whole tombstone set) and the resurrection
     * path in [[appendPqDelta]] (the re-appended overlap only). */
-  private def expungePq(spark: SparkSession, indexDir: String,
-      dead: DataFrame): Unit = {
-    IdStore.expunge(s"$indexDir/codes", "cent_id", "vec_id", dead)
-    pqStore.expungeKeyed(indexDir, dead)
-    // drop the resident pre-expunge relations for THIS artifact
-    pqLoadedRelCache.release(k => k._1 == spark && k._2 == indexDir)
-    ()
+  private def expungePq(w: IdStore.Writer, dead: DataFrame): Unit = {
+    IdStore.expunge(w, "codes", "cent_id", "vec_id", dead)
+    pqStore.expungeKeyed(w, dead)
   }
 
   /** q147: q145's lifecycle COMPACTED — same build and delete set,
@@ -1768,7 +1669,7 @@ object Similarity {
     * merge here; the q143/q145 gates pin serve ≡ filtered-rebuild).
     * Idempotent: anti-join semantics make replayed deletes harmless. */
   def tombstoneVectors(deletedIds: DataFrame, indexDir: String): Unit =
-    IdStore.tombstone(deletedIds, indexDir, "vec_id")
+    pqStore.tombstone(deletedIds, indexDir)
 
   /** Drop tombstoned vectors from a served relation keyed by vec_id.
     * No forced broadcast — a delete set grows unboundedly between
@@ -1785,15 +1686,15 @@ object Similarity {
   def twoLevelTopKFromIndex(spark: SparkSession, indexDir: String,
       nProbe1: Int = 4, nProbe2: Int = 2,
       nQueries: Int = 100, k: Int = 3): DataFrame = {
-    recoverAssignments(spark, indexDir)
+    val v = IdStore.latest(spark, indexDir)
     twoLevelProbe(
-      StoreReads.parquet(spark, s"$indexDir/coarse"),
-      StoreReads.parquet(spark, s"$indexDir/subcents"),
-      dropDead(StoreReads.parquet(spark, s"$indexDir/assignments")
+      v.read(spark, "coarse"),
+      v.read(spark, "subcents"),
+      dropDead(v.read(spark, "assignments")
         // partition-discovery typing: restore the live stage's long
         .select(col("vec_id"), col("cent_id").cast("long").as("cent_id"),
           col("sub_id"), col("u")),
-        IdStore.tombstones(spark, indexDir, "vec_id")),
+        v.tombstones(spark, "vec_id")),
       nProbe1, nProbe2, nQueries, k)
   }
 
@@ -1805,27 +1706,18 @@ object Similarity {
     * set clustered in embedding space (a retired source's vectors are
     * usually semantically close) touches few cells. Answer-invisible by
     * construction (the q146 gate serves the compacted artifact under
-    * q143's oracle); same single-writer ownership and crash story as
-    * the postings compaction. */
-  def compactTwoLevelIndex(spark: SparkSession, indexDir: String): Unit = {
-    recoverAssignments(spark, indexDir)
-    IdStore.purge(spark, indexDir, "vec_id")(expungeTwoLevel(spark, indexDir, _))
-  }
-
-  /** Restore any cells a crashed compaction left aside (the IVF inverted
-    * files are single-store: no append marker). */
-  private def recoverAssignments(spark: SparkSession, indexDir: String): Unit =
-    SafeSwap.recover(IdStore.fsOf(spark, indexDir),
-      new org.apache.hadoop.fs.Path(s"$indexDir/assignments"))
+    * q143's oracle); one published version, like the postings
+    * compaction. */
+  def compactTwoLevelIndex(spark: SparkSession, indexDir: String): Unit =
+    pqStore.write(spark, indexDir)(w => IdStore.purge(w, "vec_id")(expungeTwoLevel(w, _)))
 
   /** Drop a dead set's rows from the two-level inverted file: only the
     * cent_id cells holding a dead vector rewrite. Shared by
     * [[compactTwoLevelIndex]] (whole tombstone set) and the
     * resurrection path in [[appendTwoLevelDelta]] (the re-appended
     * overlap only). */
-  private def expungeTwoLevel(spark: SparkSession, indexDir: String,
-      dead: DataFrame): Unit =
-    IdStore.expunge(s"$indexDir/assignments", "cent_id", "vec_id", dead)
+  private def expungeTwoLevel(w: IdStore.Writer, dead: DataFrame): Unit =
+    IdStore.expunge(w, "assignments", "cent_id", "vec_id", dead)
 
   /** q146: q143's lifecycle COMPACTED — same full-corpus build and
     * delete set, tombstones expunged by [[compactTwoLevelIndex]] before

@@ -198,7 +198,7 @@ private[ops] object TempArtifacts {
 }
 
 /** Memoized RESOLVED parquet relations, keyed by (session, content tag
-  * of the path). `spark.read.parquet` pays a file listing plus a
+  * of the path, or an artifact store's version id). `spark.read.parquet` pays a file listing plus a
   * schema-inference job (one footer-reading Spark job, ~40-50 ms of
   * driver+schedule latency) on EVERY call — and every query invocation
   * re-loads each table it touches, so a 6-table join paid six such jobs
@@ -216,8 +216,13 @@ private[ops] object StoreReads {
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
   def parquet(spark: SparkSession, path: String): DataFrame =
-    map.computeIfAbsent((spark, StageCache.inputTag(spark, path)),
-      _ => spark.read.parquet(path))
+    memo(spark, StageCache.inputTag(spark, path))(spark.read.parquet(path))
+
+  /** The relation `load` resolves, memoized under a caller-made content
+    * key — an artifact store's is its version id
+    * ([[IdStore.Version.read]]), so no listing is needed to key it. */
+  def memo(spark: SparkSession, key: String)(load: => DataFrame): DataFrame =
+    map.computeIfAbsent((spark, key), _ => load)
 
   def release(spark: SparkSession): Int = {
     var n = 0

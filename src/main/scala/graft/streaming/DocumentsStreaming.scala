@@ -505,8 +505,8 @@ object DocumentsStreaming {
     * flag the first time, silently shrinking the survivor set between
     * deliveries. From the durable flags the survivor set is identical
     * on every delivery, and [[graft.ops.LshIndex.appendLshDelta]]'s own
-    * replay guard (vec_id anti-join) + commit marker make the re-admit
-    * a no-op. Bootstrap composes too: the first trigger probes nothing
+    * replay guard (vec_id anti-join) + one published version make the
+    * re-admit a no-op. Bootstrap composes too: the first trigger probes nothing
     * (no artifact → zero flags), and its admit IS the base build,
     * freezing adaptive geometry for `expectedCorpusVectors` (the corpus
     * the artifact grows into, not the first batch — ADVICE r12). */
@@ -602,9 +602,7 @@ object DocumentsStreaming {
     val spark = batch.sparkSession
     val quality = batch.where(TextAnalysis.qualityScore >= minQuality)
       .select(col("doc_id"), col("text"))
-    val fs = new org.apache.hadoop.fs.Path(fpDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val hasIndex = fs.exists(new org.apache.hadoop.fs.Path(s"$fpDir/meta"))
+    val hasIndex = graft.ops.FingerprintIndex.store.exists(spark, fpDir)
     landBatchIdempotent(spark, flagsDir, batchId) {
       if (hasIndex) graft.ops.FingerprintIndex.probeFingerprints(quality, fpDir)
       else {
@@ -643,11 +641,11 @@ object DocumentsStreaming {
     * Idempotence under at-least-once redelivery is COMPOSITIONAL, and
     * that composition is the point: the keeper set derives from the
     * durable flags (identical on every delivery), and each family's
-    * append self-guards (replay anti-join + commit marker), so a crash
-    * anywhere — BETWEEN family appends, or inside one — redelivers the
-    * batch, the already-landed families' appends no-op, the crashed
-    * family's marker rolls its partial rows back, and the remaining
-    * families land. MultiModalAdmitSpec pins N mixed triggers ≡ batch
+    * append self-guards (replay anti-join + one published version per
+    * append), so a crash anywhere — BETWEEN family appends, or inside
+    * one — redelivers the batch, the already-landed families' appends
+    * no-op, the crashed family's unpublished files are ignored, and
+    * the remaining families land. MultiModalAdmitSpec pins N mixed triggers ≡ batch
     * admits on every artifact, including a crash between family
     * appends inside one trigger.
     *
@@ -676,7 +674,6 @@ object DocumentsStreaming {
       workDir: String, flagsDir: String, minQuality: Double,
       expectedCorpusVectors: Long,
       crashAfterFamilies: Int = Int.MaxValue): Unit = {
-    val spark = batch.sparkSession
     if (batch.isEmpty) return
     val keepers = curatedKeepers(batch.select("doc_id", "text", "n_chars"),
       batchId, s"$workDir/fp", s"$flagsDir/fp", minQuality).cache()
@@ -696,19 +693,10 @@ object DocumentsStreaming {
       () => graft.ops.ImageIndex.appendImageHashDelta(keepers, s"$workDir/images"),
       () => graft.ops.LshIndex.appendLshDelta(keptVecs, s"$workDir/lsh",
         expectedCorpusVectors = expectedCorpusVectors),
-      () => {
-        // the TRAINED family rides the same trigger: the first batch
-        // bootstraps by training the books on itself (runDaily's rule),
-        // guarded on `vectors` — the LAST store the base build writes,
-        // hence a true commit point (the runDaily crash-window
-        // argument verbatim); later triggers encode under frozen books
-        val fs = new org.apache.hadoop.fs.Path(s"$workDir/pq")
-          .getFileSystem(spark.sessionState.newHadoopConf())
-        if (fs.exists(new org.apache.hadoop.fs.Path(s"$workDir/pq/vectors")))
-          graft.ops.Similarity.appendPqDelta(keptVecs, s"$workDir/pq")
-        else
-          graft.ops.Similarity.savePqIndexOf(keptVecs, s"$workDir/pq")
-      })
+      // the TRAINED family rides the same trigger: the first batch
+      // bootstraps by training the books on itself (runDaily's rule);
+      // later triggers encode under frozen books
+      () => graft.ops.Similarity.appendPqDelta(keptVecs, s"$workDir/pq"))
     families.take(crashAfterFamilies).foreach(_.apply())
     keepers.unpersist(blocking = false)
   }
@@ -719,9 +707,7 @@ object DocumentsStreaming {
     val spark = batch.sparkSession
     if (batch.isEmpty) return
     val docs = batch.select(col("doc_id"), col("text"))
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val hasIndex = fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/hashes"))
+    val hasIndex = graft.ops.ImageIndex.store.exists(spark, indexDir)
     landBatchIdempotent(spark, flagsDir, batchId) {
       if (hasIndex)
         graft.ops.ImageIndex.probeImages(docs, indexDir, maxHamming = maxHamming)
@@ -751,9 +737,7 @@ object DocumentsStreaming {
     if (batch.isEmpty) return
     val unit = batch.select(col("doc_id").as("vec_id"),
       graft.ops.Similarity.unitVec(col("embedding")).as("u"))
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val hasIndex = fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/meta"))
+    val hasIndex = graft.ops.LshIndex.store.exists(spark, indexDir)
     // 1. GATE: flag near-dups of the held corpus. A bootstrap trigger
     //    has no corpus to flag against — zero flags, landed anyway so
     //    the batch's commit marker exists.

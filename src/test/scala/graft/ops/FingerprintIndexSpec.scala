@@ -66,12 +66,12 @@ class FingerprintIndexSpec extends AnyFunSuite {
       FingerprintIndex.compactFingerprintIndex(spark, life)
       FingerprintIndex.saveFingerprintIndexOf(
         split.where(!col("deleted") || col("reappend")).select("doc_id", "text"), ref)
-      def rows(d: String) = spark.read.parquet(s"$d/fingerprints")
+      def rows(d: String) = IdStore.latest(spark, d).read(spark, "fingerprints")
         .select("doc_id", "fp", "fp_bucket")
         .collect().map(_.toString).toSeq.sorted
       assert(rows(life) == rows(ref),
         "the composed lifecycle diverged from a fresh build of the survivors")
-      assert(!new java.io.File(s"$life/tombstones").exists,
+      assert(!IdStore.latest(spark, life).has("tombstones"),
         "compaction never committed")
     } finally { rm(new java.io.File(life)); rm(new java.io.File(ref)) }
   }
@@ -122,7 +122,7 @@ class FingerprintIndexSpec extends AnyFunSuite {
             .map(f => (f.getName, f.length())).toSet).toMap
       val before = contents()
       FingerprintIndex.compactFingerprintIndex(spark, out)
-      assert(!new java.io.File(s"$out/tombstones").exists, "compaction never committed")
+      assert(!IdStore.latest(spark, out).has("tombstones"), "compaction never committed")
       assert(FingerprintIndex.probeFingerprints(probes, out)
           .collect().map(_.toString).toSeq == withTombstones,
         "compaction changed probe answers")

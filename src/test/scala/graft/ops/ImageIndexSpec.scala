@@ -138,7 +138,7 @@ class ImageIndexSpec extends AnyFunSuite {
             .map(f => (f.getName, f.length())).toSet).toMap
       val before = contents()
       ImageIndex.compactImageHashIndex(spark, out)
-      assert(!new java.io.File(s"$out/tombstones").exists(), "compaction never committed")
+      assert(!IdStore.latest(spark, out).has("tombstones"), "compaction never committed")
       assert(rows(ImageIndex.imageDupsFromIndex(spark, out)) == withTombstones,
         "compaction changed the served answers")
       val after = contents()
@@ -171,7 +171,7 @@ class ImageIndexSpec extends AnyFunSuite {
       assert(rows(ImageIndex.imageDupsFromIndex(spark, out)) == expected,
         "resurrected serve (pre-compaction) diverged from a fresh build of the survivors")
       // the re-appended docs must not double-count in the hashes store
-      val hashes = spark.read.parquet(s"$out/hashes")
+      val hashes = IdStore.latest(spark, out).read(spark, "hashes")
       assert(hashes.count() == hashes.select("doc_id").distinct().count(),
         "resurrection left two generations of a doc in the hashes store")
       ImageIndex.compactImageHashIndex(spark, out)

@@ -87,18 +87,20 @@ class IvfIndexPersistenceSpec extends AnyFunSuite {
         .select(col("cent_id").cast("long")).distinct()
         .collect().map(_.getLong(0)).toSet
       assert(touched.nonEmpty, "the fixture delete set must touch some cells")
+      // the cell files the latest version names
       def cellFiles(): Map[String, Long] = {
         val b = java.nio.file.Paths.get(s"$tmp/assignments")
+        val named = IdStore.latest(spark, tmp).files
         import scala.jdk.CollectionConverters._
         java.nio.file.Files.walk(b).iterator().asScala
-          .filter(p => p.toString.endsWith(".parquet"))
+          .filter(p => named.contains(s"assignments/${b.relativize(p)}"))
           .map(p => (b.relativize(p).toString,
             java.nio.file.Files.getLastModifiedTime(p).toMillis)).toMap
       }
       val before = cellFiles()
       Similarity.compactTwoLevelIndex(spark, tmp)
       val after = cellFiles()
-      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$tmp/tombstones")),
+      assert(!IdStore.latest(spark, tmp).has("tombstones"),
         "compaction must delete the tombstone set")
       def cellOf(rel: String): Long =
         rel.split("/").head.stripPrefix("cent_id=").toLong
@@ -110,7 +112,7 @@ class IvfIndexPersistenceSpec extends AnyFunSuite {
         .collect().map(_.toSeq).toSeq
       assert(compacted.nonEmpty && compacted == served,
         "compaction changed the served answers")
-      val residue = spark.read.parquet(s"$tmp/assignments")
+      val residue = IdStore.latest(spark, tmp).read(spark, "assignments")
         .join(dead, Seq("vec_id")).count()
       assert(residue == 0, s"$residue dead vectors survived compaction")
     } finally {
@@ -166,7 +168,7 @@ class IvfIndexPersistenceSpec extends AnyFunSuite {
           .select("vec_id", "u"), inc)
       val served = rows(Similarity.ivfTopKFromIndex(spark, inc, nQueries = 50))
       Similarity.compactIvfIndex(spark, inc)
-      assert(!new java.io.File(s"$inc/tombstones").exists, "compaction never committed")
+      assert(!IdStore.latest(spark, inc).has("tombstones"), "compaction never committed")
       assert(rows(Similarity.ivfTopKFromIndex(spark, inc, nQueries = 50)) == served,
         "compaction changed the served answers")
       // reference: frozen base-trained codebook, assignments rebuilt on

@@ -123,7 +123,7 @@ class LshIndexSpec extends AnyFunSuite {
             .map(f => (f.getName, f.length())).toSet).toMap
       val before = contents()
       LshIndex.compactLshIndex(spark, out)
-      assert(!new java.io.File(s"$out/tombstones").exists(), "compaction never committed")
+      assert(!IdStore.latest(spark, out).has("tombstones"), "compaction never committed")
       assert(rows(LshIndex.lshTopKFromIndex(spark, out)) == withTombstones,
         "compaction changed the served answers")
       val after = contents()
@@ -145,23 +145,27 @@ class LshIndexSpec extends AnyFunSuite {
       val expected = freshTopK(vecs) // the adaptive (8, 8) build's answers
       assert(LshIndex.maintainGeometry(spark, out).contains((8, 8)),
         "a drifted artifact was not rebuilt")
-      val meta = spark.read.parquet(s"$out/meta").head()
+      val meta = IdStore.latest(spark, out).read(spark, "meta").head()
       assert((meta.getAs[Int]("bits"), meta.getAs[Int]("n_tables")) == ((8, 8)))
       assert(rows(LshIndex.lshTopKFromIndex(spark, out)) == expected,
         "the re-geometried artifact diverged from a fresh adaptive build")
       // on-plateau: re-measuring the same live count does nothing
       assert(LshIndex.maintainGeometry(spark, out).isEmpty,
         "an on-plateau artifact was rebuilt again")
-      // crash window: marker committed, rebuild unfinished — ANY entry
-      // point must complete it from the snapshot before serving
-      spark.read.parquet(s"$out/vectors")
-        .write.mode("overwrite").parquet(s"$out/regeom_snapshot")
-      new java.io.File(s"$out/_regeom_pending").createNewFile()
+      // crash window: a drifted artifact whose rebuild wrote every store
+      // and never published — the drifted version keeps serving, and
+      // re-running the maintenance completes the rebuild
+      LshIndex.saveLshIndexOf(vecs, out, bits = 12, nTables = 8)
+      val drifted = rows(LshIndex.lshTopKFromIndex(spark, out))
+      Unpublished.plant(spark, out, Seq("meta", "buckets", "vectors"))
+      assert(rows(LshIndex.lshTopKFromIndex(spark, out)) == drifted,
+        "serving over a crashed rebuild diverged from the last version")
+      assert(LshIndex.maintainGeometry(spark, out).contains((8, 8)),
+        "re-running the maintenance did not rebuild")
       assert(rows(LshIndex.lshTopKFromIndex(spark, out)) == expected,
-        "serving over a crashed rebuild diverged")
-      assert(!new java.io.File(s"$out/_regeom_pending").exists &&
-        !new java.io.File(s"$out/regeom_snapshot").exists,
-        "the crashed rebuild's marker/snapshot survived recovery")
+        "the re-run rebuild diverged from a fresh adaptive build")
+      assert(Unpublished.unnamed(spark, out).isEmpty,
+        "the crashed rebuild's files survived the re-run")
     } finally rm(new java.io.File(out))
   }
 
@@ -185,6 +189,8 @@ class LshIndexSpec extends AnyFunSuite {
         spark.read.parquet(s"$out/vectors").select("vec_id", "u"))
       devolve("meta",
         spark.read.parquet(s"$out/meta").select("bits", "n_tables").coalesce(1))
+      // ... written before the version log, too
+      rm(new java.io.File(s"$out/_versions"))
       // pre-migration: every reader fails FAST and names the fix
       val e = intercept[IllegalArgumentException] {
         LshIndex.lshTopKFromIndex(spark, out)
@@ -349,7 +355,7 @@ class LshIndexSpec extends AnyFunSuite {
       val expected = freshTopK(survivors)
       assert(rows(LshIndex.lshTopKFromIndex(spark, out)) == expected,
         "resurrected serve (pre-compaction) diverged from a fresh build of the survivors")
-      val vrel = spark.read.parquet(s"$out/vectors")
+      val vrel = IdStore.latest(spark, out).read(spark, "vectors")
       assert(vrel.count() == vrel.select("vec_id").distinct().count(),
         "resurrection left two generations of a vector in the store")
       LshIndex.compactLshIndex(spark, out)

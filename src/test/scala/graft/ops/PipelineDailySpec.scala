@@ -20,6 +20,10 @@ class PipelineDailySpec extends AnyFunSuite {
   private def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
+  /** A store of an artifact under `work`, as its latest version names it. */
+  private def stored(work: String, artifact: String, store: String) =
+    IdStore.latest(spark, s"$work/$artifact").read(spark, store)
+
   test("running the same day twice changes nothing in any artifact") {
     val work = tmpDir("graft-daily")
     val raw = tmpDir("graft-daily-raw")
@@ -104,6 +108,33 @@ class PipelineDailySpec extends AnyFunSuite {
     } finally rm(new java.io.File(work))
   }
 
+  test("a day over artifacts written before the version log equals an untouched twin's") {
+    val work = tmpDir("graft-daily-legacy")
+    val twin = tmpDir("graft-daily-legacy-twin")
+    try {
+      for (d <- Seq(work, twin)) Pipeline.runDaily(spark, dir, d, batchPct = 30)
+      // day 1's artifacts as an older build left them: the same stores,
+      // no version log — day 2 must upgrade and append, never bootstrap
+      for (a <- Seq("bm25", "images", "lsh", "pq", "fp"))
+        rm(new java.io.File(s"$work/$a/_versions"))
+      val reports = Seq(work, twin).map(Pipeline.runDaily(spark, dir, _, batchPct = 60))
+      assert(reports.head == reports.last, "the upgraded day curated differently")
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).toSeq.sorted
+      def state(d: String) = Seq(
+        rows(Retrieval.bm25TopKFromIndex(spark, s"$d/bm25")),
+        rows(ImageIndex.imageDupsFromIndex(spark, s"$d/images")),
+        rows(LshIndex.lshTopKFromIndex(spark, s"$d/lsh")),
+        rows(Similarity.pqTopKFromIndex(spark, s"$d/pq")),
+        rows(stored(d, "pq", "pqbook")),
+        rows(stored(d, "pq", "vectors").select("vec_id")),
+        rows(stored(d, "fp", "fingerprints").select("doc_id", "fp")))
+      val (upgraded, untouched) = (state(work), state(twin))
+      for (((u, t), what) <- upgraded.zip(untouched).zip(Seq("bm25", "image dups", "lsh",
+          "pq", "pq books", "pq vectors", "fingerprints")))
+        assert(u == t, s"$what: the upgraded artifact diverged from the untouched twin")
+    } finally { rm(new java.io.File(work)); rm(new java.io.File(twin)) }
+  }
+
   test("a crash between the day-1 PQ codes and vectors writes converges on retry") {
     val work = tmpDir("graft-daily-pqcrash")
     try {
@@ -112,13 +143,15 @@ class PipelineDailySpec extends AnyFunSuite {
         .orderBy("vec_id").collect().map(_.toString).toSeq
       // plant the window: savePqIndexOf writes vectors LAST
       // (coarse, subcents, pqbook, codes, vectors), so a crash there
-      // leaves pqbook+codes committed with the refine store absent
+      // leaves pqbook+codes on disk with the refine store absent — and
+      // the build's version never published
       rm(new java.io.File(s"$work/pq/vectors"))
+      rm(new java.io.File(s"$work/pq/_versions/0"))
       Pipeline.runDaily(spark, dir, work)
-      // the retried day must re-run the BASE BUILD (the guard keys on
-      // vectors, the last-written store) — the append path's replay
-      // guard IS the missing vectors store and would re-append every
-      // day-1 code row, double-serving them in the ADC shortlist
+      // the retried day must re-run the BASE BUILD (the artifact has no
+      // published version) — the append path's replay guard IS the
+      // missing vectors store and would re-append every day-1 code row,
+      // double-serving them in the ADC shortlist
       val codes = spark.read.parquet(s"$work/pq/codes")
       assert(codes.count() == codes.select("vec_id").distinct().count(),
         "the retried day double-appended day-1 code rows")
@@ -138,12 +171,12 @@ class PipelineDailySpec extends AnyFunSuite {
       // the corpus well past the growth trigger's 2× of that sample
       Pipeline.runDaily(spark, dir, work, batchPct = 10)
       Pipeline.runDaily(spark, dir, work, batchPct = 60)
-      val booksBefore = spark.read.parquet(s"$work/pq/pqbook")
+      val booksBefore = stored(work, "pq", "pqbook")
         .orderBy("j", "code").collect().map(_.toString).toSeq
       val first = Pipeline.runMaintenance(spark, dir, work)
       assert(first.pqRetrain.isDefined,
         "a corpus at far past 2x the training sample did not retrain")
-      assert(spark.read.parquet(s"$work/pq/pqbook")
+      assert(stored(work, "pq", "pqbook")
           .orderBy("j", "code").collect().map(_.toString).toSeq != booksBefore,
         "the 'retrain' kept the day-1 books")
       // the retrained artifact froze its own baseline: a second
@@ -172,13 +205,13 @@ class PipelineDailySpec extends AnyFunSuite {
         "maintenance retired nothing the artifacts held")
       // the tombstones committed: compaction deleted every set
       for (a <- Seq("bm25", "images", "lsh", "pq", "fp"))
-        assert(!new java.io.File(s"$work/$a/tombstones").exists,
+        assert(!IdStore.latest(spark, s"$work/$a").has("tombstones"),
           s"$a compaction never committed")
       // the TRAINED family's retire actually reached the compressed
       // stores (codes + refine vectors both shrank past the expunge)
       assert(first.servedPq > 0, "the compressed artifact served nothing")
-      assert(spark.read.parquet(s"$work/pq/vectors")
-          .join(spark.read.parquet(s"$work/pq/codes").select("vec_id"),
+      assert(stored(work, "pq", "vectors")
+          .join(stored(work, "pq", "codes").select("vec_id"),
             Seq("vec_id"), "left_anti").count() == 0,
         "pq refine store and codes store disagree after compaction")
       // geometry stayed on its plateau at gate scale — the regeom step
@@ -206,7 +239,7 @@ class PipelineDailySpec extends AnyFunSuite {
       // retired docs are gone, so the day's batch re-appends only them
       val day = Pipeline.runDaily(spark, dir, work)
       assert(day.keptDocs >= 0) // composes without error; guards intact
-      val dl = spark.read.parquet(s"$work/bm25/dl")
+      val dl = stored(work, "bm25", "dl")
       assert(dl.count() == dl.select("doc_id").distinct().count(),
         "post-maintenance replay double-indexed a doc")
     } finally rm(new java.io.File(work))

@@ -196,18 +196,20 @@ class PostingsIndexPersistenceSpec extends AnyFunSuite {
         .select(col("term_bucket").cast("long")).distinct()
         .collect().map(_.getLong(0)).toSet
       assert(touched.nonEmpty, "the fixture delete set must touch some buckets")
+      // the postings files the latest version names
       def bucketFiles(): Map[String, Long] = {
         val b = java.nio.file.Paths.get(s"$idx/postings")
+        val named = IdStore.latest(spark, idx).files
         import scala.jdk.CollectionConverters._
         java.nio.file.Files.walk(b).iterator().asScala
-          .filter(p => p.toString.endsWith(".parquet"))
+          .filter(p => named.contains(s"postings/${b.relativize(p)}"))
           .map(p => (b.relativize(p).toString,
             java.nio.file.Files.getLastModifiedTime(p).toMillis)).toMap
       }
       val before = bucketFiles()
       Retrieval.compactPostings(spark, idx)
       val after = bucketFiles()
-      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$idx/tombstones")),
+      assert(!IdStore.latest(spark, idx).has("tombstones"),
         "compaction must delete the tombstone set")
       // untouched buckets survive byte-identical (same path, same mtime)
       def bucketOf(rel: String): Long =
@@ -222,7 +224,7 @@ class PostingsIndexPersistenceSpec extends AnyFunSuite {
       val compacted = Retrieval.bm25TopKFromIndex(spark, idx).collect().toSeq
       assert(compacted.nonEmpty && compacted == served,
         "compaction changed the served answers")
-      val residue = spark.read.parquet(s"$idx/postings")
+      val residue = IdStore.latest(spark, idx).read(spark, "postings")
         .join(docs.where(deadRule).select("doc_id"), Seq("doc_id")).count()
       assert(residue == 0, s"$residue dead postings survived compaction")
     } finally {

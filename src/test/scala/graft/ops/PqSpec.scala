@@ -161,7 +161,7 @@ class PqSpec extends AnyFunSuite {
       val served = Similarity.pqTopKFromIndex(spark, tmp, nQueries = 50)
         .collect().map(_.toSeq).toSeq
       Similarity.compactPqIndex(spark, tmp)
-      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$tmp/tombstones")),
+      assert(!IdStore.latest(spark, tmp).has("tombstones"),
         "compaction must delete the tombstone set")
       // the hazard this pins: without cache invalidation the resident
       // pre-compaction codes relation + the now-absent tombstone file
@@ -174,7 +174,7 @@ class PqSpec extends AnyFunSuite {
       assert(compacted.forall(r => !deadSet.contains(r.head.asInstanceOf[Long]) &&
         !deadSet.contains(r(1).asInstanceOf[Long])),
         "a dead vector resurfaced after compaction under a warm cache")
-      assert(spark.read.parquet(s"$tmp/vectors")
+      assert(IdStore.latest(spark, tmp).read(spark, "vectors")
         .where(org.apache.spark.sql.functions.col("vec_id").isin(dead: _*)).count() == 0,
         "dead vectors survived in the refine store")
     } finally {
@@ -283,7 +283,7 @@ class PqSpec extends AnyFunSuite {
     } finally rmrf(new java.io.File(tmp))
   }
 
-  test("a crashed codebook retrain completes from its snapshot at the next serve") {
+  test("a crashed codebook retrain serves the last version; re-running maintenance completes it") {
     import org.apache.spark.sql.functions._
     val tmp = java.nio.file.Files.createTempDirectory("graft-pq-retraincrash").toString
     def rmrf(f: java.io.File): Unit = {
@@ -295,18 +295,20 @@ class PqSpec extends AnyFunSuite {
       // vectors, the rest appended under them
       Similarity.savePqIndexOf(e.where(col("vec_id") < 64), tmp)
       Similarity.appendPqDelta(e.where(col("vec_id") >= 64), tmp)
-      // plant the crash WINDOW the marker commits over: snapshot
-      // written, marker durable, rebuild never ran (the state
-      // maintainPqCodebooks leaves if the JVM dies right after the
-      // commit point)
-      val fs = new org.apache.hadoop.fs.Path(tmp)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      Similarity.unitEmbeddings(spark, dir).select("vec_id", "u")
-        .write.mode("overwrite").parquet(s"$tmp/retrain_snapshot")
-      fs.create(new org.apache.hadoop.fs.Path(s"$tmp/_retrain_pending"), true).close()
-      // the NORMAL serve entry (warm path — recoverPq runs inside the
-      // artifact load) must complete the rebuild before answering: the
-      // answer equals a fresh full-corpus build's serve
+      val drifted = Similarity.pqTopKFromIndex(spark, tmp).collect().map(_.toString).toSeq
+      // plant the crash WINDOW: the retrain wrote every store and the
+      // JVM died before the publish
+      Unpublished.plant(spark, tmp, Seq("coarse", "subcents", "pqbook", "meta", "codes", "vectors"))
+      val crashed = Unpublished.listing(tmp)
+      // the NORMAL serve entry (warm path) serves the last published
+      // version and writes nothing
+      assert(Similarity.pqTopKFromIndex(spark, tmp).collect().map(_.toString).toSeq == drifted,
+        "a crashed retrain leaked into the served answers")
+      assert(Unpublished.listing(tmp) == crashed, "the serve changed the artifact's files")
+      // re-running the maintenance completes the retrain: the answer
+      // equals a fresh full-corpus build's serve
+      assert(Similarity.maintainPqCodebooks(spark, tmp).isDefined,
+        "re-running the maintenance did not retrain")
       val served = Similarity.pqTopKFromIndex(spark, tmp)
         .collect().map(_.toString).toSeq
       val fresh = java.nio.file.Files.createTempDirectory("graft-pq-fresh").toString
@@ -314,25 +316,49 @@ class PqSpec extends AnyFunSuite {
         Similarity.savePqIndexOf(Similarity.unitEmbeddings(spark, dir), fresh)
         assert(served == Similarity.pqTopKFromIndexCold(spark, fresh)
             .collect().map(_.toString).toSeq,
-          "the recovered rebuild diverged from a fresh full-corpus build")
+          "the re-run retrain diverged from a fresh full-corpus build")
       } finally rmrf(new java.io.File(fresh))
-      assert(!new java.io.File(s"$tmp/_retrain_pending").exists &&
-          !new java.io.File(s"$tmp/retrain_snapshot").exists,
-        "recovery left the marker or snapshot behind")
-      // with NO marker, a leftover snapshot is a crash BEFORE the
-      // commit point: the old artifact must stay untouched and the
-      // stray snapshot must drop
-      val before = spark.read.parquet(s"$tmp/pqbook")
-        .orderBy("j", "code").collect().map(_.toString).toSeq
-      Similarity.unitEmbeddings(spark, dir).select("vec_id", "u").limit(10)
-        .write.mode("overwrite").parquet(s"$tmp/retrain_snapshot")
-      Similarity.pqTopKFromIndex(spark, tmp).collect()
-      assert(!new java.io.File(s"$tmp/retrain_snapshot").exists,
-        "a pre-commit snapshot survived recovery")
-      assert(spark.read.parquet(s"$tmp/pqbook")
-          .orderBy("j", "code").collect().map(_.toString).toSeq == before,
-        "a pre-commit crash rebuilt the artifact anyway")
+      assert(Unpublished.unnamed(spark, tmp).isEmpty,
+        "the crashed retrain's files survived the re-run")
     } finally rmrf(new java.io.File(tmp))
+  }
+
+  test("a warm serve sees an artifact replaced by another writer") {
+    import org.apache.spark.sql.functions._
+    val a = java.nio.file.Files.createTempDirectory("graft-pq-stale").toString
+    val twin = java.nio.file.Files.createTempDirectory("graft-pq-stale-twin").toString
+    def rmrf(f: java.io.File): Unit = {
+      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmrf)); f.delete()
+    }
+    def copy(from: String, to: String): Unit = {
+      val src = java.nio.file.Paths.get(from)
+      java.nio.file.Files.walk(src).forEach { p =>
+        val dst = java.nio.file.Paths.get(to).resolve(src.relativize(p))
+        if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(dst)
+        else java.nio.file.Files.copy(p, dst)
+      }
+    }
+    try {
+      val e = Similarity.unitEmbeddings(spark, dir)
+      val base = e.where(pmod(col("vec_id"), lit(3)) =!= 0)
+      Similarity.savePqIndexOf(base, a)
+      Similarity.savePqIndexOf(base, twin)
+      val before = Similarity.pqTopKFromIndexCold(spark, twin).collect().map(_.toString).toSeq
+      Similarity.appendPqDelta(e.where(pmod(col("vec_id"), lit(3)) === 0), twin)
+      val expected = Similarity.pqTopKFromIndexCold(spark, twin).collect().map(_.toString).toSeq
+      assert(expected != before, "the append must change the answer")
+      // warm A, then another process replaces A's contents with the
+      // appended twin's
+      assert(Similarity.pqTopKFromIndex(spark, a).collect().map(_.toString).toSeq == before)
+      rmrf(new java.io.File(a))
+      copy(twin, a)
+      assert(Similarity.pqTopKFromIndex(spark, a).collect().map(_.toString).toSeq == expected,
+        "the warm serve answered from the replaced artifact's resident relations")
+    } finally {
+      Similarity.releaseStages(spark)
+      rmrf(new java.io.File(a))
+      rmrf(new java.io.File(twin))
+    }
   }
 
   test("a pre-meta artifact backfills provenance and establishes a baseline") {
@@ -348,8 +374,10 @@ class PqSpec extends AnyFunSuite {
       Similarity.savePqIndexOf(Similarity.unitEmbeddings(spark, dir), tmp)
       Similarity.savePqIndexOf(Similarity.unitEmbeddings(spark, dir), twin)
       val served = cold(tmp)
-      // simulate the pre-upgrade layout: no provenance store
+      // simulate the pre-upgrade layout: no provenance store (and, older
+      // still, no version log)
       rmrf(new java.io.File(s"$tmp/meta"))
+      rmrf(new java.io.File(s"$tmp/_versions"))
       assert(Similarity.maintainPqCodebooks(spark, tmp).isEmpty,
         "the first run after upgrade must establish a baseline, not rebuild")
       val meta = spark.read.parquet(s"$tmp/meta").head()

@@ -6,16 +6,17 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** Crash-safety of the compaction swaps (SafeSwap) and the bootstrap
-  * contract of the delta appends.
+/** Crash-safety of the directory swaps (SafeSwap) the training-shard
+  * export runs, pinned on a plain partitioned directory, and the
+  * bootstrap contract of the index delta appends.
   *
-  * The compactions' crash windows are simulated by doing to the
-  * artifact exactly what a crash mid-pass leaves behind (a live
-  * partition renamed aside; a stale aside next to a completed swap) and
-  * then driving the normal entry points — re-running the compaction, or
-  * serving directly. Every path must converge to the same answers as a
-  * cleanly compacted twin artifact; the old shape (delete-then-rename)
-  * lost the moved partition's surviving rows permanently in window 1.
+  * The swap's crash windows are simulated by doing to the directory
+  * exactly what a crash mid-pass leaves behind (a live partition
+  * renamed aside; a whole dir renamed aside; a stale aside next to a
+  * completed swap) and then driving recovery and the re-run. Every path
+  * must converge to the rows of a clean swap; the old shape
+  * (delete-then-rename) lost the moved partition's rows permanently in
+  * window 1.
   */
 class SafeSwapSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -32,92 +33,80 @@ class SafeSwapSpec extends AnyFunSuite {
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq
 
-  /** A base+tombstone postings artifact over the sf0.001 corpus (10 %
-    * deterministic delete set), NOT yet compacted. */
-  private def buildTombstoned(out: String): Unit = {
-    val docs = Tables.documents(spark, dir).select("doc_id", "text")
-    Retrieval.savePostingsIndexOf(docs, out)
-    Retrieval.tombstoneDocs(
-      docs.where(pmod(col("doc_id") * lit(7919L), lit(100)) < 10).select("doc_id"), out)
+  private def fsOf(p: String) = new org.apache.hadoop.fs.Path(p)
+    .getFileSystem(spark.sessionState.newHadoopConf())
+
+  private def path(p: String) = new org.apache.hadoop.fs.Path(p)
+
+  /** A live dir partitioned by `p` (0..3) and the rewrite of `p=0` (its
+    * even ids only) staged under tmp; returns the rows a clean swap of
+    * `p=0` leaves. */
+  private def staged(work: String): Seq[String] = {
+    import spark.implicits._
+    val all = (0L until 40L).map(i => (i, i % 4)).toDF("id", "p")
+    all.write.partitionBy("p").parquet(s"$work/live")
+    val next = all.where(col("p") =!= 0 || pmod(col("id"), lit(2)) === 0)
+    next.where(col("p") === 0).write.partitionBy("p").parquet(s"$work/tmp")
+    rows(next.orderBy("id"))
   }
+
+  private def live(work: String): Seq[String] =
+    rows(spark.read.parquet(s"$work/live").select("id", "p").orderBy("id"))
 
   test("crash window 1 (bucket aside, not replaced): re-run converges") {
-    val crashed = tmpDir("graft-swap-c1")
-    val clean = tmpDir("graft-swap-c1-twin")
+    val work = tmpDir("graft-swap-c1")
     try {
-      buildTombstoned(crashed)
-      buildTombstoned(clean)
-      Retrieval.compactPostings(spark, clean)
-      // simulate the crash: one live bucket sits under postings.old and
-      // is GONE from the live root — the state after `live → aside`
-      // with no replacement yet
-      val buckets = new java.io.File(s"$crashed/postings").listFiles()
-        .filter(_.getName.startsWith("term_bucket=")).sortBy(_.getName)
-      assert(buckets.nonEmpty)
-      val victim = buckets.head
-      val aside = new java.io.File(s"$crashed/postings.old")
+      val expected = staged(work)
+      // the crash: live p=0 renamed aside, its rewrite not yet moved in
+      val aside = new java.io.File(s"$work/live.old")
       aside.mkdirs()
-      assert(victim.renameTo(new java.io.File(aside, victim.getName)))
-      // the owner re-runs the compaction: recover() restores the bucket
-      // (tombstones still present — the commit point was never reached),
-      // then the pass completes normally
-      Retrieval.compactPostings(spark, crashed)
-      assert(!new java.io.File(s"$crashed/postings.old").exists(),
-        "recovery left the aside dir behind")
-      assert(!new java.io.File(s"$crashed/tombstones").exists(),
-        "the re-run compaction never committed")
-      assert(rows(Retrieval.bm25TopKFromIndex(spark, crashed)) ==
-        rows(Retrieval.bm25TopKFromIndex(spark, clean)),
-        "crashed-then-recovered answers diverged from the clean compaction")
-    } finally { rm(new java.io.File(crashed)); rm(new java.io.File(clean)) }
+      assert(new java.io.File(s"$work/live/p=0").renameTo(new java.io.File(aside, "p=0")))
+      // the owner re-runs: recover() restores the partition, then the
+      // pass completes normally
+      val fs = fsOf(work)
+      SafeSwap.recover(fs, path(s"$work/live"))
+      assert(new java.io.File(s"$work/live/p=0").exists, "recovery did not restore p=0")
+      SafeSwap.swapPartitions(fs, path(s"$work/live"), path(s"$work/tmp"), Seq("p=0"))
+      assert(!aside.exists(), "the re-run left the aside dir behind")
+      assert(live(work) == expected, "crashed-then-re-run rows diverged from a clean swap")
+    } finally rm(new java.io.File(work))
   }
 
-  test("crash window 1 wholesale (dl aside): serving recovers in place") {
-    val crashed = tmpDir("graft-swap-dl")
-    val clean = tmpDir("graft-swap-dl-twin")
+  test("crash window 1 wholesale (dir aside): recover restores it in place") {
+    val work = tmpDir("graft-swap-dir")
     try {
-      buildTombstoned(crashed)
-      buildTombstoned(clean)
-      // simulate a crash in the dl swap: live dl moved aside, rewrite
-      // not yet renamed in
-      assert(new java.io.File(s"$crashed/dl")
-        .renameTo(new java.io.File(s"$crashed/dl.old")))
-      // a restarted READER hits the artifact directly: recover() must
-      // restore dl before the scan; tombstones are still present, so
-      // the serve-time anti-join keeps answers exact (= the
-      // pre-compaction tombstoned serve)
-      assert(rows(Retrieval.bm25TopKFromIndex(spark, crashed)) ==
-        rows(Retrieval.bm25TopKFromIndex(spark, clean)),
-        "serve-side recovery diverged from the uncrashed artifact")
-    } finally { rm(new java.io.File(crashed)); rm(new java.io.File(clean)) }
+      staged(work)
+      val before = live(work)
+      // the crash inside swapDir: live moved aside, next not renamed in
+      assert(new java.io.File(s"$work/live").renameTo(new java.io.File(s"$work/live.old")))
+      SafeSwap.recover(fsOf(work), path(s"$work/live"))
+      assert(!new java.io.File(s"$work/live.old").exists(), "recovery left the aside")
+      assert(live(work) == before, "recovery did not restore the live dir")
+    } finally rm(new java.io.File(work))
   }
 
   test("crash window 2 (stale aside after a completed swap): live wins") {
-    val crashed = tmpDir("graft-swap-c2")
+    val work = tmpDir("graft-swap-c2")
     try {
-      buildTombstoned(crashed)
-      Retrieval.compactPostings(spark, crashed)
-      val expected = rows(Retrieval.bm25TopKFromIndex(spark, crashed))
-      // simulate: an aside COPY lingers next to the completed swap (the
-      // crash fell between `next → live` and the aside cleanup). The
-      // aside holds pre-compaction rows — resurrecting it would serve
-      // deleted docs.
-      val buckets = new java.io.File(s"$crashed/postings").listFiles()
-        .filter(_.getName.startsWith("term_bucket=")).sortBy(_.getName)
-      val victim = buckets.head
-      val aside = new java.io.File(s"$crashed/postings.old")
-      aside.mkdirs()
-      val stale = new java.io.File(aside, victim.getName)
-      java.nio.file.Files.walk(victim.toPath).forEach { p =>
-        val dst = stale.toPath.resolve(victim.toPath.relativize(p))
-        if (java.nio.file.Files.isDirectory(p)) dst.toFile.mkdirs()
-        else java.nio.file.Files.copy(p, dst)
-      }
-      assert(rows(Retrieval.bm25TopKFromIndex(spark, crashed)) == expected,
-        "a stale aside changed the served answers")
-      assert(!new java.io.File(s"$crashed/postings.old").exists(),
-        "recovery kept the stale aside")
-    } finally { rm(new java.io.File(crashed)) }
+      val expected = staged(work)
+      val fs = fsOf(work)
+      // keep a copy of the pre-swap p=0, then swap cleanly
+      val victim = new java.io.File(s"$work/live/p=0")
+      val stale = new java.io.File(s"$work/live.old/p=0")
+      stale.mkdirs()
+      victim.listFiles().foreach(f =>
+        java.nio.file.Files.copy(f.toPath, stale.toPath.resolve(f.getName)))
+      val aside = new java.io.File(s"$work/live.old")
+      val kept = new java.io.File(s"$work/kept.old")
+      assert(aside.renameTo(kept))
+      SafeSwap.swapPartitions(fs, path(s"$work/live"), path(s"$work/tmp"), Seq("p=0"))
+      // the crash fell between `next → live` and the aside cleanup: the
+      // aside holds pre-swap rows — resurrecting them would be wrong
+      assert(kept.renameTo(aside))
+      SafeSwap.recover(fs, path(s"$work/live"))
+      assert(!aside.exists(), "recovery kept the stale aside")
+      assert(live(work) == expected, "a stale aside changed the live rows")
+    } finally rm(new java.io.File(work))
   }
 
   test("a first postings delta into an empty artifact bootstraps it") {
@@ -144,6 +133,9 @@ class SafeSwapSpec extends AnyFunSuite {
         nQueries = 20, topK = 3))
       rm(new java.io.File(s"$boot/codes"))
       rm(new java.io.File(s"$boot/vectors"))
+      // shipped books predate any version of this artifact: the first
+      // append upgrades the listing (books and meta) to v0
+      rm(new java.io.File(s"$boot/_versions"))
       Similarity.appendPqDelta(
         Similarity.unitEmbeddings(spark, dir).select("vec_id", "u"), boot)
       assert(rows(Similarity.pqTopKFromIndexCold(spark, boot,
