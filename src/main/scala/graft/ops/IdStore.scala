@@ -176,15 +176,16 @@ private[graft] object IdStore {
   private val LegacyMarkers = Seq("_append_pending", "_regeom_pending", "_retrain_pending")
 
   /** One published version of the artifact at `dir`: its number, its
-    * unique id (the memo key of every relation resolved from it — a
+    * unique id (the token of the artifact's memo slot, [[StoreMemo]] — a
     * deleted and rebuilt artifact restarts at version 0 under a fresh
     * id) and every live file, relative to `dir`, with its length. */
   final case class Version(dir: String, n: Long, id: String, files: Map[String, Long]) {
     def has(store: String): Boolean = files.keysIterator.exists(_.startsWith(store + "/"))
 
-    /** The store's rows, resolved once per (session, artifact, version). */
+    /** The store's rows, resolved once into the artifact's memo slot: a
+      * read of another version replaces the slot ([[StoreMemo]]). */
     def read(spark: SparkSession, store: String): DataFrame =
-      StoreReads.memo(spark, s"$dir@$id/$store")(
+      StoreMemo.get(spark, dir, id, s"store:$store")(
         readFiles(spark, dir, store, files.keySet, s"version $n"))
 
     def tombstones(spark: SparkSession, idCol: String): Option[DataFrame] =

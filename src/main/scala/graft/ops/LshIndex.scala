@@ -60,26 +60,7 @@ object LshIndex {
     new IdStore("vec_id", IdStore.byId("vec_id"), "meta", "buckets", "vectors")
 
   private val persistedIndex = new TempArtifacts("graft-lsh-index")
-  def releaseStages(spark: SparkSession): Int = {
-    metaCache.keySet.removeIf(_._1 eq spark)
-    qvCache.keySet.removeIf(_._1 eq spark)
-    persistedIndex.release(spark)
-  }
-
-  /** Serve-path memos, keyed by the artifact's VERSION ([[IdStore]]):
-    * any lifecycle mutation — append, tombstone, compaction, migration,
-    * regeometry rebuild — publishes a fresh version id and the next
-    * serve re-reads. Two per-serve fixed costs that cannot change
-    * between mutations: the meta row (a parquet footer + head() job per
-    * serve) and the query-vector batch (a full id-bucketed vectors-store
-    * scan, 32 tasks, to collect nQueries bounded rows — vec_id is
-    * hash-spread across dirs, so no file prune applies). */
-  private val metaCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (Int, Int)]()
-  private val qvCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int), Seq[(Long, Seq[Double])]]()
-
-  private def versionKey(v: IdStore.Version) = s"${v.dir}@${v.id}"
+  def releaseStages(spark: SparkSession): Int = persistedIndex.release(spark)
 
   /** Geometry-drift maintenance — the lifecycle step the frozen
     * (bits, nTables) otherwise lacks: bootstrap sizes geometry for the
@@ -148,9 +129,10 @@ object LshIndex {
 
   /** The frozen geometry (bits, nTables) of a published version:
     * mixing bucket keys from two geometries in one store zeroes recall
-    * across the split. */
+    * across the split. Memoized in the artifact's slot ([[StoreMemo]]):
+    * a parquet footer + head() job per serve otherwise. */
   private def readMeta(spark: SparkSession, v: IdStore.Version): (Int, Int) =
-    metaCache.computeIfAbsent((spark, versionKey(v)), _ => metaOf(v.read(spark, "meta")))
+    StoreMemo.get(spark, v.dir, v.id, "lsh.meta")(metaOf(v.read(spark, "meta")))
 
   private def metaOf(meta: DataFrame): (Int, Int) = {
     val r = meta.head()
@@ -332,16 +314,15 @@ object LshIndex {
     // uncached relation was evaluated THREE times per serve (probe
     // bucket-id collect, probe-side broadcast, rescore-side broadcast):
     // three full store scans to read 200 rows. Collect it ONCE into a
-    // local relation — memoized per (session, artifact version): repeat
-    // serves of an unmutated artifact skip the scan entirely, and any
-    // lifecycle mutation (including tombstones, which anti-join the
-    // batch) publishes a fresh version. Scale-safe: nQueries is the
-    // caller's bounded batch, the same rows the two broadcasts already
-    // shipped to every task.
+    // local relation — memoized in the artifact's slot: repeat serves
+    // of an unmutated artifact skip the scan entirely, and any lifecycle
+    // mutation (including tombstones, which anti-join the batch)
+    // publishes a fresh version. Scale-safe: nQueries is the caller's
+    // bounded batch, the same rows the two broadcasts already shipped to
+    // every task.
     import spark.implicits._
-    val qvRows = qvCache.computeIfAbsent(
-      (spark, versionKey(v), nQueries),
-      _ => vectors.where(col("vec_id") < nQueries)
+    val qvRows = StoreMemo.get(spark, v.dir, v.id, s"lsh.qv:$nQueries")(
+      vectors.where(col("vec_id") < nQueries)
         .select(col("vec_id"), col("u"))
         .as[(Long, Seq[Double])].collect().toSeq)
     val qv = qvRows.toDF("vec_id", "u")

@@ -138,18 +138,15 @@ object Similarity {
       else Nil)
   }
 
-  /** Memoized corpus row count per (session, dir) — the one scalar the
-    * adaptive LSH sizing needs. A parquet `count()` with zero projected
-    * columns is answered from footer row counts (no column IO), and a
-    * production index build knows its corpus size anyway; memoizing
-    * keeps repeated query builds in one session from re-running even
-    * that. */
-  private val corpusCountCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]()
-
+  /** Memoized corpus row count — the one scalar the adaptive LSH
+    * sizing needs. A parquet `count()` with zero projected columns is
+    * answered from footer row counts (no column IO), and a production
+    * index build knows its corpus size anyway; memoizing it in the
+    * corpus dir's slot ([[StoreMemo]]) keeps repeated query builds in
+    * one session from re-running even that. */
   private[ops] def corpusCount(spark: SparkSession, dir: String): Long =
-    corpusCountCache.computeIfAbsent((spark, StageCache.inputTag(spark, dir)),
-      _ => Tables(spark, dir, "embeddings").count()).longValue
+    StoreMemo.get(spark, dir, StageCache.inputTag(spark, dir), "corpusCount")(
+      java.lang.Long.valueOf(Tables(spark, dir, "embeddings").count())).longValue
 
   /** Derive (bits, nTables) from corpus size, holding the expected
     * bucket population ~constant: `bits = ceil(log2(n / 16))` clamped to
@@ -230,18 +227,12 @@ object Similarity {
       built
     }
 
-  /** Drop this session's resident similarity stages (LSH signatures,
-    * IVF codebook + assignment) — see [[StageCache.release]]. Next use
-    * rebuilds. */
-  def releaseStages(spark: SparkSession): Int = {
-    corpusCountCache.keySet.removeIf(_._1 eq spark)
-    pqBookCache.keySet.removeIf(_._1 eq spark)
-    pqLoadedBookCache.keySet.removeIf(_._1 eq spark)
-    // loaded-artifact relations must drop BEFORE their artifact dirs are
-    // deleted (persistedPq.release below), or a released session leaves
-    // resident plans pointing at removed paths
-    pqLoadedRelCache.release(_._1 eq spark) +
-      pqCodesCache.release(_._1 eq spark) +
+  /** Drop this session's similarity stages (LSH signatures, flat and
+    * two-level IVF centroids + assignments, PQ codes, gate reference
+    * pools, moments) and delete its persisted IVF, two-level and PQ
+    * artifacts with their memo slots ([[TempArtifacts.release]]). */
+  def releaseStages(spark: SparkSession): Int =
+    pqCodesCache.release(_._1 eq spark) +
       gateRefCache.release(_._1 eq spark) +
       lshSigCache.release(_._1 eq spark) +
       ivfCentCache.release(_._1 eq spark) +
@@ -254,7 +245,6 @@ object Similarity {
       persistedIvf.release(spark) +
       persistedPq.release(spark) +
       releaseMomentsStages(spark)
-  }
 
   /** Assign every vector of `e` (vec_id, u) to its nearest centroid of
     * `cents` (cent_id, cu): the codebook (bounded at 4096 × 64 doubles
@@ -940,8 +930,6 @@ object Similarity {
 
   // --- Product quantization (IVFADC) --------------------------------
 
-  private val pqBookCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int), graft.functions.PqBook]()
   // key = (spark, dir, nCoarse, nSub, m, k) — the FULL parameter tuple:
   // an earlier arithmetic packing (nCoarse*10000+nSub) collided for
   // values ≥ 10000 and could silently serve the wrong cached codes
@@ -978,16 +966,16 @@ object Similarity {
     * (order-free cross-engine), and a code whose cell receives no
     * vectors keeps its seed (the oracle's LEFT JOIN + coalesce). The
     * trained book is a plain JVM object of m·k·dsub doubles (32 KB at
-    * the 8×64 gate config) — a plan reference, never a relation. Keyed
-    * on (nCoarse, nSub) too: residuals are defined by the cell
+    * the 8×64 gate config) — a plan reference, never a relation,
+    * memoized in the corpus dir's slot ([[StoreMemo]]). Keyed on
+    * (nCoarse, nSub) too: residuals are defined by the cell
     * assignment. */
   private def trainPqBook(spark: SparkSession, dir: String,
       nCoarse: Int, nSub: Int, m: Int, k: Int): graft.functions.PqBook =
-    pqBookCache.computeIfAbsent(
-      (spark, s"${StageCache.inputTag(spark, dir)}#$nCoarse:$nSub", m, k), { _ =>
+    StoreMemo.get(spark, dir, StageCache.inputTag(spark, dir), s"pqBook:$nCoarse:$nSub:$m:$k") {
       val (_, subCents, assigned) = twoLevelIvfStage(spark, dir, nCoarse, nSub)
       trainPqBookOf(residualsOf(assigned, subCents), m, k)
-    })
+    }
 
   /** The PQ training pipeline over an arbitrary residual relation
     * (vec_id, …, r) — split out so the incremental artifact build
@@ -1292,50 +1280,35 @@ object Similarity {
     fresh.unpersist(blocking = false)
   }
 
-  /** The loaded-artifact caches behind warm PQ serving: the bounded book
-    * object and the four relations, each keyed by (session, indexDir,
-    * version id, part) — any write, in this process or another,
-    * publishes a new version and the next serve loads it; the
-    * superseded version's relations are dropped then. A restarted
-    * service loads the artifact ONCE and serves many
-    * batches — the round-10 shape re-read the whole artifact (book
-    * collect, codes scan, two passes over the refine store) on EVERY
-    * invocation, conflating cold start with steady state: 20.6 s per
-    * call at the 100× corpus vs 5.2 s for the live stage. Same
-    * StageCache discipline as every live index stage; the cold-start
-    * purity contract ("the load reads ONLY the artifact") is unchanged —
-    * the first call after a restart or [[releaseStages]] is exactly the
-    * cold load, and PqSpec pins the cold path ([[pqTopKFromIndexCold]])
-    * against the warm one. At a 10⁹-vector deployment the codes relation
-    * is the one that must stay hot (m bytes/row); MEMORY_AND_DISK
-    * storage lets the refine store spill while staying off the
-    * every-query re-read path. */
-  private val pqLoadedBookCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), graft.functions.PqBook]()
-  private val pqLoadedRelCache = new StageCache[(SparkSession, String, String, String)]
-
   /** Visible for specs: how many artifact relations were actually
     * loaded (vs served warm) — the load-once contract. */
-  private[ops] def pqLoadedRelBuilds = pqLoadedRelCache.builds
+  private[ops] val pqLoadedRelBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** (book, coarse, subcents, codes, vectors) of a published version of
-    * a [[savePqIndex]]-layout artifact, loaded once per (session,
-    * indexDir, version). */
+    * a [[savePqIndex]]-layout artifact — the loaded artifact behind warm
+    * PQ serving, held in the artifact's memo slot ([[StoreMemo]]): any
+    * write, in this process or another, publishes a new version, and the
+    * next serve's lookup replaces the slot, unpersisting the superseded
+    * version's relations, and loads the new one. A restarted service
+    * loads the artifact ONCE and serves many batches — the round-10
+    * shape re-read the whole artifact (book collect, codes scan, two
+    * passes over the refine store) on EVERY invocation, conflating cold
+    * start with steady state: 20.6 s per call at the 100× corpus vs
+    * 5.2 s for the live stage. Same StageCache discipline as every live
+    * index stage; the cold-start purity contract ("the load reads ONLY
+    * the artifact") is unchanged — the first call after a restart or a
+    * session release is exactly the cold load, and PqSpec pins the cold
+    * path ([[pqTopKFromIndexCold]]) against the warm one. At a
+    * 10⁹-vector deployment the codes relation is the one that must stay
+    * hot (m bytes/row); MEMORY_AND_DISK storage lets the refine store
+    * spill while staying off the every-query re-read path. */
   private def loadedPqIndex(spark: SparkSession, v: IdStore.Version)
       : (graft.functions.PqBook, DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val key = (spark, v.dir, v.id)
-    if (!pqLoadedBookCache.containsKey(key)) {
-      // first load of this version: the artifact's older versions are
-      // superseded for good, so their resident relations go
-      pqLoadedBookCache.keySet.removeIf(k => k._1 == spark && k._2 == v.dir)
-      pqLoadedRelCache.release(k => k._1 == spark && k._2 == v.dir && k._3 != v.id)
-    }
-    val book = pqLoadedBookCache.computeIfAbsent(key, _ => readPqBook(v.read(spark, "pqbook")))
+    val book = StoreMemo.get(spark, v.dir, v.id, "pq.book")(readPqBook(v.read(spark, "pqbook")))
     def rel(part: String)(load: => DataFrame): DataFrame =
-      pqLoadedRelCache.getOrBuild((spark, v.dir, v.id, part)) {
-        val built = load.cache()
-        built.count()
-        built
+      StoreMemo.cached(spark, v.dir, v.id, s"pq.$part") {
+        pqLoadedRelBuilds.incrementAndGet()
+        load
       }
     val coarse = rel("coarse")(v.read(spark, "coarse"))
     val subCents = rel("subcents")(v.read(spark, "subcents"))

@@ -92,7 +92,7 @@ object Sketches {
     val guarded =
       if (!hasDayPartitions(fs, dailyPath)) deltaEvents
       else {
-        val indexed = StoreReads.parquet(spark, s"$indexDir/daily").select("day").distinct()
+        val indexed = dailyOf(spark, indexDir).select("day").distinct()
         deltaEvents
           .withColumn("day", to_date(col("ts")))
           .join(indexed, Seq("day"), "left_anti")
@@ -114,7 +114,7 @@ object Sketches {
   def distinctUsersFromRollup(spark: SparkSession, indexDir: String,
       ranges: Seq[(Long, String, String)]): DataFrame =
     ranges.map { case (rid, from, until) =>
-      StoreReads.parquet(spark, s"$indexDir/daily")
+      dailyOf(spark, indexDir)
         .where(col("day") >= lit(from) && col("day") < lit(until))
         .groupBy("event_type")
         .agg(
@@ -170,15 +170,21 @@ object Sketches {
   private[ops] def rollupDirFor(spark: SparkSession, key: String): Option[String] =
     rollupArtifacts.peek(spark, key)
 
+  /** The session's rollup of the whole events table. */
+  private def fullRollup(spark: SparkSession, dir: String): String =
+    rollupArtifacts.getOrCreate(spark, s"$dir#rollup-full")(
+      saveDailyRollup(Tables.events(spark, dir), _))
+
+  /** A rollup's `daily` store through its memo slot ([[StoreMemo]]). */
+  private def dailyOf(spark: SparkSession, indexDir: String): DataFrame =
+    StoreMemo.parquet(spark, s"$indexDir/daily")
+
   /** q148: distinct users per (date range, event_type) served from the
     * persisted daily HLL rollup, verdict-gated against the exact
     * answers from the raw table. */
   def sketchDistinctRollup(spark: SparkSession, dir: String,
       ranges: Seq[(Long, String, String)] = DefaultRanges): DataFrame = {
-    val indexDir = rollupArtifacts.getOrCreate(spark, s"$dir#rollup-full") { tmp =>
-      saveDailyRollup(Tables.events(spark, dir), tmp)
-    }
-    verdictOver(spark, dir, indexDir, ranges)
+    verdictOver(spark, dir, fullRollup(spark, dir), ranges)
   }
 
   /** q149: the INCREMENTALLY BUILT rollup under q148's oracle — base
@@ -211,10 +217,7 @@ object Sketches {
       weekA: (String, String) = ("2024-01-08", "2024-01-15"),
       weekB: (String, String) = ("2024-01-15", "2024-01-22")): DataFrame = {
     import graft.functions.ThetaFunctions._
-    val indexDir = rollupArtifacts.getOrCreate(spark, s"$dir#rollup-full") { tmp =>
-      saveDailyRollup(Tables.events(spark, dir), tmp)
-    }
-    val daily = StoreReads.parquet(spark, s"$indexDir/daily")
+    val daily = dailyOf(spark, fullRollup(spark, dir))
     val approx = mergedThetaWeek(daily, weekA._1, weekA._2, "sk_a")
       .join(mergedThetaWeek(daily, weekB._1, weekB._2, "sk_b"), Seq("event_type"))
       .select(col("event_type"),
@@ -255,10 +258,7 @@ object Sketches {
     * gate, as with every timestamp gate here). */
   def rollingActives(spark: SparkSession, dir: String,
       windowDays: Int = 7): DataFrame = {
-    val indexDir = rollupArtifacts.getOrCreate(spark, s"$dir#rollup-full") { tmp =>
-      saveDailyRollup(Tables.events(spark, dir), tmp)
-    }
-    val daily = StoreReads.parquet(spark, s"$indexDir/daily")
+    val daily = dailyOf(spark, fullRollup(spark, dir))
       .select(col("day"), col("users_hll"))
     val anchors = daily.select(col("day").as("anchor")).distinct()
     val windowed = anchors.join(daily,
@@ -310,10 +310,7 @@ object Sketches {
       weekA: (String, String) = ("2024-01-08", "2024-01-15"),
       weekB: (String, String) = ("2024-01-15", "2024-01-22")): DataFrame = {
     import graft.functions.ThetaFunctions._
-    val indexDir = rollupArtifacts.getOrCreate(spark, s"$dir#rollup-full") { tmp =>
-      saveDailyRollup(Tables.events(spark, dir), tmp)
-    }
-    val daily = StoreReads.parquet(spark, s"$indexDir/daily")
+    val daily = dailyOf(spark, fullRollup(spark, dir))
     val approx = mergedThetaWeek(daily, weekA._1, weekA._2, "sk_a")
       .join(mergedThetaWeek(daily, weekB._1, weekB._2, "sk_b"), Seq("event_type"))
       .select(col("event_type"),
@@ -379,7 +376,7 @@ object Sketches {
     val dailyPath = new org.apache.hadoop.fs.Path(s"$indexDir/daily")
     val fs = dailyPath.getFileSystem(spark.sessionState.newHadoopConf())
     if (!hasDayPartitions(fs, dailyPath)) return Nil
-    val stored = StoreReads.parquet(spark, s"$indexDir/daily")
+    val stored = dailyOf(spark, indexDir)
       .groupBy("day").agg(sum("n_events").as("stored_n"))
     recountEvents
       .groupBy(to_date(col("ts")).as("day")).agg(count(lit(1)).as("recount_n"))
@@ -445,10 +442,7 @@ object Sketches {
       ranges: Seq[(Long, String, String)] = DefaultRanges,
       mult: Int = 2): DataFrame = {
     import graft.functions.FreqFunctions._
-    val indexDir = rollupArtifacts.getOrCreate(spark, s"$dir#rollup-full") { tmp =>
-      saveDailyRollup(Tables.events(spark, dir), tmp)
-    }
-    val daily = StoreReads.parquet(spark, s"$indexDir/daily")
+    val daily = dailyOf(spark, fullRollup(spark, dir))
     val ev = Tables.events(spark, dir).withColumn("day", to_date(col("ts")))
     ranges.map { case (rid, from, until) =>
       val merged = daily.where(col("day") >= lit(from) && col("day") < lit(until))
@@ -505,10 +499,7 @@ object Sketches {
   def kllRangeQuantiles(spark: SparkSession, dir: String,
       ranges: Seq[(Long, String, String)] = DefaultRanges): DataFrame = {
     import graft.functions.KllFunctions._
-    val indexDir = rollupArtifacts.getOrCreate(spark, s"$dir#rollup-full") { tmp =>
-      saveDailyRollup(Tables.events(spark, dir), tmp)
-    }
-    val daily = StoreReads.parquet(spark, s"$indexDir/daily")
+    val daily = dailyOf(spark, fullRollup(spark, dir))
     val ev = Tables.events(spark, dir).withColumn("day", to_date(col("ts")))
     val eps = 0.05
     def rankOk(phi: Double, lt: org.apache.spark.sql.Column,

@@ -70,20 +70,29 @@ private[graft] object StageCache {
     }
     dir + "#" + java.lang.Long.toHexString(acc)
   }
+
+  /** A cached, counted relation. `orig` is what the builder cached
+    * (registered in the CacheManager: liveness checks and unpersist go
+    * through it); `serve` is the same relation REBASED onto its
+    * InMemoryRelation leaf ([[org.apache.spark.sql.graft.StagePlans.fromCache]])
+    * — what consumers get. Serving the leaf instead of the full build
+    * lineage collapses per-consumer Catalyst analysis/canonicalization
+    * from the stage's whole build tree to one leaf node: the ANN/hybrid
+    * gate family was spending 10-25x more driver time re-planning
+    * staged lineages than running tasks (q140: 1.5 s wall, 0.06 s job
+    * time). */
+  final case class Resident(orig: DataFrame, serve: DataFrame) {
+    def live: Boolean = orig.storageLevel.useMemory
+  }
+
+  object Resident {
+    def apply(built: DataFrame): Resident =
+      Resident(built, org.apache.spark.sql.graft.StagePlans.fromCache(built).getOrElse(built))
+  }
 }
 
 private[graft] final class StageCache[K] {
-  /** `orig` is what the builder cached (registered in the CacheManager:
-    * liveness checks and unpersist go through it); `serve` is the same
-    * relation REBASED onto its InMemoryRelation leaf
-    * ([[org.apache.spark.sql.graft.StagePlans.fromCache]]) — what
-    * consumers get. Serving the leaf instead of the full build lineage
-    * collapses per-consumer Catalyst analysis/canonicalization from the
-    * stage's whole build tree to one leaf node: the ANN/hybrid gate
-    * family was spending 10-25x more driver time re-planning staged
-    * lineages than running tasks (q140: 1.5 s wall, 0.06 s job time). */
-  private case class Entry(orig: DataFrame, serve: DataFrame)
-  private val map = new java.util.concurrent.ConcurrentHashMap[K, Entry]()
+  private val map = new java.util.concurrent.ConcurrentHashMap[K, StageCache.Resident]()
 
   /** Number of times a stage was actually built (not served) — specs pin
     * the sharing contract ("N queries, one build") on this. */
@@ -91,16 +100,14 @@ private[graft] final class StageCache[K] {
 
   def getOrBuild(key: K)(build: => DataFrame): DataFrame = {
     val hit = map.get(key)
-    if (hit != null && hit.orig.storageLevel.useMemory) return hit.serve
+    if (hit != null && hit.live) return hit.serve
     synchronized {
       val again = map.get(key)
-      if (again != null && again.orig.storageLevel.useMemory) return again.serve
+      if (again != null && again.live) return again.serve
       builds.incrementAndGet()
-      val built = build
-      val serve = org.apache.spark.sql.graft.StagePlans.fromCache(built)
-        .getOrElse(built)
-      map.put(key, Entry(built, serve))
-      serve
+      val built = StageCache.Resident(build)
+      map.put(key, built)
+      built.serve
     }
   }
 
@@ -122,9 +129,10 @@ private[graft] final class StageCache[K] {
   * contract (a gated query may be invoked repeatedly) meets the
   * write-once index lifecycle via the same memoization discipline as
   * [[StageCache]], and [[release]] is the matching retirement: the
-  * artifact dir is DELETED with the session's stages, so a regenerated
-  * corpus under the same path can never be served stale answers by the
-  * persisted serving shape while the live shapes rebuild. */
+  * artifact dir is DELETED with the session's stages (and its memo
+  * slots, [[StoreMemo.forget]]), so a regenerated corpus under the
+  * same path can never be served stale answers by the persisted
+  * serving shape while the live shapes rebuild. */
 private[ops] final class TempArtifacts(prefix: String) {
   private val dirs =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
@@ -167,19 +175,17 @@ private[ops] final class TempArtifacts(prefix: String) {
     Option(dirs.get((spark, tagged(spark, dir))))
 
   /** Drop every artifact owned by `spark`: map entry removed (releasing
-    * the session reference) and the on-disk dir deleted. */
+    * the session reference), memo slots under it forgotten, then the
+    * on-disk dir deleted. */
   def release(spark: SparkSession): Int = {
-    val it = dirs.entrySet().iterator()
-    var n = 0
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq spark) {
-        TempArtifacts.deleteRecursively(java.nio.file.Paths.get(e.getValue))
-        it.remove()
-        n += 1
+    import scala.jdk.CollectionConverters._
+    dirs.keySet.asScala.filter(_._1 eq spark).toVector.count { k =>
+      Option(dirs.remove(k)).exists { d =>
+        StoreMemo.forget(spark, d)
+        TempArtifacts.deleteRecursively(java.nio.file.Paths.get(d))
+        true
       }
     }
-    n
   }
 }
 
@@ -197,38 +203,82 @@ private[ops] object TempArtifacts {
   }
 }
 
-/** Memoized RESOLVED parquet relations, keyed by (session, content tag
-  * of the path, or an artifact store's version id). `spark.read.parquet` pays a file listing plus a
-  * schema-inference job (one footer-reading Spark job, ~40-50 ms of
-  * driver+schedule latency) on EVERY call — and every query invocation
-  * re-loads each table it touches, so a 6-table join paid six such jobs
-  * per run (measured: warm q05 wall 1.8 s with 0.46 s of task time, six
-  * `parquet at Tables.scala` jobs in the profile). The memo returns the
-  * already-analyzed DataFrame — same immutable logical plan, resolved
-  * file index and schema — and the content tag ([[StageCache.inputTag]])
-  * keys mutation out: any rewrite/append under the path mints a fresh
-  * key and the next read re-lists. This memoizes METADATA (a plan),
-  * never data or results — the relation recomputes from parquet on
-  * every action, exactly like Spark's own
-  * `filesourcePartitionFileCacheSize` listing cache. */
-private[ops] object StoreReads {
-  private val map =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+/** The one memo of reads of stored data: one SLOT per (session, stored
+  * path), holding named parts read from the path as of one token — an
+  * artifact's version id ([[IdStore.Version]]) or a plain parquet dir's
+  * content tag ([[StageCache.inputTag]]). A lookup under another token
+  * replaces the whole slot and unpersists its cached relations, so a
+  * path published to again and again holds one generation. Tokens are
+  * compared for equality only: a deleted and rebuilt artifact restarts
+  * at version 0 under a fresh id. Parts are resolved relations (a plan,
+  * never data: `spark.read.parquet` pays a listing plus a
+  * schema-inference job per call), driver-side values and [[cached]]
+  * relations. */
+private[ops] object StoreMemo {
+  private final class Slot(val token: String) {
+    val parts = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+    def drop(): Unit = synchronized(parts.values.forEach {
+      case r: StageCache.Resident => r.orig.unpersist(blocking = false)
+      case _ =>
+    })
+  }
 
+  private val slots = new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Slot]()
+
+  /** The part `load` makes of `path` as of `token`, loaded once; a
+    * cached relation whose cache was dropped is reloaded, and a load
+    * that raced a replacement or a release retries on the current slot. */
+  def get[T <: AnyRef](spark: SparkSession, path: String, token: String, part: String)(
+      load: => T): T = {
+    val key = (spark, path)
+    var replaced: Slot = null
+    val slot = slots.compute(key, (_, old) =>
+      if (old != null && old.token == token) old else { replaced = old; new Slot(token) })
+    if (replaced != null) replaced.drop()
+    def live(v: AnyRef) = v match { case r: StageCache.Resident => r.live; case _ => v != null }
+    // reentrant: a load may read other parts of its own slot
+    val got = slot.synchronized {
+      if (slots.get(key) ne slot) null
+      else Option(slot.parts.get(part)).filter(live).getOrElse {
+        val v = load
+        slot.parts.put(part, v)
+        v
+      }
+    }
+    if (got == null) get(spark, path, token, part)(load) else got.asInstanceOf[T]
+  }
+
+  /** The relation `load` resolves, kept resident under [[StageCache]]'s
+    * rules. */
+  def cached(spark: SparkSession, path: String, token: String, part: String)(
+      load: => DataFrame): DataFrame =
+    get(spark, path, token, part) {
+      val built = load.cache()
+      built.count()
+      StageCache.Resident(built)
+    }.serve
+
+  /** A plain parquet dir's resolved relation. */
   def parquet(spark: SparkSession, path: String): DataFrame =
-    memo(spark, StageCache.inputTag(spark, path))(spark.read.parquet(path))
+    get(spark, path, StageCache.inputTag(spark, path), "parquet")(spark.read.parquet(path))
 
-  /** The relation `load` resolves, memoized under a caller-made content
-    * key — an artifact store's is its version id
-    * ([[IdStore.Version.read]]), so no listing is needed to key it. */
-  def memo(spark: SparkSession, key: String)(load: => DataFrame): DataFrame =
-    map.computeIfAbsent((spark, key), _ => load)
+  /** Visible for specs: the session's slots, path → token. */
+  def slotsOf(spark: SparkSession): Map[String, String] = {
+    import scala.jdk.CollectionConverters._
+    slots.asScala.collect { case ((s, p), slot) if s eq spark => p -> slot.token }.toMap
+  }
 
-  def release(spark: SparkSession): Int = {
-    var n = 0
-    val it = map.keySet().iterator()
-    while (it.hasNext) { if (it.next()._1 eq spark) { it.remove(); n += 1 } }
-    n
+  /** Forget the session's slots at `dir` and under it. */
+  def forget(spark: SparkSession, dir: String): Int =
+    remove(k => (k._1 eq spark) && (k._2 == dir || k._2.startsWith(dir + "/")))
+
+  def release(spark: SparkSession): Int = remove(_._1 eq spark)
+
+  private def remove(owns: ((SparkSession, String)) => Boolean): Int = {
+    import scala.jdk.CollectionConverters._
+    slots.keySet.asScala.filter(owns).toVector.count { k =>
+      Option(slots.remove(k)).exists { s => s.drop(); true }
+    }
   }
 }
 
@@ -242,5 +292,5 @@ object StageRegistry {
       Sketches.releaseSession(spark) + ImageIndex.releaseStages(spark) +
       LshIndex.releaseStages(spark) + Hybrid.releaseStages(spark) +
       Pipeline.releaseStages(spark) + Export.releaseStages(spark) +
-      StoreReads.release(spark)
+      StoreMemo.release(spark)
 }

@@ -12,10 +12,10 @@ object Tables {
     * gets Spark's own loud TIMESTAMP(NANOS) rejection, never a silent
     * long where the caller expected an error). */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    // memoized resolved relation (metadata only — see [[StoreReads]]):
+    // memoized resolved relation (metadata only — see [[StoreMemo]]):
     // every query invocation re-loaded each table it touches, paying a
     // listing + schema-inference job per table per run
-    StoreReads.parquet(spark, s"$dir/$name.parquet")
+    StoreMemo.parquet(spark, s"$dir/$name.parquet")
 
   /** Spread a scan across the cluster when the file layout under-splits
     * it (a single small parquet file = one task, which serializes any

@@ -79,7 +79,7 @@ class AppendCrashWindowsSpec extends AnyFunSuite {
         s"${f.name}: the retried append diverged from the clean twin")
       assert(Unpublished.unnamed(spark, inc).isEmpty,
         s"${f.name}: the crashed writers' files survived the retried append")
-      val g = spark.read.parquet(s"$inc/${f.guard}")
+      val g = IdStore.latest(spark, inc).read(spark, f.guard)
       assert(g.count() == g.select(f.guardKey).distinct().count(),
         s"${f.name}: duplicate ${f.guardKey} rows in the guard store")
     } finally { rm(new java.io.File(inc)); rm(new java.io.File(twin)) }

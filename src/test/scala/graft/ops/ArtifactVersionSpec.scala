@@ -10,8 +10,8 @@ import graft.TestSpark
   * readers read exactly the latest published version and never write;
   * a writer's unpublished files are invisible until it publishes, and
   * the next writer removes them; two writers on one version cannot both
-  * publish; memo keys are version ids, so a deleted-and-rebuilt artifact
-  * is never served stale; an artifact written before the log is
+  * publish; memo slots carry version ids, so a deleted-and-rebuilt
+  * artifact is never served stale; an artifact written before the log is
   * upgraded by its first writer, or refused naming the leftover. */
 class ArtifactVersionSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -103,32 +103,50 @@ class ArtifactVersionSpec extends AnyFunSuite {
   }
 
   test("two concurrent appends: a lost lease fails fast, and its re-run loses no rows") {
-    val out = tmpDir("graft-version-race")
-    val twin = tmpDir("graft-version-race-twin")
-    val third = pmod(col("doc_id"), lit(3))
-    val (base, a, b) = (docs.where(third === 0), docs.where(third === 1), docs.where(third === 2))
-    try {
-      Retrieval.savePostingsIndexOf(base, out)
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      val runs = Seq(a, b).map(d =>
-        d -> Future(scala.util.Try(Retrieval.appendPostingsDelta(d, out))))
-      for ((delta, run) <- runs) Await.result(run, Duration.Inf).failed.foreach {
-        case e: IllegalStateException =>
-          assert(e.getMessage.contains(out),
-            s"the lost lease must name the artifact: ${e.getMessage}")
-          Retrieval.appendPostingsDelta(delta, out)
-        case e => throw e
-      }
-      Retrieval.savePostingsIndexOf(base, twin)
-      Retrieval.appendPostingsDelta(a, twin)
-      Retrieval.appendPostingsDelta(b, twin)
-      assert(rows(Retrieval.bm25TopKFromIndex(spark, out)) ==
-        rows(Retrieval.bm25TopKFromIndex(spark, twin)),
-        "concurrent appends lost or doubled rows")
-      assert(Unpublished.unnamed(spark, out).isEmpty, "a refused append left files behind")
-    } finally { rm(new java.io.File(out)); rm(new java.io.File(twin)) }
+    // every doc probed under a fresh id, so each held doc flags
+    val shifted = docs.select(col("doc_id") + 100000L as "doc_id", col("text"))
+    // (family, input, its id, base build, append, serve): the input splits
+    // three ways by id — the base, then two deltas raced against each other
+    val cases: Seq[(String, DataFrame, String, (DataFrame, String) => Unit,
+        (DataFrame, String) => Unit, String => Seq[String])] = Seq(
+      ("bm25", docs, "doc_id", Retrieval.savePostingsIndexOf,
+        Retrieval.appendPostingsDelta, d => rows(Retrieval.bm25TopKFromIndex(spark, d))),
+      ("lsh", vecs, "vec_id", LshIndex.saveLshIndexOf(_, _, 8, 8),
+        LshIndex.appendLshDelta(_, _), d => rows(LshIndex.lshTopKFromIndex(spark, d))),
+      ("pq", vecs, "vec_id", Similarity.savePqIndexOf(_, _, 4, 2, 4, 16),
+        Similarity.appendPqDelta, d => rows(Similarity.pqTopKFromIndex(spark, d))),
+      ("image", docs, "doc_id",
+        (b, d) => ImageIndex.saveImageHashIndexOf(Multimodal.imageHashesOf(b), d),
+        ImageIndex.appendImageHashDelta, d => rows(ImageIndex.probeImages(shifted, d))),
+      ("fp", docs, "doc_id", FingerprintIndex.saveFingerprintIndexOf,
+        FingerprintIndex.appendFingerprintDelta,
+        d => rows(FingerprintIndex.probeFingerprints(shifted, d))))
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    for ((name, input, id, build, append, serve) <- cases) {
+      val out = tmpDir(s"graft-version-race-$name")
+      val twin = tmpDir(s"graft-version-race-$name-twin")
+      val Seq(base, a, b) = (0 to 2).map(p => input.where(pmod(col(id), lit(3)) === p))
+      try {
+        build(base, out)
+        val runs = Seq(a, b).map(d => d -> Future(scala.util.Try(append(d, out))))
+        for ((delta, run) <- runs) Await.result(run, Duration.Inf).failed.foreach {
+          case e: IllegalStateException =>
+            assert(e.getMessage.contains(out),
+              s"$name: the lost lease must name the artifact: ${e.getMessage}")
+            append(delta, out)
+          case e => throw e
+        }
+        build(base, twin)
+        append(a, twin)
+        append(b, twin)
+        val answer = serve(out)
+        assert(answer.nonEmpty && answer == serve(twin),
+          s"$name: concurrent appends lost or doubled rows")
+        assert(Unpublished.unnamed(spark, out).isEmpty, s"$name: a refused append left files behind")
+      } finally { rm(new java.io.File(out)); rm(new java.io.File(twin)) }
+    }
   }
 
   test("an artifact deleted and rebuilt under the same path serves its new answers") {
@@ -203,7 +221,7 @@ class ArtifactVersionSpec extends AnyFunSuite {
       assert(rows(LshIndex.lshTopKFromIndex(spark, inc)) ==
         rows(LshIndex.lshTopKFromIndex(spark, full)),
         "the retried append diverged from a full rebuild")
-      val b = spark.read.parquet(s"$inc/buckets")
+      val b = IdStore.latest(spark, inc).read(spark, "buckets")
       assert(b.count() == b.dropDuplicates("vec_id", "tbl", "bucket").count(),
         "duplicate bucket rows survived the retried append")
     } finally { rm(new java.io.File(inc)); rm(new java.io.File(full)) }

@@ -36,14 +36,14 @@ class FingerprintIndexSpec extends AnyFunSuite {
       val delta = split.where(col("incoming")).select("doc_id", "text")
       FingerprintIndex.appendFingerprintDelta(delta, inc)
       FingerprintIndex.saveFingerprintIndexOf(docs, full)
-      def rows(d: String) = spark.read.parquet(s"$d/fingerprints")
+      def rows(d: String) = IdStore.latest(spark, d).read(spark, "fingerprints")
         .select("doc_id", "fp", "fp_bucket")
         .collect().map(_.toString).toSeq.sorted
       assert(rows(inc) == rows(full),
         "bootstrap + delta diverged from a monolithic build")
-      val before = spark.read.parquet(s"$inc/fingerprints").count()
+      val before = IdStore.latest(spark, inc).read(spark, "fingerprints").count()
       FingerprintIndex.appendFingerprintDelta(delta, inc) // the retry
-      assert(spark.read.parquet(s"$inc/fingerprints").count() == before,
+      assert(IdStore.latest(spark, inc).read(spark, "fingerprints").count() == before,
         "a replayed delta re-admitted held docs")
     } finally { rm(new java.io.File(inc)); rm(new java.io.File(full)) }
   }
@@ -106,7 +106,7 @@ class FingerprintIndexSpec extends AnyFunSuite {
     val out = tmpDir("graft-fpidx-compact")
     try {
       FingerprintIndex.saveFingerprintIndexOf(docs, out)
-      val victim = spark.read.parquet(s"$out/fingerprints")
+      val victim = IdStore.latest(spark, out).read(spark, "fingerprints")
         .agg(min(col("doc_id"))).as[Long].head()
       FingerprintIndex.tombstoneDocs(Seq(victim).toDF("doc_id"), out)
       val heldText = docs.where(col("doc_id") === 1L)

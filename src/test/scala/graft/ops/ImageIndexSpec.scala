@@ -78,9 +78,9 @@ class ImageIndexSpec extends AnyFunSuite {
       assert(rows(ImageIndex.imageDupsFromIndex(spark, inc)) ==
         rows(ImageIndex.imageDupsFromIndex(spark, full)),
         "merged artifact diverged from a full rebuild")
-      val before = spark.read.parquet(s"$inc/hashes").count()
+      val before = IdStore.latest(spark, inc).read(spark, "hashes").count()
       ImageIndex.appendImageHashDelta(delta, inc) // the production retry
-      assert(spark.read.parquet(s"$inc/hashes").count() == before,
+      assert(IdStore.latest(spark, inc).read(spark, "hashes").count() == before,
         "a replayed delta re-indexed already-held docs")
       assert(rows(ImageIndex.imageDupsFromIndex(spark, inc)) ==
         rows(ImageIndex.imageDupsFromIndex(spark, full)),
@@ -121,7 +121,7 @@ class ImageIndexSpec extends AnyFunSuite {
       // a single-doc delete touches <= 8 of the 16 band buckets — the
       // locality claim needs untouched buckets to survive byte-identical
       import spark.implicits._
-      val victim = spark.read.parquet(s"$out/hashes")
+      val victim = IdStore.latest(spark, out).read(spark, "hashes")
         .agg(min(col("doc_id"))).as[Long].head()
       ImageIndex.tombstoneImages(Seq(victim).toDF("doc_id"), out)
       val withTombstones = rows(ImageIndex.imageDupsFromIndex(spark, out))

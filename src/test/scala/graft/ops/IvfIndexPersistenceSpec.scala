@@ -82,8 +82,8 @@ class IvfIndexPersistenceSpec extends AnyFunSuite {
       Similarity.tombstoneVectors(dead, tmp)
       val served = Similarity.twoLevelTopKFromIndex(spark, tmp, nQueries = 50)
         .collect().map(_.toSeq).toSeq
-      val touched = spark.read.parquet(s"$tmp/assignments")
-        .join(spark.read.parquet(s"$tmp/tombstones"), Seq("vec_id"))
+      val touched = IdStore.latest(spark, tmp).read(spark, "assignments")
+        .join(IdStore.latest(spark, tmp).read(spark, "tombstones"), Seq("vec_id"))
         .select(col("cent_id").cast("long")).distinct()
         .collect().map(_.getLong(0)).toSet
       assert(touched.nonEmpty, "the fixture delete set must touch some cells")
@@ -158,9 +158,9 @@ class IvfIndexPersistenceSpec extends AnyFunSuite {
       Similarity.saveIvfIndexOf(base, inc)
       Similarity.appendIvfDelta(e.where(col("incoming")).select("vec_id", "u"), inc)
       // a replayed delta is a no-op
-      val before = spark.read.parquet(s"$inc/assignments").count()
+      val before = IdStore.latest(spark, inc).read(spark, "assignments").count()
       Similarity.appendIvfDelta(e.where(col("incoming")).select("vec_id", "u"), inc)
-      assert(spark.read.parquet(s"$inc/assignments").count() == before,
+      assert(IdStore.latest(spark, inc).read(spark, "assignments").count() == before,
         "a replayed delta re-assigned already-held vectors")
       Similarity.tombstoneVectors(e.where(col("deleted")).select("vec_id"), inc)
       Similarity.appendIvfDelta(
@@ -176,7 +176,7 @@ class IvfIndexPersistenceSpec extends AnyFunSuite {
       val survivors = e.where(!(col("deleted") &&
           pmod(col("vec_id") * lit(104729L), lit(100)) >= 50))
         .select("vec_id", "u")
-      val cents = spark.read.parquet(s"$inc/centroids")
+      val cents = IdStore.latest(spark, inc).read(spark, "centroids")
       cents.write.mode("overwrite").parquet(s"$ref/centroids")
       // re-assign survivors under the SAME frozen book via the append
       // path into an artifact holding only the codebook

@@ -48,7 +48,7 @@ class LshIndexSpec extends AnyFunSuite {
         rows(Similarity.lshTopK(spark, dir)),
         "artifact serve diverged from the live session-stage path")
       // the frozen geometry must be the adaptive one the live path used
-      val meta = spark.read.parquet(s"$out/meta").head()
+      val meta = IdStore.latest(spark, out).read(spark, "meta").head()
       assert((meta.getAs[Int]("bits"), meta.getAs[Int]("n_tables")) == ((8, 8)),
         "gate-scale geometry must sit on the 8x8 adaptive plateau")
     } finally rm(new java.io.File(out))
@@ -67,9 +67,9 @@ class LshIndexSpec extends AnyFunSuite {
       assert(rows(LshIndex.lshTopKFromIndex(spark, inc)) ==
         rows(LshIndex.lshTopKFromIndex(spark, full)),
         "merged artifact diverged from a full rebuild")
-      val before = spark.read.parquet(s"$inc/vectors").count()
+      val before = IdStore.latest(spark, inc).read(spark, "vectors").count()
       LshIndex.appendLshDelta(delta, inc) // the production retry
-      assert(spark.read.parquet(s"$inc/vectors").count() == before,
+      assert(IdStore.latest(spark, inc).read(spark, "vectors").count() == before,
         "a replayed delta re-indexed already-held vectors")
       assert(rows(LshIndex.lshTopKFromIndex(spark, inc)) ==
         rows(LshIndex.lshTopKFromIndex(spark, full)),
@@ -107,7 +107,7 @@ class LshIndexSpec extends AnyFunSuite {
     try {
       LshIndex.saveLshIndex(spark, dir, out)
       import spark.implicits._
-      val victim = spark.read.parquet(s"$out/vectors")
+      val victim = IdStore.latest(spark, out).read(spark, "vectors")
         .agg(min(col("vec_id"))).as[Long].head()
       LshIndex.tombstoneVectors(Seq(victim).toDF("vec_id"), out)
       val withTombstones = rows(LshIndex.lshTopKFromIndex(spark, out))

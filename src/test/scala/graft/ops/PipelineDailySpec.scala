@@ -38,14 +38,14 @@ class PipelineDailySpec extends AnyFunSuite {
       assert(Export.verifyShards(spark, s"$work/shards").isEmpty,
         "the shipped shards failed their own integrity check")
       def snapshot() = (
-        spark.read.parquet(s"$work/bm25/dl").count(),
-        spark.read.parquet(s"$work/bm25/postings").count(),
-        spark.read.parquet(s"$work/images/hashes").count(),
-        spark.read.parquet(s"$work/lsh/vectors").count(),
-        spark.read.parquet(s"$work/lsh/buckets").count(),
-        spark.read.parquet(s"$work/pq/codes").count(),
-        spark.read.parquet(s"$work/pq/vectors").count(),
-        spark.read.parquet(s"$work/fp/fingerprints").count(),
+        stored(work, "bm25", "dl").count(),
+        stored(work, "bm25", "postings").count(),
+        stored(work, "images", "hashes").count(),
+        stored(work, "lsh", "vectors").count(),
+        stored(work, "lsh", "buckets").count(),
+        stored(work, "pq", "codes").count(),
+        stored(work, "pq", "vectors").count(),
+        stored(work, "fp", "fingerprints").count(),
         spark.read.parquet(s"$work/rollup/daily")
           .select(date_format(col("day"), "yyyy-MM-dd"), col("event_type"),
             col("n_events"), hll_sketch_estimate(col("users_hll")))
@@ -82,27 +82,27 @@ class PipelineDailySpec extends AnyFunSuite {
     val work = tmpDir("graft-daily-incr")
     try {
       Pipeline.runDaily(spark, dir, work, batchPct = 30)
-      val afterDay1 = spark.read.parquet(s"$work/bm25/dl").count()
+      val afterDay1 = stored(work, "bm25", "dl").count()
       // day 2: a wider split — the extra docs are day 2's fresh batch,
       // day 1's docs replay straight into the guard
-      val pqAfterDay1 = spark.read.parquet(s"$work/pq/vectors").count()
-      val booksDay1 = spark.read.parquet(s"$work/pq/pqbook")
+      val pqAfterDay1 = stored(work, "pq", "vectors").count()
+      val booksDay1 = stored(work, "pq", "pqbook")
         .orderBy("j", "code").collect().map(_.toString).toSeq
       Pipeline.runDaily(spark, dir, work, batchPct = 60)
-      val afterDay2 = spark.read.parquet(s"$work/bm25/dl").count()
+      val afterDay2 = stored(work, "bm25", "dl").count()
       assert(afterDay2 > afterDay1, "day 2's fresh docs never landed")
-      val dl = spark.read.parquet(s"$work/bm25/dl")
+      val dl = stored(work, "bm25", "dl")
       assert(dl.count() == dl.select("doc_id").distinct().count(),
         "a replayed doc double-indexed across days")
       // the trained family: day 2 encodes its fresh vectors UNDER DAY
       // 1'S FROZEN BOOKS (no retrain — the codebook-drift contract),
       // and the replayed day-1 vectors hit the guard
-      assert(spark.read.parquet(s"$work/pq/vectors").count() > pqAfterDay1,
+      assert(stored(work, "pq", "vectors").count() > pqAfterDay1,
         "day 2's fresh vectors never reached the compressed artifact")
-      assert(spark.read.parquet(s"$work/pq/pqbook")
+      assert(stored(work, "pq", "pqbook")
           .orderBy("j", "code").collect().map(_.toString).toSeq == booksDay1,
         "a later day RETRAINED the frozen PQ books")
-      val pqv = spark.read.parquet(s"$work/pq/vectors")
+      val pqv = stored(work, "pq", "vectors")
       assert(pqv.count() == pqv.select("vec_id").distinct().count(),
         "a replayed vector double-encoded across days")
     } finally rm(new java.io.File(work))
@@ -139,7 +139,7 @@ class PipelineDailySpec extends AnyFunSuite {
     val work = tmpDir("graft-daily-pqcrash")
     try {
       Pipeline.runDaily(spark, dir, work)
-      val codesBefore = spark.read.parquet(s"$work/pq/codes")
+      val codesBefore = stored(work, "pq", "codes")
         .orderBy("vec_id").collect().map(_.toString).toSeq
       // plant the window: savePqIndexOf writes vectors LAST
       // (coarse, subcents, pqbook, codes, vectors), so a crash there
@@ -152,12 +152,12 @@ class PipelineDailySpec extends AnyFunSuite {
       // published version) — the append path's replay guard IS the
       // missing vectors store and would re-append every day-1 code row,
       // double-serving them in the ADC shortlist
-      val codes = spark.read.parquet(s"$work/pq/codes")
+      val codes = stored(work, "pq", "codes")
       assert(codes.count() == codes.select("vec_id").distinct().count(),
         "the retried day double-appended day-1 code rows")
       assert(codes.orderBy("vec_id").collect().map(_.toString).toSeq == codesBefore,
         "the deterministic retrain diverged from the first build")
-      val pqv = spark.read.parquet(s"$work/pq/vectors").select("vec_id")
+      val pqv = stored(work, "pq", "vectors").select("vec_id")
       assert(pqv.join(codes.select("vec_id"), Seq("vec_id"), "left_anti").count() == 0 &&
           codes.select("vec_id").join(pqv, Seq("vec_id"), "left_anti").count() == 0,
         "refine store and codes store disagree after the recovered build")

@@ -125,15 +125,15 @@ class PostingsIndexPersistenceSpec extends AnyFunSuite {
         .select("doc_id", "text"), base)
       val delta = docs.where(col("incoming")).select("doc_id", "text")
       Retrieval.appendPostingsDelta(delta, base)
-      val postings1 = spark.read.parquet(s"$base/postings").count()
-      val dl1 = spark.read.parquet(s"$base/dl").count()
+      val postings1 = IdStore.latest(spark, base).read(spark, "postings").count()
+      val dl1 = IdStore.latest(spark, base).read(spark, "dl").count()
       val answers1 = Retrieval.bm25TopKFromIndex(spark, base).collect().toSeq
       // the retry/replay a production ingest eventually does: the SAME
       // batch merged again must change nothing (the anti-join guard)
       Retrieval.appendPostingsDelta(delta, base)
-      assert(spark.read.parquet(s"$base/postings").count() == postings1,
+      assert(IdStore.latest(spark, base).read(spark, "postings").count() == postings1,
         "a replayed merge double-wrote postings")
-      assert(spark.read.parquet(s"$base/dl").count() == dl1,
+      assert(IdStore.latest(spark, base).read(spark, "dl").count() == dl1,
         "a replayed merge double-wrote dl rows")
       val answers2 = Retrieval.bm25TopKFromIndex(spark, base).collect().toSeq
       assert(answers1.nonEmpty && answers1 == answers2,
@@ -191,8 +191,8 @@ class PostingsIndexPersistenceSpec extends AnyFunSuite {
       val served = Retrieval.bm25TopKFromIndex(spark, idx).collect().toSeq
       // which buckets hold a dead doc's postings — the ONLY ones
       // compaction may touch
-      val touched = spark.read.parquet(s"$idx/postings")
-        .join(spark.read.parquet(s"$idx/tombstones"), Seq("doc_id"))
+      val touched = IdStore.latest(spark, idx).read(spark, "postings")
+        .join(IdStore.latest(spark, idx).read(spark, "tombstones"), Seq("doc_id"))
         .select(col("term_bucket").cast("long")).distinct()
         .collect().map(_.getLong(0)).toSet
       assert(touched.nonEmpty, "the fixture delete set must touch some buckets")

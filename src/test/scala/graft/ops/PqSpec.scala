@@ -96,15 +96,15 @@ class PqSpec extends AnyFunSuite {
         e.where(!col("incoming")).select("vec_id", "u"), tmp)
       val delta = e.where(col("incoming")).select("vec_id", "u")
       Similarity.appendPqDelta(delta, tmp)
-      val codes1 = spark.read.parquet(s"$tmp/codes").count()
-      val vecs1 = spark.read.parquet(s"$tmp/vectors").count()
+      val codes1 = IdStore.latest(spark, tmp).read(spark, "codes").count()
+      val vecs1 = IdStore.latest(spark, tmp).read(spark, "vectors").count()
       val answers1 = Similarity.pqTopKFromIndexCold(spark, tmp, nQueries = 30)
         .collect().map(_.toSeq).toSeq
       // the retry a production ingest eventually does: same batch again
       Similarity.appendPqDelta(delta, tmp)
-      assert(spark.read.parquet(s"$tmp/codes").count() == codes1,
+      assert(IdStore.latest(spark, tmp).read(spark, "codes").count() == codes1,
         "a replayed merge double-wrote codes")
-      assert(spark.read.parquet(s"$tmp/vectors").count() == vecs1,
+      assert(IdStore.latest(spark, tmp).read(spark, "vectors").count() == vecs1,
         "a replayed merge double-wrote the refine store")
       val answers2 = Similarity.pqTopKFromIndexCold(spark, tmp, nQueries = 30)
         .collect().map(_.toSeq).toSeq
@@ -272,8 +272,8 @@ class PqSpec extends AnyFunSuite {
       // explained energy for the appended half is exactly 0, so the
       // live mean collapses to ~0.5e6 — a ≥1.5× decay
       Similarity.appendPqDelta(oneHots(200, 399, "32 + pmod(vec_id, 8)"), tmp)
-      val live = spark.read.parquet(s"$tmp/codes").count()
-      val trained = spark.read.parquet(s"$tmp/meta").head().getAs[Long]("n_trained")
+      val live = IdStore.latest(spark, tmp).read(spark, "codes").count()
+      val trained = IdStore.latest(spark, tmp).read(spark, "meta").head().getAs[Long]("n_trained")
       assert(live < 2L * trained, "the growth trigger would mask the quality probe")
       val ran = Similarity.maintainPqCodebooks(spark, tmp)
       assert(ran.isDefined,

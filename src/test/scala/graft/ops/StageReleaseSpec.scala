@@ -35,6 +35,20 @@ class StageReleaseSpec extends AnyFunSuite {
     assert(StageRegistry.releaseSession(spark) === 0)
   }
 
+  test("a family's release leaves no memo slot over the artifact dirs it deletes") {
+    StageRegistry.releaseSession(spark)
+    Similarity.pqTopKPersisted(spark, dir, nQueries = 20).count()
+    def gone = StoreMemo.slotsOf(spark).keySet.filterNot(p => new java.io.File(p).exists)
+    val artifacts = StoreMemo.slotsOf(spark).keySet
+      .filter(p => new java.io.File(p).getName.startsWith("graft-pq-index"))
+    assert(artifacts.nonEmpty, "the persisted PQ serve memoized nothing: the check is vacuous")
+    Similarity.releaseStages(spark)
+    assert(artifacts.forall(p => !new java.io.File(p).exists), "the release kept the PQ artifact")
+    assert(gone.isEmpty, s"memo slots name deleted dirs: ${gone.mkString(", ")}")
+    assert(StageRegistry.releaseSession(spark) >= 1)
+    assert(StageRegistry.releaseSession(spark) === 0)
+  }
+
   test("the span family shares ONE winnow stage build, released via the registry") {
     TextAnalysis.releaseStages(spark)
     val b0 = TextAnalysis.winnowBuilds.get()

@@ -26,7 +26,7 @@ class TwoLevelIncrementalSpec extends AnyFunSuite {
   }
 
   private def assignmentsOf(dir: String): Set[(Long, Long, Long)] =
-    spark.read.parquet(s"$dir/assignments")
+    IdStore.latest(spark, dir).read(spark, "assignments")
       .select(col("vec_id"), col("cent_id").cast("long"), col("sub_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
@@ -61,7 +61,7 @@ class TwoLevelIncrementalSpec extends AnyFunSuite {
 
       // merge cost ∝ |delta|: partitions with no delta rows were not
       // rewritten — their file lists are unchanged after the append
-      val deltaCells = spark.read.parquet(s"$monoDir/assignments")
+      val deltaCells = IdStore.latest(spark, monoDir).read(spark, "assignments")
         .join(delta.select("vec_id"), Seq("vec_id"))
         .select(col("cent_id").cast("long")).distinct()
         .collect().map(_.getLong(0)).toSet
@@ -72,9 +72,9 @@ class TwoLevelIncrementalSpec extends AnyFunSuite {
 
       // the retry a production ingest eventually does: re-merging the
       // SAME batch is a no-op (the anti-join replay guard)
-      val rowsBefore = spark.read.parquet(s"$incrDir/assignments").count()
+      val rowsBefore = IdStore.latest(spark, incrDir).read(spark, "assignments").count()
       Similarity.appendTwoLevelDelta(delta, incrDir)
-      assert(spark.read.parquet(s"$incrDir/assignments").count() == rowsBefore,
+      assert(IdStore.latest(spark, incrDir).read(spark, "assignments").count() == rowsBefore,
         "a replayed merge double-wrote assignment rows")
       assert(assignmentsOf(incrDir) == assignmentsOf(monoDir),
         "a replayed merge changed the inverted file")

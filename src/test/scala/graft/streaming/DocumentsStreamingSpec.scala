@@ -186,7 +186,7 @@ class DocumentsStreamingSpec extends AnyFunSuite {
       .select("probe_id").as[Long].collect().toSet
     assert(flaggedIds.contains(1000001L),
       s"an exact copy of a held doc was not flagged: $flaggedIds")
-    val admitted = spark.read.parquet(s"$fpDir/fingerprints")
+    val admitted = graft.ops.IdStore.latest(spark, fpDir).read(spark, "fingerprints")
       .select("doc_id").as[Long].collect().toSet
     assert(!admitted.contains(1000001L), "a held-corpus duplicate was admitted")
     assert(admitted.contains(1000002L) && !admitted.contains(1000003L),
@@ -195,7 +195,7 @@ class DocumentsStreamingSpec extends AnyFunSuite {
     // both artifacts hold exactly the same admitted doc set, and it is
     // the expected one: quality-passing arrivals, minus held-fp dups,
     // one keeper per fingerprint
-    val dlIds = spark.read.parquet(s"$postingsDir/dl")
+    val dlIds = graft.ops.IdStore.latest(spark, postingsDir).read(spark, "dl")
       .select("doc_id").as[Long].collect().toSet
     assert(dlIds == admitted ++ base.select("doc_id").as[Long].collect().toSet,
       "postings and fingerprint artifacts disagree on membership")
@@ -204,9 +204,9 @@ class DocumentsStreamingSpec extends AnyFunSuite {
     // full redelivery from a fresh checkpoint + direct single-trigger
     // redelivery: both artifacts frozen
     def state(): (Long, Long, Long) = (
-      spark.read.parquet(s"$fpDir/fingerprints").count(),
-      spark.read.parquet(s"$postingsDir/dl").count(),
-      spark.read.parquet(s"$postingsDir/postings").count())
+      graft.ops.IdStore.latest(spark, fpDir).read(spark, "fingerprints").count(),
+      graft.ops.IdStore.latest(spark, postingsDir).read(spark, "dl").count(),
+      graft.ops.IdStore.latest(spark, postingsDir).read(spark, "postings").count())
     val s1 = state()
     val q2 = DocumentsStreaming.documentIngestAdmit(stream, postingsDir, fpDir,
       flagsDir, work.resolve("ckpt2").toString)

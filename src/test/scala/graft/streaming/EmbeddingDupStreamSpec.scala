@@ -193,7 +193,7 @@ class EmbeddingDupStreamSpec extends AnyFunSuite {
     try q.processAllAvailable() finally q.stop()
 
     def store(d: String, s: String, cols: Seq[String]): Seq[String] =
-      spark.read.parquet(s"$d/$s").select(cols.map(col): _*)
+      graft.ops.IdStore.latest(spark, d).read(spark, s).select(cols.map(col): _*)
         .collect().map(_.toString).toSeq.sorted
     def artifactState(d: String): Seq[Seq[String]] = Seq(
       store(d, "vectors", Seq("vec_id")),
@@ -218,7 +218,7 @@ class EmbeddingDupStreamSpec extends AnyFunSuite {
       unit.where(arrivalRule).join(flaggedIds, Seq("vec_id"), "left_anti"), twin)
     assert(streamedState == artifactState(twin),
       "the stream-maintained artifact diverged from the one-batch twin")
-    assert(spark.read.parquet(s"$idx/vectors").count() >
+    assert(graft.ops.IdStore.latest(spark, idx).read(spark, "vectors").count() >
       unit.where(!arrivalRule).count(),
       "the stream admitted nothing — the gate-then-admit loop never ran")
 

@@ -166,7 +166,7 @@ class ImageDupStreamSpec extends AnyFunSuite {
     try q.processAllAvailable() finally q.stop()
 
     def store(d: String, s: String, cols: Seq[String]): Seq[String] =
-      spark.read.parquet(s"$d/$s").select(cols.map(col): _*)
+      graft.ops.IdStore.latest(spark, d).read(spark, s).select(cols.map(col): _*)
         .collect().map(_.toString).toSeq.sorted
     def state(d: String): Seq[Seq[String]] = Seq(
       store(d, "hashes", Seq("doc_id", "a_hi", "a_lo", "d_hi", "d_lo")),
@@ -186,7 +186,7 @@ class ImageDupStreamSpec extends AnyFunSuite {
       arrivals.join(flagged, Seq("doc_id"), "left_anti"), twin)
     assert(streamedState == state(twin),
       "the stream-maintained image artifact diverged from the one-batch twin")
-    assert(spark.read.parquet(s"$idx/hashes").count() >
+    assert(graft.ops.IdStore.latest(spark, idx).read(spark, "hashes").count() >
       docs.where(!arrivalRule).count(),
       "the stream admitted nothing — the image admit loop never ran")
 

@@ -36,18 +36,18 @@ class MultiModalAdmitSpec extends AnyFunSuite {
       .where(pmod(col("doc_id"), lit(3)) === 0) // a third of the corpus
 
   private def store(d: String, s: String, cols: Seq[String]): Seq[String] =
-    spark.read.parquet(s"$d/$s").select(cols.map(col): _*)
+    graft.ops.IdStore.latest(spark, d).read(spark, s).select(cols.map(col): _*)
       .collect().map(_.toString).toSeq.sorted
 
   private def artifactState(d: String): Seq[Seq[String]] = Seq(
-    store(d, "bm25/dl", Seq("doc_id")),
-    store(d, "bm25/postings", Seq("doc_id", "term", "tf")),
-    store(d, "fp/fingerprints", Seq("doc_id", "fp")),
-    store(d, "images/hashes", Seq("doc_id", "a_hi", "a_lo", "d_hi", "d_lo")),
-    store(d, "lsh/vectors", Seq("vec_id")),
-    store(d, "lsh/buckets", Seq("vec_id", "tbl", "bucket")),
-    store(d, "pq/vectors", Seq("vec_id")),
-    store(d, "pq/codes", Seq("vec_id", "cent_id", "sub_id", "codes")))
+    store(s"$d/bm25", "dl", Seq("doc_id")),
+    store(s"$d/bm25", "postings", Seq("doc_id", "term", "tf")),
+    store(s"$d/fp", "fingerprints", Seq("doc_id", "fp")),
+    store(s"$d/images", "hashes", Seq("doc_id", "a_hi", "a_lo", "d_hi", "d_lo")),
+    store(s"$d/lsh", "vectors", Seq("vec_id")),
+    store(s"$d/lsh", "buckets", Seq("vec_id", "tbl", "bucket")),
+    store(s"$d/pq", "vectors", Seq("vec_id")),
+    store(s"$d/pq", "codes", Seq("vec_id", "cent_id", "sub_id", "codes")))
 
   test("N mixed triggers equal batch admits on every artifact; redelivery and a mid-trigger crash converge") {
     val root = Files.createTempDirectory("graft-mm-admit")
@@ -100,7 +100,7 @@ class MultiModalAdmitSpec extends AnyFunSuite {
       assert(artifactState(work) == artifactState(twin),
         "a crash between family appends did not converge on redelivery")
       // no family double-admitted a doc across the crash + retry
-      val dl = spark.read.parquet(s"$work/bm25/dl")
+      val dl = graft.ops.IdStore.latest(spark, s"$work/bm25").read(spark, "dl")
       assert(dl.count() == dl.select("doc_id").distinct().count(),
         "the crashed trigger's retry double-indexed a doc")
     } finally rm(root.toFile)
