@@ -2,7 +2,9 @@ package graft.ops
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The store lifecycle the persisted index families share — BM25
   * postings ([[Retrieval]]), image hashes ([[ImageIndex]]), LSH vectors
@@ -154,6 +156,22 @@ private[graft] object IdStore {
 
     def bucketsOf(rows: DataFrame): Seq[Long] =
       rows.select(bucket).distinct().collect().map(_.getLong(0)).toSeq
+
+    /** [[bucket]] of one row's key values, computed on the driver with no
+      * job: catalyst's `XXH64` chained over the keys from seed 42, as
+      * `xxhash64` hashes them (a string by its UTF-8 bytes, a long by its
+      * value), then `pmod`. */
+    def bucketOf(values: Any*): Long = {
+      val h = values.foldLeft(42L) {
+        case (seed, s: String) =>
+          val u = UTF8String.fromString(s)
+          XXH64.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.numBytes, seed)
+        case (seed, l: Long) => XXH64.hashLong(l, seed)
+        case (_, v) => throw new IllegalArgumentException(
+          s"no driver hash for $v (key of $column): strings and longs only")
+      }
+      java.lang.Math.floorMod(h, modulus.toLong)
+    }
 
     def write(rows: DataFrame, path: String): Unit =
       rows.withColumn(column, bucket)

@@ -1,8 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Sparse-lexical retrieval over the `documents` table — the BM25 layer a
   * training-data pipeline uses for eval-set mining, hard-negative mining,
@@ -136,10 +138,10 @@ object Retrieval {
       built
     }
 
-  /** Indexed-serving artifacts: (postings, per-doc lengths), both
-    * session-cached. */
+  /** Indexed-serving artifacts: the session-cached postings and the
+    * corpus stats of the session-cached per-doc lengths. */
   private[ops] def indexStages(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    (postingsStage(spark, dir), dlStage(spark, dir))
+    (postingsStage(spark, dir), corpusStats(dlStage(spark, dir)))
 
   /** Persist the BM25 index (postings + doc lengths) as parquet — the
     * lifecycle step the session-cached [[postingsStage]] lacks: a
@@ -196,8 +198,8 @@ object Retrieval {
     * row-identical to a full rebuild — [[bm25TopKFromIndex]] answers
     * over the merged artifact are therefore EQUAL to full-rebuild
     * answers, which is what the q133 gate pins under q110's own oracle
-    * (corpus stats n_docs/Σdl re-derive from the merged dl relation at
-    * query time, so they update for free). Replay-safe: doc_ids already
+    * (corpus stats n_docs/Σdl re-derive from the merged dl relation once
+    * per published version, so they update for free). Replay-safe: doc_ids already
     * in the artifact's dl relation are anti-joined out of the delta up
     * front — one column-pruned scan of the per-doc dl file plus a join
     * ∝ |delta| — so the retry/replay a production ingest eventually
@@ -222,8 +224,8 @@ object Retrieval {
     * the delete set lands as appended rows in `$indexDir/tombstones`
     * (cost ∝ |deletes|, nothing on disk rewritten — the same
     * append-economics argument as the postings delta), and serving
-    * anti-joins it out ([[bm25TopKFromIndex]]): postings after the
-    * term-bucket prune (so the anti-join touches only probed rows) and
+    * drops it ([[bm25TopKFromIndex]]): from the candidate postings after
+    * the term-bucket prune (so only probed rows are touched) and from
     * the dl relation before corpus stats (so n_docs/avgdl/df shrink
     * exactly as a rebuild's would — base − deleted + delta ≡ rebuild,
     * which is what the q142 gate pins under q110's oracle). Idempotent
@@ -361,49 +363,170 @@ object Retrieval {
     * corpus relation in the plan at all (the restarted-service shape).
     * Answers are pinned IDENTICAL to the live [[bm25TopK]] modes
     * (PostingsIndexPersistenceSpec; the q127 gate runs this under
-    * q110's own oracle). The query batch's term buckets are computed
-    * from a LOCAL relation (bounded by the batch, no corpus work) and
-    * pushed as a static `term_bucket IN (...)` partition filter, so the
-    * scan reads only the probed directories. */
+    * q110's own oracle).
+    *
+    * The query text is tokenized and its terms hashed to their
+    * `term_bucket`s on the driver ([[IdStore.Layout.bucketOf]]), so the
+    * call runs no Spark job. When the probed buckets' postings files
+    * plus the tombstones total under [[DriverRankBytes]] (the version
+    * names every file's length, so no listing), the request is answered
+    * on the driver at its first action: ONE job reads the query terms'
+    * `(doc_id, term, tf, dl)` rows from the probed directories, and df,
+    * the integer-micro BM25 and the per-query top-k run in the JVM
+    * ([[rankedOnDriver]]), against the version's corpus stats and dead
+    * set memoized once per version. The rows come back ranked as a
+    * local relation with no sort above it. Over the bound the
+    * distributed [[rankedFromIndex]] plan serves, with the same
+    * answer. */
   def bm25TopKFromIndex(spark: SparkSession, indexDir: String,
       queries: Seq[(Int, String)] = DefaultQueries,
-      topK: Int = 5, salts: Int = 32): DataFrame = {
-    import spark.implicits._
-    val queryTerms = queries.toDF("query_id", "qtext")
-      .select(col("query_id").cast("long").as("query_id"),
-        explode(TextAnalysis.tokens(col("qtext"))).as("term"))
-      .distinct()
-    rankedFromIndex(spark, indexDir, queryTerms, topK, salts, excludeSelf = false)
-  }
+      topK: Int = 5, salts: Int = 32): DataFrame =
+    servedFromIndex(spark, indexDir, queries, topK, salts, DriverRankBytes)
 
-  /** BM25 ranking from a persisted artifact for an arbitrary
-    * (query_id, term) relation — the from-index engine of
-    * [[bm25TopKFromIndex]] (literal queries) and the hybrid fusion's
-    * lexical pool ([[Hybrid.rrfTopKFromIndexes]], corpus-derived
-    * queries). The corpus is structurally unreachable (the by-name docs
-    * argument throws if analyzed). */
-  private[ops] def rankedFromIndex(spark: SparkSession, indexDir: String,
-      queryTerms: DataFrame, topK: Int, salts: Int,
-      excludeSelf: Boolean): DataFrame = {
+  /** Probed postings plus tombstone bytes under which a request ranks
+    * on the driver: the rows it collects (candidates and dead ids) come
+    * from these files only, so the bound caps the driver's share. */
+  private val DriverRankBytes = 8L << 20
+
+  /** [[bm25TopKFromIndex]] with the driver-path byte bound as an
+    * argument, so specs can force either path. */
+  private[ops] def servedFromIndex(spark: SparkSession, indexDir: String,
+      queries: Seq[(Int, String)], topK: Int, salts: Int, driverBytes: Long): DataFrame = {
     // exactly the latest published version's files: a writer's
     // unpublished files are invisible, and nothing here writes
     val v = IdStore.latest(spark, indexDir)
-    val buckets = TermLayout.bucketsOf(queryTerms) // local relation: no corpus scan
-    val postingsLive = v.read(spark, "postings")
+    val terms = queryTermsOf(queries)
+    val buckets = terms.map(t => TermLayout.bucketOf(t._2)).distinct
+    val probed = buckets.map(b => s"postings/${TermLayout.column}=$b/") :+ "tombstones/"
+    val bytes = v.files.iterator.collect { case (f, len) if probed.exists(f.startsWith) => len }.sum
+    if (bytes < driverBytes)
+      org.apache.spark.sql.graft.DriverRows(spark, RankedSchema)(
+        rankedOnDriver(spark, v, terms, topK))
+    else {
+      import spark.implicits._
+      rankedFromVersion(spark, v, terms.toDF("query_id", "term"), buckets, topK, salts,
+        excludeSelf = false)
+    }
+  }
+
+  /** The distinct (query_id, term) pairs of literal queries, tokenized on
+    * the driver by the kernel [[TextAnalysis.tokens]] runs. */
+  private[ops] def queryTermsOf(queries: Seq[(Int, String)]): Seq[(Long, String)] =
+    queries.flatMap { case (q, text) =>
+      if (text == null) Nil
+      else graft.core.TextNorm.splitWhitespaceUtf8(UTF8String.fromString(text))
+        .array.toSeq.map(t => (q.toLong, t.toString))
+    }.distinct
+
+  /** The ranked relation's schema, as [[rankTopK]] emits it. */
+  private val RankedSchema = StructType(Seq(
+    StructField("query_id", LongType, nullable = false),
+    StructField("doc_id", LongType),
+    StructField("score", DoubleType),
+    StructField("rank", LongType, nullable = false)))
+
+  /** The candidate read of a driver-ranked request: the query terms'
+    * postings rows, from the directories of their `term_bucket`s only. */
+  private[ops] def candidates(spark: SparkSession, v: IdStore.Version,
+      terms: Seq[(Long, String)]): DataFrame = {
+    val words = terms.map(_._2).distinct
+    v.read(spark, "postings")
+      .where(col(TermLayout.column).isin(words.map(TermLayout.bucketOf(_)).distinct: _*) &&
+        col("term").isin(words: _*))
+      .select(col("doc_id"), col("term"), col("tf"), col("dl"))
+  }
+
+  /** [[bm25Scored]] + [[rankTopK]] over the candidate rows in the JVM,
+    * expression for expression: the same association order, `log` as
+    * catalyst's `Log` computes it (`StrictMath.log`), and `round` as
+    * catalyst rounds a double ([[roundHalfUp]]). Per-term weights are
+    * integer micros, so their sum is exact in any order. */
+  private def rankedOnDriver(spark: SparkSession, v: IdStore.Version,
+      terms: Seq[(Long, String)], topK: Int): Seq[Row] = {
+    val dead = deadIds(spark, v)
+    val cand = if (terms.isEmpty) Array.empty[Row]
+      else candidates(spark, v, terms).collect().filterNot(r => dead(r.getLong(0)))
+    // read only when some candidate needs a weight
+    lazy val (nDocs, avgdl) = {
+      val stats = corpusStatsOf(spark, v)
+      (stats.getLong(0), stats.getLong(1) * 1.0 / stats.getLong(0))
+    }
+    // candidates are unique per (doc, term): the row count is the df
+    val df = cand.groupBy(_.getString(1)).map { case (t, rs) => t -> rs.length.toLong }
+    val queriesOf = terms.groupMap(_._2)(_._1)
+    val sm = scala.collection.mutable.HashMap.empty[(Long, Long), Long]
+    cand.foreach { r =>
+      val (doc, term, tf, dl) = (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))
+      val idf = StrictMath.log((nDocs - df(term) + 0.5) / (df(term) + 0.5) + 1.0)
+      val w = roundHalfUp(idf * (tf * 2.2) /
+        (tf + 1.2 * (0.25 + 0.75 * dl / avgdl)) * 1e6, 0).toLong
+      queriesOf(term).foreach(q => sm((q, doc)) = sm.getOrElse((q, doc), 0L) + w)
+    }
+    sm.toSeq.groupBy(_._1._1).toSeq.sortBy(_._1).flatMap { case (q, hits) =>
+      hits.map { case ((_, doc), s) => (doc, s) }
+        .sortWith { case ((d1, s1), (d2, s2)) => s1 > s2 || (s1 == s2 && d1 < d2) }
+        .take(topK).zipWithIndex.map { case ((doc, s), i) =>
+          Row(q, doc, roundHalfUp(s / 1000000.0, 4), i + 1L)
+        }
+    }
+  }
+
+  /** catalyst's `round(x, scale)` of a double: its decimal string,
+    * rounded HALF_UP. */
+  private def roundHalfUp(x: Double, scale: Int): Double =
+    if (x.isNaN || x.isInfinite) x
+    else BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** (n_docs, sum_dl) of a dl relation, as one row. */
+  private def corpusStats(dl: DataFrame): DataFrame =
+    dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
+
+  /** The version's corpus stats net of its tombstones, computed once per
+    * published version into the artifact's memo slot. */
+  private def corpusStatsOf(spark: SparkSession, v: IdStore.Version): Row =
+    StoreMemo.get(spark, v.dir, v.id, "bm25:corpus")(
+      // the dl store in its public (doc_id, dl) shape: the physical
+      // `id_bucket` partition column never leaks into corpus stats
+      corpusStats(store.live(v.read(spark, "dl").drop("id_bucket"),
+        v.tombstones(spark, "doc_id"))).head())
+
+  /** The version's tombstoned ids, collected once per published version
+    * into the artifact's memo slot. */
+  private def deadIds(spark: SparkSession, v: IdStore.Version): Set[Long] =
+    StoreMemo.get(spark, v.dir, v.id, "bm25:dead")(
+      v.tombstones(spark, "doc_id").fold(Set.empty[Long])(_.collect().map(_.getLong(0)).toSet))
+
+  /** BM25 ranking from a persisted artifact for an arbitrary
+    * (query_id, term) relation — the distributed from-index engine: the
+    * hybrid fusion's lexical pool ([[Hybrid.rrfTopKFromIndexes]],
+    * corpus-derived queries) and [[bm25TopKFromIndex]] over its driver
+    * bound. The query batch's term buckets are computed from its
+    * bounded relation and pushed as a static `term_bucket IN (...)`
+    * partition filter, so the scan reads only the probed directories.
+    * The corpus is structurally unreachable (the by-name docs argument
+    * throws if analyzed). */
+  private[ops] def rankedFromIndex(spark: SparkSession, indexDir: String,
+      queryTerms: DataFrame, topK: Int, salts: Int,
+      excludeSelf: Boolean): DataFrame =
+    rankedFromVersion(spark, IdStore.latest(spark, indexDir), queryTerms,
+      TermLayout.bucketsOf(queryTerms), topK, salts, excludeSelf)
+
+  private def rankedFromVersion(spark: SparkSession, v: IdStore.Version,
+      queryTerms: DataFrame, buckets: Seq[Long], topK: Int, salts: Int,
+      excludeSelf: Boolean): DataFrame = {
+    val postings = v.read(spark, "postings")
       .where(col(TermLayout.column).isin(buckets: _*))
       // dl rides on every posting row (the store writes it) — reading it
       // here lets the ranker skip the per-doc dl join entirely
       .select(col("doc_id"), col("term"), col("tf"), col("dl"))
     // tombstoned docs drop out at serve time: postings AFTER the bucket
-    // prune (the anti-join touches only probed rows), dl BEFORE corpus
-    // stats (n_docs/avgdl/df shrink exactly as a rebuild's would)
-    val dead = v.tombstones(spark, "doc_id")
-    // the dl store in its public (doc_id, dl) shape: the physical
-    // `id_bucket` partition column never leaks into corpus stats
-    val dl = v.read(spark, "dl").drop("id_bucket")
+    // prune (the anti-join touches only probed rows); the corpus stats
+    // are the version's, net of the same tombstones
+    val stats = corpusStatsOf(spark, v)
     bm25Rank(
       sys.error("the persisted-index path must not touch the corpus"),
-      Some((store.live(postingsLive, dead), store.live(dl, dead))),
+      Some((store.live(postings, v.tombstones(spark, "doc_id")),
+        spark.createDataFrame(java.util.List.of(stats), stats.schema))),
       queryTerms, topK, salts, excludeSelf = excludeSelf)
   }
 
@@ -447,15 +570,10 @@ object Retrieval {
     // so the tokenize plan must not even be ANALYZED when an index is
     // supplied
     lazy val toks = docs.select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
-    val dlRel = index match {
-      case Some((_, d)) => d
-      case None => toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-    }
-
-    // 1-row corpus stats; avgdl written as sum*1.0/count in BOTH engines
-    val corpus = dlRel.agg(
-      count(lit(1)).as("n_docs"),
-      sum(col("dl")).as("sum_dl"))
+    // 1-row corpus stats (an index brings its own); avgdl written as
+    // sum*1.0/count in BOTH engines
+    val corpus = index.fold(
+      corpusStats(toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))))(_._2)
       .withColumn("avgdl", col("sum_dl") * lit(1.0) / col("n_docs"))
 
     // candidate postings: only (doc, term) pairs where term is a query

@@ -36,13 +36,30 @@ class PostingsIndexPersistenceSpec extends AnyFunSuite {
         .filter(_.getName.startsWith("term_bucket=")).map(_.getName).toSet
       assert(parts.nonEmpty && parts.size <= 64,
         s"expected <=64 term-bucket partitions, got ${parts.size}")
-      // pruning: the from-index scan reads only the probed buckets (the
+      // pruning: the candidate read (the one scan of a driver-ranked
+      // request, whose own relation is a local one) carries the
+      // term_bucket partition filter and reads exactly the directories
+      // Spark's own bucket expression names for the query terms (the
       // DefaultQueries batch has ~12 distinct terms, far fewer than the
       // populated buckets at this corpus)
-      val scanned = Retrieval.bm25TopKFromIndex(spark, tmp)
-        .queryExecution.executedPlan.toString()
-      assert(scanned.contains("term_bucket"),
-        "the bucket partition filter vanished from the from-index plan")
+      import org.apache.spark.sql.execution.FileSourceScanExec
+      import org.apache.spark.sql.functions._
+      import spark.implicits._
+      val terms = Retrieval.queryTermsOf(Retrieval.DefaultQueries)
+      val read = Retrieval.candidates(spark, IdStore.latest(spark, tmp), terms)
+      assert(read.collect().nonEmpty)
+      val scan = read.queryExecution.executedPlan.collectFirst { case s: FileSourceScanExec => s }
+        .getOrElse(fail("the candidate read has no file scan"))
+      assert(scan.partitionFilters.exists(_.references.exists(_.name == "term_bucket")),
+        "the bucket partition filter vanished from the candidate read's plan")
+      val readBuckets = scan.relation.location.listFiles(scan.partitionFilters, Nil)
+        .map(_.values.getInt(0).toLong).toSet
+      val probed = terms.map(_._2).toDF("term")
+        .select(pmod(xxhash64(col("term")), lit(64L))).collect().map(_.getLong(0)).toSet
+      val held = parts.map(_.stripPrefix("term_bucket=").toLong)
+      assert(readBuckets.nonEmpty && readBuckets == probed.intersect(held),
+        s"the candidate read scans buckets $readBuckets, the query terms probe $probed")
+      assert(readBuckets.size < held.size, "the candidate read pruned no bucket")
     } finally {
       def rm(f: java.io.File): Unit = {
         if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
