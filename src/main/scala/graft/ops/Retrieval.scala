@@ -366,18 +366,18 @@ object Retrieval {
     * q110's own oracle).
     *
     * The query text is tokenized and its terms hashed to their
-    * `term_bucket`s on the driver ([[IdStore.Layout.bucketOf]]), so the
-    * call runs no Spark job. When the probed buckets' postings files
+    * `term_bucket`s on the driver ([[IdStore.Layout.bucketOf]]), so
+    * planning runs no Spark job. When the probed buckets' postings files
     * plus the tombstones total under [[DriverRankBytes]] (the version
-    * names every file's length, so no listing), the request is answered
-    * on the driver at its first action: ONE job reads the query terms'
-    * `(doc_id, term, tf, dl)` rows from the probed directories, and df,
-    * the integer-micro BM25 and the per-query top-k run in the JVM
-    * ([[rankedOnDriver]]), against the version's corpus stats and dead
-    * set memoized once per version. The rows come back ranked as a
-    * local relation with no sort above it. Over the bound the
-    * distributed [[rankedFromIndex]] plan serves, with the same
-    * answer. */
+    * names every file's length, so no listing), the call answers on the
+    * driver: ONE job reads the query terms' `(doc_id, term, tf, dl)` rows
+    * from the probed directories, and df, the integer-micro BM25 and the
+    * per-query top-k run in the JVM ([[rankedOnDriver]]), against the
+    * version's corpus stats and dead set memoized once per version. The
+    * ranked rows come back as a local relation (`createDataFrame`) with
+    * no sort above it, so collecting it runs no further job. Over the
+    * bound the distributed [[rankedFromIndex]] plan serves, with the
+    * same answer, as a lazy plan. */
   def bm25TopKFromIndex(spark: SparkSession, indexDir: String,
       queries: Seq[(Int, String)] = DefaultQueries,
       topK: Int = 5, salts: Int = 32): DataFrame =
@@ -385,7 +385,12 @@ object Retrieval {
 
   /** Probed postings plus tombstone bytes under which a request ranks
     * on the driver: the rows it collects (candidates and dead ids) come
-    * from these files only, so the bound caps the driver's share. */
+    * from these files only, so the bound caps the driver's heap. It is
+    * not a speed crossover: swept on a 4-core host over a 200k-document
+    * store (`Bm25BoundSweep`), the driver path beat the distributed plan
+    * at every probed size up to the whole 25.7 MB store (0.9 s against
+    * 1.7 s there). At the bound a request's collected rows hold about
+    * 15 MB of driver heap (1.2–1.8 bytes per probed byte). */
   private val DriverRankBytes = 8L << 20
 
   /** [[bm25TopKFromIndex]] with the driver-path byte bound as an
@@ -397,16 +402,21 @@ object Retrieval {
     val v = IdStore.latest(spark, indexDir)
     val terms = queryTermsOf(queries)
     val buckets = terms.map(t => TermLayout.bucketOf(t._2)).distinct
-    val probed = buckets.map(b => s"postings/${TermLayout.column}=$b/") :+ "tombstones/"
-    val bytes = v.files.iterator.collect { case (f, len) if probed.exists(f.startsWith) => len }.sum
-    if (bytes < driverBytes)
-      org.apache.spark.sql.graft.DriverRows(spark, RankedSchema)(
-        rankedOnDriver(spark, v, terms, topK))
-    else {
+    if (probedBytes(v, buckets) < driverBytes) {
+      import scala.jdk.CollectionConverters._
+      spark.createDataFrame(rankedOnDriver(spark, v, terms, topK).asJava, RankedSchema)
+    } else {
       import spark.implicits._
       rankedFromVersion(spark, v, terms.toDF("query_id", "term"), buckets, topK, salts,
         excludeSelf = false)
     }
+  }
+
+  /** The bytes of the version's postings files in `buckets` plus its
+    * tombstones: the files a request over those buckets reads. */
+  private[ops] def probedBytes(v: IdStore.Version, buckets: Seq[Long]): Long = {
+    val probed = buckets.map(b => s"postings/${TermLayout.column}=$b/") :+ "tombstones/"
+    v.files.iterator.collect { case (f, len) if probed.exists(f.startsWith) => len }.sum
   }
 
   /** The distinct (query_id, term) pairs of literal queries, tokenized on

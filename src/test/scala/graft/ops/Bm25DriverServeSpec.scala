@@ -14,7 +14,7 @@ import graft.TestSpark
   * driver hash equals Spark's bucket expression, the driver answer equals
   * the distributed plan's row for row (scores bit-equal) through the
   * whole index lifecycle, the over-bound fallback answers the same, and a
-  * warm request runs at most one Spark job. */
+  * warm request runs at most one Spark job, in the call. */
 class Bm25DriverServeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
@@ -131,7 +131,7 @@ class Bm25DriverServeSpec extends AnyFunSuite {
     } finally rm(new java.io.File(out))
   }
 
-  test("a warm request: the call runs no Spark job and its collect at most one") {
+  test("a warm request: the call and its collect run at most one Spark job together") {
     val out = tmpDir("graft-bm25-jobs")
     val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
@@ -158,8 +158,10 @@ class Bm25DriverServeSpec extends AnyFunSuite {
       assert(groups.contains("bm25-drain"), "the listener bus did not drain")
       def jobs(g: String) = groups.toArray.count(_ == g)
       assert(answer.nonEmpty)
-      assert(jobs("bm25-call") == 0, s"the bm25TopKFromIndex call ran ${jobs("bm25-call")} jobs")
-      assert(jobs("bm25-collect") <= 1, s"the collect ran ${jobs("bm25-collect")} jobs")
+      assert(jobs("bm25-call") + jobs("bm25-collect") <= 1,
+        s"the call ran ${jobs("bm25-call")} jobs and its collect ${jobs("bm25-collect")}")
+      // the ranked rows are a local relation: collecting them is no job
+      assert(jobs("bm25-collect") == 0, s"the collect ran ${jobs("bm25-collect")} jobs")
     } finally {
       sc.removeSparkListener(listener)
       rm(new java.io.File(out))

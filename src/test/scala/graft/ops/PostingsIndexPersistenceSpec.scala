@@ -36,30 +36,61 @@ class PostingsIndexPersistenceSpec extends AnyFunSuite {
         .filter(_.getName.startsWith("term_bucket=")).map(_.getName).toSet
       assert(parts.nonEmpty && parts.size <= 64,
         s"expected <=64 term-bucket partitions, got ${parts.size}")
-      // pruning: the candidate read (the one scan of a driver-ranked
-      // request, whose own relation is a local one) carries the
-      // term_bucket partition filter and reads exactly the directories
-      // Spark's own bucket expression names for the query terms (the
-      // DefaultQueries batch has ~12 distinct terms, far fewer than the
-      // populated buckets at this corpus)
-      import org.apache.spark.sql.execution.FileSourceScanExec
+      // pruning: both serving paths read only the probed term buckets.
+      // The driver path's one scan is its candidate read, whose plan the
+      // served call executes (its own result is a local relation); the
+      // over-bound path's scan sits in the plan it returns. Each must
+      // carry the term_bucket partition filter and list exactly the
+      // directories Spark's own bucket expression names for the query
+      // terms (the DefaultQueries batch has ~12 distinct terms, far
+      // fewer than the populated buckets at this corpus)
+      import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+      import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
       import org.apache.spark.sql.functions._
+      import org.apache.spark.sql.util.QueryExecutionListener
       import spark.implicits._
+      object Plans extends AdaptiveSparkPlanHelper
+      def postingsScans(plan: SparkPlan): Seq[FileSourceScanExec] =
+        Plans.collect(plan) { case s: FileSourceScanExec => s }
+          .filter(_.relation.location.rootPaths.exists(_.toString.contains(s"$tmp/postings")))
       val terms = Retrieval.queryTermsOf(Retrieval.DefaultQueries)
-      val read = Retrieval.candidates(spark, IdStore.latest(spark, tmp), terms)
-      assert(read.collect().nonEmpty)
-      val scan = read.queryExecution.executedPlan.collectFirst { case s: FileSourceScanExec => s }
-        .getOrElse(fail("the candidate read has no file scan"))
-      assert(scan.partitionFilters.exists(_.references.exists(_.name == "term_bucket")),
-        "the bucket partition filter vanished from the candidate read's plan")
-      val readBuckets = scan.relation.location.listFiles(scan.partitionFilters, Nil)
-        .map(_.values.getInt(0).toLong).toSet
       val probed = terms.map(_._2).toDF("term")
         .select(pmod(xxhash64(col("term")), lit(64L))).collect().map(_.getLong(0)).toSet
       val held = parts.map(_.stripPrefix("term_bucket=").toLong)
-      assert(readBuckets.nonEmpty && readBuckets == probed.intersect(held),
-        s"the candidate read scans buckets $readBuckets, the query terms probe $probed")
-      assert(readBuckets.size < held.size, "the candidate read pruned no bucket")
+      def assertPruned(scan: FileSourceScanExec, path: String): Unit = {
+        assert(scan.partitionFilters.exists(_.references.exists(_.name == "term_bucket")),
+          s"the bucket partition filter vanished from the $path plan")
+        val readBuckets = scan.relation.location.listFiles(scan.partitionFilters, Nil)
+          .map(_.values.getInt(0).toLong).toSet
+        assert(readBuckets.nonEmpty && readBuckets == probed.intersect(held),
+          s"the $path plan scans buckets $readBuckets, the query terms probe $probed")
+        assert(readBuckets.size < held.size, s"the $path plan pruned no bucket")
+      }
+      // the driver path: capture the plans the served call executes
+      val executed = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+      val listener = new QueryExecutionListener {
+        def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+          executed.add(qe.executedPlan)
+        def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        val served = Retrieval.bm25TopKFromIndex(spark, tmp)
+        assert(postingsScans(served.queryExecution.executedPlan).isEmpty,
+          "the bounded request did not rank on the driver")
+        // the listener bus delivers asynchronously
+        val deadline = System.nanoTime() + 10e9.toLong
+        def reads = executed.toArray(Array.empty[SparkPlan]).toSeq.flatMap(postingsScans)
+        while (reads.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+        assert(reads.size == 1, s"the served call ran ${reads.size} postings reads, not 1")
+        assertPruned(reads.head, "driver path's candidate read")
+      } finally spark.listenerManager.unregister(listener)
+      // the over-bound path: the distributed plan it returns
+      val distributed = Retrieval.servedFromIndex(spark, tmp, Retrieval.DefaultQueries, 5, 32, 0L)
+      val scans = postingsScans(distributed.queryExecution.executedPlan)
+      assert(scans.nonEmpty, "the distributed plan has no postings scan")
+      scans.foreach(assertPruned(_, "distributed from-index"))
+      assert(rows(distributed) == persisted, "the over-bound path diverged from the driver path")
     } finally {
       def rm(f: java.io.File): Unit = {
         if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
