@@ -1,8 +1,17 @@
 package graft.ops
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.ColumnIOFactory
+import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter, RecordMaterializer}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{GenericRow, XXH64}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -209,6 +218,26 @@ private[graft] object IdStore {
     def tombstones(spark: SparkSession, idCol: String): Option[DataFrame] =
       if (has(Tombstones)) Some(read(spark, Tombstones).select(idCol).distinct()) else None
 
+    /** The files of `store` the version names, relative to `dir` and
+      * sorted — only those under the `column=value` dirs of
+      * `partitions`, when given. From the version alone, no listing:
+      * what [[readLocal]] opens. */
+    private[ops] def filesUnder(store: String, partitions: Option[(String, Seq[Long])]): Seq[String] = {
+      val under = partitions.fold(Seq(s"$store/")) { case (c, ps) => ps.map(p => s"$store/$c=$p/") }
+      files.keysIterator.filter(f => under.exists(f.startsWith)).toSeq.sorted
+    }
+
+    /** The store's rows on the driver, with no Spark job: `columns` of the
+      * files [[filesUnder]] names, with a partition column's value taken
+      * from its dir, and only the rows whose `filter` column holds one of
+      * the given values. The same rows and types as [[read]] under the
+      * same partition filter, `select(columns)` and `isin`. For bounded
+      * reads: every row comes back to the driver. */
+    def readLocal(spark: SparkSession, store: String, partitions: Option[(String, Seq[Long])],
+        columns: Seq[String], filter: Option[(String, Set[Any])]): Seq[Row] =
+      IdStore.readLocal(spark, dir, store, filesUnder(store, partitions), columns, filter,
+        s"version $n")
+
     private[IdStore] def body: String =
       files.toSeq.sorted.map { case (f, len) => s"$f\t$len" }.mkString(s"$id\n", "\n", "\n")
   }
@@ -224,11 +253,136 @@ private[graft] object IdStore {
     require(paths.nonEmpty, s"$root: $at of $dir holds no files of this store")
     try spark.read.option("basePath", root).parquet(paths: _*)
     catch {
-      case e: AnalysisException if e.getCondition == "PATH_NOT_FOUND" =>
-        throw new IllegalArgumentException(s"$root: $at of $dir names files that are " +
-          "gone — the store was changed outside the artifact's version log; rebuild the " +
-          "artifact (LSH: LshIndex.migrateLshIndex)", e)
+      case e: AnalysisException if e.getCondition == "PATH_NOT_FOUND" => throw gone(root, at, dir, e)
     }
+  }
+
+  private def gone(root: String, at: String, dir: String, cause: Throwable) =
+    new IllegalArgumentException(s"$root: $at of $dir names files that are " +
+      "gone — the store was changed outside the artifact's version log; rebuild the " +
+      "artifact (LSH: LshIndex.migrateLshIndex)", cause)
+
+  /** [[Version.readLocal]] of `files`: each opened with `ParquetFileReader`
+    * against the session's loaded Hadoop configuration (a fresh
+    * `Configuration` per file re-parses the `*-default.xml` resources,
+    * milliseconds a file), its row groups and pages pruned by the
+    * filter's statistics, dictionaries and page indexes, then decoded
+    * record by record, each kept by a hash lookup of its filter value
+    * (with parquet's own record filter the cost per row grew with the
+    * number of values: 5× slower over 64 terms). A file that is gone, a
+    * column no file holds or one of a type it does not decode fails,
+    * naming the store. */
+  private def readLocal(spark: SparkSession, dir: String, store: String, files: Seq[String],
+      columns: Seq[String], filter: Option[(String, Set[Any])], at: String): Seq[Row] = {
+    val root = s"$dir/$store"
+    if (files.isEmpty || filter.exists(_._2.isEmpty)) Nil
+    else {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val in = filter.map { case (c, vs) => inFilter(root, c, vs) }
+      val options = HadoopReadOptions.builder(conf)
+        .withRecordFilter(in.fold(FilterCompat.NOOP)(p => FilterCompat.get(p._2))).build()
+      val out = Vector.newBuilder[Row]
+      files.foreach { f =>
+        val reader = try ParquetFileReader.open(HadoopInputFile.fromPath(new Path(dir, f), conf), options)
+          catch { case e: java.io.FileNotFoundException => throw gone(root, at, dir, e) }
+        try {
+          val meta = reader.getFooter.getFileMetaData
+          // the `column=value` dirs between the store and the file
+          val partValues = f.split('/').iterator.drop(1).filter(_.contains('=')).map { d =>
+            val eq = d.indexOf('=')
+            d.substring(0, eq) -> (d.substring(eq + 1).toInt: Any)
+          }.toMap
+          require(filter.forall(p => !partValues.contains(p._1)), s"$root: a local read filters " +
+            s"its partition column ${filter.get._1} by the partitions it reads, not by a filter")
+          val decoded = (columns ++ filter.map(_._1)).distinct.filterNot(partValues.contains)
+          val projection = new MessageType(meta.getSchema.getName,
+            decoded.map(decodable(root, f, meta.getSchema, _)): _*)
+          reader.setRequestedSchema(projection)
+          val io = new ColumnIOFactory(meta.getCreatedBy).getColumnIO(projection, meta.getSchema)
+          val record = new FlatRecord(projection.getFieldCount,
+            filter.zip(in).map { case ((c, _), (test, _)) => (decoded.indexOf(c), test) })
+          val pick = columns.map(c => partValues.get(c).toLeft(decoded.indexOf(c))).toArray
+          var pages = reader.readNextFilteredRowGroup()
+          while (pages != null) {
+            val rows = io.getRecordReader(pages, record)
+            var i = 0L
+            while (i < pages.getRowCount) {
+              val values = rows.read()
+              if (values != null) out += new GenericRow(pick.map(_.fold(identity, values(_))))
+              i += 1
+            }
+            pages = reader.readNextFilteredRowGroup()
+          }
+        } finally reader.close()
+      }
+      out.result()
+    }
+  }
+
+  /** The physical types [[readLocal]] decodes, as Spark reads them:
+    * INT32 and INT64 (plain or signed 32/64-bit ints), DOUBLE and UTF-8
+    * BINARY, not repeated. */
+  private def decodable(root: String, file: String, schema: MessageType, c: String): Type = {
+    require(schema.containsField(c), s"$root: $file holds no column $c")
+    val t = schema.getType(schema.getFieldIndex(c))
+    val ok = t.isPrimitive && !t.isRepetition(Type.Repetition.REPEATED) && {
+      val a = t.getLogicalTypeAnnotation
+      t.asPrimitiveType.getPrimitiveTypeName match {
+        case PrimitiveTypeName.INT32 => a == null || a == LogicalTypeAnnotation.intType(32, true)
+        case PrimitiveTypeName.INT64 => a == null || a == LogicalTypeAnnotation.intType(64, true)
+        case PrimitiveTypeName.DOUBLE => a == null
+        case PrimitiveTypeName.BINARY => a == LogicalTypeAnnotation.stringType()
+        case _ => false
+      }
+    }
+    require(ok, s"$root: column $c of $file is `$t`; a local read decodes INT32, INT64, " +
+      "DOUBLE and UTF-8 BINARY columns only")
+    t
+  }
+
+  /** `column IN values` typed by the values: the test of a decoded
+    * value (a UTF-8 `Binary` or a boxed long) and the parquet predicate. */
+  private def inFilter(root: String, column: String, values: Set[Any]): (Any => Boolean, FilterPredicate) = {
+    import scala.jdk.CollectionConverters._
+    require(values.forall(_.getClass == values.head.getClass),
+      s"$root: a filter on $column mixes value types")
+    values.head match {
+      case _: String =>
+        val bs = values.map(v => Binary.fromString(v.asInstanceOf[String]))
+        (v => bs.contains(v.asInstanceOf[Binary]), FilterApi.in(FilterApi.binaryColumn(column), bs.asJava))
+      case _: Long =>
+        val ls = values.map(v => java.lang.Long.valueOf(v.asInstanceOf[Long]))
+        (v => ls.contains(v.asInstanceOf[java.lang.Long]), FilterApi.in(FilterApi.longColumn(column), ls.asJava))
+      case v => throw new IllegalArgumentException(
+        s"$root: no local filter on $column by $v: strings and longs only")
+    }
+  }
+
+  /** A flat record's values, one slot per projected column, as boxed
+    * Ints, Longs, Doubles and Strings; a null leaves its slot null. A
+    * record whose `keep` slot fails its test is null, and its strings
+    * are never decoded. */
+  private final class FlatRecord(width: Int, keep: Option[(Int, Any => Boolean)])
+      extends RecordMaterializer[Array[Any]] {
+    private val values = new Array[Any](width)
+    private val root = new GroupConverter {
+      private val slots: Array[Converter] = Array.tabulate(width) { i =>
+        new PrimitiveConverter {
+          override def addInt(v: Int): Unit = values(i) = v
+          override def addLong(v: Long): Unit = values(i) = v
+          override def addDouble(v: Double): Unit = values(i) = v
+          // valid until the next record is read, as the page holds it
+          override def addBinary(v: Binary): Unit = values(i) = v
+        }
+      }
+      def getConverter(i: Int): Converter = slots(i)
+      def start(): Unit = java.util.Arrays.fill(values.asInstanceOf[Array[AnyRef]], null)
+      def end(): Unit = ()
+    }
+    def getCurrentRecord: Array[Any] =
+      if (keep.exists { case (i, in) => !in(values(i)) }) null
+      else values.map { case b: Binary => b.toStringUsingUTF8; case v => v }
+    def getRootConverter: GroupConverter = root
   }
 
   /** The latest published version: one listing of `_versions/`, one

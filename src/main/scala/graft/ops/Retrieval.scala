@@ -370,12 +370,14 @@ object Retrieval {
     * planning runs no Spark job. When the probed buckets' postings files
     * plus the tombstones total under [[DriverRankBytes]] (the version
     * names every file's length, so no listing), the call answers on the
-    * driver: ONE job reads the query terms' `(doc_id, term, tf, dl)` rows
-    * from the probed directories, and df, the integer-micro BM25 and the
-    * per-query top-k run in the JVM ([[rankedOnDriver]]), against the
-    * version's corpus stats and dead set memoized once per version. The
+    * driver with no Spark job: it reads the query terms'
+    * `(doc_id, term, tf, dl)` rows from the probed buckets' files
+    * ([[IdStore.Version.readLocal]]), and df, the integer-micro BM25 and
+    * the per-query top-k run in the JVM ([[rankedOnDriver]]), against
+    * the version's corpus stats and dead set memoized once per version
+    * (the first request after a publish runs the corpus-stats job). The
     * ranked rows come back as a local relation (`createDataFrame`) with
-    * no sort above it, so collecting it runs no further job. Over the
+    * no sort above it, so collecting it runs no job either. Over the
     * bound the distributed [[rankedFromIndex]] plan serves, with the
     * same answer, as a lazy plan. */
   def bm25TopKFromIndex(spark: SparkSession, indexDir: String,
@@ -384,13 +386,15 @@ object Retrieval {
     servedFromIndex(spark, indexDir, queries, topK, salts, DriverRankBytes)
 
   /** Probed postings plus tombstone bytes under which a request ranks
-    * on the driver: the rows it collects (candidates and dead ids) come
+    * on the driver: the rows it reads (candidates and dead ids) come
     * from these files only, so the bound caps the driver's heap. It is
-    * not a speed crossover: swept on a 4-core host over a 200k-document
-    * store (`Bm25BoundSweep`), the driver path beat the distributed plan
-    * at every probed size up to the whole 25.7 MB store (0.9 s against
-    * 1.7 s there). At the bound a request's collected rows hold about
-    * 15 MB of driver heap (1.2–1.8 bytes per probed byte). */
+    * not a speed crossover: swept on a 4-core host over 50k- and
+    * 200k-document stores (`Bm25BoundSweep`), the driver path beat the
+    * distributed plan at every probed size up to the whole 25.7 MB
+    * store (0.84–0.92 s against 0.98–1.04 s there). A candidate row
+    * holds about 120 bytes of driver heap, 1.5–4.5 bytes per probed
+    * byte (the more of a probed file's rows are candidates, the more),
+    * so a request at the bound holds about 13–38 MB. */
   private val DriverRankBytes = 8L << 20
 
   /** [[bm25TopKFromIndex]] with the driver-path byte bound as an
@@ -404,7 +408,7 @@ object Retrieval {
     val buckets = terms.map(t => TermLayout.bucketOf(t._2)).distinct
     if (probedBytes(v, buckets) < driverBytes) {
       import scala.jdk.CollectionConverters._
-      spark.createDataFrame(rankedOnDriver(spark, v, terms, topK).asJava, RankedSchema)
+      spark.createDataFrame(rankedOnDriver(spark, v, terms, buckets, topK).asJava, RankedSchema)
     } else {
       import spark.implicits._
       rankedFromVersion(spark, v, terms.toDF("query_id", "term"), buckets, topK, salts,
@@ -412,12 +416,16 @@ object Retrieval {
     }
   }
 
+  /** The term-bucket partitions of the postings store that a request
+    * over `buckets` reads. */
+  private def probed(buckets: Seq[Long]) = Some(TermLayout.column -> buckets)
+
   /** The bytes of the version's postings files in `buckets` plus its
-    * tombstones: the files a request over those buckets reads. */
-  private[ops] def probedBytes(v: IdStore.Version, buckets: Seq[Long]): Long = {
-    val probed = buckets.map(b => s"postings/${TermLayout.column}=$b/") :+ "tombstones/"
-    v.files.iterator.collect { case (f, len) if probed.exists(f.startsWith) => len }.sum
-  }
+    * tombstones: the files a driver-ranked request over those buckets
+    * opens ([[IdStore.Version.filesUnder]]). */
+  private[ops] def probedBytes(v: IdStore.Version, buckets: Seq[Long]): Long =
+    (v.filesUnder("postings", probed(buckets)) ++ v.filesUnder("tombstones", None))
+      .map(v.files).sum
 
   /** The distinct (query_id, term) pairs of literal queries, tokenized on
     * the driver by the kernel [[TextAnalysis.tokens]] runs. */
@@ -435,27 +443,17 @@ object Retrieval {
     StructField("score", DoubleType),
     StructField("rank", LongType, nullable = false)))
 
-  /** The candidate read of a driver-ranked request: the query terms'
-    * postings rows, from the directories of their `term_bucket`s only. */
-  private[ops] def candidates(spark: SparkSession, v: IdStore.Version,
-      terms: Seq[(Long, String)]): DataFrame = {
-    val words = terms.map(_._2).distinct
-    v.read(spark, "postings")
-      .where(col(TermLayout.column).isin(words.map(TermLayout.bucketOf(_)).distinct: _*) &&
-        col("term").isin(words: _*))
-      .select(col("doc_id"), col("term"), col("tf"), col("dl"))
-  }
-
   /** [[bm25Scored]] + [[rankTopK]] over the candidate rows in the JVM,
     * expression for expression: the same association order, `log` as
     * catalyst's `Log` computes it (`StrictMath.log`), and `round` as
     * catalyst rounds a double ([[roundHalfUp]]). Per-term weights are
     * integer micros, so their sum is exact in any order. */
   private def rankedOnDriver(spark: SparkSession, v: IdStore.Version,
-      terms: Seq[(Long, String)], topK: Int): Seq[Row] = {
+      terms: Seq[(Long, String)], buckets: Seq[Long], topK: Int): Seq[Row] = {
     val dead = deadIds(spark, v)
-    val cand = if (terms.isEmpty) Array.empty[Row]
-      else candidates(spark, v, terms).collect().filterNot(r => dead(r.getLong(0)))
+    // the query terms' postings rows, from their buckets' files only
+    val cand = v.readLocal(spark, "postings", probed(buckets), Seq("doc_id", "term", "tf", "dl"),
+      Some("term" -> terms.map(_._2).toSet[Any])).filterNot(r => dead(r.getLong(0)))
     // read only when some candidate needs a weight
     lazy val (nDocs, avgdl) = {
       val stats = corpusStatsOf(spark, v)
@@ -500,11 +498,11 @@ object Retrieval {
       corpusStats(store.live(v.read(spark, "dl").drop("id_bucket"),
         v.tombstones(spark, "doc_id"))).head())
 
-  /** The version's tombstoned ids, collected once per published version
-    * into the artifact's memo slot. */
+  /** The version's tombstoned ids, read on the driver once per
+    * published version into the artifact's memo slot. */
   private def deadIds(spark: SparkSession, v: IdStore.Version): Set[Long] =
     StoreMemo.get(spark, v.dir, v.id, "bm25:dead")(
-      v.tombstones(spark, "doc_id").fold(Set.empty[Long])(_.collect().map(_.getLong(0)).toSet))
+      v.readLocal(spark, "tombstones", None, Seq("doc_id"), None).map(_.getLong(0)).toSet)
 
   /** BM25 ranking from a persisted artifact for an arbitrary
     * (query_id, term) relation — the distributed from-index engine: the

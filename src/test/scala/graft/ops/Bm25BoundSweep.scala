@@ -15,8 +15,9 @@ import org.apache.spark.util.SizeEstimator
   * probed bytes ([[Retrieval.probedBytes]], what the bound compares),
   * the candidate rows, the median latency of the driver path and of the
   * distributed plan over `reps` alternating runs (call plus `collect()`),
-  * and the driver heap the collected candidate rows hold (their deep
-  * size, by Spark's `SizeEstimator`).
+  * the median time of the driver path's candidate read alone
+  * ([[IdStore.Version.readLocal]]), and the driver heap its rows hold
+  * (their deep size, by Spark's `SizeEstimator`).
   *
   *   sbt "Test/runMain graft.ops.Bm25BoundSweep <dataDir> <workDir> [reps]"
   *
@@ -61,15 +62,18 @@ object Bm25BoundSweep {
       val query = Seq(1 -> picked.map(_._1).mkString(" "))
       val terms = Retrieval.queryTermsOf(query)
       val bytes = Retrieval.probedBytes(v, order.take(n))
-      val cand = Retrieval.candidates(spark, v, terms).collect()
+      def read() = v.readLocal(spark, "postings", Some("term_bucket" -> order.take(n)),
+        Seq("doc_id", "term", "tf", "dl"), Some("term" -> terms.map(_._2).toSet[Any]))
+      val cand = read()
       val (rows, retained) = (cand.length, SizeEstimator.estimate(cand))
+      val readMs = median((1 to reps).map(_ => ms(read())))
       val times = (1 to reps).map { _ =>
         val d = ms(Retrieval.servedFromIndex(spark, index, query, 5, 32, Long.MaxValue).collect())
         val s = ms(Retrieval.servedFromIndex(spark, index, query, 5, 32, 0L).collect())
         (d, s)
       }
       println(f"""{"family":"$family","terms":$n,"probed_bytes":$bytes,"df_sum":${picked.map(_._2).sum},""" +
-        f""""cand_rows":$rows,"cand_retained_mb":${retained / 1048576.0}%.1f,""" +
+        f""""cand_rows":$rows,"cand_retained_mb":${retained / 1048576.0}%.1f,"read_ms":$readMs%.1f,""" +
         f""""driver_ms":${median(times.map(_._1))}%.1f,"distributed_ms":${median(times.map(_._2))}%.1f}""")
     }
     spark.stop()

@@ -36,14 +36,13 @@ class PostingsIndexPersistenceSpec extends AnyFunSuite {
         .filter(_.getName.startsWith("term_bucket=")).map(_.getName).toSet
       assert(parts.nonEmpty && parts.size <= 64,
         s"expected <=64 term-bucket partitions, got ${parts.size}")
-      // pruning: both serving paths read only the probed term buckets.
-      // The driver path's one scan is its candidate read, whose plan the
-      // served call executes (its own result is a local relation); the
-      // over-bound path's scan sits in the plan it returns. Each must
-      // carry the term_bucket partition filter and list exactly the
-      // directories Spark's own bucket expression names for the query
-      // terms (the DefaultQueries batch has ~12 distinct terms, far
-      // fewer than the populated buckets at this corpus)
+      // pruning: both serving paths read only the probed term buckets,
+      // the directories Spark's own bucket expression names for the query
+      // terms (the DefaultQueries batch has ~12 distinct terms, far fewer
+      // than the populated buckets at this corpus). The driver path runs
+      // no scan: it opens the version's files under those buckets on the
+      // driver. The over-bound path's scan sits in the plan it returns
+      // and must carry the term_bucket partition filter.
       import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
       import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
       import org.apache.spark.sql.functions._
@@ -66,25 +65,44 @@ class PostingsIndexPersistenceSpec extends AnyFunSuite {
           s"the $path plan scans buckets $readBuckets, the query terms probe $probed")
         assert(readBuckets.size < held.size, s"the $path plan pruned no bucket")
       }
-      // the driver path: capture the plans the served call executes
-      val executed = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+      // the driver path: every query the served call and its collect
+      // execute, drained by a marker query (the listener bus delivers in
+      // order, asynchronously)
+      val executed = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
       val listener = new QueryExecutionListener {
         def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-          executed.add(qe.executedPlan)
-        def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+          executed.add(qe)
+        def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+          executed.add(qe)
       }
       spark.listenerManager.register(listener)
       try {
         val served = Retrieval.bm25TopKFromIndex(spark, tmp)
         assert(postingsScans(served.queryExecution.executedPlan).isEmpty,
           "the bounded request did not rank on the driver")
-        // the listener bus delivers asynchronously
+        assert(rows(served) == persisted)
+        val marker = spark.range(1).toDF("marker")
+        marker.collect()
         val deadline = System.nanoTime() + 10e9.toLong
-        def reads = executed.toArray(Array.empty[SparkPlan]).toSeq.flatMap(postingsScans)
-        while (reads.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
-        assert(reads.size == 1, s"the served call ran ${reads.size} postings reads, not 1")
-        assertPruned(reads.head, "driver path's candidate read")
+        while (!executed.contains(marker.queryExecution) && System.nanoTime() < deadline)
+          Thread.sleep(20)
+        assert(executed.contains(marker.queryExecution), "the listener bus did not drain")
+        val reads = executed.toArray(Array.empty[QueryExecution]).toSeq
+          .flatMap(qe => postingsScans(qe.executedPlan))
+        assert(reads.isEmpty, s"the served call ran ${reads.size} postings scans, not 0")
       } finally spark.listenerManager.unregister(listener)
+      // the files the driver read opens: exactly the version's postings
+      // files under the probed and populated buckets
+      val v = IdStore.latest(spark, tmp)
+      val opened = v.filesUnder("postings", Some("term_bucket" -> probed.toSeq))
+      val expected = v.files.keySet.filter { f =>
+        val d = f.split('/')
+        d(0) == "postings" && probed.intersect(held).exists(b => d(1) == s"term_bucket=$b")
+      }
+      assert(opened.nonEmpty && opened.toSet == expected,
+        s"the driver read opens $opened, the probed buckets hold $expected")
+      assert(opened.map(_.split('/')(1)).distinct.size < held.size,
+        "the driver read pruned no bucket")
       // the over-bound path: the distributed plan it returns
       val distributed = Retrieval.servedFromIndex(spark, tmp, Retrieval.DefaultQueries, 5, 32, 0L)
       val scans = postingsScans(distributed.queryExecution.executedPlan)
