@@ -32,18 +32,21 @@ final case class ConvertSummary(results: Seq[ConvertResult]) {
 /** CSV → Parquet conversion with the reference's semantics, re-expressed
   * on Spark (reference dataflow converter/converter.go:67-412):
   *
-  *   discovery → [per file] sample-pass inference → full-pass read with
-  *   explicit all-string schema → reference casts → parquet → verify →
-  *   (delete source)
+  *   discovery → [per file] sample-pass inference → full-pass read +
+  *   reference casts → parquet → verify → (delete source)
   *
   * Spark-first design notes:
   *  - The inference pass reads only the first `sampleRows` records
   *    driver-side (O(sample) IO on any file size; see [[Inference]]).
-  *  - The data pass is a declarative scan→project→write plan: Spark's CSV
-  *    datasource parses in parallel across splits, the casts are native
-  *    codegen'd expressions ([[graft.functions.GoCast]]), and the Parquet
-  *    sink uses Spark's vectorized writer (128 MB row groups + snappy are
-  *    Spark defaults, matching converter/converter.go:320-325).
+  *  - The data pass is a declarative scan→write plan. In line mode (every
+  *    newline-free CSV) it is one [[CsvLineScan]]: each split tokenizes
+  *    its lines' bytes and casts every cell straight into the output row
+  *    with the [[GoParse]] kernels, like the reference's
+  *    split-then-cast row loop — no all-string row, no projection. The
+  *    multiLine mode keeps Spark's CSV datasource followed by the
+  *    codegen'd [[graft.functions.GoCast]] projection. The Parquet sink
+  *    uses Spark's writer (128 MB row groups + snappy are Spark
+  *    defaults, matching converter/converter.go:320-325).
   *  - Ragged rows (field count != header) are DROPPED whole, matching the
   *    observed Go behavior: csv.Reader locks FieldsPerRecord to the header
   *    width, so ragged rows surface as errors and the row loop skips them
@@ -98,38 +101,50 @@ object Converter {
     typed.as(name)
   }
 
-  /** Declarative conversion plan for one file: scan (all-string schema,
-    * malformed rows dropped) → reference casts. Exposed separately so
-    * tests and the query surface can reuse it without writing. */
+  /** Declarative conversion plan for one file: malformed rows dropped,
+    * reference casts applied. Line mode is one [[CsvLineScan]] scan that
+    * parses and casts in one pass (row for row what the multiLine shape
+    * below gives in line mode); multiLine mode is [[rawStringPlan]] →
+    * [[castColumn]] projection. Exposed separately so tests and the query
+    * surface can reuse it without writing. */
   def conversionPlan(spark: SparkSession, input: String, schema: InferredSchema, delimiter: Char,
-      multiLine: Boolean = true): DataFrame = {
-    val raw = rawStringPlan(spark, input, schema, delimiter, multiLine)
-    raw.select(schema.headers.zip(schema.types).map { case (h, t) => castColumn(h, t) }: _*)
-  }
+      multiLine: Boolean = true): DataFrame =
+    if (multiLine) {
+      val raw = rawStringPlan(spark, input, schema, delimiter, multiLine)
+      raw.select(schema.headers.zip(schema.types).map { case (h, t) => castColumn(h, t) }: _*)
+    } else
+      spark.read.format(classOf[CsvLineScan].getName)
+        .options(csvOptions(delimiter, multiLine))
+        .schema(schema.sparkSchema)
+        .load(input)
 
-  /** The raw all-strings scan [[conversionPlan]] casts from — exposed so
-    * telemetry (q83 cast-null stats) can compare pre-cast emptiness with
-    * post-cast nullness under the exact same parse options. */
+  /** The raw all-strings scan the multiLine [[conversionPlan]] casts from
+    * — exposed so telemetry (q83 cast-null stats) can compare pre-cast
+    * emptiness with post-cast nullness under the exact same parse
+    * options, and so specs can hold [[CsvLineScan]] to Spark's CSV line
+    * mode. Spark's CSV column pruning skips the DROPMALFORMED width
+    * check when a query requires no column, so a bare `count()` here
+    * also counts ragged rows. */
   def rawStringPlan(spark: SparkSession, input: String, schema: InferredSchema, delimiter: Char,
-      multiLine: Boolean = true): DataFrame = {
-    spark.read
-      .option("header", "true")        // skip the header line; names come from the schema
-      .option("enforceSchema", "true")
-      .option("delimiter", delimiter.toString)
-      .option("mode", "DROPMALFORMED") // ragged rows dropped, like Go FieldsPerRecord
-      .option("unescapedQuoteHandling", "STOP_AT_CLOSING_QUOTE") // ≈ LazyQuotes
-      .option("escape", "\"") // RFC-4180 doubled quotes, like Go csv (Spark default is \)
-      // Go's encoding/csv supports embedded newlines in quoted fields;
-      // Spark needs multiLine for that. Scale note: multiLine makes a
-      // single file non-splittable — conversion still parallelizes across
-      // files, which is the reference's own unit of parallelism (O12).
-      // `--no-multiline` trades embedded-newline support for a splittable
-      // scan (many tasks over one large file).
-      .option("multiLine", multiLine.toString)
-      .option("nullValue", "")
-      .schema(schema.rawSchema)
-      .csv(input)
-  }
+      multiLine: Boolean = true): DataFrame =
+    spark.read.options(csvOptions(delimiter, multiLine)).schema(schema.rawSchema).csv(input)
+
+  /** The CSV options of both scans. */
+  private def csvOptions(delimiter: Char, multiLine: Boolean): Map[String, String] = Map(
+    "header" -> "true",        // skip the header line; names come from the schema
+    "enforceSchema" -> "true",
+    "delimiter" -> delimiter.toString,
+    "mode" -> "DROPMALFORMED", // ragged rows dropped, like Go FieldsPerRecord
+    "unescapedQuoteHandling" -> "STOP_AT_CLOSING_QUOTE", // ≈ LazyQuotes
+    "escape" -> "\"", // RFC-4180 doubled quotes, like Go csv (Spark default is \)
+    // Go's encoding/csv supports embedded newlines in quoted fields;
+    // Spark needs multiLine for that. Scale note: multiLine makes a
+    // single file non-splittable — conversion still parallelizes across
+    // files, which is the reference's own unit of parallelism (O12).
+    // `--no-multiline` trades embedded-newline support for a splittable
+    // scan (many tasks over one large file).
+    "multiLine" -> multiLine.toString,
+    "nullValue" -> "")
 
   /** The scan mode one conversion actually uses: multiLine only when the
     * config asks for embedded-newline support AND either auto-detection
@@ -144,9 +159,11 @@ object Converter {
     *
     * The inference prefix read doubles as a multiLine sniff: when no
     * sampled field carries an embedded newline, the data pass keeps
-    * Spark's splittable line-based scan (many tasks over one large file)
+    * the splittable line-based scan (many tasks over one large file)
     * instead of the non-splittable multiLine mode — the default
     * single-big-file conversion was otherwise ONE scan task at any size.
+    * That line-mode scan is [[CsvLineScan]], which parses and casts in
+    * one pass.
     * See [[GraftConfig.multiLineAuto]] for the heuristic's contract. */
   def convertFile(spark: SparkSession, input: String, cfg: GraftConfig): ConvertResult =
     finishConversion(spark, input, cfg) {
@@ -221,7 +238,7 @@ object Converter {
     *
     * Only applied at `--log-level debug` with `batchSize > 0`: the
     * wrapper inserts a deserialize→map→serialize boundary into the
-    * otherwise fully codegen'd scan→cast→write plan — a cost
+    * otherwise boundary-free scan→cast→write plan — a cost
     * observability should charge only when asked for (the reference
     * likewise skips its per-row debug formatting at info level). */
   private[core] def withProgressTicks(df: DataFrame, input: String,

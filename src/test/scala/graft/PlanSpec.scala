@@ -47,15 +47,29 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("HashAggregate"), "q1 should hash-aggregate")
   }
 
-  test("converter cast projection stays codegen'd (custom GoCast expressions)") {
-    import graft.core.{Converter, FieldType, InferredSchema}
+  test("converter plans have no deserialize boundary and no UDF") {
+    import graft.core.{Converter, CsvLineScan, FieldType, InferredSchema}
+    import org.apache.spark.sql.execution.FileSourceScanExec
     val schema = InferredSchema(Seq("a", "b"), Seq(FieldType.TInt64, FieldType.TFloat64))
     val tmp = java.nio.file.Files.createTempDirectory("plan")
-    java.nio.file.Files.write(tmp.resolve("t.csv"), "a,b\n1,2.5\n".getBytes)
-    val df = Converter.conversionPlan(spark, tmp.resolve("t.csv").toString, schema, ',')
-    val p = plan(df)
-    assert(p.contains("codegen id"), p.take(2000))
-    assert(p.contains("go_long") && p.contains("go_double"), "GoCast expressions missing from plan")
+    val csv = tmp.resolve("t.csv")
+    java.nio.file.Files.write(csv, "a,b\n1,2.5\n".getBytes)
+    val json = tmp.resolve("t.json")
+    java.nio.file.Files.write(json, "{\"a\":\"1\",\"b\":\"2.5\"}\n".getBytes)
+    val boundaries = Seq("DeserializeToObject", "MapPartitions", "SerializeFromObject", "UDF")
+    // line mode: the casts are fused into one CsvLineScan scan
+    val line = Converter.conversionPlan(spark, csv.toString, schema, ',', multiLine = false)
+    val scans = line.queryExecution.executedPlan.collect { case s: FileSourceScanExec => s }
+    assert(scans.map(_.relation.fileFormat.getClass) == Seq(classOf[CsvLineScan]), plan(line))
+    for (node <- "Project" +: boundaries) assert(!plan(line).contains(node), plan(line))
+    // multiLine and JSON: Spark's scan, then the codegen'd GoCast projection
+    for (df <- Seq(Converter.conversionPlan(spark, csv.toString, schema, ',', multiLine = true),
+        Converter.jsonConversionPlan(spark, json.toString, sampleRows = 100))) {
+      val p = plan(df)
+      assert(p.contains("codegen id"), p.take(2000))
+      assert(p.contains("go_long") && p.contains("go_double"), "GoCast expressions missing from plan")
+      for (node <- boundaries) assert(!p.contains(node), p.take(2000))
+    }
   }
 
   test("LSH candidate joins are equi-joins, never cartesian") {

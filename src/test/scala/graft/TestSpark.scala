@@ -25,6 +25,18 @@ object TestSpark {
     s
   }
 
+  /** Run `body` with one session conf set, restoring it after, so a
+    * spec does not leak the setting into later suites. */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   /** Recursive on-disk size of a directory (for write-throughput specs). */
   def dirBytes(f: java.io.File): Long =
     if (f.isDirectory) Option(f.listFiles()).map(_.map(dirBytes).sum).getOrElse(0L)
