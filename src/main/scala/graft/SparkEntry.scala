@@ -283,7 +283,7 @@ object SparkEntry {
     // split while assigning the full corpus
     "q136_ann_ivf_two_level_incremental" -> ((s, d) =>
       Similarity.twoLevelIncremental(s, d, nCoarse = 8, nSub = 4,
-        nProbe1 = 4, nProbe2 = 2, nQueries = 100, k = 3, batchPct = 30)),
+        nProbe1 = 4, nProbe2 = 2, nQueries = 100, k = 3)),
     // product quantization: the code assignment itself (training +
     // encoding pinned cell for cell) ...
     "q137_pq_codes" -> ((s, d) => Similarity.pqCodes(s, d)),

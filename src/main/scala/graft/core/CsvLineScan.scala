@@ -33,18 +33,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * the kernel.
   *
   * A line is tokenized over its `Text` bytes only when it is valid UTF-8
-  * and RFC-shaped: every field is quote-free, or wholly quoted with only
-  * doubled `""` inside and its closing quote right before the delimiter
-  * or the end of the line. Every other line (lazy quotes, invalid UTF-8,
-  * more fields than univocity's `maxColumns`) is decoded as UTF-8 and
-  * tokenized by the univocity parser Spark itself builds from the same
-  * options, so no second grammar exists for them. The rest follows
-  * Spark's line mode: lines come from `HadoopFileLinesReader` (same split
-  * boundaries and codecs), lines of bytes ≤ 0x20 only are skipped, the
-  * first other line is the header only in the split at offset 0, and a
-  * line whose field count is not the schema width is dropped
-  * (DROPMALFORMED) — whatever columns the query requires, unlike Spark's
-  * CSV column pruning, which skips that check when none are.
+  * and RFC-shaped: every field is unquoted (not starting with `"`; a `"`
+  * inside it is literal, as univocity reads it), or wholly quoted with
+  * only doubled `""` inside and its closing quote right before the
+  * delimiter or the end of the line. Every other line (lazy quotes,
+  * invalid UTF-8, more fields than univocity's `maxColumns`) is decoded
+  * as UTF-8 and tokenized by the univocity parser Spark itself builds
+  * from the same options, so no second grammar exists for them. The
+  * rest follows Spark's line mode: lines come from
+  * `HadoopFileLinesReader` (same split boundaries and codecs), lines of
+  * bytes ≤ 0x20 only are skipped, the first other line is the header
+  * only in the split at offset 0, and a line whose field count is not
+  * the schema width is dropped (DROPMALFORMED) — whatever columns the
+  * query requires, unlike Spark's CSV column pruning, which skips that
+  * check when none are.
   *
   * Rows share one `UnsafeRowWriter`: the iterator advances in `hasNext`,
   * never in `next()`.
@@ -204,10 +206,9 @@ object CsvLineScan {
           pos = j + 1
           if (pos < len && b(pos) != delim) return NotRfc
         } else {
+          // a quote inside an unquoted field is literal, as univocity reads it
           while (pos < len && b(pos) != delim) {
-            val c = b(pos)
-            if (c == Quote) return NotRfc
-            high |= c
+            high |= b(pos)
             pos += 1
           }
           end = pos

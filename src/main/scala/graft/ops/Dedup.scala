@@ -466,13 +466,13 @@ object Dedup {
     * lands on the driver. At 100 TB the `existing` side is the
     * pre-materialized signature store — the delta batch is the only
     * thing newly shingled, which is the entire point of the shape. */
-  def incrementalDedup(spark: SparkSession, dir: String, batchPct: Int = 30,
+  def incrementalDedup(spark: SparkSession, dir: String,
       threshold: Double = 0.5): DataFrame = {
     val pairs = confirmedPairs(spark, dir).where(col("jaccard") >= threshold)
     val sym = pairs.select(col("doc_a"), col("doc_b"))
       .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("source"),
-      (pmod(col("doc_id") * lit(2654435761L), lit(100)) < batchPct).as("incoming"))
+      (Lifecycle.bucket(col("doc_id")) < Lifecycle.DeltaPct).as("incoming"))
     val incoming = docs.where(col("incoming")).select("doc_id", "source")
     val existingIds = docs.where(!col("incoming")).select(col("doc_id").as("doc_b"))
     val corpusDup = sym

@@ -155,11 +155,10 @@ object Export {
     * of the whole keeper corpus (q72's keeper chain + q101's
     * permutation + the manifest aggregation). Nibbles pinned at 1 —
     * the gate's frozen geometry, like every gate's fixed config. */
-  def manifestIncremental(spark: SparkSession, dir: String,
-      batchPct: Int = 30): DataFrame = {
-    val outDir = persistedShards.getOrCreate(spark, s"$dir#incr:$batchPct") { tmp =>
+  def manifestIncremental(spark: SparkSession, dir: String): DataFrame = {
+    val outDir = persistedShards.getOrCreate(spark, s"$dir#incr") { tmp =>
       val keepers = Curation.keeperDocs(spark, dir)
-      val arriving = pmod(col("doc_id") * lit(2654435761L), lit(100)) < batchPct
+      val arriving = Lifecycle.bucket(col("doc_id")) < Lifecycle.DeltaPct
       writeTrainingShardsOf(spark, keepers.where(!arriving), tmp, nibbles = 1)
       writeTrainingShardsIncrementalOf(spark, keepers, tmp,
         keepers.where(arriving).select("doc_id"))

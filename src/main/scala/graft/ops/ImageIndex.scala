@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Lifecycle.{Append, Compact, Reappend, Tombstone}
+
 /** Persisted perceptual-image hash index — the decode-once artifact the
   * image dedup family (q121/q125) serves from. At real scale decoding
   * is the single most expensive thing a multimodal pipeline does and
@@ -223,23 +225,7 @@ object ImageIndex {
     * surviving corpus: survivors = all docs except (deleted AND NOT
     * re-appended); the composition ≡ a fresh build of exactly that
     * corpus. */
-  def imageDupsLifecycle(spark: SparkSession, dir: String,
-      batchPct: Int = 30, deletePct: Int = 10, reappendPct: Int = 50): DataFrame = {
-    val indexDir = persistedIndex.getOrCreate(
-      spark, s"$dir#lifecycle:$batchPct:$deletePct:$reappendPct") { tmp =>
-      val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"),
-        (pmod(col("doc_id") * lit(2654435761L), lit(100)) < batchPct).as("incoming"),
-        (pmod(col("doc_id") * lit(7919L), lit(100)) < deletePct).as("deleted"))
-      saveImageHashIndexOf(
-        Multimodal.imageHashesOf(docs.where(!col("incoming")).select("doc_id", "text")), tmp)
-      appendImageHashDelta(docs.where(col("incoming")).select("doc_id", "text"), tmp)
-      tombstoneImages(docs.where(col("deleted")).select("doc_id"), tmp)
-      appendImageHashDelta(
-        docs.where(col("deleted") &&
-            pmod(col("doc_id") * lit(104729L), lit(100)) < reappendPct)
-          .select("doc_id", "text"), tmp)
-      compactImageHashIndex(spark, tmp)
-    }
-    imageDupsFromIndex(spark, indexDir)
-  }
+  def imageDupsLifecycle(spark: SparkSession, dir: String): DataFrame =
+    imageDupsFromIndex(spark, Lifecycle.artifact(persistedIndex, IndexFamily.image, spark, dir,
+      Append, Tombstone, Reappend, Compact))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions.dotProduct
+import graft.ops.Lifecycle.{Append, Compact, Reappend, Tombstone}
 
 /** Persisted sign-LSH ANN index — the artifact lifecycle for the
   * multi-table random-hyperplane family ([[Similarity.lshTopK]], q38/
@@ -449,22 +450,7 @@ object LshIndex {
     * freezing meta at base-build time, exactly what a production ingest
     * does. */
   def lshTopKComposed(spark: SparkSession, dir: String,
-      nQueries: Int = 200, k: Int = 3,
-      batchPct: Int = 30, deletePct: Int = 10, reappendPct: Int = 50): DataFrame = {
-    val indexDir = persistedIndex.getOrCreate(
-      spark, s"$dir#lifecycle:$batchPct:$deletePct:$reappendPct") { tmp =>
-      val vecs = Similarity.unitEmbeddings(spark, dir).select(col("vec_id"), col("u"),
-        (pmod(col("vec_id") * lit(2654435761L), lit(100)) < batchPct).as("incoming"),
-        (pmod(col("vec_id") * lit(7919L), lit(100)) < deletePct).as("deleted"))
-      saveLshIndexOf(vecs.where(!col("incoming")).select("vec_id", "u"), tmp)
-      appendLshDelta(vecs.where(col("incoming")).select("vec_id", "u"), tmp)
-      tombstoneVectors(vecs.where(col("deleted")).select("vec_id"), tmp)
-      appendLshDelta(
-        vecs.where(col("deleted") &&
-            pmod(col("vec_id") * lit(104729L), lit(100)) < reappendPct)
-          .select("vec_id", "u"), tmp)
-      compactLshIndex(spark, tmp)
-    }
-    lshTopKFromIndex(spark, indexDir, nQueries, k)
-  }
+      nQueries: Int = 200, k: Int = 3): DataFrame =
+    lshTopKFromIndex(spark, Lifecycle.artifact(persistedIndex, IndexFamily.lsh, spark, dir,
+      Append, Tombstone, Reappend, Compact), nQueries, k)
 }

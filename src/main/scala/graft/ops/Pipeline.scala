@@ -47,18 +47,14 @@ object Pipeline {
     * gate → bucket-pruned vs-artifact fingerprint kill → min-doc_id
     * keeper. The oracle mirrors [[curatedDelta]]'s direct batch rule —
     * the two curation paths answering identically IS the gate. */
-  def curatedBatchFromIndex(spark: SparkSession, dir: String,
-      batchPct: Int = 30): DataFrame = {
-    val fpDir = persistedFp.getOrCreate(spark, s"$dir#$batchPct") { tmp =>
+  def curatedBatchFromIndex(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"),
+      (Lifecycle.bucket(col("doc_id")) < Lifecycle.DeltaPct).as("incoming"))
+    val fpDir = persistedFp.getOrCreate(spark, s"$dir#batch") { tmp =>
       FingerprintIndex.saveFingerprintIndexOf(
-        Tables.documents(spark, dir)
-          .where(pmod(col("doc_id") * lit(2654435761L), lit(100)) >= batchPct)
-          .select("doc_id", "text"), tmp)
+        docs.where(!col("incoming")).select("doc_id", "text"), tmp)
     }
-    val incoming = Tables.documents(spark, dir)
-      .where(pmod(col("doc_id") * lit(2654435761L), lit(100)) < batchPct)
-      .select("doc_id", "text")
-    curatedDeltaFromIndex(incoming, fpDir)
+    curatedDeltaFromIndex(docs.where(col("incoming")).select("doc_id", "text"), fpDir)
       .select("doc_id").orderBy("doc_id")
   }
 
@@ -83,16 +79,13 @@ object Pipeline {
     * a copy whose original was retired-and-not-resurrected must be
     * KEPT — both directions of the lifecycle's membership change land
     * in the answer (49 copies → 8 kept / 41 killed at gate scale). */
-  def curatedBatchLifecycle(spark: SparkSession, dir: String,
-      batchPct: Int = 30, deletePct: Int = 30, reappendPct: Int = 40,
-      copyMod: Int = 7): DataFrame = {
+  def curatedBatchLifecycle(spark: SparkSession, dir: String): DataFrame = {
     val held0 = Tables.documents(spark, dir)
-      .where(pmod(col("doc_id") * lit(2654435761L), lit(100)) >= batchPct)
-    val fpDir = persistedFp.getOrCreate(spark,
-        s"$dir#lifecycle:$batchPct:$deletePct:$reappendPct") { tmp =>
+      .where(Lifecycle.bucket(col("doc_id")) >= Lifecycle.DeltaPct)
+    val fpDir = persistedFp.getOrCreate(spark, s"$dir#lifecycle") { tmp =>
       val held = held0.select(col("doc_id"), col("text"),
-        (pmod(col("doc_id") * lit(7919L), lit(100)) < deletePct).as("deleted"),
-        (pmod(col("doc_id") * lit(104729L), lit(100)) < reappendPct).as("reappend"))
+        (Lifecycle.deleteBucket(col("doc_id")) < 30).as("deleted"),
+        (Lifecycle.reappendBucket(col("doc_id")) < 40).as("reappend"))
       FingerprintIndex.saveFingerprintIndexOf(
         held.where(pmod(col("doc_id"), lit(2)) === 0).select("doc_id", "text"), tmp)
       FingerprintIndex.appendFingerprintDelta(
@@ -105,9 +98,9 @@ object Pipeline {
     // n_chars rides along explicitly: the quality gate references it,
     // and a Union (unlike a plain Project) can't resolve it from below
     val incoming = Tables.documents(spark, dir)
-      .where(pmod(col("doc_id") * lit(2654435761L), lit(100)) < batchPct)
+      .where(Lifecycle.bucket(col("doc_id")) < Lifecycle.DeltaPct)
       .select("doc_id", "text", "n_chars")
-      .unionByName(held0.where(pmod(col("doc_id"), lit(copyMod)) === 0)
+      .unionByName(held0.where(pmod(col("doc_id"), lit(7)) === 0)
         .select((col("doc_id") + lit(10000000L)).as("doc_id"),
           col("text"), col("n_chars")))
     curatedDeltaFromIndex(incoming, fpDir)
@@ -196,7 +189,7 @@ object Pipeline {
     //    later night probes narrow (doc_id, fp) rows bucket-pruned to
     //    the batch — the nightly stops scanning held-corpus text.
     val docs = Tables.documents(spark, corpusDir).select(col("doc_id"), col("text"),
-      (pmod(col("doc_id") * lit(2654435761L), lit(100)) < batchPct).as("incoming"))
+      (Lifecycle.bucket(col("doc_id")) < batchPct).as("incoming"))
     val incoming = docs.where(col("incoming")).select("doc_id", "text")
     if (!FingerprintIndex.store.exists(spark, s"$workDir/fp"))
       FingerprintIndex.saveFingerprintIndexOf(
@@ -274,23 +267,17 @@ object Pipeline {
   def runMaintenance(spark: SparkSession, corpusDir: String, workDir: String,
       retirePct: Int = 10): MaintenanceReport = {
     val retired = Tables.documents(spark, corpusDir)
-      .where(pmod(col("doc_id") * lit(7919L), lit(100)) < retirePct)
+      .where(Lifecycle.deleteBucket(col("doc_id")) < retirePct)
       .select("doc_id").cache()
     val nRetired = retired.count()
-    Retrieval.tombstoneDocs(retired, s"$workDir/bm25")
-    ImageIndex.tombstoneImages(retired, s"$workDir/images")
-    LshIndex.tombstoneVectors(retired.select(col("doc_id").as("vec_id")),
-      s"$workDir/lsh")
-    Similarity.tombstoneVectors(retired.select(col("doc_id").as("vec_id")),
-      s"$workDir/pq")
-    // the fingerprint membership store retires too: a takedown's
-    // fingerprint must not block a legitimate future re-ingest
-    FingerprintIndex.tombstoneDocs(retired, s"$workDir/fp")
-    Retrieval.compactPostings(spark, s"$workDir/bm25")
-    ImageIndex.compactImageHashIndex(spark, s"$workDir/images")
-    LshIndex.compactLshIndex(spark, s"$workDir/lsh")
-    Similarity.compactPqIndex(spark, s"$workDir/pq")
-    FingerprintIndex.compactFingerprintIndex(spark, s"$workDir/fp")
+    // every artifact tombstones the retired set, then every artifact
+    // compacts. The fingerprint membership store retires too: a
+    // takedown's fingerprint must not block a legitimate future re-ingest
+    val families = Seq("bm25" -> IndexFamily.bm25, "images" -> IndexFamily.image,
+      "lsh" -> IndexFamily.lsh, "pq" -> IndexFamily.pq(), "fp" -> IndexFamily.fingerprint)
+    for ((sub, f) <- families)
+      f.tombstone(retired.select(col("doc_id").as(f.id)), s"$workDir/$sub")
+    for ((sub, f) <- families) f.compact(spark, s"$workDir/$sub")
     // geometry drift: rebuild the LSH artifact when the live corpus has
     // outgrown (or shrunk off) its frozen adaptive plateau — a no-op
     // on-plateau, so idempotence composes (a second run re-measures the

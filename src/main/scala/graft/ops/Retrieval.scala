@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.ops.Lifecycle.{Append, Compact, Reappend, Tombstone}
+
 /** Sparse-lexical retrieval over the `documents` table — the BM25 layer a
   * training-data pipeline uses for eval-set mining, hard-negative mining,
   * and contamination triage ("which training docs would this benchmark
@@ -271,93 +273,50 @@ object Retrieval {
     * answer-invisible in the hash gate, not just in a spec. */
   def bm25TopKCompacted(spark: SparkSession, dir: String,
       queries: Seq[(Int, String)] = DefaultQueries,
-      topK: Int = 5, salts: Int = 32, batchPct: Int = 30,
-      deletePct: Int = 10): DataFrame = {
-    val indexDir = persistedIndex.getOrCreate(
-      spark, s"$dir#compact:$batchPct:$deletePct") { tmp =>
-      val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"),
-        (pmod(col("doc_id") * lit(2654435761L), lit(100)) < batchPct).as("incoming"))
-      savePostingsIndexOf(docs.where(!col("incoming")).select("doc_id", "text"), tmp)
-      appendPostingsDelta(docs.where(col("incoming")).select("doc_id", "text"), tmp)
-      tombstoneDocs(
-        docs.where(pmod(col("doc_id") * lit(7919L), lit(100)) < deletePct)
-          .select("doc_id"), tmp)
-      compactPostings(spark, tmp)
-    }
-    bm25TopKFromIndex(spark, indexDir, queries, topK, salts)
-  }
+      topK: Int = 5, salts: Int = 32): DataFrame =
+    bm25TopKFromIndex(spark, lifecycled(spark, dir, Append, Tombstone, Compact),
+      queries, topK, salts)
 
   /** q160: the FULL lifecycle COMPOSED in one relation — base build
-    * (70 %) → delta append (30 %) → tombstone a 10 % delete set
-    * spanning both → RE-APPEND half the deleted docs (resurrection —
-    * the deleted-then-re-appended interaction the pairwise q142/q144
-    * gates can't see) → compact → serve. Gated under q110's oracle
+    * → delta append → tombstone a delete set spanning both → RE-APPEND
+    * part of the deleted docs (resurrection — the deleted-then-re-appended
+    * interaction the pairwise q142/q144 gates can't see) → compact →
+    * serve ([[Lifecycle]]'s rules). Gated under q110's oracle
     * restricted to the surviving corpus (everything except deleted AND
     * not re-appended): the whole composition ≡ a fresh build of
     * exactly that corpus. */
   def bm25TopKComposed(spark: SparkSession, dir: String,
       queries: Seq[(Int, String)] = DefaultQueries,
-      topK: Int = 5, salts: Int = 32, batchPct: Int = 30,
-      deletePct: Int = 10, reappendPct: Int = 50): DataFrame = {
-    val indexDir = persistedIndex.getOrCreate(
-      spark, s"$dir#composed:$batchPct:$deletePct:$reappendPct") { tmp =>
-      val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"),
-        (pmod(col("doc_id") * lit(2654435761L), lit(100)) < batchPct).as("incoming"),
-        (pmod(col("doc_id") * lit(7919L), lit(100)) < deletePct).as("deleted"))
-      savePostingsIndexOf(docs.where(!col("incoming")).select("doc_id", "text"), tmp)
-      appendPostingsDelta(docs.where(col("incoming")).select("doc_id", "text"), tmp)
-      tombstoneDocs(docs.where(col("deleted")).select("doc_id"), tmp)
-      appendPostingsDelta(
-        docs.where(col("deleted") &&
-            pmod(col("doc_id") * lit(104729L), lit(100)) < reappendPct)
-          .select("doc_id", "text"), tmp)
-      compactPostings(spark, tmp)
-    }
-    bm25TopKFromIndex(spark, indexDir, queries, topK, salts)
-  }
+      topK: Int = 5, salts: Int = 32): DataFrame =
+    bm25TopKFromIndex(spark, lifecycled(spark, dir, Append, Tombstone, Reappend, Compact),
+      queries, topK, salts)
 
   /** q142: BM25 over the FULL index lifecycle — base build + delta
     * append + tombstoned deletes, served from the merged artifact.
-    * The corpus splits by q96's delta rule (30 % incoming), and a
-    * deterministic 10 % delete set (spanning BOTH base and delta docs —
-    * deletes must work against appended rows too) is tombstoned. Gated
-    * under q110's oracle over the surviving corpus: base − deleted +
-    * delta ≡ full rebuild on (corpus − deleted). */
+    * The corpus splits by q96's delta rule, and the delete set (spanning
+    * BOTH base and delta docs — deletes must work against appended rows
+    * too) is tombstoned. Gated under q110's oracle over the surviving
+    * corpus: base − deleted + delta ≡ full rebuild on (corpus − deleted). */
   def bm25TopKWithTombstones(spark: SparkSession, dir: String,
       queries: Seq[(Int, String)] = DefaultQueries,
-      topK: Int = 5, salts: Int = 32, batchPct: Int = 30,
-      deletePct: Int = 10): DataFrame = {
-    val indexDir = persistedIndex.getOrCreate(
-      spark, s"$dir#tomb:$batchPct:$deletePct") { tmp =>
-      val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"),
-        (pmod(col("doc_id") * lit(2654435761L), lit(100)) < batchPct).as("incoming"))
-      savePostingsIndexOf(docs.where(!col("incoming")).select("doc_id", "text"), tmp)
-      appendPostingsDelta(docs.where(col("incoming")).select("doc_id", "text"), tmp)
-      tombstoneDocs(
-        docs.where(pmod(col("doc_id") * lit(7919L), lit(100)) < deletePct)
-          .select("doc_id"), tmp)
-    }
-    bm25TopKFromIndex(spark, indexDir, queries, topK, salts)
-  }
+      topK: Int = 5, salts: Int = 32): DataFrame =
+    bm25TopKFromIndex(spark, lifecycled(spark, dir, Append, Tombstone),
+      queries, topK, salts)
 
   /** q133: BM25 served from an INCREMENTALLY BUILT index — the corpus is
-    * split by q96's deterministic delta rule (pmod(doc_id·2654435761,
-    * 100) < batchPct = the incoming batch), the base 70 % is persisted,
-    * the 30 % delta merged via [[appendPostingsDelta]], and the merged
+    * split by q96's deterministic delta rule, the base is persisted,
+    * the delta merged via [[appendPostingsDelta]], and the merged
     * artifact serves the batch. Gated under q110's oracle: merged-index
     * answers ≡ full-rebuild answers ≡ live answers — the fourth serving
     * shape, one pinned answer. */
   def bm25TopKIncremental(spark: SparkSession, dir: String,
       queries: Seq[(Int, String)] = DefaultQueries,
-      topK: Int = 5, salts: Int = 32, batchPct: Int = 30): DataFrame = {
-    val indexDir = persistedIndex.getOrCreate(spark, s"$dir#incremental:$batchPct") { tmp =>
-      val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"),
-        (pmod(col("doc_id") * lit(2654435761L), lit(100)) < batchPct).as("incoming"))
-      savePostingsIndexOf(docs.where(!col("incoming")).select("doc_id", "text"), tmp)
-      appendPostingsDelta(docs.where(col("incoming")).select("doc_id", "text"), tmp)
-    }
-    bm25TopKFromIndex(spark, indexDir, queries, topK, salts)
-  }
+      topK: Int = 5, salts: Int = 32): DataFrame =
+    bm25TopKFromIndex(spark, lifecycled(spark, dir, Append), queries, topK, salts)
+
+  /** The session's postings artifact of `dir` run through `steps`. */
+  private def lifecycled(spark: SparkSession, dir: String, steps: Lifecycle.Step*): String =
+    Lifecycle.artifact(persistedIndex, IndexFamily.bm25, spark, dir, steps: _*)
 
   /** Serve BM25 from a persisted [[savePostingsIndex]] artifact — NO
     * corpus relation in the plan at all (the restarted-service shape).

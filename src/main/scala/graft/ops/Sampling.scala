@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
 object Sampling {
 
   /** Hash bucket in [0, 100): exact integer arithmetic, no float. */
-  private def bucket100 = pmod(col("doc_id") * lit(2654435761L), lit(100))
+  private def bucket100 = Lifecycle.bucket(col("doc_id"))
 
   /** Stratified sample accounting: per-language keep rates (downsample
     * the dominant language, keep the tail) applied via hash bucket.

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions.dotProduct
+import graft.ops.Lifecycle.{Append, Compact, Reappend, Tombstone}
 
 /** Similarity search over the `embeddings` table (`Array[Float]`, 64-dim).
   *
@@ -549,24 +550,9 @@ object Similarity {
     * inverted file keeps only the survivors. */
   def ivfComposed(spark: SparkSession, dir: String,
       nCentroids: Int = 16, nProbe: Int = 8,
-      nQueries: Int = 100, k: Int = 3, batchPct: Int = 30,
-      deletePct: Int = 10, reappendPct: Int = 50): DataFrame = {
-    val indexDir = persistedIvf.getOrCreate(
-      spark, s"$dir#composed:$nCentroids:$batchPct:$deletePct:$reappendPct") { tmp =>
-      val e = unitEmbeddings(spark, dir).select(col("vec_id"), col("u"),
-        (pmod(col("vec_id") * lit(2654435761L), lit(100)) < batchPct).as("incoming"),
-        (pmod(col("vec_id") * lit(7919L), lit(100)) < deletePct).as("deleted"))
-      saveIvfIndexOf(e.where(!col("incoming")).select("vec_id", "u"), tmp, nCentroids)
-      appendIvfDelta(e.where(col("incoming")).select("vec_id", "u"), tmp)
-      tombstoneVectors(e.where(col("deleted")).select("vec_id"), tmp)
-      appendIvfDelta(
-        e.where(col("deleted") &&
-            pmod(col("vec_id") * lit(104729L), lit(100)) < reappendPct)
-          .select("vec_id", "u"), tmp)
-      compactIvfIndex(spark, tmp)
-    }
-    ivfTopKFromIndex(spark, indexDir, nProbe, nQueries, k)
-  }
+      nQueries: Int = 100, k: Int = 3): DataFrame =
+    ivfTopKFromIndex(spark, Lifecycle.artifact(persistedIvf, IndexFamily.ivf(nCentroids),
+      spark, dir, Append, Tombstone, Reappend, Compact), nProbe, nQueries, k)
 
   private val persistedIvf = new TempArtifacts("graft-ivf-index")
 
@@ -905,9 +891,8 @@ object Similarity {
 
   /** q136: two-level ANN served from an INCREMENTALLY BUILT index —
     * the corpus is split by q96's deterministic delta rule
-    * (pmod(vec_id·2654435761, 100) < batchPct = the incoming batch),
-    * the base is trained + persisted via [[saveTwoLevelIndexOf]], the
-    * delta merged under the frozen codebooks via
+    * ([[Lifecycle]]), the base is trained + persisted via
+    * [[saveTwoLevelIndexOf]], the delta merged under the frozen codebooks via
     * [[appendTwoLevelDelta]], and the merged artifact serves the
     * queries through the exact probe pipeline every other two-level
     * mode uses. Gated hash-exact against an oracle whose codebook CTEs
@@ -916,17 +901,9 @@ object Similarity {
   def twoLevelIncremental(spark: SparkSession, dir: String,
       nCoarse: Int = 8, nSub: Int = 4,
       nProbe1: Int = 4, nProbe2: Int = 2,
-      nQueries: Int = 100, k: Int = 3, batchPct: Int = 30): DataFrame = {
-    val indexDir = persistedTwoLevel.getOrCreate(
-      spark, s"$dir#incr:$nCoarse:$nSub:$batchPct") { tmp =>
-      val e = unitEmbeddings(spark, dir).withColumn("incoming",
-        pmod(col("vec_id") * lit(2654435761L), lit(100)) < batchPct)
-      saveTwoLevelIndexOf(
-        e.where(!col("incoming")).select("vec_id", "u"), tmp, nCoarse, nSub)
-      appendTwoLevelDelta(e.where(col("incoming")).select("vec_id", "u"), tmp)
-    }
-    twoLevelTopKFromIndex(spark, indexDir, nProbe1, nProbe2, nQueries, k)
-  }
+      nQueries: Int = 100, k: Int = 3): DataFrame =
+    twoLevelTopKFromIndex(spark, twoLevelLifecycled(spark, dir, nCoarse, nSub, Append),
+      nProbe1, nProbe2, nQueries, k)
 
   // --- Product quantization (IVFADC) --------------------------------
 
@@ -1420,18 +1397,14 @@ object Similarity {
   def pqIncremental(spark: SparkSession, dir: String,
       nCoarse: Int = 8, nSub: Int = 4, m: Int = 8, k: Int = 64,
       nProbe1: Int = 4, nProbe2: Int = 2,
-      nQueries: Int = 100, topK: Int = 3, rerank: Int = 16,
-      batchPct: Int = 30): DataFrame = {
-    val indexDir = persistedPq.getOrCreate(
-      spark, s"$dir#incr:$nCoarse:$nSub:$m:$k:$batchPct") { tmp =>
-      val e = unitEmbeddings(spark, dir).withColumn("incoming",
-        pmod(col("vec_id") * lit(2654435761L), lit(100)) < batchPct)
-      savePqIndexOf(
-        e.where(!col("incoming")).select("vec_id", "u"), tmp, nCoarse, nSub, m, k)
-      appendPqDelta(e.where(col("incoming")).select("vec_id", "u"), tmp)
-    }
-    pqTopKFromIndex(spark, indexDir, nProbe1, nProbe2, nQueries, topK, rerank)
-  }
+      nQueries: Int = 100, topK: Int = 3, rerank: Int = 16): DataFrame =
+    pqTopKFromIndex(spark, pqLifecycled(spark, dir, nCoarse, nSub, m, k, Append),
+      nProbe1, nProbe2, nQueries, topK, rerank)
+
+  /** The session's PQ artifact of `dir` run through `steps`. */
+  private def pqLifecycled(spark: SparkSession, dir: String,
+      nCoarse: Int, nSub: Int, m: Int, k: Int, steps: Lifecycle.Step*): String =
+    Lifecycle.artifact(persistedPq, IndexFamily.pq(nCoarse, nSub, m, k), spark, dir, steps: _*)
 
   /** Expunge vector tombstones from a [[savePqIndex]] artifact: the
     * codes inverted file rewrites ONLY the touched cent_id cells (the
@@ -1563,19 +1536,9 @@ object Similarity {
   def pqCompacted(spark: SparkSession, dir: String,
       nCoarse: Int = 8, nSub: Int = 4, m: Int = 8, k: Int = 64,
       nProbe1: Int = 4, nProbe2: Int = 2,
-      nQueries: Int = 100, topK: Int = 3, rerank: Int = 16,
-      deletePct: Int = 10): DataFrame = {
-    val indexDir = persistedPq.getOrCreate(
-      spark, s"$dir#compact:$nCoarse:$nSub:$m:$k:$deletePct") { tmp =>
-      savePqIndex(spark, dir, tmp, nCoarse, nSub, m, k)
-      tombstoneVectors(
-        unitEmbeddings(spark, dir)
-          .where(pmod(col("vec_id") * lit(7919L), lit(100)) < deletePct)
-          .select("vec_id"), tmp)
-      compactPqIndex(spark, tmp)
-    }
-    pqTopKFromIndex(spark, indexDir, nProbe1, nProbe2, nQueries, topK, rerank)
-  }
+      nQueries: Int = 100, topK: Int = 3, rerank: Int = 16): DataFrame =
+    pqTopKFromIndex(spark, pqLifecycled(spark, dir, nCoarse, nSub, m, k, Tombstone, Compact),
+      nProbe1, nProbe2, nQueries, topK, rerank)
 
   /** q162: the compressed lifecycle COMPOSED — [[twoLevelComposed]]'s
     * sequence through the PQ layers: base build trains coarse/sub/PQ
@@ -1588,25 +1551,10 @@ object Similarity {
   def pqComposed(spark: SparkSession, dir: String,
       nCoarse: Int = 8, nSub: Int = 4, m: Int = 8, k: Int = 64,
       nProbe1: Int = 4, nProbe2: Int = 2,
-      nQueries: Int = 100, topK: Int = 3, rerank: Int = 16,
-      batchPct: Int = 30, deletePct: Int = 10, reappendPct: Int = 50): DataFrame = {
-    val indexDir = persistedPq.getOrCreate(
-      spark, s"$dir#composed:$nCoarse:$nSub:$m:$k:$batchPct:$deletePct:$reappendPct") { tmp =>
-      val e = unitEmbeddings(spark, dir).select(col("vec_id"), col("u"),
-        (pmod(col("vec_id") * lit(2654435761L), lit(100)) < batchPct).as("incoming"),
-        (pmod(col("vec_id") * lit(7919L), lit(100)) < deletePct).as("deleted"))
-      savePqIndexOf(e.where(!col("incoming")).select("vec_id", "u"),
-        tmp, nCoarse, nSub, m, k)
-      appendPqDelta(e.where(col("incoming")).select("vec_id", "u"), tmp)
-      tombstoneVectors(e.where(col("deleted")).select("vec_id"), tmp)
-      appendPqDelta(
-        e.where(col("deleted") &&
-            pmod(col("vec_id") * lit(104729L), lit(100)) < reappendPct)
-          .select("vec_id", "u"), tmp)
-      compactPqIndex(spark, tmp)
-    }
-    pqTopKFromIndex(spark, indexDir, nProbe1, nProbe2, nQueries, topK, rerank)
-  }
+      nQueries: Int = 100, topK: Int = 3, rerank: Int = 16): DataFrame =
+    pqTopKFromIndex(spark,
+      pqLifecycled(spark, dir, nCoarse, nSub, m, k, Append, Tombstone, Reappend, Compact),
+      nProbe1, nProbe2, nQueries, topK, rerank)
 
   /** q145: the compressed artifact with DELETES — q143's tombstone
     * contract through the PQ layers: full-corpus build, the 10 % delete
@@ -1618,18 +1566,9 @@ object Similarity {
   def pqTombstoned(spark: SparkSession, dir: String,
       nCoarse: Int = 8, nSub: Int = 4, m: Int = 8, k: Int = 64,
       nProbe1: Int = 4, nProbe2: Int = 2,
-      nQueries: Int = 100, topK: Int = 3, rerank: Int = 16,
-      deletePct: Int = 10): DataFrame = {
-    val indexDir = persistedPq.getOrCreate(
-      spark, s"$dir#tomb:$nCoarse:$nSub:$m:$k:$deletePct") { tmp =>
-      savePqIndex(spark, dir, tmp, nCoarse, nSub, m, k)
-      tombstoneVectors(
-        unitEmbeddings(spark, dir)
-          .where(pmod(col("vec_id") * lit(7919L), lit(100)) < deletePct)
-          .select("vec_id"), tmp)
-    }
-    pqTopKFromIndex(spark, indexDir, nProbe1, nProbe2, nQueries, topK, rerank)
-  }
+      nQueries: Int = 100, topK: Int = 3, rerank: Int = 16): DataFrame =
+    pqTopKFromIndex(spark, pqLifecycled(spark, dir, nCoarse, nSub, m, k, Tombstone),
+      nProbe1, nProbe2, nQueries, topK, rerank)
 
   /** Retire vectors from a persisted ANN artifact (two-level or PQ
     * layout) — [[Retrieval.tombstoneDocs]]'s contract for the vector
@@ -1699,18 +1638,10 @@ object Similarity {
   def twoLevelCompacted(spark: SparkSession, dir: String,
       nCoarse: Int = 8, nSub: Int = 4,
       nProbe1: Int = 4, nProbe2: Int = 2,
-      nQueries: Int = 100, k: Int = 3, deletePct: Int = 10): DataFrame = {
-    val indexDir = persistedTwoLevel.getOrCreate(
-      spark, s"$dir#compact:$nCoarse:$nSub:$deletePct") { tmp =>
-      saveTwoLevelIndex(spark, dir, tmp, nCoarse, nSub)
-      tombstoneVectors(
-        unitEmbeddings(spark, dir)
-          .where(pmod(col("vec_id") * lit(7919L), lit(100)) < deletePct)
-          .select("vec_id"), tmp)
-      compactTwoLevelIndex(spark, tmp)
-    }
-    twoLevelTopKFromIndex(spark, indexDir, nProbe1, nProbe2, nQueries, k)
-  }
+      nQueries: Int = 100, k: Int = 3): DataFrame =
+    twoLevelTopKFromIndex(spark,
+      twoLevelLifecycled(spark, dir, nCoarse, nSub, Tombstone, Compact),
+      nProbe1, nProbe2, nQueries, k)
 
   /** q161: the two-level lifecycle COMPOSED — base build (70 %, the
     * codebooks train here and stay frozen) → delta append (30 %) →
@@ -1723,25 +1654,10 @@ object Similarity {
   def twoLevelComposed(spark: SparkSession, dir: String,
       nCoarse: Int = 8, nSub: Int = 4,
       nProbe1: Int = 4, nProbe2: Int = 2,
-      nQueries: Int = 100, k: Int = 3, batchPct: Int = 30,
-      deletePct: Int = 10, reappendPct: Int = 50): DataFrame = {
-    val indexDir = persistedTwoLevel.getOrCreate(
-      spark, s"$dir#composed:$nCoarse:$nSub:$batchPct:$deletePct:$reappendPct") { tmp =>
-      val e = unitEmbeddings(spark, dir).select(col("vec_id"), col("u"),
-        (pmod(col("vec_id") * lit(2654435761L), lit(100)) < batchPct).as("incoming"),
-        (pmod(col("vec_id") * lit(7919L), lit(100)) < deletePct).as("deleted"))
-      saveTwoLevelIndexOf(
-        e.where(!col("incoming")).select("vec_id", "u"), tmp, nCoarse, nSub)
-      appendTwoLevelDelta(e.where(col("incoming")).select("vec_id", "u"), tmp)
-      tombstoneVectors(e.where(col("deleted")).select("vec_id"), tmp)
-      appendTwoLevelDelta(
-        e.where(col("deleted") &&
-            pmod(col("vec_id") * lit(104729L), lit(100)) < reappendPct)
-          .select("vec_id", "u"), tmp)
-      compactTwoLevelIndex(spark, tmp)
-    }
-    twoLevelTopKFromIndex(spark, indexDir, nProbe1, nProbe2, nQueries, k)
-  }
+      nQueries: Int = 100, k: Int = 3): DataFrame =
+    twoLevelTopKFromIndex(spark,
+      twoLevelLifecycled(spark, dir, nCoarse, nSub, Append, Tombstone, Reappend, Compact),
+      nProbe1, nProbe2, nQueries, k)
 
   /** q143: the two-level artifact with DELETES — full-corpus build,
     * a deterministic 10 % delete set tombstoned, served through the
@@ -1752,17 +1668,15 @@ object Similarity {
   def twoLevelTombstoned(spark: SparkSession, dir: String,
       nCoarse: Int = 8, nSub: Int = 4,
       nProbe1: Int = 4, nProbe2: Int = 2,
-      nQueries: Int = 100, k: Int = 3, deletePct: Int = 10): DataFrame = {
-    val indexDir = persistedTwoLevel.getOrCreate(
-      spark, s"$dir#tomb:$nCoarse:$nSub:$deletePct") { tmp =>
-      saveTwoLevelIndex(spark, dir, tmp, nCoarse, nSub)
-      tombstoneVectors(
-        unitEmbeddings(spark, dir)
-          .where(pmod(col("vec_id") * lit(7919L), lit(100)) < deletePct)
-          .select("vec_id"), tmp)
-    }
-    twoLevelTopKFromIndex(spark, indexDir, nProbe1, nProbe2, nQueries, k)
-  }
+      nQueries: Int = 100, k: Int = 3): DataFrame =
+    twoLevelTopKFromIndex(spark, twoLevelLifecycled(spark, dir, nCoarse, nSub, Tombstone),
+      nProbe1, nProbe2, nQueries, k)
+
+  /** The session's two-level artifact of `dir` run through `steps`. */
+  private def twoLevelLifecycled(spark: SparkSession, dir: String,
+      nCoarse: Int, nSub: Int, steps: Lifecycle.Step*): String =
+    Lifecycle.artifact(persistedTwoLevel, IndexFamily.twoLevel(nCoarse, nSub), spark, dir,
+      steps: _*)
 
   private val persistedTwoLevel = new TempArtifacts("graft-ivf2-index")
   private[ops] def persistedTwoLevelDirFor(spark: SparkSession, dir: String,

@@ -162,8 +162,9 @@ private[ops] final class TempArtifacts(prefix: String) {
     })
 
   /** Fingerprint the underlying PATH, not the logical key: callers key
-    * lifecycle variants as "$dir#lifecycle:..." — the corpus lives at
-    * the prefix. */
+    * variants of one corpus as "$dir#<variant>" (a lifecycle artifact as
+    * "$dir#lifecycle:<family>:<steps>", [[Lifecycle.artifact]]) — the
+    * corpus lives at the prefix. */
   private def tagged(spark: SparkSession, dir: String): String = {
     val cut = dir.indexOf('#')
     if (cut < 0) StageCache.inputTag(spark, dir)

@@ -125,11 +125,13 @@ class CsvLineScanSpec extends AnyFunSuite {
 
   test("lazy-quote lines take univocity's reading") {
     // Spark reads `"a" ,b` as (a, b) and the last cell of `1,"` as `"`,
-    // where a Go-style lazy reader differs: these lines never take the
-    // byte path
+    // where a Go-style lazy reader differs: a line with a quoted field
+    // that is not RFC-shaped never takes the byte path. A quote inside
+    // an unquoted field (`5" disk`) is literal in univocity's reading,
+    // and the byte path reads it the same way
     val lazyLines = Seq("\"a\" ,b", "1,\"", "a\"b,c", "\"a\"b,c", "\"a,b", " \"a\",b", "\"a\"\"b\" ,c",
       "\"a\"\",b", "a,b\"", "\"\"a,b", "\"a\"\t,b", "\"\"\",b", "x,\"\"\"", "\"a\" \"b\",c", "a,\"b\"c",
-      "\"a\",\"b\" ", "\"\" ,\"\"", "1\",2")
+      "\"a\",\"b\" ", "\"\" ,\"\"", "1\",2", "5\" disk,3", "a\"\"b,1", "a\",b", " \"x,y\"")
     sameLines(2, lazyLines: _*)
     sameLines(3, lazyLines: _*)
   }

@@ -38,25 +38,24 @@ class ArtifactVersionSpec extends AnyFunSuite {
       serves: Seq[(String, String => Seq[String])])
 
   private val families = Seq(
-    Family("bm25", Retrieval.savePostingsIndexOf(docs, _), Seq("postings", "dl"),
+    Family("bm25", IndexFamily.bm25.build(docs, _), Seq("postings", "dl"),
       Seq("bm25TopKFromIndex" -> (d => rows(Retrieval.bm25TopKFromIndex(spark, d))))),
-    Family("image", d => ImageIndex.saveImageHashIndexOf(Multimodal.imageHashesOf(docs), d),
-      Seq("bands", "hashes"),
+    Family("image", IndexFamily.image.build(docs, _), Seq("bands", "hashes"),
       Seq("imageDupsFromIndex" -> (d => rows(ImageIndex.imageDupsFromIndex(spark, d))),
         "probeImages" -> (d => rows(ImageIndex.probeImages(probeDocs, d))))),
-    Family("lsh", LshIndex.saveLshIndexOf(vecs, _), Seq("meta", "buckets", "vectors"),
+    Family("lsh", IndexFamily.lsh.build(vecs, _), Seq("meta", "buckets", "vectors"),
       Seq("lshTopKFromIndex" -> (d => rows(LshIndex.lshTopKFromIndex(spark, d))),
         "probeVectors" -> (d => rows(LshIndex.probeVectors(probeVecs, d))),
         "liveVectors" -> (d => rows(LshIndex.liveVectors(spark, d).orderBy("vec_id"))))),
-    Family("fp", FingerprintIndex.saveFingerprintIndexOf(docs, _), Seq("meta", "fingerprints"),
+    Family("fp", IndexFamily.fingerprint.build(docs, _), Seq("meta", "fingerprints"),
       Seq("probeFingerprints" -> (d => rows(FingerprintIndex.probeFingerprints(
         probeDocs.select(col("doc_id") + 100000L as "doc_id", col("text")), d))))),
-    Family("ivf", Similarity.saveIvfIndexOf(vecs, _), Seq("centroids", "assignments"),
+    Family("ivf", IndexFamily.ivf(16).build(vecs, _), Seq("centroids", "assignments"),
       Seq("ivfTopKFromIndex" -> (d => rows(Similarity.ivfTopKFromIndex(spark, d))))),
-    Family("ivf2", Similarity.saveTwoLevelIndexOf(vecs, _),
+    Family("ivf2", IndexFamily.twoLevel(8, 4).build(vecs, _),
       Seq("coarse", "subcents", "assignments"),
       Seq("twoLevelTopKFromIndex" -> (d => rows(Similarity.twoLevelTopKFromIndex(spark, d))))),
-    Family("pq", Similarity.savePqIndexOf(vecs, _), Seq("pqbook", "meta", "codes", "vectors"),
+    Family("pq", IndexFamily.pq().build(vecs, _), Seq("pqbook", "meta", "codes", "vectors"),
       Seq("pqTopKFromIndex" -> (d => rows(Similarity.pqTopKFromIndex(spark, d))),
         "pqTopKFromIndexCold" -> (d => rows(Similarity.pqTopKFromIndexCold(spark, d))))))
 
@@ -105,26 +104,22 @@ class ArtifactVersionSpec extends AnyFunSuite {
   test("two concurrent appends: a lost lease fails fast, and its re-run loses no rows") {
     // every doc probed under a fresh id, so each held doc flags
     val shifted = docs.select(col("doc_id") + 100000L as "doc_id", col("text"))
-    // (family, input, its id, base build, append, serve): the input splits
-    // three ways by id — the base, then two deltas raced against each other
-    val cases: Seq[(String, DataFrame, String, (DataFrame, String) => Unit,
-        (DataFrame, String) => Unit, String => Seq[String])] = Seq(
-      ("bm25", docs, "doc_id", Retrieval.savePostingsIndexOf,
-        Retrieval.appendPostingsDelta, d => rows(Retrieval.bm25TopKFromIndex(spark, d))),
-      ("lsh", vecs, "vec_id", LshIndex.saveLshIndexOf(_, _, 8, 8),
-        LshIndex.appendLshDelta(_, _), d => rows(LshIndex.lshTopKFromIndex(spark, d))),
-      ("pq", vecs, "vec_id", Similarity.savePqIndexOf(_, _, 4, 2, 4, 16),
-        Similarity.appendPqDelta, d => rows(Similarity.pqTopKFromIndex(spark, d))),
-      ("image", docs, "doc_id",
-        (b, d) => ImageIndex.saveImageHashIndexOf(Multimodal.imageHashesOf(b), d),
-        ImageIndex.appendImageHashDelta, d => rows(ImageIndex.probeImages(shifted, d))),
-      ("fp", docs, "doc_id", FingerprintIndex.saveFingerprintIndexOf,
-        FingerprintIndex.appendFingerprintDelta,
+    // (family, input, serve): the input splits three ways by id — the
+    // base, then two deltas raced against each other. LSH pins its
+    // geometry, so the base's size does not pick it
+    val cases: Seq[(String, IndexFamily, DataFrame, String => Seq[String])] = Seq(
+      ("bm25", IndexFamily.bm25, docs, d => rows(Retrieval.bm25TopKFromIndex(spark, d))),
+      ("lsh", IndexFamily.lsh.copy(build = LshIndex.saveLshIndexOf(_, _, 8, 8)), vecs,
+        d => rows(LshIndex.lshTopKFromIndex(spark, d))),
+      ("pq", IndexFamily.pq(4, 2, 4, 16), vecs, d => rows(Similarity.pqTopKFromIndex(spark, d))),
+      ("image", IndexFamily.image, docs, d => rows(ImageIndex.probeImages(shifted, d))),
+      ("fp", IndexFamily.fingerprint, docs,
         d => rows(FingerprintIndex.probeFingerprints(shifted, d))))
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
-    for ((name, input, id, build, append, serve) <- cases) {
+    for ((name, family, input, serve) <- cases) {
+      val (id, build, append) = (family.id, family.build, family.append)
       val out = tmpDir(s"graft-version-race-$name")
       val twin = tmpDir(s"graft-version-race-$name-twin")
       val Seq(base, a, b) = (0 to 2).map(p => input.where(pmod(col(id), lit(3)) === p))
