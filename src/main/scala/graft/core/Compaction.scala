@@ -7,12 +7,13 @@ import org.apache.spark.sql.SparkSession
   * operational answer to the classic landing-zone problem: a streaming
   * sink or many-task write leaves thousands of KB-sized part files, and
   * every later scan pays a task per file. Compaction bin-packs the parts
-  * into ~`targetBytes` outputs using the SAME footer-level row-group
-  * append the single-file converter sink uses
-  * ([[Converter.mergeParquetParts]] / `ParquetFileWriter.appendFile`):
-  * column chunks are copied as raw bytes with offsets rebased — no
-  * decode, no re-encode, no Spark job. Cost is a byte copy of the data,
-  * independent of schema width or row count semantics.
+  * into ~`targetBytes` outputs using the SAME row-group append the
+  * single-file converter sink uses ([[Converter.mergeParquetParts]]:
+  * `ParquetFileWriter.appendColumnChunk` per column chunk): column chunks
+  * are copied as raw bytes with offsets rebased, and their column and
+  * offset indexes and bloom filters carried along — no decode, no
+  * re-encode, no Spark job. Cost is a byte copy of the data, independent
+  * of schema width or row count semantics.
   *
   * Packing is first-fit over the name-sorted part list (name order =
   * write order for Spark part files), so row order within each output
@@ -49,14 +50,12 @@ object Compaction {
     require(parts.nonEmpty, s"no parquet part files under $inDir")
 
     // footer pass: schemas must agree; collect per-file row counts
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import scala.jdk.CollectionConverters._
+    val options = ParquetFiles.options(conf)
     val footers = parts.map { s =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(s.getPath, conf))
-      try (s, r.getFooter.getFileMetaData.getSchema,
-        r.getFooter.getBlocks.asScala.map(_.getRowCount).sum)
-      finally r.close()
+      ParquetFiles.read(s.getPath, conf, options) { (r, _) =>
+        (s, r.getFooter.getFileMetaData.getSchema, r.getFooter.getBlocks.asScala.map(_.getRowCount).sum)
+      }
     }
     val schema0 = footers.head._2
     footers.find(_._2 != schema0).foreach { case (s, sch, _) =>
@@ -95,8 +94,7 @@ object Compaction {
     // footer-only verification: output rows must equal input rows
     val outParts = outFs.listStatus(out).filter(_.getPath.getName.endsWith(".parquet"))
     val outRows = outParts.map { s =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(s.getPath, conf))
-      try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum finally r.close()
+      ParquetFiles.read(s.getPath, conf, options)((r, _) => r.getFooter.getBlocks.asScala.map(_.getRowCount).sum)
     }.sum
     if (outRows != totalRows)
       throw new IllegalStateException(

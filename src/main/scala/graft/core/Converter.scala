@@ -311,9 +311,10 @@ object Converter {
     *
     * Parquet and JSON keep the PARALLEL write: every core scans/casts its
     * own splits into a temp directory, then the parts collapse to one
-    * file without decoding — parquet by footer-level row-group append
-    * (`ParquetFileWriter.appendFile`: column chunks are copied as raw
-    * bytes, offsets rebased, one new footer), JSON by byte concatenation.
+    * file without decoding — parquet by row-group append
+    * ([[mergeParquetParts]]: column chunks are copied as raw bytes with
+    * their page indexes, offsets rebased, one new footer), JSON by byte
+    * concatenation.
     * Part files are merged in name order = split offset order, so row
     * order matches a sequential read. The former `coalesce(1)` collapsed
     * the WHOLE plan — scan, cast and write — into one task (a 1 GiB CSV
@@ -368,29 +369,43 @@ object Converter {
   }
 
   /** Zero-decode parquet merge: copy every part's row groups into one
-    * file via the official append API and carry the first part's
-    * key-value metadata (Spark stores its schema JSON there — losing it
-    * would change timestamp/nullability round-trip semantics). */
+    * file chunk by chunk (`ParquetFileWriter.appendColumnChunk`: raw
+    * bytes, offsets rebased) with each chunk's column index, offset index
+    * and bloom filter, and carry the first part's key-value metadata
+    * (Spark stores its schema JSON there — losing it would change
+    * timestamp/nullability round-trip semantics). Each part is opened
+    * once, with one set of read options for the whole merge; the first
+    * part's footer gives the schema. */
   private[core] def mergeParquetParts(conf: org.apache.hadoop.conf.Configuration,
       parts: Seq[Path], merged: Path): Unit = {
-    import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter, ParquetWriter}
-    import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
-    val first = ParquetFileReader.open(HadoopInputFile.fromPath(parts.head, conf))
-    val (schema, kv) =
-      try {
-        val fmd = first.getFooter.getFileMetaData
-        (fmd.getSchema, fmd.getKeyValueMetaData)
-      } finally first.close()
+    import scala.jdk.CollectionConverters._
     import org.apache.parquet.column.ParquetProperties
-    val w = new ParquetFileWriter(HadoopOutputFile.fromPath(merged, conf), schema,
-      ParquetFileWriter.Mode.CREATE, ParquetWriter.DEFAULT_BLOCK_SIZE,
-      ParquetWriter.MAX_PADDING_SIZE_DEFAULT,
-      ParquetProperties.DEFAULT_COLUMN_INDEX_TRUNCATE_LENGTH,
-      ParquetProperties.DEFAULT_STATISTICS_TRUNCATE_LENGTH,
-      ParquetProperties.DEFAULT_PAGE_WRITE_CHECKSUM_ENABLED)
-    w.start()
-    parts.foreach(p => w.appendFile(HadoopInputFile.fromPath(p, conf)))
-    w.end(kv)
+    import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetWriter}
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    val options = ParquetFiles.options(conf)
+    var w: ParquetFileWriter = null
+    var first: org.apache.parquet.hadoop.metadata.FileMetaData = null
+    parts.foreach(p => ParquetFiles.read(p, conf, options) { (r, in) =>
+      if (w == null) {
+        first = r.getFooter.getFileMetaData
+        w = new ParquetFileWriter(HadoopOutputFile.fromPath(merged, conf), first.getSchema,
+          ParquetFileWriter.Mode.CREATE, ParquetWriter.DEFAULT_BLOCK_SIZE,
+          ParquetWriter.MAX_PADDING_SIZE_DEFAULT,
+          ParquetProperties.DEFAULT_COLUMN_INDEX_TRUNCATE_LENGTH,
+          ParquetProperties.DEFAULT_STATISTICS_TRUNCATE_LENGTH,
+          ParquetProperties.DEFAULT_PAGE_WRITE_CHECKSUM_ENABLED)
+        w.start()
+      }
+      r.getFooter.getBlocks.asScala.foreach { block =>
+        w.startBlock(block.getRowCount)
+        block.getColumns.asScala.foreach { c =>
+          w.appendColumnChunk(first.getSchema.getColumnDescription(c.getPath.toArray), in, c,
+            r.readBloomFilter(c), r.readColumnIndex(c), r.readOffsetIndex(c))
+        }
+        w.endBlock()
+      }
+    })
+    w.end(first.getKeyValueMetaData)
   }
 
   /** Byte-concatenate text part files (JSON-lines) in split order. */

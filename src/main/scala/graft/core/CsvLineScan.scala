@@ -4,6 +4,7 @@ import java.io.{ObjectInputStream, ObjectOutputStream}
 import java.nio.ByteBuffer
 import java.nio.charset.{CharacterCodingException, StandardCharsets}
 
+import com.univocity.parsers.common.TextParsingException
 import com.univocity.parsers.csv.CsvParser
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.FileStatus
@@ -37,19 +38,25 @@ import org.apache.spark.unsafe.types.UTF8String
   * inside it is literal, as univocity reads it), or wholly quoted with
   * only doubled `""` inside and its closing quote right before the
   * delimiter or the end of the line. Every other line (lazy quotes,
-  * invalid UTF-8, more fields than univocity's `maxColumns`) is decoded
-  * as UTF-8 and tokenized by the univocity parser Spark itself builds
-  * from the same options, so no second grammar exists for them. The
-  * rest follows Spark's line mode: lines come from
-  * `HadoopFileLinesReader` (same split boundaries and codecs), lines of
-  * bytes ≤ 0x20 only are skipped, the first other line is the header
-  * only in the split at offset 0, and a line whose field count is not
+  * invalid UTF-8) is decoded as UTF-8 and tokenized by the univocity
+  * parser Spark itself builds from the same options, so no second
+  * grammar exists for them. The rest follows Spark's line mode: lines
+  * come from `HadoopFileLinesReader` (same split boundaries and codecs),
+  * lines of bytes ≤ 0x20 only are skipped, the first other line is the
+  * header only in the split at offset 0, and a line whose field count is not
   * the schema width is dropped (DROPMALFORMED) — whatever columns the
   * query requires, unlike Spark's CSV column pruning, which skips that
   * check when none are.
   *
+  * One divergence from Spark, on the reference's side: a line with more
+  * fields than univocity's `maxColumns` (20480) is dropped as ragged,
+  * as Go's reader skips it, where Spark's line mode fails the task. The
+  * byte path never hands a ragged line to univocity, and the fallback
+  * drops a line on which univocity hits its column limit.
+  *
   * Rows share one `UnsafeRowWriter`: the iterator advances in `hasNext`,
-  * never in `next()`.
+  * never in `next()`. Without partition columns they reach the sink
+  * uncopied.
   */
 class CsvLineScan extends TextBasedFileFormat with DataSourceRegister {
 
@@ -77,6 +84,18 @@ class CsvLineScan extends TextBasedFileFormat with DataSourceRegister {
     val width = requiredSchema.length
     file => new CsvLineScan.Rows(file, conf.value.conf, csv, kinds, ordinals, width)
   }
+
+  /** Without partition columns, [[buildReader]]'s rows as they are: they
+    * are already `UnsafeRow`s of the required schema, and the default
+    * would copy each into a second one. */
+  override def buildReaderWithPartitionValues(spark: SparkSession, dataSchema: StructType,
+      partitionSchema: StructType, requiredSchema: StructType, filters: Seq[Filter],
+      options: Map[String, String], hadoopConf: Configuration): PartitionedFile => Iterator[InternalRow] =
+    if (partitionSchema.isEmpty)
+      buildReader(spark, dataSchema, partitionSchema, requiredSchema, filters, options, hadoopConf)
+    else
+      super.buildReaderWithPartitionValues(spark, dataSchema, partitionSchema, requiredSchema, filters,
+        options, hadoopConf)
 
   override def toString: String = "CsvLine"
   // equal by class, like CSVFileFormat: two scans of one file are one
@@ -168,8 +187,8 @@ object CsvLineScan {
     /** One data line into `writer`; false when the line is dropped. */
     private def parse(b: Array[Byte], len: Int): Boolean = {
       val fields = if (delim < 0) NotRfc else tokenize(b, len)
-      if (fields == NotRfc || fields > csv.maxColumns) return parseFallback(b, len)
-      if (fields != n) return false
+      if (fields == NotRfc) return parseFallback(b, len)
+      if (fields != n) return false // ragged, however wide
       writer.reset()
       writer.zeroOutNullBytes()
       var i = 0
@@ -253,7 +272,11 @@ object CsvLineScan {
       * univocity tokens, DROPMALFORMED on a width mismatch, nullValue ""
       * → null, then the same casts. */
     private def parseFallback(b: Array[Byte], len: Int): Boolean = {
-      val tokens = univocity.parseLine(new String(b, 0, len, StandardCharsets.UTF_8))
+      val tokens =
+        try univocity.parseLine(new String(b, 0, len, StandardCharsets.UTF_8))
+        catch { // more fields than `maxColumns`: ragged, not a failed task
+          case e: TextParsingException if e.getCause.isInstanceOf[ArrayIndexOutOfBoundsException] => null
+        }
       if (tokens == null || tokens.length != n) return false
       writer.reset()
       writer.zeroOutNullBytes()

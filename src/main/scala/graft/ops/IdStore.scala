@@ -4,8 +4,6 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter, RecordMaterializer}
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type}
@@ -14,6 +12,8 @@ import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSes
 import org.apache.spark.sql.catalyst.expressions.{GenericRow, XXH64}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.core.ParquetFiles
 
 /** The store lifecycle the persisted index families share — BM25
   * postings ([[Retrieval]]), image hashes ([[ImageIndex]]), LSH vectors
@@ -262,7 +262,7 @@ private[graft] object IdStore {
       "gone — the store was changed outside the artifact's version log; rebuild the " +
       "artifact (LSH: LshIndex.migrateLshIndex)", cause)
 
-  /** [[Version.readLocal]] of `files`: each opened with `ParquetFileReader`
+  /** [[Version.readLocal]] of `files`: each opened by [[ParquetFiles.read]]
     * against the session's loaded Hadoop configuration (a fresh
     * `Configuration` per file re-parses the `*-default.xml` resources,
     * milliseconds a file), its row groups and pages pruned by the
@@ -283,9 +283,7 @@ private[graft] object IdStore {
         .withRecordFilter(in.fold(FilterCompat.NOOP)(p => FilterCompat.get(p._2))).build()
       val out = Vector.newBuilder[Row]
       files.foreach { f =>
-        val reader = try ParquetFileReader.open(HadoopInputFile.fromPath(new Path(dir, f), conf), options)
-          catch { case e: java.io.FileNotFoundException => throw gone(root, at, dir, e) }
-        try {
+        try ParquetFiles.read(new Path(dir, f), conf, options) { (reader, _) =>
           val meta = reader.getFooter.getFileMetaData
           // the `column=value` dirs between the store and the file
           val partValues = f.split('/').iterator.drop(1).filter(_.contains('=')).map { d =>
@@ -313,7 +311,7 @@ private[graft] object IdStore {
             }
             pages = reader.readNextFilteredRowGroup()
           }
-        } finally reader.close()
+        } catch { case e: java.io.FileNotFoundException => throw gone(root, at, dir, e) }
       }
       out.result()
     }

@@ -40,8 +40,14 @@ class CompactionSpec extends AnyFunSuite {
     val sum = Compaction.compactParquet(spark, in, out, targetBytes = 64 * 1024)
     assert(sum.filesIn == 23 && sum.rows == 10000)
     assert(sum.filesOut < sum.filesIn, s"expected fewer files, got ${sum.filesOut}")
-    // zero-decode: row groups are moved, never re-formed
+    // zero-decode: row groups are moved, never re-formed, with their
+    // column and offset indexes
     assert(rowGroups(out) == groupsIn)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val chunks = new java.io.File(out).listFiles().filter(_.getName.endsWith(".parquet")).toSeq
+      .flatMap(f => MergeParquetPartsSpec.indexes(conf, new org.apache.hadoop.fs.Path(f.toString)).flatten)
+    assert(chunks.size == 2 * groupsIn)
+    assert(chunks.forall { case (ci, oi) => ci.isDefined && oi.isDefined })
     // content identity
     val back = spark.read.parquet(out)
     assert(back.count() == 10000)

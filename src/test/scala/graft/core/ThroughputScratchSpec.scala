@@ -2,6 +2,7 @@ package graft.core
 
 import java.nio.file.Files
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -48,8 +49,15 @@ class ThroughputScratchSpec extends AnyFunSuite {
       timed("Spark CSV scan, all-string rows (noop)")(noop(raw))
       timed("Spark CSV scan + GoCast projection (noop)")(noop(projected))
       timed("fused CsvLineScan (noop)")(noop(fused))
-      timed("fused CsvLineScan + parquet write") {
-        fused.write.mode("overwrite").parquet(dir.resolve("out.parquet").toString)
+      val out = dir.resolve("out.parquet").toString
+      timed("fused CsvLineScan + parquet write")(fused.write.mode("overwrite").parquet(out))
+      val conf = spark.sparkContext.hadoopConfiguration
+      val parts = new java.io.File(out).listFiles().map(_.getName).filter(_.startsWith("part-")).sorted
+        .map(n => new Path(out, n)).toSeq
+      val merged = new Path(dir.resolve("merged.parquet").toString)
+      timed(s"mergeParquetParts of the write's ${parts.size} parts") {
+        merged.getFileSystem(conf).delete(merged, false)
+        Converter.mergeParquetParts(conf, parts, merged)
       }
     }
   }
