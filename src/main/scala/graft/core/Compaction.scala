@@ -93,9 +93,7 @@ object Compaction {
 
     // footer-only verification: output rows must equal input rows
     val outParts = outFs.listStatus(out).filter(_.getPath.getName.endsWith(".parquet"))
-    val outRows = outParts.map { s =>
-      ParquetFiles.read(s.getPath, conf, options)((r, _) => r.getFooter.getBlocks.asScala.map(_.getRowCount).sum)
-    }.sum
+    val outRows = ParquetFiles.rowCount(out, conf)
     if (outRows != totalRows)
       throw new IllegalStateException(
         s"compaction row-count mismatch: in=$totalRows out=$outRows under $outDir")

@@ -28,4 +28,17 @@ private[graft] object ParquetFiles {
       catch { case e: Throwable => in.close(); throw e }
     try body(reader, in) finally reader.close()
   }
+
+  /** The rows of the parquet files directly under `dir`, summed from
+    * their footers: no Spark job and no column read. */
+  def rowCount(dir: Path, conf: Configuration): Long = {
+    import scala.jdk.CollectionConverters._
+    val options = this.options(conf)
+    dir.getFileSystem(conf).listStatus(dir).iterator
+      .map(_.getPath)
+      .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("_") &&
+        !p.getName.startsWith("."))
+      .map(p => read(p, conf, options)((r, _) => r.getFooter.getBlocks.asScala.map(_.getRowCount).sum))
+      .sum
+  }
 }

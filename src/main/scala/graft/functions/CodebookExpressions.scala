@@ -74,13 +74,6 @@ case class NearestInCodebook(left: Expression, right: Expression,
 }
 
 object NearestInCodebook {
-  /** Spark's Round(HALF_UP-over-shortest-decimal) semantics, verbatim:
-    * both the former plan and the oracle rank on round(dot, 6), so the
-    * argmax must compare the SAME rounded values. */
-  private def round6(d: Double): Double =
-    java.math.BigDecimal.valueOf(d).setScale(6, java.math.RoundingMode.HALF_UP)
-      .doubleValue()
-
   /** Long.MinValue = no codebook for this cell (mapped to NULL). */
   def nearest(books: java.util.HashMap[java.lang.Long, CellBook],
       cell: Long, vec: ArrayData): Long = {
@@ -95,7 +88,9 @@ object NearestInCodebook {
       var i = 0
       val off = j * b.dim
       while (i < n) { dot += vec.getDouble(i) * b.flat(off + i); i += 1 }
-      val r = round6(dot)
+      // both the former plan and the oracle rank on round(dot, 6), so
+      // the argmax compares the SAME rounded values
+      val r = SqlMath.roundHalfUp(dot, 6)
       // Double.compare, not '>': the former join+max_by plan (and
       // DuckDB's ORDER BY) use total ordering with NaN as GREATEST, so
       // a NaN dot (possible if a sub-centroid mean is the zero vector
@@ -175,10 +170,6 @@ case class PqAdcMicros(left: Expression, right: Expression, book: PqBook)
 }
 
 object PqOps {
-  private def round6(d: Double): Double =
-    java.math.BigDecimal.valueOf(d).setScale(6, java.math.RoundingMode.HALF_UP)
-      .doubleValue()
-
   /** Per-subspace argmin-L2 codes. Tie/NaN contract: codes ascend, a
     * candidate wins only with a strictly SMALLER rounded d2 under
     * Double.compare total order (NaN greatest) — identical to
@@ -200,7 +191,7 @@ object PqOps {
           d2 += diff * diff
           d += 1
         }
-        val r = round6(d2)
+        val r = SqlMath.roundHalfUp(d2, 6)
         if (bestCode < 0 || java.lang.Double.compare(r, bestD2) < 0) {
           bestD2 = r; bestCode = c
         }

@@ -24,15 +24,8 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = left.nullable || right.nullable
 
-  override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    var sum = 0.0
-    var i = 0
-    while (i < n) { sum += a.getDouble(i) * b.getDouble(i); i += 1 }
-    sum
-  }
+  override protected def nullSafeEval(l: Any, r: Any): Any =
+    DotProduct.of(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -53,6 +46,17 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
     copy(left = newLeft, right = newRight)
 
   override def prettyName: String = "dot_product"
+}
+
+object DotProduct {
+  /** The index-order sum the generated loop runs, for JVM callers. */
+  def of(a: ArrayData, b: ArrayData): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var sum = 0.0
+    var i = 0
+    while (i < n) { sum += a.getDouble(i) * b.getDouble(i); i += 1 }
+    sum
+  }
 }
 
 object VectorFunctions {

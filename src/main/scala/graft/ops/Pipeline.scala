@@ -207,11 +207,11 @@ object Pipeline {
     // bootstrap run freezes geometry for the corpus the artifact GROWS
     // INTO (the full-corpus vector count), not the first day's batch —
     // a small day-1 delta would otherwise pin small-batch (bits,
-    // nTables) forever (ADVICE r12). The count job runs only when the
-    // artifact doesn't exist yet.
+    // nTables) forever (ADVICE r12). The count runs only when the
+    // artifact doesn't exist yet, over the plain embeddings scan.
     val expectedVectors =
       if (LshIndex.store.exists(spark, s"$workDir/lsh")) 0L
-      else Similarity.unitEmbeddings(spark, corpusDir).count()
+      else Similarity.corpusCount(spark, corpusDir)
     val keptVecs = Similarity.unitEmbeddings(spark, corpusDir)
       .join(kept.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")
     LshIndex.appendLshDelta(keptVecs,
@@ -232,10 +232,18 @@ object Pipeline {
     //    contents can have changed; the bootstrap run (no manifest yet)
     //    falls through to the full rewrite inside. This was the one
     //    corpus-wide pass left in the nightly.
-    val manifest = Export.writeTrainingShardsIncremental(
+    Export.writeTrainingShardsIncremental(
       spark, corpusDir, s"$workDir/shards", kept.select("doc_id"))
     kept.unpersist(blocking = false)
-    DailyReport(converted, incoming.count(), nKept, repaired, manifest.count())
+    // the report's counts: the batch over the unspread documents scan (a
+    // spread is a repartition, so the count is the same), the shards
+    // from the manifest's footers the export just wrote
+    val incomingDocs = Tables(spark, corpusDir, "documents")
+      .where(Lifecycle.bucket(col("doc_id")) < batchPct).count()
+    val exportShards = graft.core.ParquetFiles.rowCount(
+      new org.apache.hadoop.fs.Path(s"$workDir/shards/_manifest"),
+      spark.sparkContext.hadoopConfiguration)
+    DailyReport(converted, incomingDocs, nKept, repaired, exportShards)
   }
 
   /** One maintenance run's accounting. */

@@ -4,8 +4,10 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.functions.SqlMath.roundHalfUp
 import graft.ops.Lifecycle.{Append, Compact, Reappend, Tombstone}
 
 /** Sparse-lexical retrieval over the `documents` table — the BM25 layer a
@@ -213,11 +215,14 @@ object Retrieval {
     * path. Both stores' files publish as one version ([[IdStore]]). */
   def appendPostingsDelta(deltaDocs: DataFrame, indexDir: String): Unit =
     store.write(deltaDocs.sparkSession, indexDir) { w =>
-      // materialized once: both stores' writes derive from it
-      val fresh = store.admit(w, deltaDocs)(expungePostings(w, _)).cache()
-      fresh.count()
+      // materialized once: both stores' writes derive from it. A first
+      // delta is admitted as `deltaDocs` itself, which its caller may
+      // hold cached: only a cache made here is dropped here
+      val fresh = store.admit(w, deltaDocs)(expungePostings(w, _))
+      val own = fresh.storageLevel == StorageLevel.NONE
+      if (own) fresh.cache().count()
       addPostings(w, fresh)
-      fresh.unpersist(blocking = false)
+      if (own) fresh.unpersist(blocking = false)
     }
 
   /** Retire documents from a persisted postings artifact — the delete
@@ -437,12 +442,6 @@ object Retrieval {
         }
     }
   }
-
-  /** catalyst's `round(x, scale)` of a double: its decimal string,
-    * rounded HALF_UP. */
-  private def roundHalfUp(x: Double, scale: Int): Double =
-    if (x.isNaN || x.isInfinite) x
-    else BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** (n_docs, sum_dl) of a dl relation, as one row. */
   private def corpusStats(dl: DataFrame): DataFrame =

@@ -1,9 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
 
+import graft.functions.DotProduct
+import graft.functions.SqlMath.roundHalfUp
 import graft.functions.VectorFunctions.dotProduct
 import graft.ops.Lifecycle.{Append, Compact, Reappend, Tombstone}
 
@@ -47,6 +52,10 @@ object Similarity {
     * `aggregate(zip_with(...))` HOF shape allocates one), identical
     * index-order summation. */
   private def dot(a: Column, b: Column): Column = dotProduct(a, b)
+
+  /** The vector width the sub books and the PQ subspaces are laid out
+    * for: the embedding table's 64 dims. */
+  private val Dim = 64
 
   private[graft] def unitEmbeddings(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddingsSpread(spark, dir)
@@ -733,7 +742,7 @@ object Similarity {
         col("u").as("su"))
     val seedBooks = graft.functions.CodebookFunctions.cellBooks(
       seeds.collect().map(r =>
-        (r.getLong(0), r.getLong(1), r.getSeq[Double](2).toArray)).toSeq, dim = 64)
+        (r.getLong(0), r.getLong(1), r.getSeq[Double](2).toArray)).toSeq, dim = Dim)
     val s0 = a1
       .select(col("cent_id"),
         graft.functions.CodebookFunctions
@@ -758,7 +767,7 @@ object Similarity {
   private def buildAssigned2(a1: DataFrame, subCents: DataFrame): DataFrame = {
     val subBooks = graft.functions.CodebookFunctions.cellBooks(
       subCents.collect().map(r =>
-        (r.getLong(0), r.getLong(1), r.getSeq[Double](2).toArray)).toSeq, dim = 64)
+        (r.getLong(0), r.getLong(1), r.getSeq[Double](2).toArray)).toSeq, dim = Dim)
     a1
       .select(col("vec_id"), col("cent_id"),
         graft.functions.CodebookFunctions
@@ -844,24 +853,17 @@ object Similarity {
     * lifecycle ([[saveTwoLevelIndex]]'s full-corpus shape serves q131),
     * exactly as [[Retrieval.savePostingsIndexOf]] is to
     * `savePostingsIndex`. One-shot: no session caches (it runs once
-    * inside an artifact memo), the coarse codebook is materialized
-    * locally once and reused for both the assignment and the write. */
+    * inside an artifact memo); the books train once ([[trainedOf]]) and
+    * feed both the assignment and the writes. */
   def saveTwoLevelIndexOf(vecs: DataFrame, outDir: String,
       nCoarse: Int = 8, nSub: Int = 4): Unit = {
-    val cents = ivfCentroidsOf(vecs, nCoarse).cache()
-    cents.count()
-    val a1 = assignNearest(vecs, cents).cache()
-    a1.count()
-    val subCents = buildSubCents(a1, nSub).cache()
-    subCents.count()
+    val t = trainedOf(vecs, nCoarse, nSub, pq = None)
     IdStore.rebuild(vecs.sparkSession, outDir) { w =>
-      w.add("coarse")(cents.write.parquet(_))
-      w.add("subcents")(subCents.write.parquet(_))
-      w.add("assignments")(writeCells(buildAssigned2(a1, subCents), _))
+      w.add("coarse")(t.coarse.write.parquet(_))
+      w.add("subcents")(t.subCents.write.parquet(_))
+      w.add("assignments")(writeCells(t.assigned, _))
     }
-    cents.unpersist(blocking = false)
-    a1.unpersist(blocking = false)
-    subCents.unpersist(blocking = false)
+    t.release()
   }
 
   /** Merge a delta batch of NEW vectors into a persisted
@@ -967,16 +969,9 @@ object Similarity {
     * `row_number() OVER (ORDER BY vec_id)` mirror. */
   private[graft] def trainPqBookOf(resid: DataFrame, m: Int,
       k: Int): graft.functions.PqBook = {
-    val dim = 64
-    val dsub = dim / m
-    val seedRows = resid.where(col("vec_id") < k).select("vec_id", "r").collect()
-      .map(row => (row.getLong(0), row.getSeq[Double](1).toArray)).sortBy(_._1)
-    val effK = seedRows.length
-    require(effK > 0, "PQ training needs at least one seed vector below k")
-    val flat0 = new Array[Double](m * effK * dsub)
-    for { j <- 0 until m; ((_, r), code) <- seedRows.zipWithIndex; d <- 0 until dsub }
-      flat0((j * effK + code) * dsub + d) = r(j * dsub + d)
-    val book0 = new graft.functions.PqBook(m, effK, dsub, flat0)
+    val book0 = pqSeedBook(resid.where(col("vec_id") < k).select("vec_id", "r").collect()
+      .map(row => (row.getLong(0), row.getSeq[Double](1).toArray)).toSeq, m)
+    val (effK, dsub) = (book0.k, book0.dsub)
     val means = resid
       .select(posexplode(graft.functions.CodebookFunctions
         .pqEncode(col("r"), book0)).as(Seq("j", "code")), col("r"))
@@ -985,11 +980,25 @@ object Similarity {
       .groupBy("j", "code", "d")
       .agg((sum(round(col("v") * 1e6).cast("long")) / (count(lit(1)) * lit(1e6))).as("mv"))
       .collect() // bounded: ≤ m·k·dsub rows (4096 at the gate config)
-    val flat = flat0.clone() // empty cells keep their seed
+    val flat = book0.flat.clone() // empty cells keep their seed
     means.foreach { row =>
       flat((row.getInt(0) * effK + row.getLong(1).toInt) * dsub + row.getInt(2)) =
         row.getDouble(3)
     }
+    new graft.functions.PqBook(m, effK, dsub, flat)
+  }
+
+  /** The seed book of a PQ training run: code `c` of every subspace is
+    * the matching slice of the `c`-th seed residual by ascending vec_id
+    * (the seeds are the rows with `vec_id < k`). */
+  private def pqSeedBook(seeds: Seq[(Long, Array[Double])], m: Int): graft.functions.PqBook = {
+    val dsub = Dim / m
+    val rs = seeds.sortBy(_._1).map(_._2)
+    val effK = rs.length
+    require(effK > 0, "PQ training needs at least one seed vector below k")
+    val flat = new Array[Double](m * effK * dsub)
+    for { j <- 0 until m; (r, code) <- rs.zipWithIndex; d <- 0 until dsub }
+      flat((j * effK + code) * dsub + d) = r(j * dsub + d)
     new graft.functions.PqBook(m, effK, dsub, flat)
   }
 
@@ -1092,8 +1101,10 @@ object Similarity {
       w.add("subcents")(subCents.write.parquet(_))
       w.add("pqbook")(writePqBook(spark, book, _))
       w.add("codes")(writeCells(codes, _))
-      w.add("meta")(writePqMeta(spark, _, nCoarse, nSub, m, k,
-        codes.count(), meanExplainedMicros(codes)))
+      w.add("meta") { path =>
+        val (n, explained) = explainedOf(codes)
+        writePqMeta(spark, path, nCoarse, nSub, m, k, n, explained)
+      }
       w.add("vectors")(pqStore.layout.write(assigned.select(col("vec_id"), col("u")), _))
     }
   }
@@ -1126,8 +1137,8 @@ object Similarity {
     * leaks into served relations. */
   private def pqVectorsOf(stored: DataFrame): DataFrame = stored.select(col("vec_id"), col("u"))
 
-  /** Mean EXPLAINED energy of a codes relation in micros: the per-row
-    * proj² — the share of each unit vector's energy the frozen
+  /** Row count and mean EXPLAINED energy of a codes relation, the
+    * latter in micros: the per-row proj² — the share of each unit vector's energy the frozen
     * coarse/sub geometry accounts for (1 − proj² = |r|² is what PQ must
     * compress, so when explained energy decays, quantization error and
     * with it ADC recall degrade). Explained, not residual, on purpose:
@@ -1140,12 +1151,12 @@ object Similarity {
     * trigger idempotent (a rebuilt artifact measures its own frozen
     * value and does nothing). One narrow-column aggregate — the
     * bounded-probe shape of [[graft.ops.LshIndex.maintainGeometry]]. */
-  private def meanExplainedMicros(codes: DataFrame): Double = {
+  private def explainedOf(codes: DataFrame): (Long, Double) = {
     val r = codes.agg(
       sum(round(col("proj") * col("proj") * 1e6).cast("long")).as("s"),
       count(lit(1)).as("n")).head()
-    if (r.isNullAt(0) || r.getLong(1) == 0L) 0.0
-    else r.getLong(0).toDouble / r.getLong(1)
+    val n = r.getLong(1)
+    (n, if (r.isNullAt(0) || n == 0L) 0.0 else r.getLong(0).toDouble / n)
   }
 
   /** The PQ book as its (j, code, cv) artifact relation — one row per
@@ -1177,6 +1188,197 @@ object Similarity {
     new graft.functions.PqBook(m, k, dsub, flat)
   }
 
+  // --- Training a two-level / PQ artifact -------------------------------
+
+  /** Vector bytes under which a training batch trains on the driver
+    * ([[trainedOnDriver]]): 16 384 vectors of [[Dim]] doubles. The bound
+    * caps the driver's heap: a batch holds a few copies of its vectors
+    * while it trains (the collected rows, their arrays, the residuals),
+    * tens of MB at the bound. */
+  private val DriverTrainBytes = 8L << 20
+
+  /** A trained batch: the coarse book (cent_id, cu), the sub book
+    * (cent_id, sub_id, scu), the inverted file (vec_id, cent_id, sub_id,
+    * u) and, when PQ was asked for, its half ([[TrainedPq]]). `cached`
+    * holds what the distributed path materialized; [[release]] drops it
+    * once the stores are written. */
+  private[ops] final case class Trained(coarse: DataFrame, subCents: DataFrame,
+      assigned: DataFrame, pq: Option[TrainedPq], cached: Seq[DataFrame]) {
+    def release(): Unit = cached.foreach(_.unpersist(blocking = false))
+  }
+
+  /** The PQ half of [[Trained]]: the book, the compressed inverted file
+    * (vec_id, cent_id, sub_id, proj, codes), and the meta's `n_trained`
+    * and `explained_micros`. */
+  private[ops] final case class TrainedPq(book: graft.functions.PqBook, codes: DataFrame,
+      nTrained: Long, explainedMicros: Double)
+
+  /** Train the two-level books on `vecs` (vec_id, u), and the PQ book of
+    * shape `pq` = (m, k) on their residuals if asked: on the driver when
+    * the batch is bounded ([[trainedOnDriver]]), else distributed
+    * ([[trainedDistributed]]). Both give bit-identical books, rows and
+    * meta (PqDriverTrainSpec). */
+  private[ops] def trainedOf(vecs: DataFrame, nCoarse: Int, nSub: Int,
+      pq: Option[(Int, Int)]): Trained =
+    trainedOnDriver(vecs, nCoarse, nSub, pq)
+      .getOrElse(trainedDistributed(vecs, nCoarse, nSub, pq))
+
+  /** The distributed trainer: the coarse Lloyd round, the per-cell sub
+    * round and the residual PQ round as Spark plans, each intermediate
+    * cached and counted so the next collects read it once. */
+  private[ops] def trainedDistributed(vecs: DataFrame, nCoarse: Int, nSub: Int,
+      pq: Option[(Int, Int)]): Trained = {
+    val cents = ivfCentroidsOf(vecs, nCoarse).cache()
+    cents.count()
+    val a1 = assignNearest(vecs, cents).cache()
+    a1.count()
+    val subCents = buildSubCents(a1, nSub).cache()
+    subCents.count()
+    val assigned = buildAssigned2(a1, subCents)
+    pq match {
+      case None => Trained(cents, subCents, assigned, None, Seq(cents, a1, subCents))
+      case Some((m, k)) =>
+        assigned.cache().count()
+        // the meta's aggregate materializes the residuals' cache too
+        val resid = residualsOf(assigned, subCents).cache()
+        val (n, explained) = explainedOf(resid)
+        val book = trainPqBookOf(resid, m, k)
+        val codes = resid.select(col("vec_id"), col("cent_id"), col("sub_id"), col("proj"),
+          graft.functions.CodebookFunctions.pqEncode(col("r"), book).as("codes"))
+        Trained(cents, subCents, assigned, Some(TrainedPq(book, codes, n, explained)),
+          Seq(cents, a1, subCents, assigned, resid))
+    }
+  }
+
+  /** [[trainedDistributed]] in the JVM, when `vecs` holds at most
+    * [[DriverTrainBytes]] of [[Dim]]-wide, non-null vectors: one bounded
+    * collect takes up to one row past the bound, and if the batch fits,
+    * training runs no further job (None if it does not fit). */
+  private[ops] def trainedOnDriver(vecs: DataFrame, nCoarse: Int, nSub: Int,
+      pq: Option[(Int, Int)]): Option[Trained] = {
+    val cap = (DriverTrainBytes / (Dim * 8)).toInt
+    val got = vecs.select(col("vec_id"), col("u")).limit(cap + 1).collect()
+    if (got.length > cap || got.exists(r => r.anyNull || r.getSeq[Double](1).length != Dim))
+      None
+    else Some(trainRows(vecs.sparkSession, vecs.schema,
+      got.map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq, nCoarse, nSub, pq))
+  }
+
+  /** The driver training of collected rows of a relation with schema
+    * `input`. It runs the kernels the distributed plans run
+    * ([[graft.functions.NearestInCodebook.nearest]],
+    * [[graft.functions.PqOps.encode]], [[graft.functions.DotProduct.of]])
+    * with catalyst's arithmetic — `round` is
+    * [[graft.functions.SqlMath.roundHalfUp]], a scaled mean is
+    * `sum.toDouble / (count.toDouble * 1e6)` over the rounded micros,
+    * `unitVec` is `x / sqrt(dot(x, x))` — and the same seeds (coarse: the
+    * ids below nCoarse; sub: each cell's first nSub ids; PQ: the dense
+    * ranks of the ids below k) and empty-cell rule (a PQ code no
+    * residual picks keeps its seed). Every sum is of integers or in
+    * index order, so row order does not matter. The relations come back
+    * local, in the distributed relations' schemas. */
+  private def trainRows(spark: SparkSession, input: StructType,
+      rows: Seq[(Long, Array[Double])], nCoarse: Int, nSub: Int,
+      pq: Option[(Int, Int)]): Trained = {
+    import graft.functions.CodebookFunctions.{cellBooks, flatBook}
+    val vecs = rows.map { case (id, u) => (id, u, arrayData(u)) }
+    val seeds = rows.filter(_._1 < nCoarse)
+    val seedBook = flatBook(seeds, dim = seeds.headOption.map(_._2.length).getOrElse(Dim))
+    val coarse = unitMeans(vecs.flatMap { case (_, u, ud) => nearestIn(seedBook, 0L, ud).map(_ -> u) })
+    val coarseBook = flatBook(coarse.toSeq, dim = coarse.headOption.map(_._2.length).getOrElse(Dim))
+    val a1 = vecs.flatMap { case v @ (_, _, ud) => nearestIn(coarseBook, 0L, ud).map(_ -> v) }
+    val subSeeds = a1.groupMap(_._1)(_._2).toSeq.flatMap { case (c, vs) =>
+      vs.sortBy(_._1).take(nSub).zipWithIndex.map { case ((_, u, _), i) => (c, i.toLong, u) }
+    }
+    val subSeedBooks = cellBooks(subSeeds, dim = Dim)
+    val sub = unitMeans(a1.flatMap { case (c, (_, u, ud)) =>
+      nearestIn(subSeedBooks, c, ud).map(s => (c, s) -> u)
+    })
+    val subBooks = cellBooks(sub.toSeq.map { case ((c, s), scu) => (c, s, scu) }, dim = Dim)
+    val subData = sub.map { case (cs, scu) => cs -> arrayData(scu) }
+    val assigned = a1.flatMap { case (c, (id, u, ud)) =>
+      nearestIn(subBooks, c, ud).map(s => (id, c, s, u, ud))
+    }
+    val rel = (schema: StructType, rs: Seq[Row]) => {
+      import scala.jdk.CollectionConverters._
+      spark.createDataFrame(rs.asJava, schema)
+    }
+    val trainedPq = pq.map { case (m, k) =>
+      // the projection residual r = u - proj·scu, proj = ⟨u, scu⟩
+      val resid = assigned.map { case (id, c, s, u, ud) =>
+        val scu = sub((c, s))
+        val proj = DotProduct.of(ud, subData((c, s)))
+        (id, c, s, proj, Array.tabulate(u.length)(i => u(i) - proj * scu(i)))
+      }
+      val book0 = pqSeedBook(resid.collect { case (id, _, _, _, r) if id < k => (id, r) }, m)
+      val dsub = book0.dsub
+      val flat = book0.flat.clone() // empty cells keep their seed
+      scaledMeans(resid.flatMap { case (_, _, _, _, r) =>
+        val codes = graft.functions.PqOps.encode(book0, arrayData(r))
+        (0 until m).map(j => (j, codes.getLong(j).toInt) -> r.slice(j * dsub, (j + 1) * dsub))
+      }).foreach { case ((j, code), mv) =>
+        System.arraycopy(mv, 0, flat, (j * book0.k + code) * dsub, dsub)
+      }
+      val book = new graft.functions.PqBook(m, book0.k, dsub, flat)
+      val codes = resid.map { case (id, c, s, proj, r) =>
+        Row(id, c, s, proj, graft.functions.PqOps.encode(book, arrayData(r)).toLongArray.toSeq)
+      }
+      val micros = resid.map { case (_, _, _, proj, _) =>
+        roundHalfUp(proj * proj * 1e6, 0).toLong
+      }
+      TrainedPq(book, rel(codesSchema(input), codes), resid.length.toLong,
+        if (resid.isEmpty) 0.0 else micros.sum.toDouble / resid.length)
+    }
+    Trained(
+      rel(CoarseSchema, coarse.toSeq.sortBy(_._1).map { case (c, cu) => Row(c, cu.toSeq) }),
+      rel(SubCentsSchema, sub.toSeq.sortBy(_._1).map { case ((c, s), scu) => Row(c, s, scu.toSeq) }),
+      rel(assignedSchema(input), assigned.map { case (id, c, s, u, _) => Row(id, c, s, u.toSeq) }),
+      trainedPq, cached = Nil)
+  }
+
+  private def arrayData(v: Array[Double]): ArrayData = UnsafeArrayData.fromPrimitiveArray(v)
+
+  /** The codegen'd argmax's answer for one vector: the entry of `books`'
+    * cell `cell` it assigns, or None where it yields NULL. */
+  private def nearestIn(books: java.util.HashMap[java.lang.Long, graft.functions.CellBook],
+      cell: Long, v: ArrayData): Option[Long] = {
+    val id = graft.functions.NearestInCodebook.nearest(books, cell, v)
+    if (id == Long.MinValue) None else Some(id)
+  }
+
+  /** Each key's vectors' integer-scaled mean, dim by dim: catalyst's
+    * `sum(round(x * 1e6) as long) / (count * 1e6)`. */
+  private def scaledMeans[K](rows: Seq[(K, Array[Double])]): Map[K, Array[Double]] =
+    rows.groupMap(_._1)(_._2).map { case (key, vs) =>
+      val sums = new Array[Long](vs.head.length)
+      vs.foreach(v => sums.indices.foreach(d => sums(d) += roundHalfUp(v(d) * 1e6, 0).toLong))
+      key -> sums.map(_.toDouble / (vs.length.toDouble * 1e6))
+    }
+
+  /** [[scaledMeans]] through [[unitVec]]: `x / sqrt(dot(x, x))`. */
+  private def unitMeans[K](rows: Seq[(K, Array[Double])]): Map[K, Array[Double]] =
+    scaledMeans(rows).map { case (key, v) =>
+      val norm = math.sqrt(DotProduct.of(arrayData(v), arrayData(v)))
+      key -> v.map(_ / norm)
+    }
+
+  // The trained relations' schemas, as the distributed plans emit them:
+  // an argmax id is nullable, a unit mean is not (its elements are: a
+  // division), and vec_id and u pass through from the input, so the
+  // nullability of proj and codes follows u's.
+  private val CoarseSchema = StructType(Seq(
+    StructField("cent_id", LongType), StructField("cu", ArrayType(DoubleType), nullable = false)))
+  private val SubCentsSchema = StructType(Seq(
+    StructField("cent_id", LongType), StructField("sub_id", LongType),
+    StructField("scu", ArrayType(DoubleType), nullable = false)))
+  private def assignedSchema(input: StructType) = StructType(Seq(
+    input("vec_id"), StructField("cent_id", LongType), StructField("sub_id", LongType),
+    input("u")))
+  private def codesSchema(input: StructType) = StructType(Seq(
+    input("vec_id"), StructField("cent_id", LongType), StructField("sub_id", LongType),
+    StructField("proj", DoubleType, input("u").nullable),
+    StructField("codes", ArrayType(LongType, containsNull = false), input("u").nullable)))
+
   /** Persist a compressed PQ artifact TRAINED AND BUILT from an
     * arbitrary (vec_id, u) relation — the starting point of the
     * incremental PQ lifecycle, [[saveTwoLevelIndexOf]] extended with the
@@ -1192,28 +1394,22 @@ object Similarity {
   /** Train every book on `vecs` and add every store of the artifact. */
   private def buildPq(w: IdStore.Writer, vecs: DataFrame,
       nCoarse: Int, nSub: Int, m: Int, k: Int): Unit = {
-    val spark = vecs.sparkSession
-    val cents = ivfCentroidsOf(vecs, nCoarse).cache()
-    cents.count()
-    val a1 = assignNearest(vecs, cents).cache()
-    a1.count()
-    val subCents = buildSubCents(a1, nSub).cache()
-    subCents.count()
-    val assigned = buildAssigned2(a1, subCents).cache()
-    assigned.count()
-    val resid = residualsOf(assigned, subCents).cache()
-    resid.count()
-    val book = trainPqBookOf(resid, m, k)
-    w.add("coarse")(cents.write.parquet(_))
-    w.add("subcents")(subCents.write.parquet(_))
-    w.add("pqbook")(writePqBook(spark, book, _))
-    w.add("codes")(writeCells(resid
-      .select(col("vec_id"), col("cent_id"), col("sub_id"), col("proj"),
-        graft.functions.CodebookFunctions.pqEncode(col("r"), book).as("codes")), _))
-    w.add("meta")(writePqMeta(spark, _, nCoarse, nSub, m, k,
-      resid.count(), meanExplainedMicros(resid)))
-    w.add("vectors")(pqStore.layout.write(assigned.select(col("vec_id"), col("u")), _))
-    Seq(cents, a1, subCents, assigned, resid).foreach(_.unpersist(blocking = false))
+    val t = trainedOf(vecs, nCoarse, nSub, pq = Some((m, k)))
+    addPqStores(w, t, nCoarse, nSub, m, k)
+    t.release()
+  }
+
+  /** Add every store of a PQ artifact trained as `t`. */
+  private[ops] def addPqStores(w: IdStore.Writer, t: Trained,
+      nCoarse: Int, nSub: Int, m: Int, k: Int): Unit = {
+    val spark = t.coarse.sparkSession
+    val p = t.pq.get
+    w.add("coarse")(t.coarse.write.parquet(_))
+    w.add("subcents")(t.subCents.write.parquet(_))
+    w.add("pqbook")(writePqBook(spark, p.book, _))
+    w.add("codes")(writeCells(p.codes, _))
+    w.add("meta")(writePqMeta(spark, _, nCoarse, nSub, m, k, p.nTrained, p.explainedMicros))
+    w.add("vectors")(pqStore.layout.write(t.assigned.select(col("vec_id"), col("u")), _))
   }
 
   /** Merge a delta batch of NEW vectors into a persisted
@@ -1431,7 +1627,7 @@ object Similarity {
     *   - GROWTH: live vectors ≥ `growthFactor` × the training-set size
     *     (the corpus has outgrown the sample the books summarize);
     *   - QUALITY: measured mean explained energy has DECAYED to ≤ the
-    *     train-time value / `explainedDecay` ([[meanExplainedMicros]] —
+    *     train-time value / `explainedDecay` ([[explainedOf]] —
     *     one order-free narrow-column aggregate over the codes store,
     *     tombstones out; a distribution shift shows up here even at
     *     constant size, because new vectors sit farther from the frozen
@@ -1461,9 +1657,8 @@ object Similarity {
       growthFactor: Double = 2.0, explainedDecay: Double = 1.5): Option[(Long, Long)] =
     pqStore.write(spark, indexDir) { w =>
       val dead = w.tombstones("vec_id")
-      val liveCodes = dropDead(w.read("codes").select("vec_id", "proj"), dead)
-      val liveCount = liveCodes.count()
-      val measured = meanExplainedMicros(liveCodes)
+      val (liveCount, measured) =
+        explainedOf(dropDead(w.read("codes").select("vec_id", "proj"), dead))
       if (!w.has("meta")) {
         val book = readPqBook(w.read("pqbook"))
         val nCoarse = w.read("coarse").count().toInt

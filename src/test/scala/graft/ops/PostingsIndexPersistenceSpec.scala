@@ -213,6 +213,29 @@ class PostingsIndexPersistenceSpec extends AnyFunSuite {
     }
   }
 
+  test("a first delta leaves the caller's cache of the batch in place") {
+    import org.apache.spark.sql.functions._
+    val base = java.nio.file.Files.createTempDirectory("graft-bm25-cached").toString
+    // the nightly caches its kept batch for every family's append: the
+    // bootstrap admits the batch itself, and dropping its cache made
+    // each later append re-run the whole curation
+    val batch = Tables.documents(spark, dir).where(col("doc_id") < 50)
+      .select("doc_id", "text").cache()
+    try {
+      batch.count()
+      Retrieval.appendPostingsDelta(batch, base)
+      assert(batch.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        "the append dropped its caller's cache")
+    } finally {
+      batch.unpersist(blocking = false)
+      def rm(f: java.io.File): Unit = {
+        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
+        f.delete()
+      }
+      rm(new java.io.File(base))
+    }
+  }
+
   test("tombstoned docs vanish exactly as a rebuild without them; deletes are idempotent") {
     import org.apache.spark.sql.functions._
     val full = java.nio.file.Files.createTempDirectory("graft-bm25-tomb").toString
